@@ -38,7 +38,11 @@ object Bench {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable =>
+        // -1.0 stays the JSON's failure mark; stderr says what failed
+        System.err.println(s"[bench] $name failed: ${Verify.describe(e)}")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 

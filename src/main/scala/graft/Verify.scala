@@ -4,6 +4,11 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** A failure in one line: exception class, message and top frame. */
+  def describe(e: Throwable): String =
+    s"${e.getClass.getName}: ${e.getMessage}" +
+      e.getStackTrace.headOption.fold("")(f => s" at $f")
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name prefixes to run
     // (local iteration aid; the driver always passes exactly two)
@@ -36,7 +41,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${describe(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

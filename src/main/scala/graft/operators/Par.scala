@@ -17,10 +17,9 @@ package graft.operators
   * failure is rethrown — same observable outcome as the sequential
   * loop for a single failing family.
   *
-  * `maxConcurrent` defaults to 3 (guide §2.6: 2-3 jobs in flight is
-  * enough to fill straggler tails without the jobs fighting each
-  * other for executors; at cluster scale 8 concurrent index builds
-  * contend, and at bench scale 3 measures the same as 8).
+  * `maxConcurrent` defaults to 8, `GRAFT_PAR_MAX`-overridable (see
+  * [[defaultMax]] for why the guide's "2-3 jobs in flight" does not
+  * fit these chains of small jobs).
   */
 private[graft] object Par {
 

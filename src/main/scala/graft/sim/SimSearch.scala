@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.operators.{LiveRead, MetaFile}
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and a SimHash
@@ -172,10 +173,14 @@ object SimSearch {
   // Layout under <path>/ (the `_live` marker-generation commit
   // protocol, [[graft.operators.LiveMarker]] — the PQ/BM25/signed
   // index discipline):
-  //   meta/          one row (planes, dim, id_col, vec_col) — the LSH
-  //                  parameters, frozen at creation (appends validate
+  //   meta           driver-written [[graft.operators.MetaFile]],
+  //                  frozen at creation: `planes`, `dim`, `id_col`,
+  //                  `vec_col` (the LSH parameters; appends validate
   //                  against them: a mismatched fan-out would bucket
-  //                  new vectors where probes never look)
+  //                  new vectors where probes never look) and `schema`
+  //                  (the vectors read schema as DDL; an older index
+  //                  without it infers it once per read from the live
+  //                  generation — [[graft.operators.LiveRead]])
   //   vectors/ or vectors_gen=<G>/
   //                  the LIVE vector generation: (id, vec) stored
   //                  under one `bucket=<id>/` Hive partition per sign
@@ -188,34 +193,20 @@ object SimSearch {
   //                  same bucket layout — an append never touches
   //                  existing directories; its commit is the batch's
   //                  one marker PUT
-  //   tombstones/batch=<B>/  write-once deleted-id batches, honored
-  //                  by every read through [[readAnnIndex]]
+  //   tombstones/batch=<B>/  write-once deleted-id batches (cast to
+  //                  the index's id type), honored by every read
+  //                  through [[readAnnIndex]]
   //   _live.<gen>    the ruling-state marker (see [[LiveMarker]])
 
   private val annMarker = new graft.operators.LiveMarker(
     Seq(("vectors", "vectors", "vectors_gen=")),
     Seq("tombstones", "vectors_batches"))
 
-  private def annFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
   private[graft] def annMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int, String, String) = {
-    val m = graft.operators.MetaFile.read(annFs(spark, path),
-      s"$path/meta")
+    val m = LiveRead.meta(spark, path)
     (m("planes").toInt, m("dim").toInt, m("id_col"), m("vec_col"))
   }
-
-  /** Persist the ANN corpus as a bucket-partitioned parquet index
-    * (see the layout block above). Overwrites the ENTIRE `path` tree
-    * — including tombstones, gen directories, and `_live` markers
-    * from a previous index at the same path — so a rebuild can never
-    * inherit stale lifecycle state. The write-once artifact that
-    * turns ANN serving into a partition-pruned scan; LSH parameters
-    * are persisted in `meta/` and validated on append.
-    */
 
   /** Spread a compute-heavy projection across the session's cores when
     * the source scan has fewer partitions (guide §2.5 input skew: a
@@ -230,13 +221,20 @@ object SimSearch {
     if (df.rdd.getNumPartitions < width) df.repartition(width) else df
   }
 
+  /** Persist the ANN corpus as a bucket-partitioned parquet index
+    * (see the layout block above). Overwrites the ENTIRE `path` tree
+    * — including tombstones, gen directories, and `_live` markers
+    * from a previous index at the same path — so a rebuild can never
+    * inherit stale lifecycle state. The write-once artifact that
+    * turns ANN serving into a partition-pruned scan; LSH parameters
+    * are persisted in `meta` and validated on append.
+    */
   def writeAnnIndex(
       emb: DataFrame, path: String, idCol: String, vecCol: String,
       planes: Int = 12, dim: Int = 64, appliedId: Long = -1L,
       retain: Int = 1): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
-    val fs = annFs(spark, path)
+    val fs = LiveRead.fs(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     if (fs.exists(root) && !fs.delete(root, true))
       throw new java.io.IOException(
@@ -244,18 +242,18 @@ object SimSearch {
     // intent file: a crash mid-create reads as "bootstrap in
     // progress" to assertAnnStreamBootstrapSafe, not a legacy layout
     annMarker.markBootstrap(fs, path)
-    // frozen creation parameters as a driver-written file — a 1-row
-    // parquet meta dir costs a Spark job per write and per read
-    graft.operators.MetaFile.write(fs, s"$path/meta", Seq(
-      "planes" -> planes.toString, "dim" -> dim.toString,
-      "id_col" -> idCol, "vec_col" -> vecCol))
     // the per-row plane dot products are the expensive pass: run them
     // post-spread, not glued to the input split layout
-    graft.operators.WriteLayout.clusterBy(
-      spreadIfNarrow(emb.select(col(idCol), col(vecCol)))
-        .select(col(idCol), col(vecCol),
-          simhashBucket(col(vecCol), planes, dim).as("bucket")),
-      "bucket")
+    val vectors = spreadIfNarrow(emb.select(col(idCol), col(vecCol)))
+      .select(col(idCol), col(vecCol),
+        simhashBucket(col(vecCol), planes, dim).as("bucket"))
+    // frozen creation parameters as a driver-written file — a 1-row
+    // parquet meta dir costs a Spark job per write and per read
+    MetaFile.write(fs, s"$path/meta", Seq(
+      "planes" -> planes.toString, "dim" -> dim.toString,
+      "id_col" -> idCol, "vec_col" -> vecCol,
+      "schema" -> LiveRead.schemaDdl(vectors.schema)))
+    graft.operators.WriteLayout.clusterBy(vectors, "bucket")
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/vectors")
     // commit creation as snapshot gen 1: keeps the pristine state
@@ -274,7 +272,7 @@ object SimSearch {
     */
   def assertAnnStreamBootstrapSafe(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    annMarker.assertBootstrapSafe(annFs(spark, path), path, "ann")
+    annMarker.assertBootstrapSafe(LiveRead.fs(spark, path), path, "ann")
 
   /** Append NEW vectors to a persisted ANN index (caller contract:
     * ids must not already be live in the index — dedupe upstream).
@@ -301,7 +299,7 @@ object SimSearch {
     require(idCol == metaId && vecCol == metaVec,
       s"ann index at $path stores ($metaId, $metaVec); " +
         s"append offered ($idCol, $vecCol)")
-    val fs = annFs(spark, path)
+    val fs = LiveRead.fs(spark, path)
     annMarker.heal(fs, path, retain) // clear crashed-writer orphans
     val live = annMarker.read(fs, path)
     val b = live.gen + 1L
@@ -343,16 +341,20 @@ object SimSearch {
   def deleteFromAnnIndex(ids: DataFrame, path: String,
       retain: Int = 1): Unit = {
     val spark = ids.sparkSession
-    val (_, _, metaId, _) = annMeta(spark, path)
+    val fs = LiveRead.fs(spark, path)
+    val meta = MetaFile.read(fs, s"$path/meta")
+    val metaId = meta("id_col")
     require(ids.columns.toSeq == Seq(metaId),
       s"ids must be a single '$metaId' column frame, " +
         s"got ${ids.columns.mkString(",")}")
-    val fs = annFs(spark, path)
     // clear any orphan of a crashed writer
     annMarker.heal(fs, path, retain)
     val live = annMarker.read(fs, path)
     val b = live.gen + 1L
-    ids.distinct().write.mode("errorifexists")
+    val idType = LiveRead.schema(spark, path, live,
+      "vectors", meta)(metaId).dataType
+    ids.select(col(metaId).try_cast(idType).as(metaId)).distinct()
+      .write.mode("errorifexists")
       .parquet(s"$path/tombstones/batch=$b")
     annMarker.put(fs, path,
       live.copy(gen = b, batches = live.batches :+ b), retain)
@@ -367,7 +369,7 @@ object SimSearch {
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxSegments: Int, retain: Int = 1): Boolean = {
     require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val live = annMarker.read(annFs(spark, path), path)
+    val live = annMarker.read(LiveRead.fs(spark, path), path)
     if (live.batches.size + live.appends.size > maxSegments) {
       compactAnnIndex(spark, path, retain); true
     } else false
@@ -387,7 +389,7 @@ object SimSearch {
     */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, retain: Int = 1): Unit = {
-    val fs = annFs(spark, path)
+    val fs = LiveRead.fs(spark, path)
     annMarker.heal(fs, path, retain)
     val live = annMarker.read(fs, path)
     val gen = live.gen + 1L
@@ -408,7 +410,7 @@ object SimSearch {
   def readAnnIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     readAnnState(spark, path,
-      annMarker.read(annFs(spark, path), path))
+      annMarker.read(LiveRead.fs(spark, path), path))
 
   /** SNAPSHOT read: the index exactly as committed by marker `gen` —
     * audit/rollback for the removal pipeline ("what did this probe
@@ -418,14 +420,14 @@ object SimSearch {
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, gen: Long): DataFrame =
     readAnnState(spark, path,
-      annMarker.readAt(annFs(spark, path), path, gen))
+      annMarker.readAt(LiveRead.fs(spark, path), path, gen))
 
   /** The committed snapshot generations still readable, oldest
     * first.
     */
   def annGenerations(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Long] =
-    annMarker.listGenerations(annFs(spark, path), path)
+    annMarker.listGenerations(LiveRead.fs(spark, path), path)
 
   /** The highest stream batch id committed into this index's marker
     * chain (-1 = none) — [[graft.streaming.StreamingAnn]]'s
@@ -433,39 +435,14 @@ object SimSearch {
     */
   def lastAppliedStreamBatch(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    annMarker.read(annFs(spark, path), path).applied
+    annMarker.read(LiveRead.fs(spark, path), path).applied
 
+  /** `live`'s rows ([[LiveRead.rows]]). */
   private def readAnnState(spark: org.apache.spark.sql.SparkSession,
       path: String, live: graft.operators.LiveState): DataFrame = {
-    // partition-type inference reads the directory names back as INT
-    // (or STRING when inference is off) — restore the written LongType
-    // via schema-on-read. A post-read cast would also fix the dtype but
-    // WRAPS the partition column, and a wrapped partition attribute is
-    // not dynamic-partition-prunable (the SimSearchSpec plan assertion
-    // catches exactly that); with the declared schema the column stays
-    // a bare prunable attribute.
-    import org.apache.spark.sql.types.LongType
-    def rd(dataPath: String): DataFrame = {
-      val inferred = spark.read.parquet(dataPath).schema
-      val fixed = org.apache.spark.sql.types.StructType(inferred.map {
-        case f if f.name == "bucket" => f.copy(dataType = LongType)
-        case f => f
-      })
-      spark.read.schema(fixed).parquet(dataPath)
-    }
-    val vectors = live.appends
-      .foldLeft(rd(s"$path/${live.dir("vectors")}")) { (acc, b) =>
-        acc.unionByName(rd(s"$path/vectors_batches/batch=$b"))
-      }
-    if (live.batches.isEmpty) vectors
-    else {
-      val (_, _, metaId, _) = annMeta(spark, path)
-      vectors.join(
-        broadcast(spark.read.parquet(
-          live.batches.map(b => s"$path/tombstones/batch=$b"): _*)
-          .select(col(metaId)).distinct()),
-        Seq(metaId), "left_anti")
-    }
+    val meta = LiveRead.meta(spark, path)
+    LiveRead.rows(spark, path, live, "vectors", "vectors_batches", meta,
+      meta("id_col"))
   }
 
   /** [[annTopK]] against a persisted [[writeAnnIndex]] artifact: the
@@ -1433,13 +1410,6 @@ object SimSearch {
     }.reduce(_.unionByName(_))
   }
 
-  private def adcLutResidualRotated(
-      probed: DataFrame, q: DataFrame, centroids: DataFrame,
-      codebooks: DataFrame, perm: DataFrame, m: Int,
-      dim: Int): DataFrame =
-    adcLutResidualXf(probed, q, centroids, codebooks, perm,
-      permuteVec(_, col("_perm"), dim), m, dim)
-
   private def ivfPqTopKResidualXf(
       codesWithCell: DataFrame, codebooks: DataFrame,
       centroids: DataFrame, meta: DataFrame, apply: Column => Column,
@@ -1647,12 +1617,6 @@ object SimSearch {
       while (t < d) { s += a(t) * b(t); t += 1 }
       s
     }
-    def projectOut(row: Array[Double], upto: Int): Unit =
-      for (j <- 0 until upto) {
-        val p = dotRows(row, out(j))
-        var t = 0
-        while (t < d) { row(t) -= p * out(j)(t); t += 1 }
-      }
     def projectAgainst(row: Array[Double], basis: Seq[Int]): Unit =
       basis.foreach { j =>
         val p = dotRows(row, out(j))
@@ -1884,15 +1848,6 @@ object SimSearch {
     res.unpersist()
     (rotDf(rot), cb)
   }
-
-  /** [[pqFitResidual]] on DENSE-OPQ-rotated residuals. */
-  def pqFitResidualRotatedDense(
-      emb: DataFrame, centroids: DataFrame, rot: DataFrame,
-      idCol: String, vecCol: String, cellCol: String, m: Int, k: Int,
-      iters: Int, dim: Int = 64, bucketWidth: Long = 4096L): DataFrame =
-    pqFit(ivfResidualsXf(emb, centroids, rot,
-      rotateVec(_, col("_rot"), dim), idCol, vecCol, cellCol),
-      idCol, "_rv", m, k, iters, dim, bucketWidth)
 
   /** [[pqEncodeResidual]] against dense-rotated codebooks. */
   def pqEncodeResidualRotatedDense(
@@ -2266,22 +2221,6 @@ object SimSearch {
     * — raw vectors, codebooks and centroids are untouched). Run it on
     * the removal pipeline's cadence, not per delete.
     */
-  /** [[graft.text.Bm25.compactBm25IndexIfNeeded]]'s policy for the
-    * PQ index (whose marker batches are tombstones — appends land in
-    * the live codes dir): compact when outstanding tombstone batches
-    * exceed `maxSegments`. Returns true when one ran.
-    */
-  def compactPqIndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      path: String, maxSegments: Int, retain: Int = 1): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val state = pqMarker.read(fs, path)
-    if (state.batches.size + state.appends.size > maxSegments) {
-      compactPqIndex(spark, path, retain); true
-    } else false
-  }
-
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, retain: Int = 1): Unit = {
     val fs = new org.apache.hadoop.fs.Path(path)

@@ -1,8 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.{LiveRead, MetaFile}
 
 /** BM25 ranked retrieval over a document corpus — the standard Okapi
   * scoring function in its Lucene flavor (`idf = ln(1 + (N−df+0.5)/
@@ -54,10 +55,9 @@ object Bm25 {
     * never match a query anyway.)
     */
   def corpusStats(index: DataFrame, idCol: String): DataFrame =
-    index.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("_n"), sum(col("dl")).as("_sumdl"))
-      .select(col("_n"),
-        (col("_sumdl").cast("double") / col("_n").cast("double"))
+    statsDelta(index, idCol)
+      .select(col("n_docs").as("_n"),
+        (col("sum_dl").cast("double") / col("n_docs").cast("double"))
           .as("_avgdl"))
 
   /** Per-term idf in integer micro-nats:
@@ -65,20 +65,38 @@ object Bm25 {
     * compute alongside the index and persist with it.
     */
   def idfTable(index: DataFrame, idCol: String): DataFrame =
-    idfFrom(index, corpusStats(index, idCol))
-
-  private def idfFrom(index: DataFrame, stats: DataFrame): DataFrame =
     index.groupBy(col("term")).agg(count(lit(1)).as("_df"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), idfMicroExpr.as("idf_micro"))
+      .crossJoin(broadcast(corpusStats(index, idCol)))
+      .select(col("term"), idfMicroExpr(col("_n")).as("idf_micro"))
+
+  /** idf of every term in `postings` against a literal N. */
+  private def idfOf(postings: DataFrame, n: Column): DataFrame =
+    postings.groupBy(col("term")).agg(count(lit(1)).as("_df"))
+      .select(col("term"), idfMicroExpr(n).as("idf_micro"))
 
   /** The Lucene-flavor idf chain, shared by the in-memory and
     * persisted-index paths so both serve bit-identical scores.
     */
-  private def idfMicroExpr: Column =
-    round(log(((col("_n") - col("_df")).cast("double") + 0.5) /
+  private def idfMicroExpr(n: Column): Column =
+    round(log(((n - col("_df")).cast("double") + 0.5) /
       (col("_df").cast("double") + 0.5) + 1.0) * 1000000.0)
       .cast("long")
+
+  /** `(N, avgdl)` literals off `(n_docs, sum_dl)` rows: Spark `sum`
+    * null semantics (nulls skipped, all-null = null), then the
+    * [[corpusStats]] division — null for a null sum or a zero count.
+    */
+  private def statLits(rows: Array[Row]): (Column, Column) = {
+    def total(i: Int): java.lang.Long = {
+      val v = rows.filterNot(_.isNullAt(i)).map(_.getLong(i))
+      if (v.isEmpty) null else v.sum
+    }
+    val (n, sumDl) = (total(0), total(1))
+    val avgdl =
+      if (n == null || sumDl == null || n == 0L) null
+      else java.lang.Double.valueOf(sumDl.toDouble / n.toDouble)
+    (lit(n).cast("long"), lit(avgdl).cast("double"))
+  }
 
   /** Top-k BM25 retrieval of `queries` (exploded `(queryIdCol, term)`
     * rows — term multiplicity is ignored, the standard bag-of-terms
@@ -92,31 +110,31 @@ object Bm25 {
       b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     require(k1 > 0 && b >= 0 && b <= 1, s"bad BM25 params k1=$k1 b=$b")
-    // 1-row stats table computed once and cut (without the cut both the
-    // idf fold and the scorer would re-aggregate the index)
-    val stats = corpusStats(index, idCol).localCheckpoint()
+    // the 1-row stats fold runs once, on the driver: the idf fold and
+    // the scorer take N and avgdl as literals
+    val (n, avgdl) = statLits(statsDelta(index, idCol).collect())
     val qterms = queries.select(col(queryIdCol), col("term")).distinct()
-      .join(idfFrom(index, stats), Seq("term"))
-    scoreTopK(index, qterms, stats, queryIdCol, idCol, k, k1, b)
+      .join(idfOf(index, n), Seq("term"))
+    scoreTopK(index, qterms, avgdl, queryIdCol, idCol, k, k1, b)
   }
 
   /** The scoring tail [[topK]] and [[topKFromIndex]] share — one code
     * path, so persisted-index serving is row-identical to in-memory
     * search by construction: broadcast query-term idf slice, map-side
     * posting probe, one fixed IEEE chain for the length-normalized tf
-    * snapped to micro-units per posting, exact BIGINT score fold,
-    * per-query top-k window over candidates only.
+    * (against the literal `avgdl`) snapped to micro-units per posting,
+    * exact BIGINT score fold, per-query top-k window over candidates
+    * only.
     */
   private def scoreTopK(index: DataFrame, qterms: DataFrame,
-      stats: DataFrame, queryIdCol: String, idCol: String, k: Int,
+      avgdl: Column, queryIdCol: String, idCol: String, k: Int,
       k1: Double, b: Double): DataFrame = {
     val tfD = col("tf").cast("double")
     val tfn = (tfD * lit(k1 + 1.0)) /
       (tfD + lit(k1) * (lit(1.0 - b) +
-        lit(b) * (col("dl").cast("double") / col("_avgdl"))))
+        lit(b) * (col("dl").cast("double") / avgdl)))
     val scored = index
       .join(broadcast(qterms), Seq("term"))
-      .crossJoin(broadcast(stats))
       .select(col(queryIdCol), col(idCol),
         (col("idf_micro") * round(tfn * 1000000.0).cast("long"))
           .as("_s"))
@@ -206,9 +224,14 @@ object Bm25 {
   // Layout under <path>/ (the `_live` marker-generation commit
   // protocol, [[graft.operators.LiveMarker]] — every mutation is
   // write-once dirs + ONE marker PUT, object-store safe):
-  //   meta/           one row (buckets) — the term-hash fan-out,
-  //                   frozen at creation (appends must agree or
-  //                   probes miss)
+  //   meta            driver-written [[graft.operators.MetaFile]],
+  //                   frozen at creation: `buckets` (the term-hash
+  //                   fan-out; appends must agree or probes miss) and
+  //                   `schema` (the postings read schema as DDL,
+  //                   declared by every read — [[graft.operators
+  //                   .LiveRead]]; an index written before the key
+  //                   existed infers it once per read from the live
+  //                   generation and reuses it for every segment)
   //   postings/ or postings_gen=<G>/
   //                   the LIVE postings generation: (idCol, term, tf,
   //                   dl) partitioned by bucket = pmod(xxhash64(term),
@@ -222,7 +245,8 @@ object Bm25 {
   //   postings_batches/batch=<B>/  write-once APPEND segments, same
   //                   bucket layout as the live generation — an
   //                   append never touches existing directories
-  //   tombstones/batch=<B>/     write-once deleted-id batches
+  //   tombstones/batch=<B>/     write-once deleted-id batches,
+  //                   cast to the index's id type
   //   stats_deltas/batch=<B>/   the matching stats delta (positive
   //                   for an append batch, NEGATIVE for a delete
   //                   batch) — committed TOGETHER with its batch by
@@ -241,11 +265,6 @@ object Bm25 {
       ("stats", "stats", "stats_gen=")),
     Seq("tombstones", "stats_deltas", "postings_batches"))
 
-  private def bm25Fs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Create the persisted index. Overwrites the ENTIRE `path` tree
     * first — including any tombstones, stats-delta batches, append
     * segments, gen directories, and `_live` markers from a previous
@@ -263,8 +282,7 @@ object Bm25 {
       appliedId: Long = -1L, retain: Int = 1): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = docs.sparkSession
-    import spark.implicits._
-    val fs = bm25Fs(spark, path)
+    val fs = LiveRead.fs(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
     if (fs.exists(root) && !fs.delete(root, true))
       throw new java.io.IOException(
@@ -272,14 +290,15 @@ object Bm25 {
     // intent file: a crash mid-create reads as "bootstrap in
     // progress" to assertStreamBootstrapSafe, not as a legacy layout
     bm25Marker.markBootstrap(fs, path)
-    // frozen creation parameter as a driver-written file — a 1-row
-    // parquet meta dir costs a Spark job per write and per read
-    graft.operators.MetaFile.write(fs, s"$path/meta",
-      Seq("buckets" -> buckets.toString))
     val idx = buildIndex(docs, textCol, idCol, tokenizer)
       .withColumn("bucket",
         pmod(xxhash64(col("term")), lit(buckets.toLong)))
       .persist() // postings write + the stats delta
+    // frozen creation parameters as a driver-written file — a 1-row
+    // parquet meta dir costs a Spark job per write and per read
+    MetaFile.write(fs, s"$path/meta", Seq(
+      "buckets" -> buckets.toString,
+      "schema" -> LiveRead.schemaDdl(idx.schema)))
     // cluster by bucket before the write: one size-bounded file set
     // per bucket instead of tasks×buckets small files (WriteLayout)
     graft.operators.WriteLayout.clusterBy(idx, "bucket")
@@ -302,7 +321,7 @@ object Bm25 {
     */
   def assertStreamBootstrapSafe(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    bm25Marker.assertBootstrapSafe(bm25Fs(spark, path), path, "bm25")
+    bm25Marker.assertBootstrapSafe(LiveRead.fs(spark, path), path, "bm25")
 
   /** Append NEW documents (caller contract: ids must not already be
     * in the index — a re-ingested id would double its postings and
@@ -327,9 +346,8 @@ object Bm25 {
       tokenizer: Column => Column = TextOps.tokensSimple,
       retain: Int = 1, appliedId: Long = -1L): Unit = {
     val spark = docs.sparkSession
-    val fs = bm25Fs(spark, path)
-    val buckets = graft.operators.MetaFile
-      .read(fs, s"$path/meta")("buckets").toInt
+    val fs = LiveRead.fs(spark, path)
+    val buckets = MetaFile.read(fs, s"$path/meta")("buckets").toInt
     bm25Marker.heal(fs, path, retain) // clear crashed-writer orphans
     val live = bm25Marker.read(fs, path)
     val b = live.gen + 1L
@@ -370,92 +388,60 @@ object Bm25 {
     idx.groupBy(col(idCol)).agg(first(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
 
-  /** All live stats delta rows: the live stats dir's rows plus the
-    * marker-referenced batches' deltas (positive for appends,
-    * negative for deletes).
+  /** All live stats delta rows, read with their fixed schema: the
+    * live stats dir's rows plus the marker-referenced batches' deltas
+    * (positive for appends, negative for deletes).
     */
-  private def statsDeltas(spark: org.apache.spark.sql.SparkSession,
-      path: String, live: graft.operators.LiveState): DataFrame = {
-    val base = spark.read.parquet(s"$path/${live.dir("stats")}")
-    val bs = live.batches ++ live.appends
-    if (bs.isEmpty) base
-    else base.unionByName(spark.read.parquet(
-      bs.map(b => s"$path/stats_deltas/batch=$b"): _*))
-  }
+  private def statsRows(spark: org.apache.spark.sql.SparkSession,
+      path: String, live: graft.operators.LiveState): DataFrame =
+    spark.read.schema("n_docs BIGINT, sum_dl BIGINT").parquet(
+      s"$path/${live.dir("stats")}" +:
+        (live.batches ++ live.appends)
+          .map(b => s"$path/stats_deltas/batch=$b"): _*)
 
   /** The index's summed corpus stats `(n_docs, sum_dl)` — one row,
     * reflecting every committed append and delete.
     */
   def indexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    statsDeltas(spark, path, bm25Marker.read(bm25Fs(spark, path), path))
+    statsRows(spark, path,
+      bm25Marker.read(LiveRead.fs(spark, path), path))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("sum_dl")).as("sum_dl"))
 
   /** Serve top-k from the persisted index — row-identical to [[topK]]
     * over the same logical corpus (shared [[scoreTopK]] tail), but the
-    * postings READ is pruned to the query terms' buckets: the
-    * distinct query terms (a query set, not a corpus — bounded by
-    * contract) resolve to bucket ids on the driver and become a
-    * partition filter, so a 3-term query over a billion-doc index
-    * reads 3 buckets, not the lake.
+    * postings READ is pruned to the query terms' buckets: the query
+    * terms (a query set, not a corpus — bounded by contract) resolve
+    * to bucket ids on the driver and become a partition filter, so a
+    * 3-term query over a billion-doc index reads 3 buckets, not the
+    * lake. Snapshot resolution is driver-side: file reads, the bucket
+    * collect (job-free over a local query frame) and ONE collect of
+    * the stats rows into the literal `(N, avgdl)`.
     */
   def topKFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, queryIdCol: String,
       idCol: String, k: Int = 10, k1: Double = 1.2,
       b: Double = 0.75, atGen: Option[Long] = None): DataFrame = {
-    val fs = bm25Fs(spark, path)
-    val buckets = graft.operators.MetaFile
-      .read(fs, s"$path/meta")("buckets").toInt
+    val fs = LiveRead.fs(spark, path)
+    val meta = LiveRead.meta(spark, path)
+    val buckets = meta("buckets").toLong
     val live = atGen.map(bm25Marker.readAt(fs, path, _))
       .getOrElse(bm25Marker.read(fs, path))
-    val qterms = queries.select(col(queryIdCol), col("term")).distinct()
-    val bucketIds = qterms.select(
-      pmod(xxhash64(col("term")), lit(buckets.toLong)).as("_b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val postings = livePostings(spark, path, live, idCol,
+    val bucketIds = queries
+      .select(pmod(xxhash64(col("term")), lit(buckets)))
+      .collect().map(_.getLong(0)).distinct.toSeq
+    val postings = LiveRead.rows(spark, path, live, "postings",
+      "postings_batches", meta, idCol,
       Some(col("bucket").isin(bucketIds: _*)))
-    val stats = statsDeltas(spark, path, live)
-      .agg(sum(col("n_docs")).as("_n"), sum(col("sum_dl")).as("_sumdl"))
-      .select(col("_n"),
-        (col("_sumdl").cast("double") / col("_n").cast("double"))
-          .as("_avgdl"))
-      .localCheckpoint()
+    val (n, avgdl) = statLits(statsRows(spark, path, live).collect())
+    val qterms = queries.select(col(queryIdCol), col("term")).distinct()
     // df(term) off the pruned LIVE read — hash-complete per term,
     // tombstoned docs already excluded so idf shifts with deletes
-    val idf = postings
-      .join(broadcast(qterms.select(col("term")).distinct()),
-        Seq("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("_df"))
-      .crossJoin(broadcast(stats))
-      .select(col("term"), idfMicroExpr.as("idf_micro"))
+    val idf = idfOf(postings.join(
+      broadcast(qterms.select(col("term")).distinct()), Seq("term")), n)
     val qi = qterms.join(broadcast(idf), Seq("term"))
-    scoreTopK(postings, qi, stats, queryIdCol, idCol, k, k1, b)
-  }
-
-  /** The snapshot's live postings: the marker-resolved generation
-    * plus its append segments, minus the tombstone batches (the q265
-    * PQ-index discipline: ids-only tombstone set, broadcast
-    * anti-join, no batches = nothing deleted). `bucketFilter` is
-    * applied to EACH directory read so partition pruning holds on
-    * the generation and every append segment alike.
-    */
-  private def livePostings(spark: org.apache.spark.sql.SparkSession,
-      path: String, live: graft.operators.LiveState, idCol: String,
-      bucketFilter: Option[Column]): DataFrame = {
-    def rd(dir: String): DataFrame = {
-      val d = spark.read.parquet(dir)
-      bucketFilter.map(d.filter).getOrElse(d)
-    }
-    val all = live.appends.foldLeft(rd(s"$path/${live.dir("postings")}")) {
-      (acc, b) => acc.unionByName(rd(s"$path/postings_batches/batch=$b"))
-    }
-    if (live.batches.isEmpty) all
-    else all.join(
-      broadcast(spark.read.parquet(
-        live.batches.map(b => s"$path/tombstones/batch=$b"): _*)
-        .select(col(idCol)).distinct()),
-      Seq(idCol), "left_anti")
+    scoreTopK(postings, qi, avgdl, queryIdCol, idCol, k, k1, b)
   }
 
   /** Delete documents from the persisted index: the batch's ids land
@@ -473,15 +459,20 @@ object Bm25 {
   def deleteFromBm25Index(ids: DataFrame, path: String,
       idCol: String, retain: Int = 1): Unit = {
     val spark = ids.sparkSession
-    val fs = bm25Fs(spark, path)
+    val fs = LiveRead.fs(spark, path)
     // clear any orphan of a crashed writer
     bm25Marker.heal(fs, path, retain)
     val live = bm25Marker.read(fs, path)
     val b = live.gen + 1L
-    val idSet = ids.select(col(idCol)).distinct().persist()
+    val postings = LiveRead.rows(spark, path, live, "postings",
+      "postings_batches", LiveRead.meta(spark, path), idCol)
+    // ids in the index's id type, so the declared tombstone read
+    // matches the file (an id the type cannot hold becomes null)
+    val idSet = ids.select(col(idCol)
+      .try_cast(postings.schema(idCol).dataType).as(idCol))
+      .distinct().persist()
     // negative delta off the CURRENT live postings
-    val gone = livePostings(spark, path, live, idCol, None)
-      .join(broadcast(idSet), Seq(idCol), "left_semi")
+    val gone = postings.join(broadcast(idSet), Seq(idCol), "left_semi")
     statsDelta(gone, idCol)
       .select((-col("n_docs")).as("n_docs"),
         (-col("sum_dl")).as("sum_dl"))
@@ -515,11 +506,12 @@ object Bm25 {
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, retain: Int = 1): Unit = {
-    val fs = bm25Fs(spark, path)
+    val fs = LiveRead.fs(spark, path)
     bm25Marker.heal(fs, path, retain)
     val live = bm25Marker.read(fs, path)
     val gen = live.gen + 1L
-    val kept = livePostings(spark, path, live, idCol, None)
+    val kept = LiveRead.rows(spark, path, live, "postings",
+      "postings_batches", LiveRead.meta(spark, path), idCol)
       .persist() // rewrite + re-based stats
     graft.operators.WriteLayout.clusterBy(kept, "bucket")
       .write.partitionBy("bucket").mode("errorifexists")
@@ -548,7 +540,7 @@ object Bm25 {
       path: String, idCol: String, maxSegments: Int,
       retain: Int = 1): Boolean = {
     require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val live = bm25Marker.read(bm25Fs(spark, path), path)
+    val live = bm25Marker.read(LiveRead.fs(spark, path), path)
     val n = live.batches.size + live.appends.size
     if (n > maxSegments) {
       compactBm25Index(spark, path, idCol, retain); true
@@ -563,9 +555,9 @@ object Bm25 {
     */
   def bm25IndexIds(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): DataFrame = {
-    val live = bm25Marker.read(bm25Fs(spark, path), path)
-    livePostings(spark, path, live, idCol, None)
-      .select(col(idCol)).distinct()
+    val live = bm25Marker.read(LiveRead.fs(spark, path), path)
+    LiveRead.rows(spark, path, live, "postings", "postings_batches",
+      LiveRead.meta(spark, path), idCol).select(col(idCol)).distinct()
   }
 
   /** The committed snapshot generations still readable (oldest
@@ -574,7 +566,7 @@ object Bm25 {
     */
   def bm25Generations(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[Long] =
-    bm25Marker.listGenerations(bm25Fs(spark, path), path)
+    bm25Marker.listGenerations(LiveRead.fs(spark, path), path)
 
   /** The highest stream batch id committed into this index's marker
     * chain (-1 = none) — [[graft.streaming.StreamingBm25]]'s
@@ -582,5 +574,5 @@ object Bm25 {
     */
   def lastAppliedStreamBatch(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    bm25Marker.read(bm25Fs(spark, path), path).applied
+    bm25Marker.read(LiveRead.fs(spark, path), path).applied
 }

@@ -231,15 +231,16 @@ class RetrievalSpec extends SparkSpec {
     assert(Bm25.indexStats(spark, dir).head().getLong(0) == 5L)
   }
 
+  private lazy val emb = (0L until 12L).map(i => (i, Array.tabulate(8)(d =>
+    (((i * 7 + d * 3) % 11).toFloat - 5.0f) / 3.0f)))
+    .toDF("vec_id", "embedding")
+
   test("persisted hybrid: RRF over the BM25 + ANN index artifacts is " +
     "row-identical to the same legs computed in memory") {
     import graft.sim.SimSearch
     val bmDir = s"${tmpDir("hyb-bm")}/idx"
     val annDir = s"${tmpDir("hyb-ann")}/idx"
     Bm25.writeBm25Index(corpus, "text", "doc_id", bmDir, buckets = 8)
-    val emb = (0L until 12L).map(i => (i, Array.tabulate(8)(d =>
-      (((i * 7 + d * 3) % 11).toFloat - 5.0f) / 3.0f)))
-      .toDF("vec_id", "embedding")
     SimSearch.writeAnnIndex(emb, annDir, "vec_id", "embedding",
       planes = 4, dim = 8)
     val queries = Seq((1L, "spark"), (2L, "pasta"))
@@ -262,6 +263,158 @@ class RetrievalSpec extends SparkSpec {
       SimSearch.annTopK(emb, "vec_id", "embedding",
         col("vec_id").isin(1L, 2L), k = 10, planes = 4, dim = 8))
     assert(persisted == inMemory && persisted.nonEmpty)
+  }
+
+  /** BM25 + ANN indexes with one append and one delete batch pending:
+    * BM25 holds docs 1-5 minus 2, ANN vectors 0-11 minus 3.
+    */
+  private def indexesWithDebt(): (String, String) = {
+    import graft.sim.SimSearch
+    val bmDir = s"${tmpDir("debt-bm")}/idx"
+    val annDir = s"${tmpDir("debt-ann")}/idx"
+    Bm25.writeBm25Index(corpus.filter(col("doc_id") <= 3), "text",
+      "doc_id", bmDir, buckets = 8)
+    Bm25.appendToBm25Index(corpus.filter(col("doc_id") > 3), "text",
+      "doc_id", bmDir)
+    Bm25.deleteFromBm25Index(Seq(2L).toDF("doc_id"), bmDir, "doc_id")
+    SimSearch.writeAnnIndex(emb.filter(col("vec_id") < 8), annDir,
+      "vec_id", "embedding", planes = 4, dim = 8)
+    SimSearch.appendToAnnIndex(emb.filter(col("vec_id") >= 8), annDir,
+      "vec_id", "embedding")
+    SimSearch.deleteFromAnnIndex(Seq(3L).toDF("vec_id"), annDir)
+    (bmDir, annDir)
+  }
+
+  private val debtQueries = Seq((1L, "spark"), (1L, "pasta"),
+    (2L, "the")).toDF("query_id", "term")
+
+  private def overLive(docs: org.apache.spark.sql.DataFrame) =
+    Bm25.topK(Bm25.buildIndex(docs, "text", "doc_id"), debtQueries,
+      "query_id", "doc_id").collect().toSet
+
+  test("index snapshot resolution runs on the driver: topKFromIndex + " +
+    "readAnnIndex start at most one job and infer no schema") {
+    import graft.sim.SimSearch
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (bmDir, annDir) = indexesWithDebt()
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(e)
+    }
+    def group(e: SparkListenerJobStart): String =
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+        .orNull
+    val g = s"snapshot-${System.nanoTime}"
+    sc.addSparkListener(listener)
+    val (bm, ann) =
+      try {
+        sc.setJobGroup(g, "snapshot resolution")
+        val bm = Bm25.topKFromIndex(spark, bmDir, debtQueries,
+          "query_id", "doc_id")
+        val ann = SimSearch.readAnnIndex(spark, annDir)
+        // a sentinel job: the listener bus delivers job starts in
+        // order, so once it shows, every earlier start has too
+        sc.setJobGroup(s"$g-end", "sentinel")
+        sc.parallelize(Seq(1), 1).count()
+        val deadline = System.nanoTime + 30000000000L
+        while (!starts.toArray(Array.empty[SparkListenerJobStart])
+            .exists(e => group(e) == s"$g-end") &&
+            System.nanoTime < deadline) Thread.sleep(20)
+        (bm, ann)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    val eager = starts.toArray(Array.empty[SparkListenerJobStart])
+      .filter(e => group(e) == g)
+    val names = eager.flatMap(_.stageInfos.map(_.name)).toSeq
+    assert(eager.length <= 1, names.mkString("; "))
+    assert(!names.exists(_.startsWith("parquet at")), names.mkString("; "))
+    // the rows are those of in-memory search over the live corpus
+    val served = bm.collect().toSet
+    assert(served == overLive(corpus.filter(col("doc_id") =!= 2L)) &&
+      served.nonEmpty)
+    assert(ann.select("vec_id").collect().map(_.getLong(0)).toSet ==
+      ((0L until 12L).toSet - 3L))
+  }
+
+  test("indexes whose meta has no schema key (written before it " +
+    "existed) serve identical rows through every lifecycle call") {
+    import graft.sim.SimSearch
+    val (bmDir, annDir) = indexesWithDebt()
+    def serveBoth() = (
+      Bm25.topKFromIndex(spark, bmDir, debtQueries, "query_id",
+        "doc_id").collect().toSet,
+      SimSearch.readAnnIndex(spark, annDir).collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1), r.getLong(2))).toSet)
+    val before = serveBoth()
+    val annSchema = SimSearch.readAnnIndex(spark, annDir).schema
+    for (dir <- Seq(bmDir, annDir)) {
+      val meta = java.nio.file.Paths.get(s"$dir/meta")
+      val lines = java.nio.file.Files.readAllLines(meta)
+      assert(lines.removeIf(_.startsWith("schema=")))
+      java.nio.file.Files.write(meta, lines)
+      // the checksum sidecar of the local file system would no longer
+      // match the edited file
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$dir/.meta.crc"))
+    }
+    assert(serveBoth() == before && before._1.nonEmpty)
+    assert(SimSearch.readAnnIndex(spark, annDir).schema == annSchema)
+    // deletes infer the id type for their cast; compaction rewrites
+    Bm25.deleteFromBm25Index(Seq(4).toDF("doc_id"), bmDir, "doc_id")
+    SimSearch.deleteFromAnnIndex(Seq(4).toDF("vec_id"), annDir)
+    Bm25.compactBm25Index(spark, bmDir, "doc_id")
+    SimSearch.compactAnnIndex(spark, annDir)
+    assert(Bm25.topKFromIndex(spark, bmDir, debtQueries, "query_id",
+      "doc_id").collect().toSet ==
+      overLive(corpus.filter(!col("doc_id").isin(2L, 4L))))
+    assert(SimSearch.readAnnIndex(spark, annDir).count() == 10L)
+  }
+
+  test("IntegerType delete ids remove docs from LongType indexes of " +
+    "both families; tombstones carry the index id type") {
+    import graft.sim.SimSearch
+    import org.apache.spark.sql.types.LongType
+    val bmDir = s"${tmpDir("int-del-bm")}/idx"
+    val annDir = s"${tmpDir("int-del-ann")}/idx"
+    Bm25.writeBm25Index(corpus, "text", "doc_id", bmDir, buckets = 8)
+    SimSearch.writeAnnIndex(emb, annDir, "vec_id", "embedding",
+      planes = 4, dim = 8)
+    Bm25.deleteFromBm25Index(Seq(2, 4).toDF("doc_id"), bmDir, "doc_id")
+    SimSearch.deleteFromAnnIndex(Seq(1, 5).toDF("vec_id"), annDir)
+    assert(spark.read.parquet(s"$bmDir/tombstones/batch=2")
+      .schema("doc_id").dataType == LongType)
+    assert(spark.read.parquet(s"$annDir/tombstones/batch=2")
+      .schema("vec_id").dataType == LongType)
+    assert(Bm25.bm25IndexIds(spark, bmDir, "doc_id").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 3L, 5L))
+    assert(Bm25.topKFromIndex(spark, bmDir, debtQueries, "query_id",
+      "doc_id").collect().toSet ==
+      overLive(corpus.filter(!col("doc_id").isin(2L, 4L))))
+    assert(SimSearch.readAnnIndex(spark, annDir).select("vec_id")
+      .collect().map(_.getLong(0)).toSet ==
+      ((0L until 12L).toSet -- Set(1L, 5L)))
+  }
+
+  test("deleting every doc serves zero rows from both families") {
+    import graft.sim.SimSearch
+    val bmDir = s"${tmpDir("all-del-bm")}/idx"
+    val annDir = s"${tmpDir("all-del-ann")}/idx"
+    Bm25.writeBm25Index(corpus, "text", "doc_id", bmDir, buckets = 8)
+    SimSearch.writeAnnIndex(emb, annDir, "vec_id", "embedding",
+      planes = 4, dim = 8)
+    Bm25.deleteFromBm25Index(corpus.select("doc_id"), bmDir, "doc_id")
+    SimSearch.deleteFromAnnIndex(emb.select("vec_id"), annDir)
+    assert(Bm25.topKFromIndex(spark, bmDir, debtQueries, "query_id",
+      "doc_id").count() == 0L)
+    assert(Bm25.indexStats(spark, bmDir).head().getLong(0) == 0L)
+    assert(SimSearch.annTopKFromIndex(SimSearch.readAnnIndex(spark,
+      annDir), emb, "vec_id", "embedding", k = 3, planes = 4, dim = 8)
+      .count() == 0L)
   }
 
   test("fimSplit: prefix+middle+suffix reassemble every doc; cuts are " +
