@@ -1,0 +1,164 @@
+#!/usr/bin/env python3
+"""Alternating A/B of the repo's benchmark: a parent ref against the working tree.
+
+    python3 scripts/perfbench_ab.py --parent <ref> --workload <name> \\
+        --seeds 961-968,1001 --pairs 10 [--seconds 12] [--trace 0] \\
+        [--scratch DIR] [--json FILE]
+
+Exports `git archive <ref>` into `<scratch>/<sha8>` (reused on later calls
+for the same commit; keep the scratch path short, since sbt puts a Unix
+socket under the checkout), then runs `perfbench/run.py` in both checkouts as
+alternating pairs: pair i runs seed `seeds[i % len(seeds)]`, and the side
+that goes first alternates, so drift on the host spreads over both sides.
+Each checkout builds its own `perfbench/target` on its first run.
+
+Prints one row per metric: q1 / median / q3 for the parent and the change,
+the ratio of medians (change / parent), and in how many pairs the change was
+better (the direction comes from BENCHMARK.json; ties count as no win). Ends
+with the correct / failed / attempted totals of each side. With `--json`,
+every run's result line is saved as well.
+
+Compare only runs taken on the same box with nothing else running: a
+concurrent build or test JVM distorts every number.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import tempfile
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def parse_seeds(text):
+    seeds = []
+    for part in text.split(","):
+        lo, _, hi = part.strip().partition("-")
+        seeds += range(int(lo), int(hi) + 1) if hi else [int(lo)]
+    if not seeds:
+        sys.exit("--seeds names no seed")
+    return seeds
+
+
+def export_parent(ref, scratch):
+    sha = subprocess.run(["git", "rev-parse", "--verify", f"{ref}^{{commit}}"], cwd=ROOT,
+                         capture_output=True, text=True, check=True).stdout.strip()
+    # short: sbt's server socket lives under the checkout, and a Unix
+    # socket path may not exceed 108 bytes
+    dest = os.path.join(scratch, sha[:8])
+    if not os.path.isdir(dest):
+        tmp = dest + ".partial"
+        os.makedirs(tmp, exist_ok=True)
+        archive = subprocess.Popen(["git", "archive", sha], cwd=ROOT, stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", tmp], stdin=archive.stdout, check=True)
+        if archive.wait() != 0:
+            sys.exit(f"git archive {sha} failed")
+        os.rename(tmp, dest)
+    return sha, dest
+
+
+def run_once(checkout, a, seed):
+    cmd = [sys.executable, "perfbench/run.py", "--workload", a.workload, "--seed", str(seed),
+           "--seconds", str(a.seconds), "--trace", str(a.trace)]
+    p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = p.stdout.strip().splitlines()
+    try:
+        if p.returncode != 0 or not lines:
+            raise ValueError(f"exit {p.returncode}")
+        return json.loads(lines[-1])
+    except ValueError as e:
+        tail = "\n".join(p.stderr.strip().splitlines()[-5:])
+        print(f"[ab] {checkout} seed {seed}: no result ({e})\n{tail}", file=sys.stderr)
+        return None
+
+
+def directions():
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    return {m["name"]: m["better"] for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
+def fmt(x):
+    return f"{x:.4g}"
+
+
+def value(result, k):
+    """A metric's number: result lines carry `{"value": v, "unit": u}`."""
+    m = result["metrics"].get(k)
+    v = m.get("value") if isinstance(m, dict) else m
+    return v if isinstance(v, (int, float)) else None
+
+
+def report(pairs, better):
+    names = sorted({k for p, c in pairs if p and c for k in set(p["metrics"]) & set(c["metrics"])},
+                   key=lambda k: (k not in better, k))
+    print("| metric | parent q1 / median / q3 | change q1 / median / q3 | ratio | change wins |")
+    print("|---|---|---|---|---|")
+    for k in names:
+        both = [(value(p, k), value(c, k)) for p, c in pairs if p and c]
+        both = [(x, y) for x, y in both if x is not None and y is not None]
+        if not both:
+            continue
+        ps, cs = [x for x, _ in both], [y for _, y in both]
+        pq, cq = quartiles(ps), quartiles(cs)
+        ratio = cq[1] / pq[1] if pq[1] else float("nan")
+        sign = -1 if better.get(k, "lower") == "lower" else 1
+        wins = sum(1 for x, y in both if sign * (y - x) > 0)
+        print(f"| `{k}` | {' / '.join(map(fmt, pq))} | {' / '.join(map(fmt, cq))} "
+              f"| {ratio:.3f} | {wins}/{len(both)} |")
+    for side, idx in (("parent", 0), ("change", 1)):
+        runs = [pr[idx] for pr in pairs]
+        ok = [r for r in runs if r]
+        print(f"{side}: {sum(1 for r in ok if r['correct'])}/{len(runs)} runs correct, "
+              f"{len(runs) - len(ok)} without a result, "
+              f"failed/attempted {sum(r['failed'] for r in ok)}/{sum(r['attempted'] for r in ok)}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("--parent", required=True, help="git ref of the parent side")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, type=parse_seeds, help="e.g. 961-968,1001")
+    ap.add_argument("--pairs", required=True, type=int)
+    ap.add_argument("--seconds", type=int, default=12)
+    ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
+    ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "perfbench-ab"))
+    ap.add_argument("--json", help="also write every run's result line here")
+    a = ap.parse_args()
+    if a.pairs < 1:
+        sys.exit("--pairs must be at least 1")
+    sha, parent = export_parent(a.parent, a.scratch)
+    print(f"[ab] parent {sha[:12]} in {parent}; change = working tree {ROOT}", file=sys.stderr)
+    pairs, log = [], []
+    for i in range(a.pairs):
+        seed = a.seeds[i % len(a.seeds)]
+        order = [("parent", parent), ("change", ROOT)]
+        if i % 2:
+            order.reverse()
+        got = {}
+        for side, checkout in order:
+            got[side] = run_once(checkout, a, seed)
+            log.append({"pair": i, "seed": seed, "side": side, "result": got[side]})
+            r = got[side]
+            print(f"[ab] pair {i + 1}/{a.pairs} seed {seed} {side}: "
+                  + (json.dumps({k: value(r, k) for k in ("read_p50_ms", "ops_per_s")}) if r else "-"),
+                  file=sys.stderr)
+        pairs.append((got["parent"], got["change"]))
+        if a.json:
+            with open(a.json, "w") as f:
+                json.dump({"parent": sha, "workload": a.workload, "seconds": a.seconds,
+                           "trace": a.trace, "runs": log}, f, indent=1)
+    report(pairs, directions())
+
+
+if __name__ == "__main__":
+    main()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,9 +41,6 @@ object DocPool {
   def partOf(idCol: Column, buckets: Int): Column =
     pmod(xxhash64(idCol), lit(buckets.toLong))
 
-  private def fsFor(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def readMeta(
       spark: SparkSession, root: String): (Int, String) = {
     val m = spark.read.parquet(s"$root/_doc_meta").head()
@@ -61,7 +58,7 @@ object DocPool {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = docs.sparkSession
     import spark.implicits._
-    val fs = fsFor(spark, root)
+    val fs = LiveRead.fs(spark, root)
     pool.heal(fs, root, retain) // finish/GC any interrupted write
     val prev = pool.readMarker(fs, root)
     val gen = prev.gen + 1L
@@ -78,18 +75,19 @@ object DocPool {
     } else
       Seq((buckets, idCol)).toDF("buckets", "id_col").coalesce(1)
         .write.mode("errorifexists").parquet(s"$root/_doc_meta")
-    WriteLayout.clusterBy(
+    val rows = WriteLayout.clusterBy(
       docs.filter(col(idCol).isNotNull)
         .withColumn("part", partOf(col(idCol), buckets)),
       "part")
-      .write.partitionBy("part")
+    rows.write.partitionBy("part")
       .mode("errorifexists") // collision = concurrent writer, fail loud
       .parquet(s"$root/gen=$gen")
     val written = pool.partsUnder(fs, new Path(s"$root/gen=$gen"))
     // a full write REPLACES: every live bucket points at the new gen
     pool.writeMarker(fs, root,
       pool.Marker(gen, written.map(_ -> gen).toMap, prev.retain,
-        math.max(prev.applied, appliedId)), retain)
+        math.max(prev.applied, appliedId),
+        pool.schemaAfter(prev, rows.schema, Set("part"))), retain)
     pool.heal(fs, root, retain)
   }
 
@@ -119,7 +117,7 @@ object DocPool {
     */
   def removeIds(spark: SparkSession, ids: DataFrame, root: String,
       idCol: String, retain: Int = 1): Unit = {
-    val fs = fsFor(spark, root)
+    val fs = LiveRead.fs(spark, root)
     pool.heal(fs, root, retain)
     val prev = pool.readMarker(fs, root)
     require(prev.parts.nonEmpty,
@@ -128,20 +126,20 @@ object DocPool {
     val touched = targetParts(spark, root, base, idCol, prev)
     if (touched.isEmpty) return // ids hash only to empty buckets
     val gen = prev.gen + 1L
-    val dirs = touched.map { case (p, g) => s"$root/gen=$g/$p" }
     // partition-pruned read of ONLY the touched buckets; `part` rides
     // along as a partition column so the rewrite lands bucket-true
-    spark.read.option("basePath", root).parquet(dirs: _*)
+    val rows = pool.readParts(spark, root, prev, touched)
       .drop("gen")
       .join(broadcast(base), Seq(idCol), "left_anti")
       .transform(WriteLayout.clusterBy(_, "part"))
-      .write.partitionBy("part").mode("errorifexists")
+    rows.write.partitionBy("part").mode("errorifexists")
       .parquet(s"$root/gen=$gen")
     val written = pool.partsUnder(fs, new Path(s"$root/gen=$gen"))
     val next = (prev.parts -- touched.map(_._1)) ++
       written.map(_ -> gen).toMap
     pool.writeMarker(fs, root,
-      pool.Marker(gen, next, prev.retain, prev.applied), retain)
+      pool.Marker(gen, next, prev.retain, prev.applied,
+        pool.schemaAfter(prev, rows.schema, Set("part"))), retain)
     pool.heal(fs, root, retain)
   }
 
@@ -162,7 +160,7 @@ object DocPool {
   def upsert(docs: DataFrame, root: String, idCol: String,
       retain: Int = 1, appliedId: Long = -1L): Unit = {
     val spark = docs.sparkSession
-    val fs = fsFor(spark, root)
+    val fs = LiveRead.fs(spark, root)
     pool.heal(fs, root, retain)
     val prev = pool.readMarker(fs, root)
     require(prev.parts.nonEmpty,
@@ -185,21 +183,21 @@ object DocPool {
       .filter(t => targetSet.contains(t._1)).sortBy(_._1)
     val survivors =
       if (existing.isEmpty) batch.filter(lit(false))
-      else spark.read.option("basePath", root)
-        .parquet(existing.map { case (p, g) => s"$root/gen=$g/$p" }: _*)
+      else pool.readParts(spark, root, prev, existing)
         .drop("gen", "part")
         .join(broadcast(ids), Seq(idCol), "left_anti")
-    WriteLayout.clusterBy(
+    val rows = WriteLayout.clusterBy(
       survivors.unionByName(batch)
         .withColumn("part", partOf(col(idCol), buckets)),
       "part")
-      .write.partitionBy("part").mode("errorifexists")
+    rows.write.partitionBy("part").mode("errorifexists")
       .parquet(s"$root/gen=$gen")
     val written = pool.partsUnder(fs, new Path(s"$root/gen=$gen"))
     val next = (prev.parts -- targetSet) ++ written.map(_ -> gen).toMap
     pool.writeMarker(fs, root,
       pool.Marker(gen, next, prev.retain,
-        math.max(prev.applied, appliedId)), retain)
+        math.max(prev.applied, appliedId),
+        pool.schemaAfter(prev, rows.schema, Set("part"))), retain)
     pool.heal(fs, root, retain)
   }
 
@@ -209,7 +207,7 @@ object DocPool {
     */
   def lastAppliedStreamBatch(
       spark: SparkSession, root: String): Long =
-    pool.readMarker(fsFor(spark, root), root).applied
+    pool.readMarker(LiveRead.fs(spark, root), root).applied
 
   /** The pool rows holding any of `ids` — the membership read
     * [[Takedown]] certifies against, partition-pruned to the ids'
@@ -219,15 +217,14 @@ object DocPool {
     */
   def readForIds(spark: SparkSession, root: String, ids: DataFrame,
       idCol: String): DataFrame = {
-    val fs = fsFor(spark, root)
+    val fs = LiveRead.fs(spark, root)
     val m = pool.readMarker(fs, root)
     val base = ids.select(col(idCol)).distinct()
     if (m.parts.isEmpty)
       return base.filter(lit(false)) // empty pool: nothing matches
     val touched = targetParts(spark, root, base, idCol, m)
     if (touched.isEmpty) return base.filter(lit(false))
-    val dirs = touched.map { case (p, g) => s"$root/gen=$g/$p" }
-    spark.read.option("basePath", root).parquet(dirs: _*)
+    pool.readParts(spark, root, m, touched)
       .drop("gen", "part")
       .join(broadcast(base), Seq(idCol), "left_semi")
   }
@@ -239,21 +236,21 @@ object DocPool {
     */
   def read(spark: SparkSession, root: String): DataFrame =
     pool.readSnapshot(spark, root,
-      pool.readMarker(fsFor(spark, root), root), Seq("gen", "part"))
+      pool.readMarker(LiveRead.fs(spark, root), root), Seq("gen", "part"))
 
   /** TIME-TRAVEL read: the corpus exactly as committed by snapshot
     * `gen` — "what did the pool hold before this takedown batch?".
     */
   def read(spark: SparkSession, root: String, gen: Long): DataFrame =
     pool.readSnapshot(spark, root,
-      pool.markerAt(fsFor(spark, root), root, gen,
+      pool.markerAt(LiveRead.fs(spark, root), root, gen,
         "raise the lifecycle calls' retain"), Seq("gen", "part"))
 
   /** The committed snapshot generations still on disk, oldest first. */
   def listGenerations(spark: SparkSession, root: String): Seq[Long] =
-    pool.listGenerations(fsFor(spark, root), root)
+    pool.listGenerations(LiveRead.fs(spark, root), root)
 
   /** True when at least one committed bucket exists. */
   def hasPool(spark: SparkSession, root: String): Boolean =
-    pool.readMarker(fsFor(spark, root), root).parts.nonEmpty
+    pool.readMarker(LiveRead.fs(spark, root), root).parts.nonEmpty
 }

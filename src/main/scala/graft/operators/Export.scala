@@ -4,9 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /** CSV export sink (SURVEY.md §2.1 S6; reference `/root/reference/src/
   * export.py`, `scripts/random_plays_sampler.py:96-99`): canonical 4-key
-  * sort, single header CSV for small sampled batches, sharded CSV for big
-  * ones (a single-file dump of a 100 TB result would serialize through one
-  * task — only coalesce when the result is sample-sized).
+  * sort, single header CSV for small sampled batches (a single-file dump
+  * of a 100 TB result would serialize through one task — only coalesce
+  * when the result is sample-sized).
   */
 object Export {
 
@@ -20,10 +20,6 @@ object Export {
   def csvSingle(df: DataFrame, path: String): Unit =
     sortedCanonical(df).coalesce(1)
       .write.option("header", "true").mode("overwrite").csv(path)
-
-  /** Large result → parallel CSV shards. */
-  def csvSharded(df: DataFrame, path: String): Unit =
-    df.write.option("header", "true").mode("overwrite").csv(path)
 
   /** JSON-Lines export — the interchange format LLM training pipelines
     * consume (one JSON object per line). Sharded by default: each task

@@ -13,6 +13,18 @@ import graft.schema.SchemaConfig
   * partition: dynamic partition overwrite ≡ the reference's fixed-filename
   * upsert (`src/ingest.py:82-87`).
   *
+  * `poolRoot/_pool_schema` ([[Pool]]'s sidecar, a [[MetaFile]] with a
+  * `schema=<DDL>` key) declares the data columns, all nullable; `season`
+  * and `gameId` stay with path inference. [[writePool]],
+  * [[upsertPartitioned]] and [[compactPool]] keep it honest: it is
+  * created only after a write into an empty or absent root, kept while
+  * each later write's data schema is exactly equal (column order
+  * included), and deleted BEFORE the first write whose schema differs
+  * (e.g. a mixed-vintage drop that lost a required column) — a crash in
+  * between never leaves a stale declaration. Readers ([[Pool.df]],
+  * [[compactPool]]) declare it when present and infer otherwise, which
+  * covers pools written before the sidecar existed.
+  *
   * Scale notes: `ingestAll` reads the whole input glob as ONE job — at
   * 100 TB that is the right shape (massively parallel scan, no driver loop;
   * the partitioned write is shuffle-free map-side work). `run` keeps the
@@ -81,8 +93,7 @@ object Ingest {
       partitionCols: Seq[String] = Seq("season", "gameId"),
       filesPerPartition: Int = 1): Unit = {
     require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf)
+    val fs = LiveRead.fs(spark, root)
     val rootPath = fs.makeQualified(new org.apache.hadoop.fs.Path(root))
     val staging = new org.apache.hadoop.fs.Path(
       rootPath.getParent, "." + rootPath.getName + "_compact_staging")
@@ -130,7 +141,7 @@ object Ingest {
       swapStagedIn(depth)
     } else fs.delete(staging, true)
 
-    val src = spark.read.parquet(root)
+    val src = Pool.read(spark, root)
     val selected = src.filter(pred)
     // the unresolved Column is opaque (Spark 4 ColumnNodeExpression) —
     // read the references off the ANALYZED filter instead
@@ -184,7 +195,12 @@ object Ingest {
     finally out.close()
     if (!fs.rename(markerTmp, marker))
       sys.error(s"compactPool: failed to commit marker $marker")
-    swapStagedIn(partitionCols.size)
+    // the swap is the write into the pool: the default partitioning keeps
+    // the data schema and the sidecar; another one moves columns between
+    // path and file, so the sidecar goes first
+    Pool.recordingSchema(fs, root, selected.schema, partitionCols) {
+      swapStagedIn(partitionCols.size)
+    }
   }
 
   /** Per-partition statistics (the manifest a table format would keep):
@@ -196,7 +212,7 @@ object Ingest {
       spark: SparkSession, root: String,
       partitionCols: Seq[String] = Seq("season", "gameId"),
       frameCol: String = "frameId"): DataFrame =
-    spark.read.parquet(root)
+    Pool.read(spark, root)
       .groupBy(partitionCols.map(col): _*)
       .agg(count(lit(1)).as("n_rows"),
         min(col(frameCol)).as("min_frame"),
@@ -306,18 +322,21 @@ object Ingest {
         .map { case (c, i) => col(c) <=> lit(r.get(i)) }
         .reduce(_ && _)
     }.reduce(_ || _)
-    val base = spark.read.parquet(poolRoot).filter(touched)
+    val base = Pool.read(spark, poolRoot).filter(touched)
     // the write overwrites partitions it is also reading from —
     // materialize the merge first so no task reads a leaf the committer
     // is replacing (same staged-swap discipline as compactPool)
     val merged = upsert(
       base.select(updates.columns.map(col).toSeq: _*), updates,
       keyCols, versionCol).localCheckpoint()
-    merged.write
-      .partitionBy(partitionCols: _*)
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .parquet(poolRoot)
+    Pool.recordingSchema(LiveRead.fs(spark, poolRoot), poolRoot,
+        merged.schema, partitionCols) {
+      merged.write
+        .partitionBy(partitionCols: _*)
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(poolRoot)
+    }
   }
 
   /** JSON-Lines source (one object per line — the format `Export.jsonl`
@@ -387,14 +406,21 @@ object Ingest {
     df.withColumn(
       "season", substring(col("gameId").cast("string"), 1, 4).cast("int"))
 
-  def writePool(df: DataFrame, poolRoot: String): Unit =
-    withSeason(df)
+  /** Per-game upsert into the pool, keeping its `_pool_schema` sidecar
+    * by the rule in the layout notes above.
+    */
+  def writePool(df: DataFrame, poolRoot: String): Unit = {
+    val rows = withSeason(df)
       .filter(col("gameId").isNotNull) // reference skips null group keys
-      .write
-      .partitionBy("season", "gameId")
-      .option("partitionOverwriteMode", "dynamic") // per-game upsert
-      .mode("overwrite")
-      .parquet(poolRoot)
+    Pool.recordingSchema(LiveRead.fs(df.sparkSession, poolRoot), poolRoot,
+        rows.schema, Seq("season", "gameId")) {
+      rows.write
+        .partitionBy("season", "gameId")
+        .option("partitionOverwriteMode", "dynamic") // per-game upsert
+        .mode("overwrite")
+        .parquet(poolRoot)
+    }
+  }
 
   /** Whole-directory ingest as one distributed job (the 100 TB path).
     * The input is scanned exactly once: the summary is computed from the
@@ -410,7 +436,7 @@ object Ingest {
     if (dryRun) summarize(normalized)
     else {
       writePool(normalized, poolRoot)
-      summarize(spark.read.parquet(poolRoot))
+      summarize(Pool.read(spark, poolRoot))
     }
   }
 
@@ -423,8 +449,8 @@ object Ingest {
       poolRoot: String,
       config: SchemaConfig,
       dryRun: Boolean = false): Result = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    // the file system that owns inputDir, not the default one
+    val fs = LiveRead.fs(spark, inputDir)
     val files = fs.globStatus(
       new org.apache.hadoop.fs.Path(s"$inputDir/*.csv"))
       .map(_.getPath.toString).sorted

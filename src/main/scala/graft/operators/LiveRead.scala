@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
   */
 private[graft] object LiveRead {
 
+  /** The file system that owns `path` (not the default one). */
   def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -25,11 +26,7 @@ private[graft] object LiveRead {
 
   /** The `schema` meta value: all columns nullable, `bucket` LongType. */
   def schemaDdl(frame: StructType): String =
-    StructType(frame.map {
-      case f if f.name == "bucket" =>
-        f.copy(dataType = LongType, nullable = true)
-      case f => f.copy(nullable = true)
-    }).toDDL
+    DeclaredSchema.ddl(frame, retype = Map("bucket" -> LongType))
 
   /** The declared read schema. An index written before the `schema`
     * key existed infers it ONCE from the live generation.

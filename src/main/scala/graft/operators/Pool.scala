@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Query handle over the partitioned tracking pool (SURVEY.md §2/§3.2;
   * reference `GridironQuery`, `/root/reference/src/query.py`).
@@ -17,7 +19,10 @@ final case class Pool(spark: SparkSession, root: String) {
 
   private val keyCols = Seq("gameId", "playId")
 
-  def df: DataFrame = spark.read.parquet(root)
+  /** The pool's rows. With a `_pool_schema` sidecar the read declares
+    * it (no footer-inference job); a pool without one infers.
+    */
+  def df: DataFrame = Pool.read(spark, root)
 
   /** AND-fold caller predicates (reference `src/query.py:34-36`). */
   def filtered(filters: Seq[Column]): DataFrame =
@@ -39,17 +44,73 @@ final case class Pool(spark: SparkSession, root: String) {
     */
   def sampleKeys(
       n: Int, filters: Seq[Column] = Nil, seed: Long = 42L): DataFrame =
+    sampleFrom(filtered(filters), n, seed)
+
+  private def sampleFrom(rows: DataFrame, n: Int, seed: Long): DataFrame =
     Relational.sampleExact(
-      playKeys(filters), n,
+      Relational.distinctKeys(rows, keyCols), n,
       Relational.hashRank(keyCols.map(col), seed), keyCols.map(col))
 
   /** Seeded, exact-n, no-replacement play sample joined back to all frames
     * of the chosen plays (`src/query.py:31-55`). The sampled key set is
     * ≤ n rows → broadcast hash join back to the pool (no shuffle of the big
     * side; at 100 TB the pool is never moved).
+    *
+    * The pool is resolved ONCE: the key universe, the ranking and the
+    * join-back all derive from one filtered frame, so a sample pays one
+    * listing and no eager Spark job before its plan runs.
     */
   def samplePlays(
-      n: Int, filters: Seq[Column] = Nil, seed: Long = 42L): DataFrame =
-    Relational.joinBack(filtered(filters), sampleKeys(n, filters, seed),
-      keyCols)
+      n: Int, filters: Seq[Column] = Nil, seed: Long = 42L): DataFrame = {
+    val rows = filtered(filters)
+    Relational.joinBack(rows, sampleFrom(rows, n, seed), keyCols)
+  }
+}
+
+/** The pool's `_pool_schema` sidecar: a [[MetaFile]] whose `schema` key
+  * is the [[DeclaredSchema]] DDL of the pool's data columns (`season`
+  * and `gameId` stay with path inference). Spark's listing skips the
+  * `_`-prefixed name, so plain parquet readers never see it.
+  */
+object Pool {
+
+  private[graft] val SchemaFile = "_pool_schema"
+
+  /** The declared data schema, or None (no sidecar). */
+  private[graft] def declared(fs: FileSystem, root: String)
+      : Option[String] =
+    try MetaFile.read(fs, s"$root/$SchemaFile").get("schema")
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The pool's rows, declaring the sidecar's schema when there is one. */
+  private[graft] def read(spark: SparkSession, root: String): DataFrame =
+    DeclaredSchema.reader(spark, declared(LiveRead.fs(spark, root), root))
+      .parquet(root)
+
+  /** Runs `write` — a write of `frame`'s rows into the pool at `root`,
+    * partitioned by `partitionCols` — under the sidecar rule: the file
+    * is created only after a write into an empty or absent root, kept
+    * while each later write's data schema is exactly equal (column order
+    * included), and deleted BEFORE the first write that differs, so a
+    * crash between the two steps never leaves a stale declaration.
+    */
+  private[graft] def recordingSchema(fs: FileSystem, root: String,
+      frame: StructType, partitionCols: Seq[String])(write: => Unit): Unit = {
+    val ddl = DeclaredSchema.exact(frame, partitionCols.toSet)
+    val file = new Path(root, SchemaFile)
+    val wasEmpty = !holdsData(fs, root)
+    if (wasEmpty || declared(fs, root).exists(d => !ddl.contains(d)))
+      fs.delete(file, false)
+    write
+    if (wasEmpty && holdsData(fs, root))
+      ddl.foreach(d => MetaFile.write(fs, file.toString, Seq("schema" -> d)))
+  }
+
+  /** True when `root` has a child Spark's listing does not skip. */
+  private def holdsData(fs: FileSystem, root: String): Boolean =
+    try fs.listStatus(new Path(root)).exists { s =>
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    catch { case _: java.io.FileNotFoundException => false }
 }

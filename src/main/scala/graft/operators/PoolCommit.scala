@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The generic partition-mapping marker protocol [[PoolCommit]] (the
   * tracking pool, `season=S/gameId=G` partitions) and [[DocPool]] (the
@@ -29,6 +30,27 @@ import org.apache.spark.sql.functions._
   * protocol: concurrent writers collide loudly on the `errorifexists`
   * generation write or the write-once marker create.
   *
+  * A marker is UTF-8 lines: `#<key>:<value>` meta lines, then the
+  * `<part path>:<gen>` lines, then `end`:
+  *
+  * {{{
+  *   #ret:<N>          persisted retention window
+  *   #sid:<B>          highest applied stream batch id
+  *   #schema:<DDL>     declared data schema (optional)
+  *   season=2023/gameId=2023090700:4
+  *   end
+  * }}}
+  *
+  * `#schema:` is the [[DeclaredSchema]] DDL of the data columns (the
+  * partition columns stay with path inference), recorded in the same
+  * PUT as the mapping while every live partition was written with it:
+  * a commit carries it when the previous marker has no parts or the
+  * same schema, and omits it otherwise — from then on it stays absent.
+  * [[readSnapshot]] declares it, so a read resolves with no footer job;
+  * a marker without it (written before the line existed, or after a
+  * differing write) infers, as before. Unknown `#` keys are ignored, so
+  * older readers read newer markers.
+  *
   * @param markerPrefix marker file prefix, e.g. `"_pool_marker."`
   * @param levels       partition-directory name prefixes, outermost
   *                     first, e.g. `Seq("season=", "gameId=")` or
@@ -48,7 +70,8 @@ private[graft] final class MarkerPool(
     * exactly-once skip decision commits atomically with its rows.
     */
   final case class Marker(gen: Long, parts: Map[String, Long],
-      retain: Int = 1, applied: Long = -1L)
+      retain: Int = 1, applied: Long = -1L,
+      schema: Option[String] = None)
 
   private def markerPath(root: String, gen: Long) =
     new Path(root, f"$markerPrefix$gen%019d")
@@ -89,7 +112,8 @@ private[graft] final class MarkerPool(
           l.substring(0, cut) -> l.substring(cut + 1).toLong
         }.toMap,
           metaMap.getOrElse("ret", "1").toInt,
-          metaMap.getOrElse("sid", "-1").toLong))
+          metaMap.getOrElse("sid", "-1").toLong,
+          metaMap.get("schema")))
       }
       catch { case _: RuntimeException => None }
     } else None
@@ -112,11 +136,21 @@ private[graft] final class MarkerPool(
     val out = fs.create(markerPath(root, m.gen), false)
     try {
       val body = Seq(s"#ret:$eff", s"#sid:${m.applied}") ++
+        m.schema.map(d => s"#schema:$d") ++
         m.parts.toSeq.sortBy(_._1).map { case (p, g) =>
           s"$p:$g"
         } :+ Footer
       out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
     } finally out.close()
+  }
+
+  /** The `#schema:` a commit of `frame` (partitioned by
+    * `partitionCols`) on top of `prev` records — see the layout notes.
+    */
+  def schemaAfter(prev: Marker, frame: StructType,
+      partitionCols: Set[String]): Option[String] = {
+    val ddl = DeclaredSchema.exact(frame, partitionCols)
+    if (prev.parts.isEmpty || prev.schema == ddl) ddl else None
   }
 
   /** The partition relative paths a generation directory holds —
@@ -197,11 +231,17 @@ private[graft] final class MarkerPool(
       drop: Seq[String]): DataFrame = {
     require(m.parts.nonEmpty,
       s"no committed pool under $root (guard with hasPool)")
-    val dirs = m.parts.toSeq.sortBy(_._1).map { case (p, g) =>
-      s"$root/gen=$g/$p" }
-    spark.read.option("basePath", root).parquet(dirs: _*)
-      .drop(drop: _*)
+    readParts(spark, root, m, m.parts.toSeq.sortBy(_._1)).drop(drop: _*)
   }
+
+  /** The rows of `parts` (relative path → gen) of marker `m`, with the
+    * protocol's `gen` and the layout's partition columns; declares the
+    * marker's `#schema:` when it has one.
+    */
+  def readParts(spark: SparkSession, root: String, m: Marker,
+      parts: Seq[(String, Long)]): DataFrame =
+    DeclaredSchema.reader(spark, m.schema).option("basePath", root)
+      .parquet(parts.map { case (p, g) => s"$root/gen=$g/$p" }: _*)
 }
 
 /** Object-store-safe commit protocol for the tracking-data pool — the
@@ -253,14 +293,12 @@ object PoolCommit {
     */
   def write(df: DataFrame, poolRoot: String, retain: Int = 1): Unit = {
     val spark = df.sparkSession
-    val fs = new Path(poolRoot)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = LiveRead.fs(spark, poolRoot)
     pool.heal(fs, poolRoot, retain) // finish/GC any interrupted write
     val prev = pool.readMarker(fs, poolRoot)
     val gen = prev.gen + 1L
-    Ingest.withSeason(df)
-      .filter(col("gameId").isNotNull)
-      .write
+    val rows = Ingest.withSeason(df).filter(col("gameId").isNotNull)
+    rows.write
       .partitionBy("season", "gameId")
       .mode("errorifexists") // collision = concurrent writer, fail loud
       .parquet(s"$poolRoot/gen=$gen")
@@ -270,7 +308,9 @@ object PoolCommit {
     // THE commit point: one write-once marker PUT (retention carries
     // forward, monotone — the LiveMarker contract)
     pool.writeMarker(fs, poolRoot,
-      pool.Marker(gen, next.toMap, prev.retain, prev.applied), retain)
+      pool.Marker(gen, next.toMap, prev.retain, prev.applied,
+        pool.schemaAfter(prev, rows.schema, Set("season", "gameId"))),
+      retain)
     pool.heal(fs, poolRoot, retain) // GC outside the retention window
   }
 
@@ -288,7 +328,7 @@ object PoolCommit {
     */
   def read(spark: SparkSession, poolRoot: String): DataFrame =
     pool.readSnapshot(spark, poolRoot,
-      pool.readMarker(fsFor(spark, poolRoot), poolRoot), Seq("gen"))
+      pool.readMarker(LiveRead.fs(spark, poolRoot), poolRoot), Seq("gen"))
 
   /** TIME-TRAVEL read: the pool exactly as committed by snapshot
     * `gen` — audit/rollback for the removal pipeline ("what did the
@@ -299,10 +339,6 @@ object PoolCommit {
   def read(spark: SparkSession, poolRoot: String, gen: Long)
       : DataFrame =
     pool.readSnapshot(spark, poolRoot,
-      pool.markerAt(fsFor(spark, poolRoot), poolRoot, gen,
+      pool.markerAt(LiveRead.fs(spark, poolRoot), poolRoot, gen,
         "raise write(..., retain)"), Seq("gen"))
-
-  private def fsFor(spark: SparkSession, poolRoot: String): FileSystem =
-    new Path(poolRoot)
-      .getFileSystem(spark.sessionState.newHadoopConf())
 }

@@ -28,11 +28,7 @@ final case class ColumnSpec(
   def candidates: Seq[String] = (name +: aliases).distinct
 }
 
-final case class SchemaConfig(columns: Seq[ColumnSpec]) {
-  def toStructType: StructType = StructType(columns.map { c =>
-    StructField(c.name, c.dtype, nullable = true)
-  })
-}
+final case class SchemaConfig(columns: Seq[ColumnSpec])
 
 object SchemaConfig {
 

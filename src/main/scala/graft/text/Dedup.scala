@@ -189,14 +189,6 @@ object Dedup {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** True when a signed index exists at `path` (its frozen meta is
-    * present) — [[graft.streaming.StreamingDedup]]'s bootstrap probe.
-    */
-  def hasSignedIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Boolean =
-    signedFs(spark, path).exists(
-      new org.apache.hadoop.fs.Path(s"$path/_graft_meta"))
-
   /** Persist the signed index (the write-once step): the signed rows
     * under `rows/`, the LSH parameters under `_graft_meta/` (so
     * [[appendToSignedIndex]] VALIDATES parameter agreement instead of

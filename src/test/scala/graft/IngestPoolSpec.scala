@@ -10,6 +10,48 @@ import graft.schema.Vintages
   */
 class IngestPoolSpec extends SparkSpec {
 
+  /** Runs `body` under a fresh job group; returns its value and the
+    * stage names of each job it started. A sentinel job flushes the
+    * listener bus, which delivers job starts in order.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[Seq[String]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(e)
+    }
+    def group(e: SparkListenerJobStart): String =
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+        .orNull
+    val g = s"jobs-${System.nanoTime}"
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(g, "under test")
+      val out = body
+      sc.setJobGroup(s"$g-end", "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime + 30000000000L
+      while (!starts.asScala.exists(e => group(e) == s"$g-end") &&
+          System.nanoTime < deadline) Thread.sleep(20)
+      (out, starts.asScala.filter(e => group(e) == g)
+        .map(_.stageInfos.map(_.name)).toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Same schema, same rows (as multisets). */
+  private def assertSameRows(got: org.apache.spark.sql.DataFrame,
+      want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  }
+
   test("2018-vintage CSV ingests to a partitioned pool with exact summary") {
     val in = tmpDir("in2018")
     val poolRoot = tmpDir("pool2018")
@@ -710,5 +752,196 @@ class IngestPoolSpec extends SparkSpec {
     assert(DocPool.listGenerations(spark, root) == Seq(1L, 2L, 3L))
     assert(DocPool.read(spark, root, 1L).count() == 32L)
     assert(DocPool.read(spark, root).count() == 32L) // +1 new -1 gone
+  }
+
+  test("tracking reads resolve on the driver: samplePlays starts no " +
+    "eager job, and neither an ML batch nor a play fetch runs a " +
+    "footer-inference (`parquet at`) job") {
+    import graft.operators.{PlayOps, PoolCommit, Tensor}
+    val in = tmpDir("indriver")
+    val poolRoot = tmpDir("pooldriver")
+    val marker = tmpDir("markerdriver") + "/pool"
+    SyntheticTracking.writeCsv2018(spark, in, games = 2, plays = 8,
+      frames = 6)
+    Ingest.run(spark, in, poolRoot, Vintages.bdb2018)
+    PoolCommit.write(Pool(spark, poolRoot).df, marker)
+    val (sample, eager) = jobsOf(Pool(spark, poolRoot)
+      .samplePlays(16, Seq(col("season") === 2023), 3L))
+    assert(eager.isEmpty, eager.mkString("; "))
+    val (batch, batchJobs) = jobsOf(
+      Tensor.toTensor(sample, Tensor.defaultFeatures, 6, 23).collect())
+    assert(batch.length == 16)
+    val (frames, fetchJobs) = jobsOf(PlayOps.fetchPlay(
+      PoolCommit.read(spark, marker), 2023090001L, 100).collect())
+    assert(frames.map(_.getAs[Int]("frameId")).toSeq ==
+      (1 to 6).flatMap(Seq.fill(23)(_)))
+    val names = (batchJobs ++ fetchJobs).flatten
+    assert(names.nonEmpty && !names.exists(_.startsWith("parquet at")),
+      names.mkString("; "))
+  }
+
+  test("_pool_schema sidecar: a fresh ingest creates it; a same-schema " +
+    "drop, compactPool and upsertPartitioned keep it; a drop whose data " +
+    "schema differs deletes it for good; Pool.df reads what inference " +
+    "reads after every step") {
+    import org.apache.hadoop.fs.Path
+    val root = tmpDir("poolsidecar") + "/pool" // absent until ingest
+    val fs = new Path(root).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    def declared = Pool.declared(fs, root)
+    def drop(write: String => Unit): Unit = {
+      val in = tmpDir("dropsidecar")
+      write(in)
+      Ingest.run(spark, in, root, Vintages.bdb2018)
+    }
+    def asInferred(): Unit =
+      assertSameRows(Pool(spark, root).df, spark.read.parquet(root))
+
+    drop(SyntheticTracking.writeCsv2018(spark, _, games = 2, plays = 2,
+      frames = 5))
+    val ddl = declared
+    // data columns only: the partition columns stay with path inference
+    assert(ddl.exists(d => d.contains("playId") &&
+      !d.contains("gameId") && !d.contains("season")), ddl)
+    asInferred()
+
+    drop(SyntheticTracking.writeCsv2018(spark, _, games = 1, plays = 3,
+      frames = 5))
+    assert(declared == ddl)
+    asInferred()
+
+    val beforeCompact = spark.read.parquet(root).localCheckpoint()
+    Ingest.compactPool(spark, root)
+    assert(declared == ddl)
+    asInferred()
+    assertSameRows(Pool(spark, root).df, beforeCompact)
+
+    // same-schema upsert: game 2023090000 moves one yard downfield
+    val g0 = col("gameId") === 2023090000L
+    val before = Pool(spark, root).df.localCheckpoint()
+    val updates = before.filter(g0).withColumn("x", col("x") + 1.0f)
+      .localCheckpoint()
+    Ingest.upsertPartitioned(spark, root, updates,
+      Seq("gameId", "playId", "nflId", "frameId"), "x",
+      Seq("season", "gameId"))
+    assert(declared == ddl)
+    asInferred()
+    assertSameRows(Pool(spark, root).df,
+      before.filter(!g0).unionByName(updates))
+
+    // a mixed-vintage drop whose game-2024 file lost the required `y`:
+    // the batch's data schema differs, so the sidecar goes
+    drop { in =>
+      SyntheticTracking.writeCsv2018(spark, in, games = 1, plays = 1,
+        frames = 2)
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(in, "a-no-y.csv"),
+        """gameId,playId,nflId,frameId,team,x
+          |2024090001,50,40000,1,home,10.0
+          |2024090001,50,40001,1,away,11.0
+          |""".stripMargin)
+    }
+    assert(!fs.exists(new Path(root, Pool.SchemaFile)))
+    asInferred()
+    assert(Pool(spark, root).df.filter(col("season") === 2024).count() ==
+      2L)
+    // created only after a write into an empty root: it stays absent
+    drop(SyntheticTracking.writeCsv2018(spark, _, games = 1, plays = 2,
+      frames = 5))
+    assert(declared.isEmpty)
+    asInferred()
+  }
+
+  test("marker #schema: line: a marker without it serves identical " +
+    "rows, and a write whose data schema differs clears it for good " +
+    "(PoolCommit and DocPool)") {
+    import org.apache.hadoop.fs.Path
+    import graft.operators.{DocPool, PoolCommit}
+    import spark.implicits._
+    val hconf = spark.sessionState.newHadoopConf()
+    def newest(root: String, prefix: String): Path = {
+      val fs = new Path(root).getFileSystem(hconf)
+      fs.listStatus(new Path(root)).map(_.getPath)
+        .filter(_.getName.startsWith(prefix)).maxBy(_.getName)
+    }
+    def lines(p: Path): Seq[String] = {
+      val in = p.getFileSystem(hconf).open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
+      finally in.close()
+    }
+    def hasSchema(root: String, prefix: String): Boolean =
+      lines(newest(root, prefix)).exists(_.startsWith("#schema:"))
+    // rewrite the ruling marker as a reader from before the line saw it
+    def strip(root: String, prefix: String): Unit = {
+      val p = newest(root, prefix)
+      val body = lines(p).filterNot(_.startsWith("#schema:"))
+      val out = p.getFileSystem(hconf).create(p, true)
+      try out.write(body.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
+
+    val df = SyntheticTracking.df(spark, games = 2, plays = 2, frames = 5)
+    val gA = col("gameId") === 2023090000L
+    val pc = tmpDir("markerschema") + "/pool"
+    PoolCommit.write(df, pc)
+    assert(hasSchema(pc, "_pool_marker."))
+    val declaredRows = PoolCommit.read(spark, pc).localCheckpoint()
+    strip(pc, "_pool_marker.")
+    assert(!hasSchema(pc, "_pool_marker."))
+    assertSameRows(PoolCommit.read(spark, pc), declaredRows)
+
+    val pc2 = tmpDir("markerschema2") + "/pool"
+    PoolCommit.write(df, pc2)
+    PoolCommit.write(df.filter(gA), pc2) // same schema: kept
+    assert(hasSchema(pc2, "_pool_marker."))
+    PoolCommit.write(df.filter(gA).drop("route"), pc2)
+    assert(!hasSchema(pc2, "_pool_marker."))
+    PoolCommit.write(df.filter(gA), pc2) // stays absent
+    assert(!hasSchema(pc2, "_pool_marker."))
+    assert(PoolCommit.read(spark, pc2).count() == df.count())
+
+    val docs = (0L until 40L).map(i => (i, s"doc $i")).toDF("doc_id",
+      "text")
+    val dp = tmpDir("docschema") + "/corpus"
+    DocPool.write(docs, dp, "doc_id", buckets = 4)
+    assert(hasSchema(dp, "_doc_marker."))
+    DocPool.removeIds(spark, Seq(3L).toDF("doc_id"), dp, "doc_id")
+    assert(hasSchema(dp, "_doc_marker.")) // survivors keep the schema
+    val docRows = DocPool.read(spark, dp).localCheckpoint()
+    strip(dp, "_doc_marker.")
+    assertSameRows(DocPool.read(spark, dp), docRows)
+
+    val dp2 = tmpDir("docschema2") + "/corpus"
+    DocPool.write(docs, dp2, "doc_id", buckets = 4)
+    DocPool.write(docs.withColumn("lang", lit("en")), dp2, "doc_id",
+      buckets = 4)
+    assert(!hasSchema(dp2, "_doc_marker."))
+    DocPool.upsert(Seq((100L, "new", "en")).toDF("doc_id", "text",
+      "lang"), dp2, "doc_id")
+    assert(!hasSchema(dp2, "_doc_marker."))
+    assert(DocPool.read(spark, dp2).count() == 41L)
+
+    // field metadata does not survive DDL: such a frame declares
+    // nothing, and the read keeps what inference returns
+    val tagged = docs.select(col("doc_id"), col("text").as("text",
+      new org.apache.spark.sql.types.MetadataBuilder()
+        .putString("lang", "en").build()))
+    val dp3 = tmpDir("docschema3") + "/corpus"
+    DocPool.write(tagged, dp3, "doc_id", buckets = 4)
+    assert(!hasSchema(dp3, "_doc_marker."))
+    assert(DocPool.read(spark, dp3).schema("text").metadata
+      .getString("lang") == "en")
+  }
+
+  test("Ingest.run globs the input through the file system that owns " +
+    "it, not the default one") {
+    val in = tmpDir("inscheme")
+    SyntheticTracking.writeCsv2018(spark, in, games = 1, plays = 2,
+      frames = 10)
+    SchemeLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val res = Ingest.run(spark, SchemeLocalFileSystem.path(in),
+      tmpDir("poolscheme"), Vintages.bdb2018)
+    assert(res.badFiles.isEmpty)
+    assert(res.summary == Ingest.Summary(460L, 1L, 2L, Some(10)))
   }
 }

@@ -51,6 +51,16 @@ class PlayOpsTensorSpec extends SparkSpec {
     assert(PlayOps.frames(play).count() == 50)
   }
 
+  test("listGames: the game dropdown, distinct and ascending") {
+    assert(PlayOps.listGames(pool).collect().map(_.getLong(0)).toSeq ==
+      Seq(2023090000L, 2023090001L))
+  }
+
+  test("listPlays: one game's play dropdown, distinct and ascending") {
+    assert(PlayOps.listPlays(pool, 2023090001L).collect()
+      .map(_.getInt(0)).toSeq == Seq(50, 100, 150, 200, 250))
+  }
+
   test("trajectories: one row per entity, frame-ordered path") {
     val traj = PlayOps.trajectories(pool)
     assert(traj.count() == 10L * 23)
