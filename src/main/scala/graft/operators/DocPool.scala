@@ -35,7 +35,11 @@ import org.apache.spark.sql.functions._
   */
 object DocPool {
 
-  private val pool = new MarkerPool("_doc_marker.", Seq("part="))
+  // snapshot reads infer their schema: no benchmark workload reads a
+  // DocPool yet, so the driver-side resolution stays off until one shows
+  // the inference job matters
+  private val pool = new MarkerPool("_doc_marker.", Seq("part="),
+    resolveOnDriver = false)
 
   /** The bucket an id hashes to — the layout's one invariant. */
   def partOf(idCol: Column, buckets: Int): Column =
@@ -75,19 +79,18 @@ object DocPool {
     } else
       Seq((buckets, idCol)).toDF("buckets", "id_col").coalesce(1)
         .write.mode("errorifexists").parquet(s"$root/_doc_meta")
-    val rows = WriteLayout.clusterBy(
+    WriteLayout.clusterBy(
       docs.filter(col(idCol).isNotNull)
         .withColumn("part", partOf(col(idCol), buckets)),
       "part")
-    rows.write.partitionBy("part")
+      .write.partitionBy("part")
       .mode("errorifexists") // collision = concurrent writer, fail loud
       .parquet(s"$root/gen=$gen")
     val written = pool.partsUnder(fs, new Path(s"$root/gen=$gen"))
     // a full write REPLACES: every live bucket points at the new gen
     pool.writeMarker(fs, root,
       pool.Marker(gen, written.map(_ -> gen).toMap, prev.retain,
-        math.max(prev.applied, appliedId),
-        pool.schemaAfter(prev, rows.schema, Set("part"))), retain)
+        math.max(prev.applied, appliedId)), retain)
     pool.heal(fs, root, retain)
   }
 
@@ -128,18 +131,17 @@ object DocPool {
     val gen = prev.gen + 1L
     // partition-pruned read of ONLY the touched buckets; `part` rides
     // along as a partition column so the rewrite lands bucket-true
-    val rows = pool.readParts(spark, root, prev, touched)
+    pool.readParts(spark, root, touched)
       .drop("gen")
       .join(broadcast(base), Seq(idCol), "left_anti")
       .transform(WriteLayout.clusterBy(_, "part"))
-    rows.write.partitionBy("part").mode("errorifexists")
+      .write.partitionBy("part").mode("errorifexists")
       .parquet(s"$root/gen=$gen")
     val written = pool.partsUnder(fs, new Path(s"$root/gen=$gen"))
     val next = (prev.parts -- touched.map(_._1)) ++
       written.map(_ -> gen).toMap
     pool.writeMarker(fs, root,
-      pool.Marker(gen, next, prev.retain, prev.applied,
-        pool.schemaAfter(prev, rows.schema, Set("part"))), retain)
+      pool.Marker(gen, next, prev.retain, prev.applied), retain)
     pool.heal(fs, root, retain)
   }
 
@@ -183,21 +185,20 @@ object DocPool {
       .filter(t => targetSet.contains(t._1)).sortBy(_._1)
     val survivors =
       if (existing.isEmpty) batch.filter(lit(false))
-      else pool.readParts(spark, root, prev, existing)
+      else pool.readParts(spark, root, existing)
         .drop("gen", "part")
         .join(broadcast(ids), Seq(idCol), "left_anti")
-    val rows = WriteLayout.clusterBy(
+    WriteLayout.clusterBy(
       survivors.unionByName(batch)
         .withColumn("part", partOf(col(idCol), buckets)),
       "part")
-    rows.write.partitionBy("part").mode("errorifexists")
+      .write.partitionBy("part").mode("errorifexists")
       .parquet(s"$root/gen=$gen")
     val written = pool.partsUnder(fs, new Path(s"$root/gen=$gen"))
     val next = (prev.parts -- targetSet) ++ written.map(_ -> gen).toMap
     pool.writeMarker(fs, root,
       pool.Marker(gen, next, prev.retain,
-        math.max(prev.applied, appliedId),
-        pool.schemaAfter(prev, rows.schema, Set("part"))), retain)
+        math.max(prev.applied, appliedId)), retain)
     pool.heal(fs, root, retain)
   }
 
@@ -224,7 +225,7 @@ object DocPool {
       return base.filter(lit(false)) // empty pool: nothing matches
     val touched = targetParts(spark, root, base, idCol, m)
     if (touched.isEmpty) return base.filter(lit(false))
-    pool.readParts(spark, root, m, touched)
+    pool.readParts(spark, root, touched)
       .drop("gen", "part")
       .join(broadcast(base), Seq(idCol), "left_semi")
   }

@@ -13,17 +13,10 @@ import graft.schema.SchemaConfig
   * partition: dynamic partition overwrite ≡ the reference's fixed-filename
   * upsert (`src/ingest.py:82-87`).
   *
-  * `poolRoot/_pool_schema` ([[Pool]]'s sidecar, a [[MetaFile]] with a
-  * `schema=<DDL>` key) declares the data columns, all nullable; `season`
-  * and `gameId` stay with path inference. [[writePool]],
-  * [[upsertPartitioned]] and [[compactPool]] keep it honest: it is
-  * created only after a write into an empty or absent root, kept while
-  * each later write's data schema is exactly equal (column order
-  * included), and deleted BEFORE the first write whose schema differs
-  * (e.g. a mixed-vintage drop that lost a required column) — a crash in
-  * between never leaves a stale declaration. Readers ([[Pool.df]],
-  * [[compactPool]]) declare it when present and infer otherwise, which
-  * covers pools written before the sidecar existed.
+  * The pool keeps no schema file: readers ([[Pool.df]], [[compactPool]],
+  * [[upsertPartitioned]]) take the data schema from the first data
+  * file's footer on the driver ([[Pool.read]]), so a pool of any age
+  * resolves without a Spark inference job.
   *
   * Scale notes: `ingestAll` reads the whole input glob as ONE job — at
   * 100 TB that is the right shape (massively parallel scan, no driver loop;
@@ -195,12 +188,7 @@ object Ingest {
     finally out.close()
     if (!fs.rename(markerTmp, marker))
       sys.error(s"compactPool: failed to commit marker $marker")
-    // the swap is the write into the pool: the default partitioning keeps
-    // the data schema and the sidecar; another one moves columns between
-    // path and file, so the sidecar goes first
-    Pool.recordingSchema(fs, root, selected.schema, partitionCols) {
-      swapStagedIn(partitionCols.size)
-    }
+    swapStagedIn(partitionCols.size)
   }
 
   /** Per-partition statistics (the manifest a table format would keep):
@@ -329,14 +317,11 @@ object Ingest {
     val merged = upsert(
       base.select(updates.columns.map(col).toSeq: _*), updates,
       keyCols, versionCol).localCheckpoint()
-    Pool.recordingSchema(LiveRead.fs(spark, poolRoot), poolRoot,
-        merged.schema, partitionCols) {
-      merged.write
-        .partitionBy(partitionCols: _*)
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite")
-        .parquet(poolRoot)
-    }
+    merged.write
+      .partitionBy(partitionCols: _*)
+      .option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite")
+      .parquet(poolRoot)
   }
 
   /** JSON-Lines source (one object per line — the format `Export.jsonl`
@@ -406,21 +391,14 @@ object Ingest {
     df.withColumn(
       "season", substring(col("gameId").cast("string"), 1, 4).cast("int"))
 
-  /** Per-game upsert into the pool, keeping its `_pool_schema` sidecar
-    * by the rule in the layout notes above.
-    */
-  def writePool(df: DataFrame, poolRoot: String): Unit = {
-    val rows = withSeason(df)
+  def writePool(df: DataFrame, poolRoot: String): Unit =
+    withSeason(df)
       .filter(col("gameId").isNotNull) // reference skips null group keys
-    Pool.recordingSchema(LiveRead.fs(df.sparkSession, poolRoot), poolRoot,
-        rows.schema, Seq("season", "gameId")) {
-      rows.write
-        .partitionBy("season", "gameId")
-        .option("partitionOverwriteMode", "dynamic") // per-game upsert
-        .mode("overwrite")
-        .parquet(poolRoot)
-    }
-  }
+      .write
+      .partitionBy("season", "gameId")
+      .option("partitionOverwriteMode", "dynamic") // per-game upsert
+      .mode("overwrite")
+      .parquet(poolRoot)
 
   /** Whole-directory ingest as one distributed job (the 100 TB path).
     * The input is scanned exactly once: the summary is computed from the

@@ -26,7 +26,11 @@ private[graft] object LiveRead {
 
   /** The `schema` meta value: all columns nullable, `bucket` LongType. */
   def schemaDdl(frame: StructType): String =
-    DeclaredSchema.ddl(frame, retype = Map("bucket" -> LongType))
+    StructType(frame.map {
+      case f if f.name == "bucket" =>
+        f.copy(dataType = LongType, nullable = true)
+      case f => f.copy(nullable = true)
+    }).toDDL
 
   /** The declared read schema. An index written before the `schema`
     * key existed infers it ONCE from the live generation.

@@ -1,9 +1,14 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Query handle over the partitioned tracking pool (SURVEY.md §2/§3.2;
   * reference `GridironQuery`, `/root/reference/src/query.py`).
@@ -19,18 +24,12 @@ final case class Pool(spark: SparkSession, root: String) {
 
   private val keyCols = Seq("gameId", "playId")
 
-  /** The pool's rows. With a `_pool_schema` sidecar the read declares
-    * it (no footer-inference job); a pool without one infers.
-    */
+  /** The pool's rows, resolved on the driver ([[Pool.read]]). */
   def df: DataFrame = Pool.read(spark, root)
 
   /** AND-fold caller predicates (reference `src/query.py:34-36`). */
   def filtered(filters: Seq[Column]): DataFrame =
     Relational.filtered(df, filters)
-
-  /** Distinct play universe under the filters (`src/query.py:39-43`). */
-  def playKeys(filters: Seq[Column] = Nil): DataFrame =
-    Relational.distinctKeys(filtered(filters), keyCols)
 
   /** Sampled keys only (driver-friendly small result).
     *
@@ -46,6 +45,7 @@ final case class Pool(spark: SparkSession, root: String) {
       n: Int, filters: Seq[Column] = Nil, seed: Long = 42L): DataFrame =
     sampleFrom(filtered(filters), n, seed)
 
+  /** Ranks the distinct play universe of `rows` (`src/query.py:39-43`). */
   private def sampleFrom(rows: DataFrame, n: Int, seed: Long): DataFrame =
     Relational.sampleExact(
       Relational.distinctKeys(rows, keyCols), n,
@@ -58,7 +58,8 @@ final case class Pool(spark: SparkSession, root: String) {
     *
     * The pool is resolved ONCE: the key universe, the ranking and the
     * join-back all derive from one filtered frame, so a sample pays one
-    * listing and no eager Spark job before its plan runs.
+    * Spark listing and one driver-side footer read ([[Pool.read]]), and
+    * starts no Spark job before its plan runs.
     */
   def samplePlays(
       n: Int, filters: Seq[Column] = Nil, seed: Long = 42L): DataFrame = {
@@ -67,50 +68,72 @@ final case class Pool(spark: SparkSession, root: String) {
   }
 }
 
-/** The pool's `_pool_schema` sidecar: a [[MetaFile]] whose `schema` key
-  * is the [[DeclaredSchema]] DDL of the pool's data columns (`season`
-  * and `gameId` stay with path inference). Spark's listing skips the
-  * `_`-prefixed name, so plain parquet readers never see it.
+/** Driver-side resolution of a parquet read's data schema. Without a
+  * declared schema, `spark.read.parquet` reads the footer of the first
+  * data file (in full-path order; non-merging inference touches no
+  * other file) in a Spark job of its own, a `parquet at` job in front
+  * of every ML batch and play fetch. Reading that same footer here and
+  * declaring its Spark schema returns the same rows and schema with no
+  * job. Nothing is recorded at write time, so pools written by any
+  * version resolve the same way.
   */
 object Pool {
 
-  private[graft] val SchemaFile = "_pool_schema"
-
-  /** The declared data schema, or None (no sidecar). */
-  private[graft] def declared(fs: FileSystem, root: String)
-      : Option[String] =
-    try MetaFile.read(fs, s"$root/$SchemaFile").get("schema")
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** The pool's rows, declaring the sidecar's schema when there is one. */
+  /** The rows under `root`, as `spark.read.parquet(root)` returns them. */
   private[graft] def read(spark: SparkSession, root: String): DataFrame =
-    DeclaredSchema.reader(spark, declared(LiveRead.fs(spark, root), root))
-      .parquet(root)
+    reader(spark, Seq(root)).parquet(root)
 
-  /** Runs `write` — a write of `frame`'s rows into the pool at `root`,
-    * partitioned by `partitionCols` — under the sidecar rule: the file
-    * is created only after a write into an empty or absent root, kept
-    * while each later write's data schema is exactly equal (column order
-    * included), and deleted BEFORE the first write that differs, so a
-    * crash between the two steps never leaves a stale declaration.
+  /** A reader for the (non-nested) directories `dirs` that declares the
+    * data schema inference would find, or infers when it cannot tell.
     */
-  private[graft] def recordingSchema(fs: FileSystem, root: String,
-      frame: StructType, partitionCols: Seq[String])(write: => Unit): Unit = {
-    val ddl = DeclaredSchema.exact(frame, partitionCols.toSet)
-    val file = new Path(root, SchemaFile)
-    val wasEmpty = !holdsData(fs, root)
-    if (wasEmpty || declared(fs, root).exists(d => !ddl.contains(d)))
-      fs.delete(file, false)
-    write
-    if (wasEmpty && holdsData(fs, root))
-      ddl.foreach(d => MetaFile.write(fs, file.toString, Seq("schema" -> d)))
-  }
+  private[graft] def reader(spark: SparkSession,
+      dirs: Seq[String]): DataFrameReader =
+    inferredSchema(spark, dirs).fold(spark.read)(spark.read.schema)
 
-  /** True when `root` has a child Spark's listing does not skip. */
-  private def holdsData(fs: FileSystem, root: String): Boolean =
-    try fs.listStatus(new Path(root)).exists { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    catch { case _: java.io.FileNotFoundException => false }
+  /** The schema inference would return, read on the driver from the
+    * Spark metadata in the first data file's footer. None (infer) when
+    * schema merging is on, a path is a glob, the first file is empty,
+    * unreadable or lacks Spark metadata, a summary file is in the way,
+    * or one of its columns shares a name with a `k=v` directory on its
+    * path (declaring it would move that column to the end).
+    */
+  private[graft] def inferredSchema(spark: SparkSession,
+      dirs: Seq[String]): Option[StructType] =
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        dirs.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else Try {
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = new Path(dirs.head).getFileSystem(conf)
+      // Spark's listing skips these names (HadoopFSUtils), but keeps
+      // summary files, which parquet inference would read first
+      def listed(s: FileStatus): Boolean = {
+        val n = s.getPath.getName
+        require(!n.startsWith("_metadata") &&
+          !n.startsWith("_common_metadata"), "summary file")
+        !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
+          !n.endsWith("._COPYING_")
+      }
+      // depth-first in full-path order: a directory sorts as `name/`,
+      // so the leaves of `g=1-2/` precede those of `g=1/`, as in Spark
+      def leaves(s: FileStatus): Iterator[FileStatus] =
+        if (!s.isDirectory) Iterator(s)
+        else fs.listStatus(s.getPath).filter(listed)
+          .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+          .iterator.flatMap(leaves)
+      val first = dirs.map(d => fs.getFileStatus(new Path(d)))
+        .sortBy(_.getPath.toString + "/").iterator.flatMap(leaves).next()
+      require(first.getLen > 0, "empty file")
+      val json = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(first, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")
+      val schema = DataType.fromJson(json).asInstanceOf[StructType]
+      val dirKeys = first.getPath.toUri.getPath.split('/')
+        .filter(_.contains('=')).map(_.takeWhile(_ != '=').toLowerCase)
+        .toSet
+      require(!schema.fieldNames.exists(n => dirKeys(n.toLowerCase)),
+        "partition-named column")
+      schema
+    }.toOption
 }

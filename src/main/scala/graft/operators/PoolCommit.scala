@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** The generic partition-mapping marker protocol [[PoolCommit]] (the
   * tracking pool, `season=S/gameId=G` partitions) and [[DocPool]] (the
@@ -36,28 +35,24 @@ import org.apache.spark.sql.types.StructType
   * {{{
   *   #ret:<N>          persisted retention window
   *   #sid:<B>          highest applied stream batch id
-  *   #schema:<DDL>     declared data schema (optional)
   *   season=2023/gameId=2023090700:4
   *   end
   * }}}
   *
-  * `#schema:` is the [[DeclaredSchema]] DDL of the data columns (the
-  * partition columns stay with path inference), recorded in the same
-  * PUT as the mapping while every live partition was written with it:
-  * a commit carries it when the previous marker has no parts or the
-  * same schema, and omits it otherwise — from then on it stays absent.
-  * [[readSnapshot]] declares it, so a read resolves with no footer job;
-  * a marker without it (written before the line existed, or after a
-  * differing write) infers, as before. Unknown `#` keys are ignored, so
-  * older readers read newer markers.
+  * Unknown `#` keys are ignored, so older readers read newer markers.
   *
-  * @param markerPrefix marker file prefix, e.g. `"_pool_marker."`
-  * @param levels       partition-directory name prefixes, outermost
-  *                     first, e.g. `Seq("season=", "gameId=")` or
-  *                     `Seq("part=")`
+  * @param markerPrefix    marker file prefix, e.g. `"_pool_marker."`
+  * @param levels          partition-directory name prefixes, outermost
+  *                        first, e.g. `Seq("season=", "gameId=")` or
+  *                        `Seq("part=")`
+  * @param resolveOnDriver snapshot reads take their data schema from
+  *                        one footer read on the driver
+  *                        ([[Pool.reader]]) instead of a Spark
+  *                        inference job
   */
 private[graft] final class MarkerPool(
-    markerPrefix: String, levels: Seq[String]) {
+    markerPrefix: String, levels: Seq[String],
+    resolveOnDriver: Boolean) {
 
   private val Footer = "end"
 
@@ -70,8 +65,7 @@ private[graft] final class MarkerPool(
     * exactly-once skip decision commits atomically with its rows.
     */
   final case class Marker(gen: Long, parts: Map[String, Long],
-      retain: Int = 1, applied: Long = -1L,
-      schema: Option[String] = None)
+      retain: Int = 1, applied: Long = -1L)
 
   private def markerPath(root: String, gen: Long) =
     new Path(root, f"$markerPrefix$gen%019d")
@@ -112,8 +106,7 @@ private[graft] final class MarkerPool(
           l.substring(0, cut) -> l.substring(cut + 1).toLong
         }.toMap,
           metaMap.getOrElse("ret", "1").toInt,
-          metaMap.getOrElse("sid", "-1").toLong,
-          metaMap.get("schema")))
+          metaMap.getOrElse("sid", "-1").toLong))
       }
       catch { case _: RuntimeException => None }
     } else None
@@ -136,21 +129,11 @@ private[graft] final class MarkerPool(
     val out = fs.create(markerPath(root, m.gen), false)
     try {
       val body = Seq(s"#ret:$eff", s"#sid:${m.applied}") ++
-        m.schema.map(d => s"#schema:$d") ++
         m.parts.toSeq.sortBy(_._1).map { case (p, g) =>
           s"$p:$g"
         } :+ Footer
       out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
     } finally out.close()
-  }
-
-  /** The `#schema:` a commit of `frame` (partitioned by
-    * `partitionCols`) on top of `prev` records — see the layout notes.
-    */
-  def schemaAfter(prev: Marker, frame: StructType,
-      partitionCols: Set[String]): Option[String] = {
-    val ddl = DeclaredSchema.exact(frame, partitionCols)
-    if (prev.parts.isEmpty || prev.schema == ddl) ddl else None
   }
 
   /** The partition relative paths a generation directory holds —
@@ -231,17 +214,18 @@ private[graft] final class MarkerPool(
       drop: Seq[String]): DataFrame = {
     require(m.parts.nonEmpty,
       s"no committed pool under $root (guard with hasPool)")
-    readParts(spark, root, m, m.parts.toSeq.sortBy(_._1)).drop(drop: _*)
+    readParts(spark, root, m.parts.toSeq.sortBy(_._1)).drop(drop: _*)
   }
 
-  /** The rows of `parts` (relative path → gen) of marker `m`, with the
-    * protocol's `gen` and the layout's partition columns; declares the
-    * marker's `#schema:` when it has one.
+  /** The rows of `parts` (relative path → gen), with the protocol's
+    * `gen` and the layout's partition columns.
     */
-  def readParts(spark: SparkSession, root: String, m: Marker,
-      parts: Seq[(String, Long)]): DataFrame =
-    DeclaredSchema.reader(spark, m.schema).option("basePath", root)
-      .parquet(parts.map { case (p, g) => s"$root/gen=$g/$p" }: _*)
+  def readParts(spark: SparkSession, root: String,
+      parts: Seq[(String, Long)]): DataFrame = {
+    val dirs = parts.map { case (p, g) => s"$root/gen=$g/$p" }
+    (if (resolveOnDriver) Pool.reader(spark, dirs) else spark.read)
+      .option("basePath", root).parquet(dirs: _*)
+  }
 }
 
 /** Object-store-safe commit protocol for the tracking-data pool — the
@@ -259,7 +243,8 @@ private[graft] final class MarkerPool(
 object PoolCommit {
 
   private val pool =
-    new MarkerPool("_pool_marker.", Seq("season=", "gameId="))
+    new MarkerPool("_pool_marker.", Seq("season=", "gameId="),
+      resolveOnDriver = true)
 
   private[graft] def readMarker(fs: FileSystem,
       root: String): MarkerPool#Marker =
@@ -297,8 +282,9 @@ object PoolCommit {
     pool.heal(fs, poolRoot, retain) // finish/GC any interrupted write
     val prev = pool.readMarker(fs, poolRoot)
     val gen = prev.gen + 1L
-    val rows = Ingest.withSeason(df).filter(col("gameId").isNotNull)
-    rows.write
+    Ingest.withSeason(df)
+      .filter(col("gameId").isNotNull)
+      .write
       .partitionBy("season", "gameId")
       .mode("errorifexists") // collision = concurrent writer, fail loud
       .parquet(s"$poolRoot/gen=$gen")
@@ -308,16 +294,16 @@ object PoolCommit {
     // THE commit point: one write-once marker PUT (retention carries
     // forward, monotone — the LiveMarker contract)
     pool.writeMarker(fs, poolRoot,
-      pool.Marker(gen, next.toMap, prev.retain, prev.applied,
-        pool.schemaAfter(prev, rows.schema, Set("season", "gameId"))),
-      retain)
+      pool.Marker(gen, next.toMap, prev.retain, prev.applied), retain)
     pool.heal(fs, poolRoot, retain) // GC outside the retention window
   }
 
   /** All committed pool rows — resolves through the newest complete
     * marker, so an in-flight or crashed write is invisible. `season`
     * and `gameId` stay partition columns (the per-game pruning
-    * contract); the protocol's `gen` column is dropped.
+    * contract); the protocol's `gen` column is dropped. The data
+    * schema comes from one footer read on the driver ([[Pool.reader]]),
+    * so resolving the snapshot starts no Spark job.
     *
     * SNAPSHOT semantics: the returned frame is bound to the partition
     * directories live at CALL time — a later commit's GC deletes

@@ -10,41 +10,6 @@ import graft.schema.Vintages
   */
 class IngestPoolSpec extends SparkSpec {
 
-  /** Runs `body` under a fresh job group; returns its value and the
-    * stage names of each job it started. A sentinel job flushes the
-    * listener bus, which delivers job starts in order.
-    */
-  private def jobsOf[T](body: => T): (T, Seq[Seq[String]]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
-      SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(e)
-    }
-    def group(e: SparkListenerJobStart): String =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-        .orNull
-    val g = s"jobs-${System.nanoTime}"
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(g, "under test")
-      val out = body
-      sc.setJobGroup(s"$g-end", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime + 30000000000L
-      while (!starts.asScala.exists(e => group(e) == s"$g-end") &&
-          System.nanoTime < deadline) Thread.sleep(20)
-      (out, starts.asScala.filter(e => group(e) == g)
-        .map(_.stageInfos.map(_.name)).toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
   /** Same schema, same rows (as multisets). */
   private def assertSameRows(got: org.apache.spark.sql.DataFrame,
       want: org.apache.spark.sql.DataFrame): Unit = {
@@ -780,43 +745,46 @@ class IngestPoolSpec extends SparkSpec {
       names.mkString("; "))
   }
 
-  test("_pool_schema sidecar: a fresh ingest creates it; a same-schema " +
-    "drop, compactPool and upsertPartitioned keep it; a drop whose data " +
-    "schema differs deletes it for good; Pool.df reads what inference " +
-    "reads after every step") {
-    import org.apache.hadoop.fs.Path
-    val root = tmpDir("poolsidecar") + "/pool" // absent until ingest
-    val fs = new Path(root).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    def declared = Pool.declared(fs, root)
+  test("driver-side schema resolution: Pool.df declares the first " +
+    "file's footer schema and reads what inference reads after a fresh " +
+    "ingest, a same-schema drop, compactPool, upsertPartitioned and " +
+    "mixed-vintage drops that lost a required column") {
+    val root = tmpDir("poolfooter") + "/pool" // absent until ingest
     def drop(write: String => Unit): Unit = {
-      val in = tmpDir("dropsidecar")
+      val in = tmpDir("dropfooter")
       write(in)
       Ingest.run(spark, in, root, Vintages.bdb2018)
     }
-    def asInferred(): Unit =
+    def noY(game: Long)(in: String): Unit =
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(in, "a-no-y.csv"),
+        s"""gameId,playId,nflId,frameId,team,x
+          |$game,50,40000,1,home,10.0
+          |$game,50,40001,1,away,11.0
+          |""".stripMargin)
+    def asInferred(): Unit = {
+      assert(Pool.inferredSchema(spark, Seq(root)).nonEmpty)
       assertSameRows(Pool(spark, root).df, spark.read.parquet(root))
+    }
 
     drop(SyntheticTracking.writeCsv2018(spark, _, games = 2, plays = 2,
       frames = 5))
-    val ddl = declared
+    val data = Pool.inferredSchema(spark, Seq(root)).get
     // data columns only: the partition columns stay with path inference
-    assert(ddl.exists(d => d.contains("playId") &&
-      !d.contains("gameId") && !d.contains("season")), ddl)
+    assert(data.fieldNames.contains("playId") &&
+      !data.fieldNames.exists(Set("gameId", "season")))
     asInferred()
 
     drop(SyntheticTracking.writeCsv2018(spark, _, games = 1, plays = 3,
       frames = 5))
-    assert(declared == ddl)
     asInferred()
 
     val beforeCompact = spark.read.parquet(root).localCheckpoint()
     Ingest.compactPool(spark, root)
-    assert(declared == ddl)
     asInferred()
     assertSameRows(Pool(spark, root).df, beforeCompact)
 
-    // same-schema upsert: game 2023090000 moves one yard downfield
+    // game 2023090000 moves one yard downfield
     val g0 = col("gameId") === 2023090000L
     val before = Pool(spark, root).df.localCheckpoint()
     val updates = before.filter(g0).withColumn("x", col("x") + 1.0f)
@@ -824,113 +792,123 @@ class IngestPoolSpec extends SparkSpec {
     Ingest.upsertPartitioned(spark, root, updates,
       Seq("gameId", "playId", "nflId", "frameId"), "x",
       Seq("season", "gameId"))
-    assert(declared == ddl)
     asInferred()
     assertSameRows(Pool(spark, root).df,
       before.filter(!g0).unionByName(updates))
 
-    // a mixed-vintage drop whose game-2024 file lost the required `y`:
-    // the batch's data schema differs, so the sidecar goes
+    // a 2024 game without `y` sorts after the 2023 files: `y` stays
     drop { in =>
       SyntheticTracking.writeCsv2018(spark, in, games = 1, plays = 1,
         frames = 2)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(in, "a-no-y.csv"),
-        """gameId,playId,nflId,frameId,team,x
-          |2024090001,50,40000,1,home,10.0
-          |2024090001,50,40001,1,away,11.0
-          |""".stripMargin)
+      noY(2024090001L)(in)
     }
-    assert(!fs.exists(new Path(root, Pool.SchemaFile)))
     asInferred()
-    assert(Pool(spark, root).df.filter(col("season") === 2024).count() ==
-      2L)
-    // created only after a write into an empty root: it stays absent
-    drop(SyntheticTracking.writeCsv2018(spark, _, games = 1, plays = 2,
-      frames = 5))
-    assert(declared.isEmpty)
+    assert(Pool(spark, root).df.filter(col("season") === 2024 &&
+      col("y").isNull).count() == 2L)
+    // a 2022 game without `y` sorts FIRST: inference loses `y` for the
+    // whole pool, and so does the declared read
+    drop(noY(2022090001L))
     asInferred()
+    assert(!Pool(spark, root).df.columns.contains("y"))
   }
 
-  test("marker #schema: line: a marker without it serves identical " +
-    "rows, and a write whose data schema differs clears it for good " +
-    "(PoolCommit and DocPool)") {
-    import org.apache.hadoop.fs.Path
-    import graft.operators.{DocPool, PoolCommit}
+  test("driver-side schema resolution follows Spark's file order and " +
+    "infers whenever it cannot match inference exactly") {
     import spark.implicits._
-    val hconf = spark.sessionState.newHadoopConf()
-    def newest(root: String, prefix: String): Path = {
-      val fs = new Path(root).getFileSystem(hconf)
-      fs.listStatus(new Path(root)).map(_.getPath)
-        .filter(_.getName.startsWith(prefix)).maxBy(_.getName)
-    }
-    def lines(p: Path): Seq[String] = {
-      val in = p.getFileSystem(hconf).open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-      finally in.close()
-    }
-    def hasSchema(root: String, prefix: String): Boolean =
-      lines(newest(root, prefix)).exists(_.startsWith("#schema:"))
-    // rewrite the ruling marker as a reader from before the line saw it
-    def strip(root: String, prefix: String): Unit = {
-      val p = newest(root, prefix)
-      val body = lines(p).filterNot(_.startsWith("#schema:"))
-      val out = p.getFileSystem(hconf).create(p, true)
-      try out.write(body.mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+    def same(root: String): Unit =
+      assertSameRows(Pool.read(spark, root), spark.read.parquet(root))
+    // `k=1-2/...` sorts before `k=1/...` ('-' < '/'): the first file's
+    // schema is the one without `b`
+    val order = tmpDir("footerorder")
+    Seq((1L, "x")).toDF("a", "b").write.parquet(s"$order/k=1")
+    Seq(2L).toDF("a").write.parquet(s"$order/k=1-2")
+    assert(Pool.inferredSchema(spark, Seq(order)).map(_.fieldNames.toSeq)
+      .contains(Seq("a")))
+    same(order)
+    // a data column named like a partition directory: declaring it would
+    // move it, so inference keeps it
+    val overlap = tmpDir("footeroverlap")
+    Seq((1L, 7)).toDF("a", "k").write.parquet(s"$overlap/k=7")
+    assert(Pool.inferredSchema(spark, Seq(overlap)).isEmpty)
+    same(overlap)
+    // a summary file is what inference reads first
+    val summary = tmpDir("footersummary")
+    Seq(1L).toDF("a").write.parquet(s"$summary/k=1")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(summary, "_common_metadata"), "")
+    assert(Pool.inferredSchema(spark, Seq(summary)).isEmpty)
+    // field metadata and nested types come through the footer unchanged
+    val nested = tmpDir("footernested")
+    Seq((1L, Seq(1.5f), "t")).toDF("a", "v", "s")
+      .select(col("a"), col("v"), struct(col("s")).as("st",
+        new org.apache.spark.sql.types.MetadataBuilder()
+          .putString("lang", "en").build()))
+      .write.parquet(s"$nested/k=1")
+    assert(Pool.inferredSchema(spark, Seq(nested)).nonEmpty)
+    same(nested)
+    assert(Pool.read(spark, nested).schema("st").metadata
+      .getString("lang") == "en")
+    // schema merging reads every footer: resolution steps aside
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assert(Pool.inferredSchema(spark, Seq(order)).isEmpty)
+      same(order)
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
 
+  test("PoolCommit snapshot reads declare the first footer's schema and " +
+    "read what inference reads, whichever generation holds the " +
+    "narrower schema") {
+    import org.apache.hadoop.fs.Path
+    import graft.operators.PoolCommit
     val df = SyntheticTracking.df(spark, games = 2, plays = 2, frames = 5)
     val gA = col("gameId") === 2023090000L
-    val pc = tmpDir("markerschema") + "/pool"
-    PoolCommit.write(df, pc)
-    assert(hasSchema(pc, "_pool_marker."))
-    val declaredRows = PoolCommit.read(spark, pc).localCheckpoint()
-    strip(pc, "_pool_marker.")
-    assert(!hasSchema(pc, "_pool_marker."))
-    assertSameRows(PoolCommit.read(spark, pc), declaredRows)
+    def inferred(root: String) = {
+      val m = PoolCommit.readMarker(
+        new Path(root).getFileSystem(spark.sessionState.newHadoopConf()),
+        root)
+      spark.read.option("basePath", root).parquet(m.parts.toSeq.map {
+        case (p, g) => s"$root/gen=$g/$p" }: _*).drop("gen")
+    }
+    // gen=1 (first in path order) is wide, gen=2 lost `route`
+    val wide = tmpDir("markerwide") + "/pool"
+    PoolCommit.write(df, wide)
+    PoolCommit.write(df.filter(gA).drop("route"), wide)
+    assert(PoolCommit.read(spark, wide).columns.contains("route"))
+    assertSameRows(PoolCommit.read(spark, wide), inferred(wide))
+    // gen=1 is narrow: inference, and the declared read, lose `route`
+    val narrow = tmpDir("markernarrow") + "/pool"
+    PoolCommit.write(df.drop("route"), narrow)
+    PoolCommit.write(df.filter(gA), narrow)
+    assert(!PoolCommit.read(spark, narrow).columns.contains("route"))
+    assertSameRows(PoolCommit.read(spark, narrow), inferred(narrow))
+  }
 
-    val pc2 = tmpDir("markerschema2") + "/pool"
-    PoolCommit.write(df, pc2)
-    PoolCommit.write(df.filter(gA), pc2) // same schema: kept
-    assert(hasSchema(pc2, "_pool_marker."))
-    PoolCommit.write(df.filter(gA).drop("route"), pc2)
-    assert(!hasSchema(pc2, "_pool_marker."))
-    PoolCommit.write(df.filter(gA), pc2) // stays absent
-    assert(!hasSchema(pc2, "_pool_marker."))
-    assert(PoolCommit.read(spark, pc2).count() == df.count())
-
-    val docs = (0L until 40L).map(i => (i, s"doc $i")).toDF("doc_id",
-      "text")
-    val dp = tmpDir("docschema") + "/corpus"
-    DocPool.write(docs, dp, "doc_id", buckets = 4)
-    assert(hasSchema(dp, "_doc_marker."))
-    DocPool.removeIds(spark, Seq(3L).toDF("doc_id"), dp, "doc_id")
-    assert(hasSchema(dp, "_doc_marker.")) // survivors keep the schema
-    val docRows = DocPool.read(spark, dp).localCheckpoint()
-    strip(dp, "_doc_marker.")
-    assertSameRows(DocPool.read(spark, dp), docRows)
-
-    val dp2 = tmpDir("docschema2") + "/corpus"
-    DocPool.write(docs, dp2, "doc_id", buckets = 4)
-    DocPool.write(docs.withColumn("lang", lit("en")), dp2, "doc_id",
-      buckets = 4)
-    assert(!hasSchema(dp2, "_doc_marker."))
-    DocPool.upsert(Seq((100L, "new", "en")).toDF("doc_id", "text",
-      "lang"), dp2, "doc_id")
-    assert(!hasSchema(dp2, "_doc_marker."))
-    assert(DocPool.read(spark, dp2).count() == 41L)
-
-    // field metadata does not survive DDL: such a frame declares
-    // nothing, and the read keeps what inference returns
-    val tagged = docs.select(col("doc_id"), col("text").as("text",
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putString("lang", "en").build()))
-    val dp3 = tmpDir("docschema3") + "/corpus"
-    DocPool.write(tagged, dp3, "doc_id", buckets = 4)
-    assert(!hasSchema(dp3, "_doc_marker."))
-    assert(DocPool.read(spark, dp3).schema("text").metadata
-      .getString("lang") == "en")
+  test("compactPool recovery: the retry of a crashed compaction by " +
+    "`season` finishes the swap and reads `gameId` back from the files") {
+    import org.apache.hadoop.fs.Path
+    val in = tmpDir("inrecover")
+    val root = tmpDir("poolrecover") + "/pool"
+    SyntheticTracking.writeCsv2018(spark, in, games = 2, plays = 2,
+      frames = 5)
+    Ingest.run(spark, in, root, Vintages.bdb2018)
+    val before = spark.read.parquet(root).localCheckpoint()
+    // a compaction by `season` alone crashed after committing its
+    // staging marker: `gameId` is a data column in the staged files
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    val rootPath = fs.makeQualified(new Path(root))
+    val staging = new Path(rootPath.getParent,
+      "." + rootPath.getName + "_compact_staging")
+    before.write.partitionBy("season").parquet(staging.toString)
+    val out = fs.create(new Path(staging, "_SWAP_READY"), true)
+    try out.write("season".getBytes("UTF-8")) finally out.close()
+    Ingest.compactPool(spark, root, partitionCols = Seq("season"))
+    assert(!fs.exists(staging))
+    assert(Pool.inferredSchema(spark, Seq(root))
+      .exists(_.fieldNames.contains("gameId")))
+    assertSameRows(Pool(spark, root).df, spark.read.parquet(root))
+    assertSameRows(Pool(spark, root).df.select(before.columns.map(col)
+      .toSeq: _*), before)
   }
 
   test("Ingest.run globs the input through the file system that owns " +

@@ -295,42 +295,12 @@ class RetrievalSpec extends SparkSpec {
   test("index snapshot resolution runs on the driver: topKFromIndex + " +
     "readAnnIndex start at most one job and infer no schema") {
     import graft.sim.SimSearch
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val (bmDir, annDir) = indexesWithDebt()
-    val sc = spark.sparkContext
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
-      SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(e)
+    val ((bm, ann), eager) = jobsOf {
+      (Bm25.topKFromIndex(spark, bmDir, debtQueries, "query_id",
+        "doc_id"), SimSearch.readAnnIndex(spark, annDir))
     }
-    def group(e: SparkListenerJobStart): String =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-        .orNull
-    val g = s"snapshot-${System.nanoTime}"
-    sc.addSparkListener(listener)
-    val (bm, ann) =
-      try {
-        sc.setJobGroup(g, "snapshot resolution")
-        val bm = Bm25.topKFromIndex(spark, bmDir, debtQueries,
-          "query_id", "doc_id")
-        val ann = SimSearch.readAnnIndex(spark, annDir)
-        // a sentinel job: the listener bus delivers job starts in
-        // order, so once it shows, every earlier start has too
-        sc.setJobGroup(s"$g-end", "sentinel")
-        sc.parallelize(Seq(1), 1).count()
-        val deadline = System.nanoTime + 30000000000L
-        while (!starts.toArray(Array.empty[SparkListenerJobStart])
-            .exists(e => group(e) == s"$g-end") &&
-            System.nanoTime < deadline) Thread.sleep(20)
-        (bm, ann)
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    val eager = starts.toArray(Array.empty[SparkListenerJobStart])
-      .filter(e => group(e) == g)
-    val names = eager.flatMap(_.stageInfos.map(_.name)).toSeq
+    val names = eager.flatten
     assert(eager.length <= 1, names.mkString("; "))
     assert(!names.exists(_.startsWith("parquet at")), names.mkString("; "))
     // the rows are those of in-memory search over the live corpus
