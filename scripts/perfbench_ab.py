@@ -3,7 +3,7 @@
 
     python3 scripts/perfbench_ab.py --parent <ref> --workload <name> \\
         --seeds 961-968,1001 --pairs 10 [--seconds 12] [--trace 0] \\
-        [--scratch DIR] [--json FILE]
+        [--scratch DIR] [--json FILE] [--claim METRIC]
 
 Exports `git archive <ref>` into `<scratch>/<sha8>` (reused on later calls
 for the same commit; keep the scratch path short, since sbt puts a Unix
@@ -17,6 +17,15 @@ the ratio of medians (change / parent), and in how many pairs the change was
 better (the direction comes from BENCHMARK.json; ties count as no win). Ends
 with the correct / failed / attempted totals of each side. With `--json`,
 every run's result line is saved as well.
+
+With `--claim <metric>`, an acceptance verdict follows the table:
+  - the claimed metric is met when the change wins at least 9 of 10 pairs
+    (90% of the pairs with both results) AND its median beats the parent's
+    by more than the parent's IQR (q3 - q1);
+  - every other end-to-end metric of BENCHMARK.json is within bound when the
+    change's median is no worse than the parent's by more than the metric's
+    `bound` (a fraction of the parent's median);
+  - the change's failed/attempted share must be no higher than the parent's.
 
 Compare only runs taken on the same box with nothing else running: a
 concurrent build or test JVM distorts every number.
@@ -74,9 +83,12 @@ def run_once(checkout, a, seed):
         return None
 
 
-def directions():
+def benchmark():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        bench = json.load(f)
+        return json.load(f)
+
+
+def directions(bench):
     return {m["name"]: m["better"] for m in bench.get("end_to_end", []) + bench.get("per_layer", [])}
 
 
@@ -98,29 +110,89 @@ def value(result, k):
     return v if isinstance(v, (int, float)) else None
 
 
+def compare(pairs, k, better):
+    """(parent quartiles, change quartiles, change wins, pairs) of metric k."""
+    both = [(value(p, k), value(c, k)) for p, c in pairs if p and c]
+    both = [(x, y) for x, y in both if x is not None and y is not None]
+    if not both:
+        return None
+    sign = -1 if better.get(k, "lower") == "lower" else 1
+    wins = sum(1 for x, y in both if sign * (y - x) > 0)
+    return quartiles([x for x, _ in both]), quartiles([y for _, y in both]), wins, len(both)
+
+
+def failed_share(runs):
+    ok = [r for r in runs if r]
+    failed, attempted = sum(r["failed"] for r in ok), sum(r["attempted"] for r in ok)
+    return failed, attempted
+
+
 def report(pairs, better):
     names = sorted({k for p, c in pairs if p and c for k in set(p["metrics"]) & set(c["metrics"])},
                    key=lambda k: (k not in better, k))
     print("| metric | parent q1 / median / q3 | change q1 / median / q3 | ratio | change wins |")
     print("|---|---|---|---|---|")
     for k in names:
-        both = [(value(p, k), value(c, k)) for p, c in pairs if p and c]
-        both = [(x, y) for x, y in both if x is not None and y is not None]
-        if not both:
+        got = compare(pairs, k, better)
+        if not got:
             continue
-        ps, cs = [x for x, _ in both], [y for _, y in both]
-        pq, cq = quartiles(ps), quartiles(cs)
+        pq, cq, wins, n = got
         ratio = cq[1] / pq[1] if pq[1] else float("nan")
-        sign = -1 if better.get(k, "lower") == "lower" else 1
-        wins = sum(1 for x, y in both if sign * (y - x) > 0)
         print(f"| `{k}` | {' / '.join(map(fmt, pq))} | {' / '.join(map(fmt, cq))} "
-              f"| {ratio:.3f} | {wins}/{len(both)} |")
+              f"| {ratio:.3f} | {wins}/{n} |")
     for side, idx in (("parent", 0), ("change", 1)):
         runs = [pr[idx] for pr in pairs]
         ok = [r for r in runs if r]
+        failed, attempted = failed_share(runs)
         print(f"{side}: {sum(1 for r in ok if r['correct'])}/{len(runs)} runs correct, "
-              f"{len(runs) - len(ok)} without a result, "
-              f"failed/attempted {sum(r['failed'] for r in ok)}/{sum(r['attempted'] for r in ok)}")
+              f"{len(runs) - len(ok)} without a result, failed/attempted {failed}/{attempted}")
+
+
+def verdict(pairs, claim, bench):
+    """Prints the acceptance verdict of the claimed metric and the bounds."""
+    better = directions(bench)
+    ok = True
+    print(f"\nverdict (claim: `{claim}`):")
+    got = compare(pairs, claim, better)
+    if not got:
+        print(f"- `{claim}`: no pair has it on both sides: NOT MET")
+        ok = False
+    else:
+        pq, cq, wins, n = got
+        sign = -1 if better.get(claim, "lower") == "lower" else 1
+        gap, iqr = sign * (cq[1] - pq[1]), pq[2] - pq[0]
+        won = wins >= 0.9 * n
+        apart = gap > iqr
+        print(f"- `{claim}` wins {wins}/{n} pairs (need >= 90%): {'yes' if won else 'NO'}")
+        print(f"- `{claim}` median gap in its better direction {fmt(gap)} vs parent IQR "
+              f"{fmt(iqr)}: {'exceeds' if apart else 'DOES NOT exceed'}")
+        ok = ok and won and apart
+    for m in bench.get("end_to_end", []):
+        k, bound = m["name"], m["bound"]
+        if k == claim:
+            continue
+        got = compare(pairs, k, better)
+        if not got:
+            print(f"- `{k}`: no pair has it on both sides: UNKNOWN")
+            ok = False
+            continue
+        pq, cq, _, _ = got
+        # worse = the change's median moved the wrong way, as a share of
+        # the parent's median
+        worse = (cq[1] - pq[1] if m["better"] == "lower" else pq[1] - cq[1]) / pq[1] \
+            if pq[1] else float("inf")
+        within = worse <= bound
+        print(f"- `{k}` change median {fmt(cq[1])} vs parent {fmt(pq[1])}: "
+              f"{100 * abs(worse):.1f}% {'worse' if worse > 0 else 'better'} "
+              f"(bound {100 * bound:.0f}% worse): {'within' if within else 'OUT OF BOUND'}")
+        ok = ok and within
+    (pf, pa), (cf, ca) = (failed_share([pr[i] for pr in pairs]) for i in (0, 1))
+    share = lambda f, a: f / a if a else 0.0
+    no_more = share(cf, ca) <= share(pf, pa)
+    print(f"- failed/attempted {cf}/{ca} vs parent {pf}/{pa}: "
+          f"{'no higher' if no_more else 'HIGHER'}")
+    ok = ok and no_more
+    print(f"=> {'ACCEPT' if ok else 'REJECT'}")
 
 
 def main():
@@ -133,7 +205,12 @@ def main():
     ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--scratch", default=os.path.join(tempfile.gettempdir(), "perfbench-ab"))
     ap.add_argument("--json", help="also write every run's result line here")
+    ap.add_argument("--claim", help="end-to-end metric the change claims to improve; "
+                    "prints the acceptance verdict")
     a = ap.parse_args()
+    bench = benchmark()
+    if a.claim and a.claim not in {m["name"] for m in bench.get("end_to_end", [])}:
+        sys.exit(f"--claim {a.claim}: not an end-to-end metric of BENCHMARK.json")
     if a.pairs < 1:
         sys.exit("--pairs must be at least 1")
     sha, parent = export_parent(a.parent, a.scratch)
@@ -157,7 +234,9 @@ def main():
             with open(a.json, "w") as f:
                 json.dump({"parent": sha, "workload": a.workload, "seconds": a.seconds,
                            "trace": a.trace, "runs": log}, f, indent=1)
-    report(pairs, directions())
+    report(pairs, directions(bench))
+    if a.claim:
+        verdict(pairs, a.claim, bench)
 
 
 if __name__ == "__main__":

@@ -72,6 +72,18 @@ object Ingest {
     * row-level predicate would rewrite each touched partition with just
     * its matching rows, silently deleting the rest.
     *
+    * A compaction may deepen the layout (`Seq("season")` back to the
+    * default `(season, gameId)`): the old rows then sit as data files
+    * ABOVE the new leaf depth, and Spark reads data files at two depths
+    * as conflicting partition columns. The swap deletes those files
+    * from each staged leaf's ancestor directories before the leaf lands
+    * (recovery at the recorded depth does the same), so they must be
+    * staged in full: every directory above the leaf depth that holds
+    * data files must be selected, by a `pred` over the columns its own
+    * path fixes (enforced; a violation leaves the pool untouched). A
+    * crash inside such a swap may leave an ancestor without its old
+    * files before its staged leaves land; the next run finishes it.
+    *
     * `filesPerPartition` is the file count for the LARGEST selected
     * partition; smaller partitions get proportionally fewer (never
     * zero). Implemented with `maxRecordsPerFile` on a one-task-per-
@@ -97,14 +109,32 @@ object Ingest {
       if (depth == 0) Seq(p)
       else fs.listStatus(p).toIndexedSeq.filter(_.isDirectory)
         .flatMap(s => leafDirs(s.getPath, depth - 1))
+    def under(base: org.apache.hadoop.fs.Path,
+        rel: Seq[String]): org.apache.hadoop.fs.Path =
+      rel.foldLeft(base)(new org.apache.hadoop.fs.Path(_, _))
+    // Spark reads the entries not `_`/`.`-prefixed: files are data
+    def visible(dir: org.apache.hadoop.fs.Path)
+        : Seq[org.apache.hadoop.fs.FileStatus] =
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toIndexedSeq.filterNot { s =>
+        s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith(".")
+      }
     // the swap depth comes from the marker (the run that WROTE the
     // staging dir), never from this call's partitionCols: recovering a
     // 2-level staging at depth 1 would delete+replace whole season
     // directories that were never staged
     def swapStagedIn(depth: Int): Unit = {
+      val cleared = scala.collection.mutable.Set.empty[Seq[String]]
       leafDirs(staging, depth).foreach { staged =>
         val rel = staging.toUri.relativize(staged.toUri).getPath
         val dest = new org.apache.hadoop.fs.Path(rootPath, rel)
+        // a shallower layout's data files in the leaf's ancestors were
+        // staged in full (checked before the marker): drop them first
+        val parts = rel.split("/").filter(_.nonEmpty).toSeq
+        parts.indices.map(parts.take).filter(cleared.add).foreach(a =>
+          visible(under(rootPath, a)).filter(_.isFile)
+            .foreach(f => fs.delete(f.getPath, false)))
         fs.mkdirs(dest.getParent)
         fs.delete(dest, true)
         if (!fs.rename(staged, dest))
@@ -138,7 +168,7 @@ object Ingest {
     val selected = src.filter(pred)
     // the unresolved Column is opaque (Spark 4 ColumnNodeExpression) —
     // read the references off the ANALYZED filter instead
-    selected.queryExecution.analyzed.collect {
+    val predRefs = selected.queryExecution.analyzed.collect {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
         // case-insensitive: Spark resolves columns case-insensitively by
         // default, so col("GAMEID") === 1 is a valid partition predicate
@@ -155,6 +185,27 @@ object Ingest {
           (refs.nonEmpty || f.condition.foldable),
           "compactPool pred must be a deterministic partition-column " +
             s"predicate; got ${f.condition.sql}")
+        refs.map(_.toLowerCase)
+    }.flatten.toSet
+    // directories above the new leaf depth that hold data files (a
+    // shallower layout being deepened), as paths relative to the root
+    def shallowDataDirs(dir: org.apache.hadoop.fs.Path, rel: Seq[String],
+        depth: Int): Seq[Seq[String]] =
+      if (depth == 0) Nil
+      else {
+        val (dirs, files) = visible(dir).partition(_.isDirectory)
+        (if (files.nonEmpty) Seq(rel) else Nil) ++ dirs.flatMap(d =>
+          shallowDataDirs(d.getPath, rel :+ d.getPath.getName, depth - 1))
+      }
+    val shallow = shallowDataDirs(rootPath, Nil, partitionCols.size)
+    // the swap deletes these files, so each must be staged whole: pred
+    // constant over the directory (it reads only columns the path fixes)
+    shallow.foreach { rel =>
+      val fixed = rel.map(_.takeWhile(_ != '=').toLowerCase).toSet
+      require(predRefs.subsetOf(fixed),
+        s"compactPool: ${under(rootPath, rel)} holds data files above " +
+          s"the ${partitionCols.mkString(",")} leaf depth; a pred over " +
+          s"${predRefs.mkString(",")} cannot select them whole")
     }
     val distributed =
       selected.repartition(partitionCols.map(col).toIndexedSeq: _*)
@@ -179,6 +230,15 @@ object Ingest {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode("overwrite")
       .parquet(staging.toString)
+    // ... and selected: a deepening that skips one leaves it at the old
+    // depth beside the new one
+    shallow.find(rel => !fs.exists(under(staging, rel))).foreach { rel =>
+      fs.delete(staging, true)
+      throw new IllegalArgumentException(s"compactPool: pred skips " +
+        s"${under(rootPath, rel)}, which holds data files above the " +
+        s"${partitionCols.mkString(",")} leaf depth; a compaction that " +
+        "deepens the layout must select every such directory")
+    }
     // commit point: write the marker CONTENT first, then rename into the
     // marker path — the marker is never visible empty or half-written
     val markerTmp = new org.apache.hadoop.fs.Path(

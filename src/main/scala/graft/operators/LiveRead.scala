@@ -44,6 +44,10 @@ private[graft] object LiveRead {
     * `<segRoot>/batch=<B>` append segments, minus the
     * `tombstones/batch=<B>` ids (broadcast anti-join). `filter` applies
     * to EACH directory read, so partition pruning holds on all of them.
+    * The tombstone ids are NOT deduplicated: an id deleted in two
+    * batches appears twice on the build side, and an anti-join only
+    * asks whether a match exists, so a `distinct` would change no row
+    * and cost a shuffle stage on every read.
     */
   def rows(spark: SparkSession, path: String, live: LiveState,
       family: String, segRoot: String, meta: Map[String, String],
@@ -59,8 +63,7 @@ private[graft] object LiveRead {
     if (live.batches.isEmpty) all
     else all.join(
       broadcast(spark.read.schema(StructType(Seq(declared(idCol))))
-        .parquet(live.batches.map(b => s"$path/tombstones/batch=$b"): _*)
-        .distinct()),
+        .parquet(live.batches.map(b => s"$path/tombstones/batch=$b"): _*)),
       Seq(idCol), "left_anti")
   }
 }

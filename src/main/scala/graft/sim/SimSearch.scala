@@ -184,8 +184,10 @@ object SimSearch {
   //   vectors/ or vectors_gen=<G>/
   //                  the LIVE vector generation: (id, vec) stored
   //                  under one `bucket=<id>/` Hive partition per sign
-  //                  bucket — a query batch touching B buckets reads
-  //                  only those B directories
+  //                  bucket — [[annTopKFromIndex]] resolves a query
+  //                  batch's probed buckets (B of them, multi-probe
+  //                  flips included) on the driver and filters by
+  //                  them, so it reads only those B directories
   //                  (`PruneFileSourcePartitions`), ~B/2^planes of
   //                  the corpus, instead of re-bucketing everything
   //                  per lookup
@@ -446,22 +448,37 @@ object SimSearch {
   }
 
   /** [[annTopK]] against a persisted [[writeAnnIndex]] artifact: the
-    * query side buckets in the scan stage, the index side is READ
-    * pre-bucketed — the bucket equi-join's index scan prunes to the
-    * probed partitions. Same ranking semantics (exact cosine within
-    * bucket, multi-probe optional) as the inline flavor.
+    * index side is READ pre-bucketed and pruned to the probed bucket
+    * directories. The query batch (bounded by contract) is collected
+    * ONCE with its sign buckets; the driver expands those to the probed
+    * set (each bucket plus its `probeBits` single-bit flips) and
+    * filters the index by `bucket IN (set)`, a partition filter every
+    * directory read of [[readAnnIndex]] prunes by. The join's query
+    * side is a local frame of the collected rows, so a query frame that
+    * is itself a scan runs once. (A bucket equi-join alone prunes
+    * nothing here: dynamic partition pruning needs a filtered query
+    * side, and a local one has none.) Same ranking semantics (exact
+    * cosine within bucket, multi-probe optional) as the inline flavor.
     */
   def annTopKFromIndex(
       index: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, planes: Int = 12, dim: Int = 64,
-      probeBits: Int = 0): DataFrame =
+      probeBits: Int = 0): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val q = queries
+      .withColumn("bucket", simhashBucket(col(vecCol), planes, dim))
+      .select(col(idCol).as("qid"), col(vecCol).as("qv"), col("bucket"))
+    val rows = q.collect().toSeq
+    val probed = rows.map(_.getLong(2)).distinct
+      .flatMap(b => b +: (0 until probeBits).map(p => b ^ (1L << p)))
+      .distinct
     probeJoinTopK(
-      queries
-        .withColumn("bucket", simhashBucket(col(vecCol), planes, dim))
-        .select(col(idCol).as("qid"), col(vecCol).as("qv"), col("bucket")),
-      index.select(col(idCol).as("cid"), col(vecCol).as("cv"),
-        col("bucket")),
+      queries.sparkSession.createDataFrame(rows.asJava, q.schema),
+      index.filter(col("bucket").isin(probed: _*))
+        .select(col(idCol).as("cid"), col(vecCol).as("cv"),
+          col("bucket")),
       k, probeBits, col("qid") =!= col("cid"))
+  }
 
   /** Recall@k of an approximate top-k result against the exact baseline
     * — THE acceptance metric for every index build: run
@@ -2466,22 +2483,33 @@ object SimSearch {
     *
     * Input lists each carry `(qid, id, rank)` with rank 1-based; the
     * output is per-query top-k `(qid, id, rrf, rank)`, `rrf` rounded
-    * to 6 before the (rrf desc, id) tie-broken re-rank. Scale shape:
-    * full-outer equi-joins on (qid, id) — candidate lists are top-k
-    * slices, thousands of rows per query at most, never the corpus —
-    * then a qid-partitioned window.
+    * to 6 before the (rrf desc, id) tie-broken re-rank.
+    *
+    * Precondition: each list holds a `(qid, id)` at most once, with
+    * non-null `qid` and `id` — as every searcher here emits (one row
+    * per ranked candidate). The lists are unioned as `(qid, id, list,
+    * 1/(c + rank))` and grouped by `(qid, id)`, one `max` column per
+    * list picking that list's single contribution (null when absent),
+    * so a key repeated within a list would collapse to its best
+    * contribution where a join would multiply it. Scale shape: one
+    * hash aggregation over the unioned candidate lists — top-k slices,
+    * thousands of rows per query at most, never the corpus — then a
+    * qid-partitioned window.
     */
   def rrfFuse(lists: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
     require(lists.size >= 2, "rrfFuse needs at least two rank lists")
     import org.apache.spark.sql.expressions.Window
     val contribs = lists.zipWithIndex.map { case (l, i) =>
-      l.select(col("qid"), col("id"),
+      l.select(col("qid"), col("id"), lit(i).as("_list"),
         (lit(1.0) / (lit(c.toDouble) + col("rank").cast("double")))
-          .as(s"_c$i"))
+          .as("_c"))
     }
-    val joined = contribs.reduce((a, b) =>
-      a.join(b, Seq("qid", "id"), "full_outer"))
-    val score = contribs.indices
+    val perList = lists.indices.map(i =>
+      max(when(col("_list") === i, col("_c"))).as(s"_c$i"))
+    val joined = contribs.reduce(_ union _)
+      .groupBy(col("qid"), col("id"))
+      .agg(perList.head, perList.tail: _*)
+    val score = lists.indices
       .map(i => coalesce(col(s"_c$i"), lit(0.0)))
       .reduceLeft(_ + _)
     val w = Window.partitionBy("qid")

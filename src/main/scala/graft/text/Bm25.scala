@@ -411,36 +411,50 @@ object Bm25 {
 
   /** Serve top-k from the persisted index — row-identical to [[topK]]
     * over the same logical corpus (shared [[scoreTopK]] tail), but the
-    * postings READ is pruned to the query terms' buckets: the query
-    * terms (a query set, not a corpus — bounded by contract) resolve
-    * to bucket ids on the driver and become a partition filter, so a
-    * 3-term query over a billion-doc index reads 3 buckets, not the
-    * lake. Snapshot resolution is driver-side: file reads, the bucket
-    * collect (job-free over a local query frame) and ONE collect of
-    * the stats rows into the literal `(N, avgdl)`.
+    * postings READ is pruned to the query terms: the query batch (a
+    * query set, not a corpus — bounded by contract) is collected ONCE
+    * and resolved on the driver. There its `(queryIdCol, term)` pairs
+    * and its non-null terms are deduplicated, the terms map to bucket
+    * ids through the write path's `pmod(xxhash64(term), buckets)`
+    * (evaluated over a local frame, so no job), and `bucket IN (ids)
+    * AND term IN (terms)` filters every directory read: the bucket
+    * test prunes partitions, the term test is pushed into the parquet
+    * scan. A 3-term query over a billion-doc index reads 3 buckets,
+    * not the lake. The df pass then counts the pruned postings
+    * directly, and the scorer joins them with a local frame of the
+    * distinct pairs — no distinct or term join over the query frame
+    * runs inside the plan. Snapshot resolution is driver-side too:
+    * file reads and ONE collect of the stats rows into the literal
+    * `(N, avgdl)`.
     */
   def topKFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, queryIdCol: String,
       idCol: String, k: Int = 10, k1: Double = 1.2,
       b: Double = 0.75, atGen: Option[Long] = None): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.StructType
     val fs = LiveRead.fs(spark, path)
     val meta = LiveRead.meta(spark, path)
     val buckets = meta("buckets").toLong
     val live = atGen.map(bm25Marker.readAt(fs, path, _))
       .getOrElse(bm25Marker.read(fs, path))
-    val bucketIds = queries
+    val pairFrame = queries.select(col(queryIdCol), col("term"))
+    val pairs = pairFrame.collect().distinct.toSeq
+    val terms = pairs.map(_.get(1)).filter(_ != null).distinct
+    val termSchema = StructType(Seq(pairFrame.schema("term")))
+    val bucketIds = spark.createDataFrame(terms.map(Row(_)).asJava,
+        termSchema)
       .select(pmod(xxhash64(col("term")), lit(buckets)))
       .collect().map(_.getLong(0)).distinct.toSeq
     val postings = LiveRead.rows(spark, path, live, "postings",
       "postings_batches", meta, idCol,
-      Some(col("bucket").isin(bucketIds: _*)))
+      Some(col("bucket").isin(bucketIds: _*) &&
+        col("term").isin(terms: _*)))
     val (n, avgdl) = statLits(statsRows(spark, path, live).collect())
-    val qterms = queries.select(col(queryIdCol), col("term")).distinct()
+    val qterms = spark.createDataFrame(pairs.asJava, pairFrame.schema)
     // df(term) off the pruned LIVE read — hash-complete per term,
     // tombstoned docs already excluded so idf shifts with deletes
-    val idf = idfOf(postings.join(
-      broadcast(qterms.select(col("term")).distinct()), Seq("term")), n)
-    val qi = qterms.join(broadcast(idf), Seq("term"))
+    val qi = qterms.join(broadcast(idfOf(postings, n)), Seq("term"))
     scoreTopK(postings, qi, avgdl, queryIdCol, idCol, k, k1, b)
   }
 

@@ -911,6 +911,58 @@ class IngestPoolSpec extends SparkSpec {
       .toSeq: _*), before)
   }
 
+  /** An ingested pool re-compacted by `season` alone: its rows before
+    * that compaction, and the files it left in the season directories.
+    */
+  private def seasonOnlyPool(name: String) = {
+    val in = tmpDir(s"in$name")
+    val root = tmpDir(s"pool$name") + "/pool"
+    SyntheticTracking.writeCsv2018(spark, in, games = 2, plays = 2,
+      frames = 5)
+    Ingest.run(spark, in, root, Vintages.bdb2018)
+    val before = spark.read.parquet(root).localCheckpoint()
+    def files(dir: java.io.File) = Option(dir.listFiles()).toSeq.flatten
+    def seasonFiles() = files(new java.io.File(root))
+      .filter(_.isDirectory).flatMap(files)
+      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+      .map(_.getName).toSet
+    Ingest.compactPool(spark, root, partitionCols = Seq("season"))
+    assert(seasonFiles().nonEmpty)
+    (root, before, () => seasonFiles())
+  }
+
+  test("compactPool goes back to a deeper layout: after a compaction " +
+    "by `season`, the default compaction leaves no season-level files") {
+    val (root, before, seasonFiles) = seasonOnlyPool("deepen")
+    Ingest.compactPool(spark, root)
+    assert(seasonFiles().isEmpty)
+    val after = spark.read.parquet(root)
+    assert(after.columns.toSet == before.columns.toSet)
+    assertSameRows(after.select(before.columns.map(col).toSeq: _*), before)
+    assertSameRows(Pool(spark, root).df, after)
+  }
+
+  test("compactPool refuses to deepen the layout with a pred that " +
+    "cannot select whole season directories, and leaves the pool as " +
+    "it was") {
+    val (root, before, seasonFiles) = seasonOnlyPool("deepenpred")
+    val shallow = seasonFiles()
+    // the pred reads gameId, which a season directory's path does not fix
+    val gameId = before.select("gameId").head().get(0)
+    val err = intercept[IllegalArgumentException] {
+      Ingest.compactPool(spark, root, pred = col("gameId") === gameId)
+    }
+    assert(err.getMessage.contains("above the season,gameId leaf depth"))
+    // a pred that skips a season would leave it at the old depth
+    val err2 = intercept[IllegalArgumentException] {
+      Ingest.compactPool(spark, root, pred = col("season") === 1900)
+    }
+    assert(err2.getMessage.contains("pred skips"))
+    assert(seasonFiles() == shallow)
+    assertSameRows(spark.read.parquet(root), before.select(
+      spark.read.parquet(root).columns.map(col).toSeq: _*))
+  }
+
   test("Ingest.run globs the input through the file system that owns " +
     "it, not the default one") {
     val in = tmpDir("inscheme")

@@ -387,6 +387,108 @@ class RetrievalSpec extends SparkSpec {
       .count() == 0L)
   }
 
+  private lazy val embVec =
+    emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+
+  /** Executes `df` and returns its final adaptive plan's shuffle
+    * exchanges (reused ones not counted) and file scans.
+    */
+  private def executed(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    (rows, helper.collect(plan) { case e: ShuffleExchangeLike => e }.size,
+      helper.collect(plan) { case s: FileSourceScanExec => s })
+  }
+
+  test("a fused BM25 + ANN serve over an append and a delete batch " +
+    "runs at most 7 shuffle exchanges") {
+    import graft.sim.SimSearch
+    val (bmDir, annDir) = indexesWithDebt()
+    // the BM25 queries' ids, with the vectors of indexed docs 5 and 6:
+    // each probe finds at least that doc, so neither leg is empty (an
+    // empty leg lets adaptive execution drop the fusion's join)
+    val qv = Seq(1L -> embVec(5L), 2L -> embVec(6L))
+      .toDF("vec_id", "embedding")
+    val bm = Bm25.topKFromIndex(spark, bmDir, debtQueries, "query_id",
+      "doc_id")
+    val ann = SimSearch.annTopKFromIndex(SimSearch.readAnnIndex(spark,
+      annDir), qv, "vec_id", "embedding", k = 10, planes = 4, dim = 8)
+    val fused = SimSearch.rrfFuse(Seq(
+      bm.select(col("query_id").as("qid"), col("doc_id").as("id"),
+        col("rank")),
+      ann.select(col("qid"), col("neighbor").as("id"),
+        (col("rank") + 1).as("rank"))), k = 10)
+    val (rows, shuffles, _) = executed(fused)
+    assert(Seq(bm, ann).forall(!_.isEmpty))
+    assert(rows.nonEmpty)
+    // this plan runs 5; one that dedupes tombstones and query terms
+    // inside the plan and fuses by full-outer joins runs 12
+    assert(shuffles <= 7, s"$shuffles shuffle exchanges\n" +
+      fused.queryExecution.executedPlan)
+  }
+
+  test("topKFromIndex matches in-memory topK for a query batch with " +
+    "repeated (qid, term) rows, a null term and an absent term") {
+    val dir = s"${tmpDir("bm25-qbatch")}/idx"
+    Bm25.writeBm25Index(corpus.filter(col("doc_id") <= 3), "text",
+      "doc_id", dir, buckets = 8)
+    Bm25.appendToBm25Index(corpus.filter(col("doc_id") > 3), "text",
+      "doc_id", dir)
+    Bm25.deleteFromBm25Index(Seq(3L).toDF("doc_id"), dir, "doc_id")
+    val queries = Seq[(Long, Option[String])]((1L, Some("spark")),
+      (1L, Some("spark")), (1L, None), (1L, Some("the")),
+      (2L, Some("pasta")), (2L, Some("zzz_absent")), (2L, Some("pasta")),
+      (3L, None), (4L, Some("zzz_absent"))).toDF("query_id", "term")
+    val served = Bm25.topKFromIndex(spark, dir, queries, "query_id",
+      "doc_id")
+    val want = Bm25.topK(Bm25.buildIndex(corpus.filter(col("doc_id") =!=
+      3L), "text", "doc_id"), queries, "query_id", "doc_id")
+    // dtypes match (the declared index read is all-nullable)
+    assert(served.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)))
+    val got = served.collect().toSet
+    assert(got == want.collect().toSet)
+    assert(got.map(_.getLong(0)) == Set(1L, 2L))
+  }
+
+  test("annTopKFromIndex scans only the probed bucket directories of " +
+    "every live segment") {
+    import graft.sim.SimSearch
+    val (_, annDir) = indexesWithDebt()
+    val qv = Seq(1L, 6L).map(i => i -> embVec(i)).toDF("vec_id", "embedding")
+    val probeBits = 1
+    val probed = qv.select(SimSearch.simhashBucket(col("embedding"), 4, 8))
+      .collect().map(_.getLong(0))
+      .flatMap(b => Seq(b, b ^ 1L)).toSet
+    def bucketDirs(dir: String): Set[Long] =
+      new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toLong)
+        .toSet
+    val segments = Seq(s"$annDir/vectors", s"$annDir/vectors_batches/batch=2")
+    val all = segments.map(d => bucketDirs(d).size).sum
+    val want = segments.map(d => (bucketDirs(d) & probed).size).sum
+    assert(want < all, s"every bucket is probed: $probed")
+    val index = SimSearch.readAnnIndex(spark, annDir)
+    val served = SimSearch.annTopKFromIndex(index, qv, "vec_id",
+      "embedding", k = 5, planes = 4, dim = 8, probeBits = probeBits)
+    val (rows, _, scans) = executed(served)
+    val vectorScans = scans.filter(s =>
+      s.relation.location.rootPaths.exists(p =>
+        p.toString.contains("/vectors")))
+    assert(vectorScans.size == segments.size)
+    val read = vectorScans.map(_.metrics("numPartitions").value).sum
+    assert(read == want, s"read $read bucket dirs, probed $want of $all")
+    // the rows are those of the unpruned bucket join
+    val unpruned = SimSearch.annTopK(emb.filter(col("vec_id") =!= 3L),
+      "vec_id", "embedding", col("vec_id").isin(1L, 6L), k = 5,
+      planes = 4, dim = 8, probeBits = probeBits)
+    assert(rows.toSet == unpruned.collect().toSet && rows.nonEmpty)
+  }
+
   test("fimSplit: prefix+middle+suffix reassemble every doc; cuts are " +
     "deterministic per seed and move with it") {
     val out = TextOps.fimSplit(corpus, "text", "doc_id", seed = 17L)

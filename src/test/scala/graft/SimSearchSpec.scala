@@ -525,4 +525,48 @@ class SimSearchSpec extends SparkSpec {
       .count()
     assert(all === 4L)
   }
+
+  /** The full-outer-join form of [[SimSearch.rrfFuse]] that the
+    * one-aggregation form replaced, kept as its reference.
+    */
+  private def rrfByJoins(lists: Seq[org.apache.spark.sql.DataFrame],
+      k: Int, c: Int = 60): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val contribs = lists.zipWithIndex.map { case (l, i) =>
+      l.select(col("qid"), col("id"),
+        (lit(1.0) / (lit(c.toDouble) + col("rank").cast("double")))
+          .as(s"_c$i"))
+    }
+    val joined = contribs.reduce((a, b) =>
+      a.join(b, Seq("qid", "id"), "full_outer"))
+    val score = contribs.indices
+      .map(i => coalesce(col(s"_c$i"), lit(0.0)))
+      .reduceLeft(_ + _)
+    val w = Window.partitionBy("qid")
+      .orderBy(col("rrf").desc, col("id"))
+    joined.select(col("qid"), col("id"), round(score, 6).as("rrf"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+  }
+
+  test("rrfFuse: the one-aggregation fusion equals the full-outer-join " +
+    "form for 2 and 3 lists, with overlapping and disjoint ids") {
+    val a = Seq((1L, 100L, 1), (1L, 200L, 2), (1L, 300L, 3),
+      (2L, 100L, 1), (2L, 500L, 2)).toDF("qid", "id", "rank")
+    val b = Seq((1L, 200L, 1), (1L, 400L, 2), (2L, 600L, 1),
+      (3L, 700L, 1)).toDF("qid", "id", "rank")
+    val c = Seq((1L, 300L, 1), (1L, 100L, 2), (2L, 600L, 2),
+      (3L, 800L, 1), (3L, 700L, 3)).toDF("qid", "id", "rank")
+    val disjoint = Seq((1L, 900L, 1), (2L, 901L, 1), (4L, 902L, 5))
+      .toDF("qid", "id", "rank")
+    for (lists <- Seq(Seq(a, b), Seq(a, disjoint), Seq(a, b, c),
+        Seq(a, disjoint, c)); k <- Seq(2, 10)) {
+      val got = SimSearch.rrfFuse(lists, k)
+      val want = rrfByJoins(lists, k)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        want.schema.map(f => (f.name, f.dataType)))
+      assert(got.collect().toSet == want.collect().toSet,
+        s"${lists.size} lists, k = $k")
+    }
+  }
 }
