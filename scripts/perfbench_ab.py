@@ -19,13 +19,18 @@ with the correct / failed / attempted totals of each side. With `--json`,
 every run's result line is saved as well.
 
 With `--claim <metric>`, an acceptance verdict follows the table:
-  - the claimed metric is met when the change wins at least 9 of 10 pairs
-    (90% of the pairs with both results) AND its median beats the parent's
-    by more than the parent's IQR (q3 - q1);
+  - the claimed metric is met when the change wins at least 90% of ALL pairs
+    run (9 of 10; a pair missing a result on either side counts as no win)
+    AND its median beats the parent's by more than the parent's IQR
+    (q3 - q1);
   - every other end-to-end metric of BENCHMARK.json is within bound when the
     change's median is no worse than the parent's by more than the metric's
-    `bound` (a fraction of the parent's median);
+    `bound` (a fraction of the parent's median); it is unresolved when the
+    parent's IQR, as a share of its median, is wider than the bound, unless
+    every change run reads better than every parent run;
+  - every change run must have a result and be `correct: true`;
   - the change's failed/attempted share must be no higher than the parent's.
+Any unmet, unresolved or unknown line makes the verdict REJECT.
 
 Compare only runs taken on the same box with nothing else running: a
 concurrent build or test JVM distorts every number.
@@ -121,6 +126,15 @@ def compare(pairs, k, better):
     return quartiles([x for x, _ in both]), quartiles([y for _, y in both]), wins, len(both)
 
 
+def better_everywhere(pairs, k, better):
+    """Whether every change run of metric k reads better than every parent run."""
+    ps = [value(p, k) for p, _ in pairs if p]
+    cs = [value(c, k) for _, c in pairs if c]
+    if not ps or not cs or None in ps or None in cs:
+        return False
+    return max(cs) < min(ps) if better == "lower" else min(cs) > max(ps)
+
+
 def failed_share(runs):
     ok = [r for r in runs if r]
     failed, attempted = sum(r["failed"] for r in ok), sum(r["attempted"] for r in ok)
@@ -158,12 +172,14 @@ def verdict(pairs, claim, bench):
         print(f"- `{claim}`: no pair has it on both sides: NOT MET")
         ok = False
     else:
-        pq, cq, wins, n = got
+        pq, cq, wins, _ = got
         sign = -1 if better.get(claim, "lower") == "lower" else 1
         gap, iqr = sign * (cq[1] - pq[1]), pq[2] - pq[0]
-        won = wins >= 0.9 * n
+        # over every pair run: a pair without both results is no win
+        won = wins >= 0.9 * len(pairs)
         apart = gap > iqr
-        print(f"- `{claim}` wins {wins}/{n} pairs (need >= 90%): {'yes' if won else 'NO'}")
+        print(f"- `{claim}` wins {wins}/{len(pairs)} pairs (need >= 90%): "
+              f"{'yes' if won else 'NO'}")
         print(f"- `{claim}` median gap in its better direction {fmt(gap)} vs parent IQR "
               f"{fmt(iqr)}: {'exceeds' if apart else 'DOES NOT exceed'}")
         ok = ok and won and apart
@@ -181,11 +197,23 @@ def verdict(pairs, claim, bench):
         # the parent's median
         worse = (cq[1] - pq[1] if m["better"] == "lower" else pq[1] - cq[1]) / pq[1] \
             if pq[1] else float("inf")
-        within = worse <= bound
+        spread = (pq[2] - pq[0]) / pq[1] if pq[1] else float("inf")
+        if spread > bound and not better_everywhere(pairs, k, m["better"]):
+            state = f"UNRESOLVED (parent IQR {100 * spread:.1f}% of its median > bound)"
+            within = False
+        else:
+            within = worse <= bound
+            state = "within" if within else "OUT OF BOUND"
         print(f"- `{k}` change median {fmt(cq[1])} vs parent {fmt(pq[1])}: "
               f"{100 * abs(worse):.1f}% {'worse' if worse > 0 else 'better'} "
-              f"(bound {100 * bound:.0f}% worse): {'within' if within else 'OUT OF BOUND'}")
+              f"(bound {100 * bound:.0f}% worse): {state}")
         ok = ok and within
+    changes = [c for _, c in pairs]
+    missing = sum(1 for c in changes if not c)
+    wrong = sum(1 for c in changes if c and not c.get("correct"))
+    print(f"- change runs without a result {missing}, not correct {wrong}: "
+          f"{'none' if missing + wrong == 0 else 'SOME'}")
+    ok = ok and missing + wrong == 0
     (pf, pa), (cf, ca) = (failed_share([pr[i] for pr in pairs]) for i in (0, 1))
     share = lambda f, a: f / a if a else 0.0
     no_more = share(cf, ca) <= share(pf, pa)

@@ -411,21 +411,23 @@ object Bm25 {
 
   /** Serve top-k from the persisted index — row-identical to [[topK]]
     * over the same logical corpus (shared [[scoreTopK]] tail), but the
-    * postings READ is pruned to the query terms: the query batch (a
-    * query set, not a corpus — bounded by contract) is collected ONCE
-    * and resolved on the driver. There its `(queryIdCol, term)` pairs
-    * and its non-null terms are deduplicated, the terms map to bucket
-    * ids through the write path's `pmod(xxhash64(term), buckets)`
-    * (evaluated over a local frame, so no job), and `bucket IN (ids)
-    * AND term IN (terms)` filters every directory read: the bucket
-    * test prunes partitions, the term test is pushed into the parquet
-    * scan. A 3-term query over a billion-doc index reads 3 buckets,
-    * not the lake. The df pass then counts the pruned postings
-    * directly, and the scorer joins them with a local frame of the
-    * distinct pairs — no distinct or term join over the query frame
-    * runs inside the plan. Snapshot resolution is driver-side too:
-    * file reads and ONE collect of the stats rows into the literal
-    * `(N, avgdl)`.
+    * postings READ is pruned to the query terms' buckets: the query
+    * batch (a query set, not a corpus — bounded by contract) is
+    * collected ONCE and resolved on the driver. There its
+    * `(queryIdCol, term)` pairs and its non-null terms are
+    * deduplicated, and the terms map to bucket ids through the write
+    * path's `pmod(xxhash64(term), buckets)` (evaluated over a local
+    * frame, so no job); `bucket IN (ids)` then prunes the partitions
+    * of every directory read, so a 3-term query over a billion-doc
+    * index reads 3 buckets, not the lake. The df pass counts the
+    * pruned postings directly, and the join with a local frame of the
+    * distinct pairs keeps only the query terms' idf — no distinct or
+    * term join over the query frame runs inside the plan. The scan
+    * gets no `term IN` test: the pair join drops the other terms
+    * anyway, and on the `hybrid_index` benchmark such a test nearly
+    * doubled the bytes read per serve with no gain in serve latency.
+    * Snapshot resolution is driver-side too: file reads and ONE
+    * collect of the stats rows into the literal `(N, avgdl)`.
     */
   def topKFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, queryIdCol: String,
@@ -448,12 +450,12 @@ object Bm25 {
       .collect().map(_.getLong(0)).distinct.toSeq
     val postings = LiveRead.rows(spark, path, live, "postings",
       "postings_batches", meta, idCol,
-      Some(col("bucket").isin(bucketIds: _*) &&
-        col("term").isin(terms: _*)))
+      Some(col("bucket").isin(bucketIds: _*)))
     val (n, avgdl) = statLits(statsRows(spark, path, live).collect())
     val qterms = spark.createDataFrame(pairs.asJava, pairFrame.schema)
     // df(term) off the pruned LIVE read — hash-complete per term,
-    // tombstoned docs already excluded so idf shifts with deletes
+    // tombstoned docs already excluded so idf shifts with deletes;
+    // the pair join keeps the query terms' rows
     val qi = qterms.join(broadcast(idfOf(postings, n)), Seq("term"))
     scoreTopK(postings, qi, avgdl, queryIdCol, idCol, k, k1, b)
   }

@@ -942,6 +942,46 @@ class IngestPoolSpec extends SparkSpec {
     assertSameRows(Pool(spark, root).df, after)
   }
 
+  test("compactPool recovery of a crashed deepening: the retry finishes " +
+    "the swap at the recorded depth, with or without the season files " +
+    "already gone, and loses no rows") {
+    import org.apache.hadoop.fs.Path
+    for (partlySwapped <- Seq(false, true)) {
+      val (root, before, seasonFiles) =
+        seasonOnlyPool(s"deepenrec$partlySwapped")
+      val fs = new Path(root).getFileSystem(
+        spark.sessionState.newHadoopConf())
+      val rootPath = fs.makeQualified(new Path(root))
+      val staging = new Path(rootPath.getParent,
+        "." + rootPath.getName + "_compact_staging")
+      // a default compaction crashed after committing its marker
+      before.write.partitionBy("season", "gameId").parquet(staging.toString)
+      val out = fs.create(new Path(staging, "_SWAP_READY"), true)
+      try out.write("season,gameId".getBytes("UTF-8")) finally out.close()
+      if (partlySwapped) {
+        // ... after clearing a season directory's files and moving one
+        // of its leaves in: the other leaf exists only in staging
+        val season = fs.listStatus(rootPath).filter(_.isDirectory).head
+          .getPath
+        fs.listStatus(season).filter(s => s.isFile &&
+          s.getPath.getName.endsWith(".parquet"))
+          .foreach(s => fs.delete(s.getPath, false))
+        val staged = fs.listStatus(new Path(staging, season.getName))
+          .filter(_.isDirectory)
+        assert(staged.length > 1)
+        assert(fs.rename(staged.head.getPath,
+          new Path(season, staged.head.getPath.getName)))
+        assert(spark.read.parquet(root).count() < before.count())
+      }
+      Ingest.compactPool(spark, root)
+      assert(!fs.exists(staging))
+      assert(seasonFiles().isEmpty)
+      val after = spark.read.parquet(root)
+      assertSameRows(after.select(before.columns.map(col).toSeq: _*),
+        before)
+    }
+  }
+
   test("compactPool refuses to deepen the layout with a pred that " +
     "cannot select whole season directories, and leaves the pool as " +
     "it was") {
