@@ -15,8 +15,12 @@ Each checkout builds its own `perfbench/target` on its first run.
 Prints one row per metric: q1 / median / q3 for the parent and the change,
 the ratio of medians (change / parent), and in how many pairs the change was
 better (the direction comes from BENCHMARK.json; ties count as no win). Ends
-with the correct / failed / attempted totals of each side. With `--json`,
-every run's result line is saved as well.
+with the correct / failed / attempted totals of each side, and per side how
+many runs timed each number of ops of a kind (from each run's record, named
+on its `[perfbench] run record:` stderr line): a `hybrid_index` run that
+starts a second block times 6 serves instead of 3, and its warm serves pull
+`read_p50_ms` down, so a gap from block count shows next to the table. With
+`--json`, every run's result line is saved as well, with its record path.
 
 With `--claim <metric>`, an acceptance verdict follows the table:
   - the claimed metric is met when the change wins at least 90% of ALL pairs
@@ -36,6 +40,7 @@ Compare only runs taken on the same box with nothing else running: a
 concurrent build or test JVM distorts every number.
 """
 import argparse
+import collections
 import json
 import os
 import statistics
@@ -81,7 +86,12 @@ def run_once(checkout, a, seed):
     try:
         if p.returncode != 0 or not lines:
             raise ValueError(f"exit {p.returncode}")
-        return json.loads(lines[-1])
+        result = json.loads(lines[-1])
+        mark = "[perfbench] run record: "
+        for line in p.stderr.splitlines():
+            if line.startswith(mark):
+                result["record"] = os.path.join(checkout, line[len(mark):].strip())
+        return result
     except ValueError as e:
         tail = "\n".join(p.stderr.strip().splitlines()[-5:])
         print(f"[ab] {checkout} seed {seed}: no result ({e})\n{tail}", file=sys.stderr)
@@ -141,6 +151,26 @@ def failed_share(runs):
     return failed, attempted
 
 
+def op_counts(result):
+    """{op kind: how many the run timed}, from the run record; None without one."""
+    try:
+        with open(result["record"]) as f:
+            ops = json.load(f)["ops"]
+    except (KeyError, TypeError, OSError, ValueError):
+        return None
+    return collections.Counter(o["kind"] for o in ops)
+
+
+def op_mix(runs):
+    """Per op kind, how many runs timed each count of it: `serve 3x7 6x3`."""
+    counts = [c for c in map(op_counts, filter(None, runs)) if c is not None]
+    kinds = sorted({k for c in counts for k in c})
+    return "; ".join(
+        k + " " + " ".join(f"{n}x{n_runs}" for n, n_runs in
+                           sorted(collections.Counter(c[k] for c in counts).items()))
+        for k in kinds) or "no run records"
+
+
 def report(pairs, better):
     names = sorted({k for p, c in pairs if p and c for k in set(p["metrics"]) & set(c["metrics"])},
                    key=lambda k: (k not in better, k))
@@ -160,6 +190,8 @@ def report(pairs, better):
         failed, attempted = failed_share(runs)
         print(f"{side}: {sum(1 for r in ok if r['correct'])}/{len(runs)} runs correct, "
               f"{len(runs) - len(ok)} without a result, failed/attempted {failed}/{attempted}")
+    for side, idx in (("parent", 0), ("change", 1)):
+        print(f"{side} ops per run (count x runs): {op_mix([pr[idx] for pr in pairs])}")
 
 
 def verdict(pairs, claim, bench):

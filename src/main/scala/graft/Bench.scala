@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
@@ -15,24 +14,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // bucketed index trees hold up to 64 `bucket=`/`cell=` child
-      // dirs; above the default threshold (32) Spark launches a
-      // distributed listing JOB per read — pure scheduling overhead
-      // for directory counts this small at ANY deployment scale
-      // (overridable via SPARK_GRAFT_LIST_THRESHOLD)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "128"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = GraftSession.cpus("32")
+    val spark = GraftSession(cpus, "ERROR")
 
     def once(name: String): Double = {
       val fn = SparkEntry.queries(name)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: dump the formatted physical plan of every SparkEntry query so
@@ -13,15 +12,7 @@ object PlanAudit {
     val sfDir =
       if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus("4"), "ERROR")
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       // q26 writes temp dirs; plan-only is still fine

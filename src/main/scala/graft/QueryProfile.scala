@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): run ONE query
   * (or a few) with a job listener and print the per-Spark-job wall
@@ -18,24 +17,7 @@ object QueryProfile {
     val sfDir = args(0)
     val wanted = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // bucketed index trees hold up to 64 `bucket=`/`cell=` child
-      // dirs; above the default threshold (32) Spark launches a
-      // distributed listing JOB per read — pure scheduling overhead
-      // for directory counts this small at ANY deployment scale
-      // (overridable via SPARK_GRAFT_LIST_THRESHOLD)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "128"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.cpus("32"), "ERROR")
 
     final case class Job(id: Int, desc: String, site: String,
         start: Long, var end: Long = -1L, var tasks: Int = 0)

@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import graft.operators.{Diagnose, Export, Ingest, Pool}
 import graft.schema.Vintages
 
@@ -104,19 +105,9 @@ import graft.schema.Vintages
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(): SparkSession =
+    GraftSession(GraftSession.cpus("32"), "WARN",
+      sys.env.get("SPARK_GRAFT_MASTER"))
 
   /** End-of-command session teardown. `getOrCreate` joins an existing
     * session when one is live, so in-JVM harnesses (CliSmokeSpec) set

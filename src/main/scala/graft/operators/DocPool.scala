@@ -35,11 +35,7 @@ import org.apache.spark.sql.functions._
   */
 object DocPool {
 
-  // snapshot reads infer their schema: no benchmark workload reads a
-  // DocPool yet, so the driver-side resolution stays off until one shows
-  // the inference job matters
-  private val pool = new MarkerPool("_doc_marker.", Seq("part="),
-    resolveOnDriver = false)
+  private val pool = new MarkerPool("_doc_marker.", Seq("part="))
 
   /** The bucket an id hashes to — the layout's one invariant. */
   def partOf(idCol: Column, buckets: Int): Column =

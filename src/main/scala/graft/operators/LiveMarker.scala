@@ -77,56 +77,39 @@ private[graft] final class LiveMarker(
     batchRoots: Seq[String]) {
 
   private val Prefix = "_live."
-  private val Footer = "end"
   private val Intent = "_bootstrap"
 
   private def pristine: LiveState =
     LiveState(0L, families.map(f => f._1 -> f._2).toMap, Seq.empty)
-
-  private def markerPath(path: String, gen: Long) =
-    new Path(path, f"$Prefix$gen%019d")
 
   private def longList(fields: Map[String, String],
       key: String): Seq[Long] =
     fields.getOrElse(key, "").split(",").filter(_.nonEmpty)
       .map(_.toLong).toSeq
 
-  private def parse(fs: FileSystem, p: Path): Option[LiveState] = {
-    val gen =
-      try p.getName.stripPrefix(Prefix).toLong
-      catch { case _: NumberFormatException => return None }
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (!lines.lastOption.contains(Footer)) return None
-    val fields = lines.init.flatMap { l =>
-      l.split(":", 2) match {
-        case Array(k, v) => Some(k -> v)
-        case _ => None
-      }
-    }.toMap
-    if (!families.forall(f => fields.contains(f._1))) return None
-    try Some(LiveState(gen,
-      families.map(f => f._1 -> fields(f._1)).toMap,
-      longList(fields, "tomb"),
-      longList(fields, "appd"),
-      fields.getOrElse("sid", "-1").toLong,
-      fields.getOrElse("ret", "1").toInt))
-    catch { case _: NumberFormatException => None }
-  }
+  private def parse(fs: FileSystem, p: Path): Option[LiveState] =
+    MarkerFile.read(fs, p, Prefix).flatMap { case (gen, lines) =>
+      val fields = lines.flatMap { l =>
+        l.split(":", 2) match {
+          case Array(k, v) => Some(k -> v)
+          case _ => None
+        }
+      }.toMap
+      if (!families.forall(f => fields.contains(f._1))) None
+      else try Some(LiveState(gen,
+        families.map(f => f._1 -> fields(f._1)).toMap,
+        longList(fields, "tomb"),
+        longList(fields, "appd"),
+        fields.getOrElse("sid", "-1").toLong,
+        fields.getOrElse("ret", "1").toInt))
+      catch { case _: NumberFormatException => None }
+    }
 
   /** Newest-first complete markers with their states. */
   private def complete(fs: FileSystem,
-      path: String): Seq[(Path, LiveState)] = {
-    val root = new Path(path)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(Prefix))
-      .sortBy(_.getName).reverse.toSeq
+      path: String): Seq[(Path, LiveState)] =
+    MarkerFile.list(fs, new Path(path), Prefix)
       .flatMap(p => parse(fs, p).map(p -> _))
-  }
 
   /** The ruling lifecycle state: newest complete marker, or the
     * pristine layout. Reader-safe — parses only, never deletes.
@@ -205,15 +188,12 @@ private[graft] final class LiveMarker(
   def put(fs: FileSystem, path: String, state: LiveState,
       retain: Int = 1): Unit = {
     val eff = state.copy(retain = math.max(state.retain, retain))
-    val out = fs.create(markerPath(path, eff.gen), false)
-    try out.write((
-      families.map(f => s"${f._1}:${eff.dirs(f._1)}\n").mkString +
-      s"tomb:${eff.batches.mkString(",")}\n" +
-      s"appd:${eff.appends.mkString(",")}\n" +
-      s"sid:${eff.applied}\n" +
-      s"ret:${eff.retain}\n" +
-      s"$Footer\n").getBytes("UTF-8"))
-    finally out.close()
+    MarkerFile.put(fs, path, Prefix, eff.gen,
+      families.map(f => s"${f._1}:${eff.dirs(f._1)}") ++ Seq(
+        s"tomb:${eff.batches.mkString(",")}",
+        s"appd:${eff.appends.mkString(",")}",
+        s"sid:${eff.applied}",
+        s"ret:${eff.retain}"))
   }
 
   /** WRITER-ONLY GC of everything no RETAINED marker references:
@@ -247,17 +227,14 @@ private[graft] final class LiveMarker(
     val liveBatches =
       states.flatMap(s => s.batches ++ s.appends).map(b => s"batch=$b")
         .toSet
-    def checkedDelete(p: Path): Unit =
-      if (!fs.delete(p, true)) throw new java.io.IOException(
-        s"index lifecycle GC failed to delete $p")
     fs.listStatus(root).map(_.getPath).foreach { p =>
       val n = p.getName
       if (n.startsWith(Prefix) && !keptNames.contains(n))
-        checkedDelete(p)
+        MarkerFile.delete(fs, p)
       else families.foreach { case (field, plain, genPrefix) =>
         if ((n == plain || n.startsWith(genPrefix)) &&
             !liveDirs(field).contains(n))
-          checkedDelete(p)
+          MarkerFile.delete(fs, p)
       }
     }
     batchRoots.foreach { sub =>
@@ -266,8 +243,8 @@ private[graft] final class LiveMarker(
         fs.listStatus(subRoot).map(_.getPath)
           .filter(p => p.getName.startsWith("batch=") &&
             !liveBatches.contains(p.getName))
-          .foreach(checkedDelete)
-        if (fs.listStatus(subRoot).isEmpty) checkedDelete(subRoot)
+          .foreach(MarkerFile.delete(fs, _))
+        if (fs.listStatus(subRoot).isEmpty) MarkerFile.delete(fs, subRoot)
       }
     }
   }

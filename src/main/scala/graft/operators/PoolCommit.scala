@@ -41,20 +41,13 @@ import org.apache.spark.sql.functions._
   *
   * Unknown `#` keys are ignored, so older readers read newer markers.
   *
-  * @param markerPrefix    marker file prefix, e.g. `"_pool_marker."`
-  * @param levels          partition-directory name prefixes, outermost
-  *                        first, e.g. `Seq("season=", "gameId=")` or
-  *                        `Seq("part=")`
-  * @param resolveOnDriver snapshot reads take their data schema from
-  *                        one footer read on the driver
-  *                        ([[Pool.reader]]) instead of a Spark
-  *                        inference job
+  * @param markerPrefix marker file prefix, e.g. `"_pool_marker."`
+  * @param levels       partition-directory name prefixes, outermost
+  *                     first, e.g. `Seq("season=", "gameId=")` or
+  *                     `Seq("part=")`
   */
 private[graft] final class MarkerPool(
-    markerPrefix: String, levels: Seq[String],
-    resolveOnDriver: Boolean) {
-
-  private val Footer = "end"
+    markerPrefix: String, levels: Seq[String]) {
 
   /** Live mapping: partition relative path → its live generation,
     * plus the PERSISTED retention window (`#ret:` line — a property
@@ -67,34 +60,13 @@ private[graft] final class MarkerPool(
   final case class Marker(gen: Long, parts: Map[String, Long],
       retain: Int = 1, applied: Long = -1L)
 
-  private def markerPath(root: String, gen: Long) =
-    new Path(root, f"$markerPrefix$gen%019d")
-
-  private def checked(ok: Boolean, what: String): Unit =
-    if (!ok) throw new java.io.IOException(
-      s"pool commit operation failed (returned false): $what")
-
-  def markerFiles(fs: FileSystem, root: Path): Seq[Path] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(markerPrefix))
-      .sortBy(_.getName).reverse.toSeq
-
   /** Parse a marker; None when torn (no footer) or malformed. */
-  def parse(fs: FileSystem, p: Path): Option[Marker] = {
-    val gen =
-      try p.getName.stripPrefix(markerPrefix).toLong
-      catch { case _: NumberFormatException => return None }
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.lastOption.contains(Footer)) {
+  private def parse(fs: FileSystem, p: Path): Option[Marker] =
+    MarkerFile.read(fs, p, markerPrefix).flatMap { case (gen, lines) =>
       try {
         // '#'-prefixed lines are protocol metadata, not partitions —
         // absent in pre-round-14 markers (defaults apply)
-        val (meta, partLines) = lines.init.partition(_.startsWith("#"))
+        val (meta, partLines) = lines.partition(_.startsWith("#"))
         val metaMap = meta.map { l =>
           val cut = l.indexOf(':')
           require(cut > 0, s"bad marker meta line: $l")
@@ -109,11 +81,10 @@ private[graft] final class MarkerPool(
           metaMap.getOrElse("sid", "-1").toLong))
       }
       catch { case _: RuntimeException => None }
-    } else None
-  }
+    }
 
   def readMarker(fs: FileSystem, root: String): Marker =
-    markerFiles(fs, new Path(root)).iterator
+    MarkerFile.list(fs, new Path(root), markerPrefix).iterator
       .flatMap(parse(fs, _))
       .nextOption()
       .getOrElse(Marker(0L, Map.empty))
@@ -126,14 +97,9 @@ private[graft] final class MarkerPool(
   def writeMarker(fs: FileSystem, root: String, m: Marker,
       retain: Int = 1): Unit = {
     val eff = math.max(m.retain, retain)
-    val out = fs.create(markerPath(root, m.gen), false)
-    try {
-      val body = Seq(s"#ret:$eff", s"#sid:${m.applied}") ++
-        m.parts.toSeq.sortBy(_._1).map { case (p, g) =>
-          s"$p:$g"
-        } :+ Footer
-      out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
-    } finally out.close()
+    MarkerFile.put(fs, root, markerPrefix, m.gen,
+      Seq(s"#ret:$eff", s"#sid:${m.applied}") ++
+        m.parts.toSeq.sortBy(_._1).map { case (p, g) => s"$p:$g" })
   }
 
   /** The partition relative paths a generation directory holds —
@@ -161,45 +127,30 @@ private[graft] final class MarkerPool(
     require(retain >= 1, s"retain must be >= 1, got $retain")
     val root = new Path(root0)
     if (!fs.exists(root)) return
-    // markerFiles sorts newest-first; keep the newest `eff` COMPLETE
+    // MarkerFile.list sorts newest-first; keep the newest `eff` COMPLETE
     // markers (torn ones never count toward the window), where eff =
     // max(caller's retain, the window the ruling marker persists)
-    val all = markerFiles(fs, root)
+    val all = MarkerFile.list(fs, root, markerPrefix)
       .flatMap(p => parse(fs, p).map(m => p -> m))
     val eff = math.max(retain,
       all.headOption.map(_._2.retain).getOrElse(1))
     val kept = all.take(eff)
     val keptPaths = kept.map(_._1.getName).toSet
     val liveParts = kept.flatMap(_._2.parts).toSet // (part, gen) pairs
-    markerFiles(fs, root).foreach { p =>
+    MarkerFile.list(fs, root, markerPrefix).foreach { p =>
       if (!keptPaths.contains(p.getName))
-        checked(fs.delete(p, false), s"delete marker $p")
+        MarkerFile.delete(fs, p)
     }
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("gen="))
-      .foreach { genDir =>
-        val g =
-          try genDir.getName.stripPrefix("gen=").toLong
-          catch { case _: NumberFormatException => -1L }
-        val liveHere = liveParts.collect {
-          case (p, pg) if pg == g => p }
-        if (liveHere.isEmpty)
-          checked(fs.delete(genDir, true), s"delete gen dir $genDir")
-        else partsUnder(fs, genDir).foreach { p =>
-          if (!liveHere.contains(p))
-            checked(fs.delete(new Path(genDir, p), true),
-              s"delete partition $genDir/$p")
-        }
-      }
+    MarkerFile.gcGenerations(fs, root, liveParts, partsUnder(fs, _))
   }
 
   def listGenerations(fs: FileSystem, root: String): Seq[Long] =
-    markerFiles(fs, new Path(root))
+    MarkerFile.list(fs, new Path(root), markerPrefix)
       .flatMap(parse(fs, _)).map(_.gen).sorted
 
   def markerAt(fs: FileSystem, root: String, gen: Long,
       hint: String): Marker =
-    markerFiles(fs, new Path(root))
+    MarkerFile.list(fs, new Path(root), markerPrefix)
       .flatMap(parse(fs, _)).find(_.gen == gen)
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot gen=$gen under $root; on disk: " +
@@ -223,8 +174,7 @@ private[graft] final class MarkerPool(
   def readParts(spark: SparkSession, root: String,
       parts: Seq[(String, Long)]): DataFrame = {
     val dirs = parts.map { case (p, g) => s"$root/gen=$g/$p" }
-    (if (resolveOnDriver) Pool.reader(spark, dirs) else spark.read)
-      .option("basePath", root).parquet(dirs: _*)
+    Pool.reader(spark, dirs).option("basePath", root).parquet(dirs: _*)
   }
 }
 
@@ -243,8 +193,7 @@ private[graft] final class MarkerPool(
 object PoolCommit {
 
   private val pool =
-    new MarkerPool("_pool_marker.", Seq("season=", "gameId="),
-      resolveOnDriver = true)
+    new MarkerPool("_pool_marker.", Seq("season=", "gameId="))
 
   private[graft] def readMarker(fs: FileSystem,
       root: String): MarkerPool#Marker =

@@ -6,115 +6,13 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Storage protocol behind the hash-bucketed streaming state tables
-  * ([[StreamingFunnel]] / [[StreamingRetention]] /
-  * [[StreamingAggState]]): how a micro-batch replaces (or appends to)
-  * the buckets it touched, crash-safely, and how readers see exactly
-  * the committed rows.
-  *
-  * Two implementations:
-  *
-  *  - [[RenameStateStore]] (default) — the write-to-temp-then-swap
-  *    discipline of [[StateSwap]]: correct wherever directory `rename`
-  *    is atomic (HDFS, POSIX). One live directory per bucket; swap =
-  *    delete + rename; heal finishes an interrupted swap.
-  *  - [[MarkerStateStore]] — the object-store-safe commit-marker
-  *    protocol for S3-style stores where rename is copy-then-delete
-  *    and nothing about it is atomic. NOTHING is ever renamed or
-  *    rewritten: bucket files land under write-once `gen=N` version
-  *    directories, and ONE write-once marker object
-  *    (`_marker.<gen>`) names, per bucket, the generation directories
-  *    that are live. Readers resolve through the newest complete
-  *    marker; a swap that crashed before its marker landed is
-  *    invisible (its generation directory is unreferenced) and heal
-  *    deletes it. Every visible intermediate state is either
-  *    before-the-marker (old state rules) or after (new state rules) —
-  *    commit is the single marker PUT, which object stores make
-  *    atomic.
-  */
-private[graft] sealed trait StateStore {
+import graft.operators.MarkerFile
 
-  /** WRITER-side heal: finish interrupted work and garbage-collect
-    * unreferenced files. Idempotent. Must be called only from the
-    * single writer (before a batch / at the end of a commit) — a
-    * reader running this concurrently with an in-flight commit could
-    * GC the writer's not-yet-referenced data. Readers use
-    * [[healForRead]] instead.
-    */
-  def heal(fs: FileSystem, statePath: String): Unit
-
-  /** READER-side heal: make committed state readable without deleting
-    * ANYTHING a concurrent writer may be mid-commit on. For the marker
-    * store this is a no-op (readers resolve through the newest
-    * complete marker, so torn markers and unreferenced generation
-    * directories are invisible without GC); for the rename store it
-    * must still finish an interrupted swap (a half-swapped live dir is
-    * unreadable) — there a concurrent writer fails loudly on the
-    * checked rename and the batch replays, so no committed row is
-    * lost.
-    */
-  def healForRead(fs: FileSystem, statePath: String): Unit =
-    heal(fs, statePath)
-
-  /** True when at least one committed bucket exists. */
-  def hasState(fs: FileSystem, statePath: String): Boolean
-
-  /** All committed rows (including the `_b` bucket column), pruned to
-    * `buckets` when given — per-batch I/O must touch only those.
-    */
-  def read(spark: SparkSession, statePath: String,
-      buckets: Option[Seq[Int]] = None): DataFrame
-
-  /** Atomically replace the touched buckets with `state`'s rows
-    * (`state` carries `_b`; a touched bucket that writes no rows keeps
-    * its previous content — merges never drop rows).
-    */
-  def swapBuckets(fs: FileSystem, statePath: String, state: DataFrame,
-      touched: Seq[Int]): Unit
-
-  /** Append `state`'s rows to the touched buckets (the retention
-    * twin's idempotent-append path).
-    */
-  def appendBuckets(fs: FileSystem, statePath: String, state: DataFrame,
-      touched: Seq[Int]): Unit
-}
-
-/** The rename-based flavor — delegates to [[StateSwap]]. Correct on
-  * filesystems with atomic directory rename (HDFS, POSIX); NOT safe on
-  * S3-style object stores (use [[MarkerStateStore]] there).
-  */
-private[graft] object RenameStateStore extends StateStore {
-
-  def heal(fs: FileSystem, statePath: String): Unit =
-    StateSwap.heal(fs, statePath)
-
-  def hasState(fs: FileSystem, statePath: String): Boolean = {
-    val p = new Path(statePath)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("_b="))
-  }
-
-  def read(spark: SparkSession, statePath: String,
-      buckets: Option[Seq[Int]] = None): DataFrame = {
-    val df = spark.read.parquet(statePath)
-    buckets match {
-      // `_b` is the partition column — the isin prunes the scan to the
-      // touched bucket directories
-      case Some(bs) => df.filter(col("_b").isin(bs.map(Integer.valueOf): _*))
-      case None => df
-    }
-  }
-
-  def swapBuckets(fs: FileSystem, statePath: String, state: DataFrame,
-      touched: Seq[Int]): Unit =
-    StateSwap.swapBuckets(fs, statePath, state, touched)
-
-  def appendBuckets(fs: FileSystem, statePath: String, state: DataFrame,
-      touched: Seq[Int]): Unit =
-    state.write.partitionBy("_b").mode("append").parquet(statePath)
-}
-
-/** Commit-marker state store for object stores.
+/** The commit-marker storage protocol behind the hash-bucketed
+  * streaming state tables ([[StreamingFunnel]], [[StreamingRetention]],
+  * [[StreamingAggState]], [[StreamingSessions]]). Nothing is ever
+  * renamed or rewritten, so it is correct on object stores as well as
+  * on HDFS and POSIX.
   *
   * Layout under `statePath`:
   * {{{
@@ -122,12 +20,12 @@ private[graft] object RenameStateStore extends StateStore {
   *   _marker.<N zero-padded>         write-once commit markers
   * }}}
   *
-  * Marker format (plain text): one `K:g1,g2,…` line per bucket (the
-  * generation directories whose union is the bucket's content — more
-  * than one only for append-mode state between compactions), then a
-  * literal `end` footer. A marker without the footer is torn (a
-  * crashed or in-flight write on a store without atomic PUT) and is
-  * ignored and deleted by [[heal]]; the previous marker keeps ruling.
+  * Marker format ([[graft.operators.MarkerFile]]'s envelope): one
+  * `K:g1,g2,…` line per bucket (the generation directories whose union
+  * is the bucket's content — more than one only for append-mode state
+  * between compactions), then a literal `end` footer. A marker without
+  * the footer is torn and is ignored and deleted by [[heal]]; the
+  * previous marker keeps ruling.
   *
   * Protocol per swap/append:
   *  1. read the newest complete marker (generation G);
@@ -143,63 +41,50 @@ private[graft] object RenameStateStore extends StateStore {
   * re-applies the batch — a committed batch can never be lost because
   * the ONLY commit point is the marker PUT. No rename, no overwrite,
   * no read-modify-write of any object anywhere in the protocol.
+  * Readers never delete anything: a reader-side GC would race an
+  * in-flight writer between its `gen=N+1` write and its marker PUT.
   */
-private[graft] object MarkerStateStore extends StateStore {
+private[graft] object MarkerStateStore {
 
   private val MarkerPrefix = "_marker."
-  private val Footer = "end"
 
   private[graft] final case class Marker(
       gen: Long, buckets: Map[Int, Seq[Long]])
 
-  private def markerPath(root: String, gen: Long) =
-    new Path(root, f"$MarkerPrefix$gen%019d")
-
-  private def checked(ok: Boolean, what: String): Unit =
-    if (!ok) throw new java.io.IOException(
-      s"marker state store operation failed (returned false): $what")
-
-  /** All marker files under the root, newest first. */
-  private def markerFiles(fs: FileSystem, root: Path): Seq[Path] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith(MarkerPrefix))
-      .sortBy(_.getName).reverse.toSeq
-
   /** Parse a marker; None when torn (no footer) or malformed. */
-  private def parse(fs: FileSystem, p: Path): Option[Marker] = {
-    val gen =
-      try p.getName.stripPrefix(MarkerPrefix).toLong
-      catch { case _: NumberFormatException => return None }
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n", -1).toSeq.filter(_.nonEmpty)
-    if (lines.lastOption.contains(Footer)) {
-      try Some(Marker(gen, lines.init.map { l =>
+  private def parse(fs: FileSystem, p: Path): Option[Marker] =
+    MarkerFile.read(fs, p, MarkerPrefix).flatMap { case (gen, lines) =>
+      try Some(Marker(gen, lines.map { l =>
         val Array(b, gs) = l.split(":", 2)
         b.toInt -> gs.split(",").filter(_.nonEmpty).map(_.toLong).toSeq
       }.toMap))
       catch { case _: RuntimeException => None }
-    } else None
-  }
+    }
 
   /** The newest COMPLETE marker, or the empty state. */
   private[graft] def readMarker(fs: FileSystem, root: String): Marker =
-    markerFiles(fs, new Path(root)).iterator
+    MarkerFile.list(fs, new Path(root), MarkerPrefix).iterator
       .flatMap(parse(fs, _))
       .nextOption()
       .getOrElse(Marker(0L, Map.empty))
 
-  private def writeMarker(fs: FileSystem, root: String, m: Marker): Unit = {
-    val out = fs.create(markerPath(root, m.gen), false)
-    try {
-      val body = m.buckets.toSeq.sortBy(_._1).map { case (b, gs) =>
-        s"$b:${gs.mkString(",")}"
-      } :+ Footer
-      out.write((body.mkString("\n") + "\n").getBytes("UTF-8"))
-    } finally out.close()
+  /** The ruling marker. With none, a root holding state in the former
+    * rename layout (`_b=` bucket directories directly under it, or a
+    * `<state>__swap` sibling) throws, so that state never reads as
+    * empty and is silently rebuilt from the next batch alone.
+    */
+  private def rulingMarker(fs: FileSystem, statePath: String): Marker = {
+    val m = readMarker(fs, statePath)
+    val root = new Path(statePath)
+    if (m.gen == 0L && (fs.exists(new Path(statePath + "__swap")) ||
+        (fs.exists(root) && fs.listStatus(root)
+          .exists(_.getPath.getName.startsWith("_b=")))))
+      throw new IllegalStateException(
+        s"streaming state at $statePath is in the rename layout " +
+          "(`_b=` bucket directories or a `__swap` sibling, no " +
+          "`_marker.` file), which is no longer read: replay the " +
+          "stream into a fresh state path")
+    m
   }
 
   /** WRITER-ONLY GC of everything the ruling marker does not
@@ -208,54 +93,30 @@ private[graft] object MarkerStateStore extends StateStore {
     * Never touches referenced data. Must never run beside an
     * in-flight commit on the same path (it would GC the writer's
     * not-yet-referenced gen dir); the single writer calls it before
-    * each batch and at the end of each commit, and readers use
-    * [[healForRead]] (a no-op) instead.
+    * each batch and at the end of each commit. Readers never call it.
     */
   def heal(fs: FileSystem, statePath: String): Unit = {
+    val m = rulingMarker(fs, statePath)
     val root = new Path(statePath)
     if (!fs.exists(root)) return
-    val m = readMarker(fs, statePath)
-    val live: Set[(Long, Int)] = m.buckets.toSeq
-      .flatMap { case (b, gs) => gs.map(g => (g, b)) }.toSet
-    val liveGens = live.map(_._1)
-    markerFiles(fs, root).foreach { p =>
+    MarkerFile.list(fs, root, MarkerPrefix).foreach { p =>
       val keep = parse(fs, p).exists(_.gen == m.gen)
-      if (!keep) checked(fs.delete(p, false), s"delete marker $p")
+      if (!keep) MarkerFile.delete(fs, p)
     }
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("gen="))
-      .foreach { genDir =>
-        val g =
-          try genDir.getName.stripPrefix("gen=").toLong
-          catch { case _: NumberFormatException => -1L }
-        if (!liveGens.contains(g))
-          checked(fs.delete(genDir, true), s"delete gen dir $genDir")
-        else
-          fs.listStatus(genDir).map(_.getPath)
-            .filter(_.getName.startsWith("_b="))
-            .foreach { bDir =>
-              val b =
-                try bDir.getName.stripPrefix("_b=").toInt
-                catch { case _: NumberFormatException => -1 }
-              if (!live.contains((g, b)))
-                checked(fs.delete(bDir, true), s"delete bucket $bDir")
-            }
-      }
+    MarkerFile.gcGenerations(fs, root,
+      m.buckets.toSeq.flatMap { case (b, gs) => gs.map(s"_b=$b" -> _) }
+        .toSet,
+      fs.listStatus(_).map(_.getPath.getName).filter(_.startsWith("_b="))
+        .toSeq)
   }
 
-  /** Readers need no GC at all under the marker protocol: [[parse]]
-    * skips torn markers and [[read]] lists only marker-referenced
-    * directories. Deleting here instead would race an in-flight
-    * writer between its `gen=N+1` parquet write and its marker PUT —
-    * the marker would then commit pointing at GC'd directories while
-    * the streaming checkpoint advances, permanently corrupting
-    * committed state. So: strictly a no-op.
-    */
-  override def healForRead(fs: FileSystem, statePath: String): Unit = ()
-
+  /** True when at least one committed bucket exists. */
   def hasState(fs: FileSystem, statePath: String): Boolean =
-    readMarker(fs, statePath).buckets.nonEmpty
+    rulingMarker(fs, statePath).buckets.nonEmpty
 
+  /** All committed rows (including the `_b` bucket column), pruned to
+    * `buckets` when given — per-batch I/O touches only those.
+    */
   def read(spark: SparkSession, statePath: String,
       buckets: Option[Seq[Int]] = None): DataFrame = {
     val fs = new Path(statePath)
@@ -310,14 +171,23 @@ private[graft] object MarkerStateStore extends StateStore {
       next(b) =
         if (append) next.getOrElse(b, Seq.empty) :+ gen else Seq(gen)
     }
-    writeMarker(fs, statePath, Marker(gen, next.toMap))
+    MarkerFile.put(fs, statePath, MarkerPrefix, gen,
+      next.toSeq.sortBy(_._1).map { case (b, gs) =>
+        s"$b:${gs.mkString(",")}" })
     heal(fs, statePath) // GC superseded markers/generations
   }
 
+  /** Atomically replace the touched buckets with `state`'s rows
+    * (`state` carries `_b`; a touched bucket that writes no rows keeps
+    * its previous content — merges never drop rows).
+    */
   def swapBuckets(fs: FileSystem, statePath: String, state: DataFrame,
       touched: Seq[Int]): Unit =
     commit(fs, statePath, state, touched, append = false)
 
+  /** Append `state`'s rows to the touched buckets (empty `touched` =
+    * every bucket the write produced).
+    */
   def appendBuckets(fs: FileSystem, statePath: String, state: DataFrame,
       touched: Seq[Int]): Unit =
     commit(fs, statePath, state, touched, append = true)

@@ -22,10 +22,10 @@ import graft.operators.Incremental
   * counts. Exactly-once therefore rides a per-bucket applied-batch
   * watermark (`_applied`, carried on every state row of the bucket):
   * a replayed batch skips buckets whose watermark already covers its
-  * batch id. Bucket granularity is correct because [[StateSwap]]
-  * replaces buckets atomically — after a crash mid-swap plus heal,
-  * exactly the swapped buckets carry the new watermark and the replay
-  * merges only the rest.
+  * batch id. Bucket granularity is correct because
+  * [[MarkerStateStore]] replaces the touched buckets atomically at its
+  * one commit point, the marker PUT: after a crash either every
+  * touched bucket carries the new watermark or none does.
   *
   * Report-side cost: the state IS the report source — reading it
   * never touches event history.
@@ -36,34 +36,28 @@ object StreamingAggState {
       stream: DataFrame, statePath: String, checkpoint: String,
       groupCol: String, valueInt: Column, distinctCol: Column,
       k: Int = 128, buckets: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow(),
-      store: StateStore = RenameStateStore): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, statePath, groupCol, valueInt,
-          distinctCol, k, buckets, store)
+          distinctCol, k, buckets)
       }
       .start()
 
   /** One micro-batch of [[start]] — public so batch jobs (and tests)
-    * can drive the same incremental state without a stream. `store`
-    * selects the storage protocol ([[RenameStateStore]] /
-    * [[MarkerStateStore]]); the per-bucket applied-batch watermark
-    * rides on top of either, because both replace buckets atomically
-    * at their commit point (rename, or the marker PUT).
+    * can drive the same incremental state without a stream.
     */
   def processBatch(
       batch: DataFrame, batchId: Long, statePath: String,
       groupCol: String, valueInt: Column, distinctCol: Column,
-      k: Int = 128, buckets: Int = 64,
-      store: StateStore = RenameStateStore): Unit = {
+      k: Int = 128, buckets: Int = 64): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = batch.sparkSession
     val fs = new Path(statePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    store.heal(fs, statePath)
+    MarkerStateStore.heal(fs, statePath)
     val rows = batch.filter(col(groupCol).isNotNull)
     // bounded driver materialization: ≤ `buckets` ints
     val touched = rows
@@ -72,8 +66,8 @@ object StreamingAggState {
     if (touched.isEmpty) return
     // pruned to the touched bucket directories
     val old: Option[DataFrame] =
-      if (store.hasState(fs, statePath))
-        Some(store.read(spark, statePath, Some(touched.toSeq)))
+      if (MarkerStateStore.hasState(fs, statePath))
+        Some(MarkerStateStore.read(spark, statePath, Some(touched.toSeq)))
       else None
     // replay guard: per-bucket applied-batch watermark (≤ |touched|
     // rows collected)
@@ -102,7 +96,7 @@ object StreamingAggState {
     val merged = Incremental.mergeAggState(states, groupCol, k)
       .withColumn("_applied", lit(batchId))
       .withColumn("_b", pmod(hash(col(groupCol)), lit(buckets)))
-    store.swapBuckets(fs, statePath, merged, mergeBuckets)
+    MarkerStateStore.swapBuckets(fs, statePath, merged, mergeBuckets)
   }
 
   /** The report off the persisted state: [[Incremental.stateReport]]
@@ -118,15 +112,12 @@ object StreamingAggState {
     * before and after the first batch.
     */
   def report(spark: SparkSession, statePath: String, groupCol: String,
-      k: Int = 128,
-      store: StateStore = RenameStateStore,
-      groupType: DataType = StringType): DataFrame = {
+      k: Int = 128, groupType: DataType = StringType): DataFrame = {
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.healForRead(fs, statePath)
     val state =
-      if (store.hasState(fs, statePath))
-        store.read(spark, statePath)
+      if (MarkerStateStore.hasState(fs, statePath))
+        MarkerStateStore.read(spark, statePath)
           .select(col(groupCol), col("n_rows"), col("sum_v"),
             col("min_v"), col("max_v"), col("kmv"))
       else

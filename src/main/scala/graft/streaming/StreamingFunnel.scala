@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -44,16 +44,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Delivery: `foreachBatch` is at-least-once; the state merge is
   * idempotent (`least` of mins), so replaying a batch cannot corrupt
-  * the chain. Touched buckets are replaced by write-to-temp-then-swap
-  * ([[StateSwap]]): each bucket's previous files stay intact until its
-  * replacement is fully committed, the delete→rename window is
-  * self-healing, and UNTOUCHED bucket files are never opened, let
-  * alone rewritten. Every swap `delete`/`rename` return value is
-  * CHECKED — Hadoop `FileSystem.rename` reports failure by returning
-  * false, and swallowing it would let the checkpoint commit a batch
-  * whose state write silently failed (the heal would then drop the
-  * newer temp). A false return throws, the batch fails, and
-  * at-least-once replay recovers.
+  * the chain. Touched buckets are replaced through
+  * [[MarkerStateStore]]: each bucket's new rows land in a write-once
+  * generation directory and go live with one marker PUT, a crash
+  * before that PUT leaves the previous state ruling, and UNTOUCHED
+  * bucket files are never opened, let alone rewritten.
   */
 object StreamingFunnel {
 
@@ -62,28 +57,24 @@ object StreamingFunnel {
       stages: Seq[String], userCol: String = "user_id",
       typeCol: String = "event_type", tsCol: String = "ts",
       maxGapMinutes: Option[Long] = None, buckets: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow(),
-      store: StateStore = RenameStateStore): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         processBatch(batch, statePath, stages, userCol, typeCol, tsCol,
-          maxGapMinutes, buckets, store)
+          maxGapMinutes, buckets)
       }
       .start()
 
   /** One micro-batch of [[start]] — public so batch jobs (and tests)
-    * can drive the same incremental state without a stream. `store`
-    * selects the swap protocol: [[RenameStateStore]] (default —
-    * atomic-rename filesystems) or [[MarkerStateStore]] (S3-style
-    * object stores).
+    * can drive the same incremental state without a stream.
     */
   def processBatch(
       batch: DataFrame, statePath: String, stages: Seq[String],
       userCol: String = "user_id", typeCol: String = "event_type",
       tsCol: String = "ts", maxGapMinutes: Option[Long] = None,
-      buckets: Int = 64, store: StateStore = RenameStateStore): Unit = {
+      buckets: Int = 64): Unit = {
     require(stages.nonEmpty, "funnel needs at least one stage")
     require(maxGapMinutes.forall(_ > 0), "maxGapMinutes must be positive")
     require(buckets > 0, s"buckets must be positive, got $buckets")
@@ -99,20 +90,20 @@ object StreamingFunnel {
         col(tsCol).cast("long").as("_ts"))
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.heal(fs, statePath)
+    MarkerStateStore.heal(fs, statePath)
     // the touched-bucket set: ≤ `buckets` small ints — the one bounded
     // driver materialization this path makes (it prunes both the state
-    // READ below and the swap loop at the end)
+    // READ below and the bucket swap at the end)
     val touched = ev
       .select(pmod(hash(col("_u")), lit(buckets)).as("_b"))
       .distinct().collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return // empty/all-null batch: state untouched
     val old: DataFrame =
-      if (store.hasState(fs, statePath))
+      if (MarkerStateStore.hasState(fs, statePath))
         // pruned to the touched bucket directories; a user's whole
         // chain lives in its hash bucket, so the merge below is
         // lossless
-        store.read(spark, statePath, Some(touched.toSeq))
+        MarkerStateStore.read(spark, statePath, Some(touched.toSeq))
           .select(col("stage_idx"), col("_u"), col("_t"))
       else ev.select(lit(0).as("stage_idx"), col("_u"),
         col("_ts").as("_t")).limit(0)
@@ -172,7 +163,7 @@ object StreamingFunnel {
       .filter(col("stage_idx") < 0 || col("stage_idx") >= n)
       .select(col("stage_idx"), col("_u"), col("_t"))
       .unionByName(stateNew)
-    store.swapBuckets(fs, statePath,
+    MarkerStateStore.swapBuckets(fs, statePath,
       state.withColumn("_b", pmod(hash(col("_u")), lit(buckets))),
       touched.toSeq)
   }
@@ -188,15 +179,13 @@ object StreamingFunnel {
     * users×stages-row pass; event history is never rescanned.
     */
   def latencyReport(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, stages: Seq[String], k: Int = 256,
-      store: StateStore = RenameStateStore): DataFrame = {
+      statePath: String, stages: Seq[String], k: Int = 256): DataFrame = {
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.healForRead(fs, statePath)
     import spark.implicits._
     val st =
-      if (store.hasState(fs, statePath))
-        store.read(spark, statePath)
+      if (MarkerStateStore.hasState(fs, statePath))
+        MarkerStateStore.read(spark, statePath)
           .select(col("stage_idx"), col("_u"), col("_t"))
       else Seq.empty[(Int, Long, Long)].toDF("stage_idx", "_u", "_t")
     val prev = st.select((col("stage_idx") + 1).as("stage_idx"),
@@ -213,97 +202,15 @@ object StreamingFunnel {
     * event history is never rescanned.
     */
   def report(spark: org.apache.spark.sql.SparkSession, statePath: String,
-      stages: Seq[String],
-      store: StateStore = RenameStateStore): DataFrame = {
+      stages: Seq[String]): DataFrame = {
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.healForRead(fs, statePath)
     import spark.implicits._
     val counts =
-      if (store.hasState(fs, statePath))
-        store.read(spark, statePath)
+      if (MarkerStateStore.hasState(fs, statePath))
+        MarkerStateStore.read(spark, statePath)
           .groupBy(col("stage_idx")).agg(count(lit(1)).as("_n"))
       else Seq.empty[(Int, Long)].toDF("stage_idx", "_n")
     EventOps.funnelReport(spark, counts, stages)
   }
-}
-
-/** Crash-safe replacement of hash-bucket partitions in a persisted
-  * parquet state table — the write-to-temp-then-swap discipline,
-  * scoped to the buckets a batch touched so per-batch I/O is bounded
-  * by the touched set, never the accumulated state.
-  *
-  * Protocol: the new rows for the touched buckets land in one
-  * committed parquet write under `<state>__swap` (partitioned by
-  * `_b`; files appear only at job commit), then each touched bucket
-  * directory is swapped live: delete `<state>/_b=N`, rename
-  * `<state>__swap/_b=N` into place. The previous state is intact
-  * until the temp write commits, so a crash never leaves ZERO copies.
-  *
-  * [[heal]] finishes an interrupted swap: a temp bucket whose live
-  * twin is MISSING was mid-swap (crash between delete and rename) —
-  * the temp is the newest committed copy, rename it in; a temp bucket
-  * ALONGSIDE its live twin is from a crash before that bucket's
-  * delete — the batch never committed to the streaming checkpoint, so
-  * the live copy stays and replay re-applies the (idempotent) merge.
-  *
-  * Every `delete`/`rename` return value is checked: Hadoop
-  * `FileSystem` reports most failures by returning FALSE, not
-  * throwing, and a swallowed false would let `foreachBatch` commit a
-  * batch whose state never landed — the next heal would then delete
-  * the newer temp with no replay to recover it (the round-8 ADVICE
-  * bug). A false here throws `IOException`, failing the batch so
-  * at-least-once replay recovers.
-  */
-private[streaming] object StateSwap {
-
-  private val TmpSuffix = "__swap"
-
-  private def checked(ok: Boolean, what: String): Unit =
-    if (!ok) throw new java.io.IOException(
-      s"state swap failed (returned false): $what")
-
-  def swapBuckets(fs: FileSystem, statePath: String, state: DataFrame,
-      touched: Seq[Int]): Unit = {
-    val tmpRoot = statePath + TmpSuffix
-    // leftover temp from an interrupted PREVIOUS swap was already
-    // healed by the caller; a stray one here is a concurrent writer —
-    // fail loudly rather than interleave swaps
-    state.write.partitionBy("_b").mode("errorifexists").parquet(tmpRoot)
-    val live = new Path(statePath)
-    if (!fs.exists(live)) checked(fs.mkdirs(live), s"mkdirs $live")
-    touched.foreach { b =>
-      val tmpB = new Path(s"$tmpRoot/_b=$b")
-      val liveB = new Path(s"$statePath/_b=$b")
-      // a touched bucket with no surviving rows writes no directory —
-      // nothing to swap (old rows are never dropped by the merge, so
-      // an existing live bucket implies a temp twin)
-      if (fs.exists(tmpB)) {
-        if (fs.exists(liveB))
-          checked(fs.delete(liveB, true), s"delete $liveB")
-        checked(fs.rename(tmpB, liveB), s"rename $tmpB -> $liveB")
-      }
-    }
-    checked(fs.delete(new Path(tmpRoot), true), s"delete $tmpRoot")
-  }
-
-  def heal(fs: FileSystem, statePath: String): Unit = {
-    val tmpRoot = new Path(statePath + TmpSuffix)
-    if (!fs.exists(tmpRoot)) return
-    val live = new Path(statePath)
-    fs.listStatus(tmpRoot)
-      .filter(_.getPath.getName.startsWith("_b="))
-      .foreach { st =>
-        val liveB = new Path(live, st.getPath.getName)
-        if (fs.exists(liveB))
-          checked(fs.delete(st.getPath, true), s"delete ${st.getPath}")
-        else {
-          if (!fs.exists(live)) checked(fs.mkdirs(live), s"mkdirs $live")
-          checked(fs.rename(st.getPath, liveB),
-            s"rename ${st.getPath} -> $liveB")
-        }
-      }
-    checked(fs.delete(tmpRoot, true), s"delete $tmpRoot")
-  }
-
 }

@@ -33,8 +33,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * so a long-running stream accumulates file groups with batch count
   * and the report/anti-join listing cost grows with it. [[start]]
   * therefore compacts every `compactEvery` batches (default 64): a
-  * crash-safe temp-then-swap rewrite ([[StateSwap]]) collapses the
-  * accumulated groups, preserving the bucketed layout. Compaction is
+  * crash-safe rewrite into one fresh marker-committed generation
+  * ([[MarkerStateStore]]) collapses the accumulated groups, preserving
+  * the bucketed layout. Compaction is
   * amortized-O(|state|/N) per batch and purely physical — the
   * activity set is append-only distinct rows, so a rewrite changes
   * layout, never content.
@@ -45,28 +46,24 @@ object StreamingRetention {
       stream: DataFrame, statePath: String, checkpoint: String,
       userCol: String = "user_id", tsCol: String = "ts",
       buckets: Int = 64, compactEvery: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow(),
-      store: StateStore = RenameStateStore): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, statePath, userCol, tsCol, buckets, store)
+        processBatch(batch, statePath, userCol, tsCol, buckets)
         if (compactEvery > 0 && batchId > 0 &&
           batchId % compactEvery == 0)
-          compact(batch.sparkSession, statePath, buckets = buckets,
-            store = store)
+          compact(batch.sparkSession, statePath, buckets = buckets)
       }
       .start()
 
   /** One micro-batch of [[start]] — public so batch jobs (and tests)
-    * can drive the same incremental state without a stream. `store`
-    * selects the storage protocol ([[RenameStateStore]] /
-    * [[MarkerStateStore]]).
+    * can drive the same incremental state without a stream.
     */
   def processBatch(batch: DataFrame, statePath: String,
       userCol: String = "user_id", tsCol: String = "ts",
-      buckets: Int = 64, store: StateStore = RenameStateStore): Unit = {
+      buckets: Int = 64): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = batch.sparkSession
     // NOTE (round 15): do NOT persist `act` here — it is a
@@ -80,43 +77,43 @@ object StreamingRetention {
       .withColumn("_b", pmod(hash(col("_u")), lit(buckets)))
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.heal(fs, statePath)
+    MarkerStateStore.heal(fs, statePath)
     val fresh =
-      if (store.hasState(fs, statePath)) {
+      if (MarkerStateStore.hasState(fs, statePath)) {
         // ≤ `buckets` small ints — bounds the dedup read to the
         // touched partitions via pruning on the partition column
         val touched = act.select(col("_b")).distinct()
           .collect().map(_.getInt(0))
         act.join(
-          store.read(spark, statePath, Some(touched.toSeq))
+          MarkerStateStore.read(spark, statePath, Some(touched.toSeq))
             .select(col("_u"), col("_day")),
           Seq("_u", "_day"), "left_anti")
       } else act
-    store.appendBuckets(fs, statePath, fresh, Seq.empty)
+    MarkerStateStore.appendBuckets(fs, statePath, fresh, Seq.empty)
   }
 
   /** Collapse the per-batch append file groups into one compact
     * rewrite of the activity state (content-identical — the state is
-    * a distinct set), preserving the bucketed layout. Crash-safe
-    * under either protocol: temp-then-checked-rename, or a fresh
-    * marker-committed generation; an interrupted compaction heals on
-    * the next batch/report.
+    * a distinct set), preserving the bucketed layout. Crash-safe:
+    * the rewrite lands in a fresh generation that goes live with one
+    * marker PUT; an interrupted compaction leaves the previous state
+    * ruling, and the next batch's heal deletes its orphan.
     */
   def compact(spark: org.apache.spark.sql.SparkSession,
       statePath: String, targetFilesPerBucket: Int = 1,
-      buckets: Int = 64, store: StateStore = RenameStateStore): Unit = {
+      buckets: Int = 64): Unit = {
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.heal(fs, statePath)
-    if (!store.hasState(fs, statePath)) return
-    // localCheckpoint pins the CURRENT rows: the swap deletes the live
-    // bucket directories mid-swap, and a lazy plan would otherwise
-    // re-list the very files being replaced
-    val state = store.read(spark, statePath)
+    MarkerStateStore.heal(fs, statePath)
+    if (!MarkerStateStore.hasState(fs, statePath)) return
+    // localCheckpoint pins the CURRENT rows once: the bucket collect
+    // and the generation write both read them, and the commit's GC
+    // then deletes the superseded generations they came from
+    val state = MarkerStateStore.read(spark, statePath)
       .repartition(math.max(targetFilesPerBucket, 1) * buckets,
         col("_b"))
       .localCheckpoint()
-    store.swapBuckets(fs, statePath, state,
+    MarkerStateStore.swapBuckets(fs, statePath, state,
       state.select(col("_b")).distinct()
         .collect().map(_.getInt(0)).toSeq)
   }
@@ -126,15 +123,13 @@ object StreamingRetention {
     * `(cohort_day, day_offset, n_active, retention)`.
     */
   def report(spark: org.apache.spark.sql.SparkSession,
-      statePath: String,
-      store: StateStore = RenameStateStore): DataFrame = {
+      statePath: String): DataFrame = {
     val hPath = new Path(statePath)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    store.healForRead(fs, statePath)
     import spark.implicits._
     val act =
-      if (store.hasState(fs, statePath))
-        store.read(spark, statePath).select(col("_u"), col("_day"))
+      if (MarkerStateStore.hasState(fs, statePath))
+        MarkerStateStore.read(spark, statePath).select(col("_u"), col("_day"))
       else Seq.empty[(Long, Long)].toDF("_u", "_day")
     EventOps.retentionFromActivity(act)
   }

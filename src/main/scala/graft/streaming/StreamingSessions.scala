@@ -45,9 +45,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * replayed batch must not double-apply. The per-bucket applied-batch
   * watermark (`_applied` on every state row — [[StreamingAggState]]'s
   * exactly-once discipline) is the guard: a replay skips buckets
-  * whose watermark already covers its batch id; it rides on either
-  * store because both replace buckets atomically at their commit
-  * point (rename, or the marker PUT).
+  * whose watermark already covers its batch id. Bucket granularity is
+  * correct because [[MarkerStateStore]] replaces the touched buckets
+  * atomically at its one commit point, the marker PUT.
   */
 object StreamingSessions {
 
@@ -56,14 +56,13 @@ object StreamingSessions {
       gapMinutes: Int = 30, userCol: String = "user_id",
       tsCol: String = "ts", idCol: String = "event_id",
       valueCol: String = "value", buckets: Int = 64,
-      trigger: Trigger = Trigger.AvailableNow(),
-      store: StateStore = RenameStateStore): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, statePath, gapMinutes, userCol,
-          tsCol, idCol, valueCol, buckets, store)
+          tsCol, idCol, valueCol, buckets)
       }
       .start()
 
@@ -74,8 +73,7 @@ object StreamingSessions {
       batch: DataFrame, batchId: Long, statePath: String,
       gapMinutes: Int = 30, userCol: String = "user_id",
       tsCol: String = "ts", idCol: String = "event_id",
-      valueCol: String = "value", buckets: Int = 64,
-      store: StateStore = RenameStateStore): Unit = {
+      valueCol: String = "value", buckets: Int = 64): Unit = {
     require(gapMinutes > 0, "gapMinutes must be positive")
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = batch.sparkSession
@@ -86,15 +84,15 @@ object StreamingSessions {
         col(idCol).as("_eid"), col(valueCol).cast("double").as("_v"))
     val fs = new Path(statePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    store.heal(fs, statePath)
+    MarkerStateStore.heal(fs, statePath)
     // bounded driver materialization: ≤ `buckets` ints
     val touched = ev
       .select(pmod(hash(col("_u")), lit(buckets)).as("_b"))
       .distinct().collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
     val old: Option[DataFrame] =
-      if (store.hasState(fs, statePath))
-        Some(store.read(spark, statePath, Some(touched.toSeq)))
+      if (MarkerStateStore.hasState(fs, statePath))
+        Some(MarkerStateStore.read(spark, statePath, Some(touched.toSeq)))
       else None
     // replay guard: per-bucket applied-batch watermark (≤ |touched|
     // rows collected)
@@ -223,7 +221,7 @@ object StreamingSessions {
     val state = kept.unionByName(mr)
       .withColumn("_applied", lit(batchId))
       .withColumn("_b", pmod(hash(col("_u")), lit(buckets)))
-    store.swapBuckets(fs, statePath, state, mergeBuckets.toSeq)
+    MarkerStateStore.swapBuckets(fs, statePath, state, mergeBuckets.toSeq)
   }
 
   /** All sessions in the state — the streaming answer to q24's batch
@@ -232,17 +230,15 @@ object StreamingSessions {
     * applied HERE (state sums are unrounded so merges stay exact).
     */
   def report(spark: org.apache.spark.sql.SparkSession,
-      statePath: String, store: StateStore = RenameStateStore)
-      : DataFrame = {
+      statePath: String): DataFrame = {
     val fs = new Path(statePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    store.healForRead(fs, statePath)
     import spark.implicits._
-    if (!store.hasState(fs, statePath))
+    if (!MarkerStateStore.hasState(fs, statePath))
       return Seq.empty[(Long, Long, Long, Long, Long, Double)]
         .toDF("user_id", "session_seq", "session_start", "session_end",
           "n_events", "sum_value")
-    store.read(spark, statePath)
+    MarkerStateStore.read(spark, statePath)
       .select(col("_u").as("user_id"), col("session_seq"),
         col("s_start").as("session_start"),
         col("s_end").as("session_end"), col("n_events"),

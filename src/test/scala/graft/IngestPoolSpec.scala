@@ -745,6 +745,49 @@ class IngestPoolSpec extends SparkSpec {
       names.mkString("; "))
   }
 
+  test("DocPool reads resolve on the driver: latest and gen snapshots " +
+    "equal the plain inferring read after write, upsert and removeIds, " +
+    "and run no footer-inference (`parquet at`) job") {
+    import graft.operators.DocPool
+    import spark.implicits._
+    val root = tmpDir("docdriver") + "/corpus"
+    // the live dirs marker `gen` names, read the way inference reads them
+    def inferred(gen: Long) = {
+      val text = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(root, f"_doc_marker.$gen%019d"))
+      val dirs = text.split("\n").filter(l =>
+        l.contains(":") && !l.startsWith("#")).map { l =>
+        val Array(part, g) = l.split(":")
+        s"$root/gen=$g/$part"
+      }
+      spark.read.option("basePath", root).parquet(dirs.toSeq: _*)
+        .drop("gen", "part")
+    }
+    def check(gen: Long): Unit = {
+      assertSameRows(DocPool.read(spark, root), inferred(gen))
+      (1L to gen).foreach(g =>
+        assertSameRows(DocPool.read(spark, root, g), inferred(g)))
+      val (rows, jobs) = jobsOf(
+        (DocPool.read(spark, root).collect(),
+          DocPool.read(spark, root, 1L).collect()))
+      assert(rows._1.nonEmpty && rows._2.nonEmpty)
+      val names = jobs.flatten
+      assert(names.nonEmpty && !names.exists(_.startsWith("parquet at")),
+        names.mkString("; "))
+    }
+    val docs = (0L until 40L).map(i => (i, s"body $i", i % 3 == 0))
+      .toDF("doc_id", "text", "flag")
+    DocPool.write(docs, root, "doc_id", buckets = 4, retain = 3)
+    check(1L)
+    DocPool.upsert(Seq((3L, "body 3 v2", false), (99L, "fresh", true))
+      .toDF("doc_id", "text", "flag"), root, "doc_id", retain = 3)
+    check(2L)
+    DocPool.removeIds(spark, Seq(5L, 6L).toDF("doc_id"), root,
+      "doc_id", retain = 3)
+    check(3L)
+    assert(DocPool.read(spark, root).count() == 39L)
+  }
+
   test("driver-side schema resolution: Pool.df declares the first " +
     "file's footer schema and reads what inference reads after a fresh " +
     "ingest, a same-schema drop, compactPool, upsertPartitioned and " +

@@ -36,12 +36,10 @@ class MarkerStateStoreSpec extends SparkSpec {
       (5L, t(11), 2L, "click", 0.0, "{}"),
       (6L, t(12), 3L, "click", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    StreamingFunnel.processBatch(b1, statePath, stages,
-      store = MarkerStateStore)
-    StreamingFunnel.processBatch(b2, statePath, stages,
-      store = MarkerStateStore)
+    StreamingFunnel.processBatch(b1, statePath, stages)
+    StreamingFunnel.processBatch(b2, statePath, stages)
     def rep() = StreamingFunnel
-      .report(spark, statePath, stages, store = MarkerStateStore)
+      .report(spark, statePath, stages)
       .collect().map(r => (r.getInt(0), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1).toSeq
     val streaming = rep()
@@ -49,8 +47,7 @@ class MarkerStateStoreSpec extends SparkSpec {
       .collect().map(r => (r.getInt(0), r.getLong(2), r.getDouble(3)))
       .sortBy(_._1).toSeq
     assert(streaming == truth, s"$streaming != $truth")
-    StreamingFunnel.processBatch(b2, statePath, stages,
-      store = MarkerStateStore) // at-least-once replay
+    StreamingFunnel.processBatch(b2, statePath, stages) // at-least-once replay
     assert(rep() == streaming)
     // layout sanity: only write-once gen dirs + one live marker
     val files = Files.list(Paths.get(statePath)).toArray
@@ -70,15 +67,14 @@ class MarkerStateStoreSpec extends SparkSpec {
     all.grouped(60).zipWithIndex.foreach { case (chunk, i) =>
       StreamingAggState.processBatch(chunk.toSeq.toDF("g", "v", "d"),
         i.toLong, statePath, "g", col("v"), col("d"), k = 32,
-        buckets = 8, store = MarkerStateStore)
+        buckets = 8)
     }
     // at-least-once replay of the LAST batch is a no-op
     StreamingAggState.processBatch(
       all.grouped(60).toSeq.last.toDF("g", "v", "d"),
       (all.grouped(60).size - 1).toLong, statePath, "g", col("v"),
-      col("d"), k = 32, buckets = 8, store = MarkerStateStore)
-    val got = canon(StreamingAggState.report(spark, statePath, "g", 32,
-      store = MarkerStateStore))
+      col("d"), k = 32, buckets = 8)
+    val got = canon(StreamingAggState.report(spark, statePath, "g", 32))
     val want = canon(Incremental.stateReport(
       Incremental.aggState(all.toDF("g", "v", "d"), "g", col("v"),
         col("d"), 32), "g", 32))
@@ -99,15 +95,12 @@ class MarkerStateStoreSpec extends SparkSpec {
       (3L, t(0, 5), 1L, "view", 0.0, "{}"),
       (4L, t(0, 7), 1L, "view", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    StreamingRetention.processBatch(b1, statePath,
-      store = MarkerStateStore)
-    StreamingRetention.processBatch(b2, statePath,
-      store = MarkerStateStore)
+    StreamingRetention.processBatch(b1, statePath)
+    StreamingRetention.processBatch(b2, statePath)
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(x => (x._1, x._2)).toSeq
-    val streaming = canon(StreamingRetention.report(spark, statePath,
-      store = MarkerStateStore))
+    val streaming = canon(StreamingRetention.report(spark, statePath))
     val truth = canon(graft.streaming.EventOps
       .retention(b1.unionByName(b2)))
     assert(streaming == truth)
@@ -116,12 +109,10 @@ class MarkerStateStoreSpec extends SparkSpec {
     val before = MarkerStateStore.readMarker(fs, statePath)
     assert(before.buckets.values.exists(_.size > 1),
       s"expected multi-gen buckets before compaction: $before")
-    StreamingRetention.compact(spark, statePath, buckets = 4,
-      store = MarkerStateStore)
+    StreamingRetention.compact(spark, statePath, buckets = 4)
     val after = MarkerStateStore.readMarker(fs, statePath)
     assert(after.buckets.values.forall(_.size == 1), after.toString)
-    assert(canon(StreamingRetention.report(spark, statePath,
-      store = MarkerStateStore)) == truth)
+    assert(canon(StreamingRetention.report(spark, statePath)) == truth)
   }
 
   test("crash BEFORE the marker PUT: an unreferenced generation is " +
@@ -181,7 +172,7 @@ class MarkerStateStoreSpec extends SparkSpec {
       val fs = fsOf(statePath)
       var expected: List[List[Any]] = Nil
       def report() = StreamingAggState
-        .report(spark, statePath, "g", 16, store = MarkerStateStore)
+        .report(spark, statePath, "g", 16)
         .orderBy("g").collect().map(_.toSeq.toList).toList
       (0 until 6).foreach { batchId =>
         val rows = (0 until 1 + rnd.nextInt(5)).map(_ =>
@@ -189,7 +180,7 @@ class MarkerStateStoreSpec extends SparkSpec {
             rnd.nextInt(50).toLong))
         StreamingAggState.processBatch(rows.toDF("g", "v", "d"),
           batchId.toLong, statePath, "g", col("v"), col("d"), k = 16,
-          buckets = 4, store = MarkerStateStore)
+          buckets = 4)
         expected = report() // committed truth after this batch
         // inject a crash artifact the next heal must neutralize
         rnd.nextInt(3) match {
@@ -224,8 +215,7 @@ class MarkerStateStoreSpec extends SparkSpec {
     // batch 0 commits normally (gen=1)
     StreamingAggState.processBatch(
       Seq(("a", 5L, 1L)).toDF("g", "v", "d"), 0L, statePath, "g",
-      col("v"), col("d"), k = 16, buckets = 4,
-      store = MarkerStateStore)
+      col("v"), col("d"), k = 16, buckets = 4)
     // writer mid-commit: gen=2 parquet landed, marker PUT not yet
     Seq(("b", 1L, 7L, 7L, 7L, Seq(1L), 1L))
       .toDF("g", "n_rows", "sum_v", "min_v", "max_v", "kmv", "_applied")
@@ -235,8 +225,7 @@ class MarkerStateStoreSpec extends SparkSpec {
     // in-flight generation alone (this is the advice-item race — the
     // old reader-side heal GC'd gen=2 here, then the writer's marker
     // committed pointing at deleted directories)
-    val rep = StreamingAggState.report(spark, statePath, "g", 16,
-      store = MarkerStateStore).collect()
+    val rep = StreamingAggState.report(spark, statePath, "g", 16).collect()
     assert(rep.map(_.getString(0)).toSeq == Seq("a"))
     assert(fs.exists(new Path(s"$statePath/gen=2")),
       "reader-side heal deleted the writer's in-flight generation")
@@ -299,5 +288,85 @@ class MarkerStateStoreSpec extends SparkSpec {
       .select("g", "sum_v").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a" -> 10L, "b" -> 2L))
+  }
+
+  test("a state root in the rename layout (`_b=` buckets or a " +
+    "`__swap` sibling, no marker) is refused loudly, never read as " +
+    "empty") {
+    import java.sql.Timestamp
+    val ev = Seq((1L, new Timestamp(1000L), 1L, "view", 0.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    val rows = Seq((0, 1L, 1L)).toDF("stage_idx", "_u", "_t")
+      .withColumn("_b", lit(0))
+    def refused(statePath: String): Unit = {
+      val fs = fsOf(statePath)
+      Seq[() => Any](
+        () => StreamingFunnel.processBatch(ev, statePath, Seq("view")),
+        () => StreamingFunnel.report(spark, statePath, Seq("view")),
+        () => MarkerStateStore.heal(fs, statePath),
+        () => MarkerStateStore.hasState(fs, statePath)).foreach { call =>
+        val e = intercept[IllegalStateException](call())
+        assert(e.getMessage.contains(statePath) &&
+          e.getMessage.contains("fresh state path"), e.getMessage)
+      }
+    }
+    // the rename store's live layout: `_b=K` directly under the root
+    val live = s"${tmpDir("mlegacy1")}/state"
+    rows.write.partitionBy("_b").parquet(live)
+    refused(live)
+    assert(fsOf(live).exists(new Path(s"$live/_b=0")), "state touched")
+    // a crash mid-swap of the first batch: only the `__swap` sibling
+    val swapOnly = s"${tmpDir("mlegacy2")}/state"
+    rows.write.partitionBy("_b").parquet(swapOnly + "__swap")
+    refused(swapOnly)
+  }
+
+  test("marker bytes: LiveMarker, MarkerPool and MarkerStateStore " +
+    "write the exact text their readers parse") {
+    import graft.operators.{LiveMarker, LiveState, PoolCommit}
+    def text(path: String) = new String(
+      Files.readAllBytes(Paths.get(path)), "UTF-8")
+    // LiveMarker: one `field:dir` line per family, then the batches,
+    // the applied stream id and the retention window
+    val idx = tmpDir("mbytes-live")
+    val fs = fsOf(idx)
+    val lm = new LiveMarker(Seq(("postings", "postings", "postings_gen="),
+      ("stats", "stats", "stats_gen=")), Seq("tombstones"))
+    lm.put(fs, idx, LiveState(1L,
+      Map("postings" -> "postings", "stats" -> "stats"), Seq.empty))
+    lm.put(fs, idx, LiveState(2L,
+      Map("postings" -> "postings_gen=2", "stats" -> "stats"),
+      Seq(2L, 5L), Seq(3L), 7L, 2), retain = 1)
+    assert(text(s"$idx/_live.0000000000000000001") ==
+      "postings:postings\nstats:stats\ntomb:\nappd:\nsid:-1\n" +
+        "ret:1\nend\n")
+    assert(text(s"$idx/_live.0000000000000000002") ==
+      "postings:postings_gen=2\nstats:stats\ntomb:2,5\nappd:3\n" +
+        "sid:7\nret:2\nend\n")
+    assert(lm.read(fs, idx) == LiveState(2L,
+      Map("postings" -> "postings_gen=2", "stats" -> "stats"),
+      Seq(2L, 5L), Seq(3L), 7L, 2))
+    // MarkerPool (the tracking pool): `#` meta lines, then one
+    // `<partition>:<gen>` line per live partition
+    val pool = s"${tmpDir("mbytes-pool")}/pool"
+    def game(id: Long) = Seq((id, 1, 1, 1.0f)).toDF("gameId", "playId",
+      "frameId", "x")
+    PoolCommit.write(game(2023090700L).unionByName(game(2023090701L)),
+      pool, retain = 2)
+    PoolCommit.write(game(2023090701L), pool)
+    assert(text(s"$pool/_pool_marker.0000000000000000002") ==
+      "#ret:2\n#sid:-1\n" +
+        "season=2023/gameId=2023090700:1\n" +
+        "season=2023/gameId=2023090701:2\nend\n")
+    // MarkerStateStore: one `bucket:gen,gen` line per live bucket
+    val state = s"${tmpDir("mbytes-state")}/state"
+    def row(g: String, b: Int) = Seq((g, 1L)).toDF("g", "n_rows")
+      .withColumn("_b", lit(b))
+    MarkerStateStore.swapBuckets(fs, state,
+      row("a", 0).unionByName(row("b", 1)), Seq(0, 1))
+    MarkerStateStore.appendBuckets(fs, state, row("c", 1), Seq.empty)
+    MarkerStateStore.swapBuckets(fs, state, row("d", 0), Seq(0))
+    assert(text(s"$state/_marker.0000000000000000003") ==
+      "0:3\n1:1,2\nend\n")
   }
 }

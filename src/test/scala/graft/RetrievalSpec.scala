@@ -243,9 +243,12 @@ class RetrievalSpec extends SparkSpec {
     Bm25.writeBm25Index(corpus, "text", "doc_id", bmDir, buckets = 8)
     SimSearch.writeAnnIndex(emb, annDir, "vec_id", "embedding",
       planes = 4, dim = 8)
-    val queries = Seq((1L, "spark"), (2L, "pasta"))
+    // query vectors 6 and 10 share their sign buckets (at planes = 4)
+    // with vectors 4 and 5, which the BM25 queries of the same qids
+    // also hit: both legs are non-empty and overlap
+    val queries = Seq((6L, "spark"), (10L, "pasta"))
       .toDF("query_id", "term")
-    def legs(bm: org.apache.spark.sql.DataFrame,
+    def fuse(bm: org.apache.spark.sql.DataFrame,
         cos: org.apache.spark.sql.DataFrame) =
       SimSearch.rrfFuse(Seq(
         bm.select(col("query_id").as("qid"), col("doc_id").as("id"),
@@ -253,16 +256,27 @@ class RetrievalSpec extends SparkSpec {
         cos.select(col("qid"), col("neighbor").as("id"),
           (col("rank") + 1).as("rank"))), k = 10)
         .collect().toSet
-    val qEmb = emb.filter(col("vec_id").isin(1L, 2L))
-    val persisted = legs(
-      Bm25.topKFromIndex(spark, bmDir, queries, "query_id", "doc_id"),
-      SimSearch.annTopKFromIndex(SimSearch.readAnnIndex(spark, annDir),
-        qEmb, "vec_id", "embedding", k = 10, planes = 4, dim = 8))
-    val inMemory = legs(
+    val qEmb = emb.filter(col("vec_id").isin(6L, 10L))
+    val bmLeg =
+      Bm25.topKFromIndex(spark, bmDir, queries, "query_id", "doc_id")
+    val annLeg = SimSearch.annTopKFromIndex(
+      SimSearch.readAnnIndex(spark, annDir), qEmb, "vec_id", "embedding",
+      k = 10, planes = 4, dim = 8)
+    def pairs(df: org.apache.spark.sql.DataFrame, q: String, id: String) =
+      df.select(q, id).collect().map(r => (r.getLong(0), r.getLong(1)))
+        .toSet
+    val bmPairs = pairs(bmLeg, "query_id", "doc_id")
+    val annPairs = pairs(annLeg, "qid", "neighbor")
+    assert(bmPairs.nonEmpty && annPairs.nonEmpty, (bmPairs, annPairs))
+    assert(bmPairs.intersect(annPairs).nonEmpty, (bmPairs, annPairs))
+    val persisted = fuse(bmLeg, annLeg)
+    val inMemory = fuse(
       Bm25.search(corpus, "text", "doc_id", queries, "query_id"),
       SimSearch.annTopK(emb, "vec_id", "embedding",
-        col("vec_id").isin(1L, 2L), k = 10, planes = 4, dim = 8))
-    assert(persisted == inMemory && persisted.nonEmpty)
+        col("vec_id").isin(6L, 10L), k = 10, planes = 4, dim = 8))
+    assert(persisted == inMemory)
+    assert(persisted.map(r => (r.getLong(0), r.getLong(1)))
+      .intersect(bmPairs.intersect(annPairs)).nonEmpty)
   }
 
   /** BM25 + ANN indexes with one append and one delete batch pending:

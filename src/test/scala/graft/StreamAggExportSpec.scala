@@ -761,18 +761,28 @@ class StreamAggExportSpec extends SparkSpec {
       Seq("view"))
     graft.streaming.StreamingFunnel.processBatch(b, statePath,
       Seq("view")) // replay — null rows must not accumulate either
-    assert(spark.read.parquet(statePath).count() == 1) // u1 only
+    assert(graft.streaming.MarkerStateStore.read(spark, statePath)
+      .count() == 1) // u1 only
     def users() = graft.streaming.StreamingFunnel
       .report(spark, statePath, Seq("view"))
       .collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
     assert(users() == Map(0 -> 1L))
-    // crash between delete and rename leaves only the committed temp:
-    // the next report/batch must finish the swap
-    val live = new java.io.File(statePath)
-    val tmp = new java.io.File(statePath + "__swap")
-    assert(live.renameTo(tmp))
-    assert(users() == Map(0 -> 1L)) // healed
-    assert(live.exists && !tmp.exists)
+    // crash between the generation write and its marker PUT: an
+    // orphan `gen=` dir the ruling marker does not name
+    val fs = new org.apache.hadoop.fs.Path(statePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val next = graft.streaming.MarkerStateStore
+      .readMarker(fs, statePath).gen + 1
+    val orphan = new java.io.File(s"$statePath/gen=$next")
+    Seq((0, 7L, 1L)).toDF("stage_idx", "_u", "_t")
+      .withColumn("_b", lit(0))
+      .write.partitionBy("_b").parquet(orphan.getPath)
+    assert(users() == Map(0 -> 1L)) // the report ignores it ...
+    assert(orphan.exists) // ... and deletes nothing
+    graft.streaming.StreamingFunnel.processBatch(b.limit(0), statePath,
+      Seq("view"))
+    assert(!orphan.exists) // the next batch's heal deletes it
+    assert(users() == Map(0 -> 1L))
   }
 
   test("StreamingFunnel.start drives the same state through " +
@@ -835,7 +845,8 @@ class StreamAggExportSpec extends SparkSpec {
     assert(canon(graft.streaming.StreamingRetention
       .report(spark, statePath)) == streaming)
     // state holds the distinct activity grain only (3 user-days)
-    assert(spark.read.parquet(statePath).count() == 3)
+    assert(graft.streaming.MarkerStateStore.read(spark, statePath)
+      .count() == 3)
   }
 
   test("StreamingFunnel gap flavor is greedy-min BY DESIGN: the " +
@@ -877,7 +888,9 @@ class StreamAggExportSpec extends SparkSpec {
     graft.streaming.StreamingFunnel.processBatch(b1, statePath, stages,
       buckets = buckets)
     val root = new java.io.File(statePath)
+    // every live bucket file: gen=*/_b=*/part-*.parquet
     def snapshot() = root.listFiles
+      .filter(_.getName.startsWith("gen=")).flatMap(_.listFiles)
       .filter(_.getName.startsWith("_b=")).flatMap { d =>
         d.listFiles.filter(_.getName.endsWith(".parquet")).map(f =>
           f.getPath -> ((f.length, f.lastModified,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Incremental
-import graft.streaming.StreamingAggState
+import graft.streaming.{MarkerStateStore, StreamingAggState}
 
 /** The streaming materialized-aggregate twin (q244): incremental
   * parity with the batch flavor, exactly-once replay via the
@@ -105,7 +105,15 @@ class StreamingAggStateSpec extends SparkSpec {
     val alphaBucket = spark.createDataset(Seq("alpha")).toDF("g")
       .select(pmod(hash(col("g")), lit(64)).as("b")).head().getInt(0)
     assert(betaBucket != alphaBucket) // fixture sanity
-    def betaFiles() = Files.list(Paths.get(s"$state/_b=$betaBucket"))
+    // the untouched bucket's live generation directory
+    def betaDir() = {
+      val fs = new org.apache.hadoop.fs.Path(state)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val gen = MarkerStateStore.readMarker(fs, state)
+        .buckets(betaBucket).head
+      Paths.get(s"$state/gen=$gen/_b=$betaBucket")
+    }
+    def betaFiles() = Files.list(betaDir())
       .toArray.map(_.toString).sorted.map { p =>
         p -> Files.getLastModifiedTime(Paths.get(p)).toMillis
       }.toList

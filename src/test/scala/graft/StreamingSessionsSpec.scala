@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{MarkerStateStore, StreamingSessions}
+import graft.streaming.StreamingSessions
 
 /** The streaming sessionization twin's merge semantics, hand-checked
   * on the object-store-safe marker store: open-session extension
@@ -23,7 +23,7 @@ class StreamingSessionsSpec extends SparkSpec {
     val root = tmpDir("ssess")
     def batch(id: Long, rows: Seq[(Long, Long, Long, Double)]): Unit =
       StreamingSessions.processBatch(ev(rows), id, root,
-        gapMinutes = 30, buckets = 4, store = MarkerStateStore)
+        gapMinutes = 30, buckets = 4)
     // batch 0: u1 one session (two events), u2 one event
     batch(0L, Seq((1L, 1L, 0L, 1.0), (2L, 1L, 100L, 2.0),
       (3L, 2L, 50L, 5.0)))
@@ -34,8 +34,7 @@ class StreamingSessionsSpec extends SparkSpec {
     batch(1L, Seq((4L, 1L, 1000L, 3.0), (5L, 2L, 5000L, 7.0)))
     // batch 2: u1 at t=10000 — new session ordinal 1
     batch(2L, Seq((6L, 1L, 10000L, 4.0)))
-    val got = StreamingSessions.report(spark, root,
-      store = MarkerStateStore)
+    val got = StreamingSessions.report(spark, root)
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))
       .toMap
@@ -53,8 +52,7 @@ class StreamingSessionsSpec extends SparkSpec {
       gapMinutes = 30)
       .select(col("user_id"), col("session_seq"), col("session_start"),
         col("session_end"), col("n_events"), col("sum_value"))
-    val twin = StreamingSessions.report(spark, root,
-      store = MarkerStateStore)
+    val twin = StreamingSessions.report(spark, root)
       .select(col("user_id"), col("session_seq"), col("session_start"),
         col("session_end"), col("n_events"), col("sum_value"))
     assert(twin.exceptAll(batchFlavor).isEmpty &&
@@ -69,11 +67,10 @@ class StreamingSessionsSpec extends SparkSpec {
     // user far ahead in batch ids, then the other must still accept
     // an older-id batch (per-BUCKET watermark, not global)
     StreamingSessions.processBatch(ev(Seq((1L, 0L, 0L, 1.0))), 5L,
-      root, gapMinutes = 30, buckets = 4, store = MarkerStateStore)
+      root, gapMinutes = 30, buckets = 4)
     StreamingSessions.processBatch(ev(Seq((2L, 1L, 0L, 2.0))), 3L,
-      root, gapMinutes = 30, buckets = 4, store = MarkerStateStore)
-    val got = StreamingSessions.report(spark, root,
-      store = MarkerStateStore).collect()
+      root, gapMinutes = 30, buckets = 4)
+    val got = StreamingSessions.report(spark, root).collect()
     // both users landed iff their buckets differ (hash-dependent but
     // deterministic); assert on what the hash actually gives
     val b0 = ev(Seq((1L, 0L, 0L, 1.0)))
