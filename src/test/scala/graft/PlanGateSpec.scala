@@ -18,6 +18,78 @@ class PlanGateSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  /** Queries that run real work (lifecycle commits, index builds,
+    * model fits) while their DataFrame is built. The global-window and
+    * global-sort rules skip them.
+    */
+  private val eager = Set("q26_ingest_roundtrip", "q105_bpe_learn",
+    "q125_streaming_funnel_replay", "q129_streaming_retention_replay",
+    "q244_streaming_agg_replay", "q248_preflight_artifact",
+    "q249_streaming_latency_replay", "q265_pq_index_delete",
+    "q272_streaming_sessions_replay", "q290_bm25_index",
+    "q291_bm25_index_delete", "q293_signed_index_lifecycle",
+    "q296_logistic_fit", "q297_logistic_filter",
+    "q300_persisted_hybrid", "q307_ann_index_lifecycle",
+    "q309_mondrian", "q318_ipw", "q321_bm25_time_travel",
+    "q323_layout_skipping", "q324_bloom_skipping",
+    "q325_unigram_learn", "q327_aipw", "q328_takedown",
+    "q329_index_drift", "q330_unigram_em2",
+    "q331_corpus_takedown", "q332_drift_repair",
+    "q333_docpool_upsert")
+
+  // The queries no all-query rule builds.
+  // q26 performs its ingest roundtrip at DataFrame-construction time —
+  // a real write job, not a plan build — and q105's BPE trainer runs
+  // its per-round argmax collect()s eagerly while the DataFrame is
+  // BUILT (the returned frame is driver-local metadata), so for both
+  // the final plan is just a LocalRelation and auditing it would
+  // execute the whole query while gating nothing; their distributed
+  // stages are pinned by their oracle rows + their own specs instead
+  // q125 joins the eager set: its state-machine replay writes real
+  // parquet state per micro-batch at construction time and returns a
+  // localCheckpoint'ed report — the distributed stages are pinned by
+  // the streaming twins' own specs + its oracle row
+  // q248/q249 join it for the same reason: artifact/state writes at
+  // construction time, localCheckpoint'ed reports
+  private val eagerExempt = Set("q26_ingest_roundtrip", "q105_bpe_learn",
+    "q125_streaming_funnel_replay", "q129_streaming_retention_replay",
+    "q244_streaming_agg_replay", "q248_preflight_artifact",
+    "q249_streaming_latency_replay")
+
+  /** A swept query: its formatted plan and, outside [[eager]], the
+    * public lint's findings (PlanChecks, the same audit users wire into
+    * their own pipelines).
+    */
+  private final case class Built(name: String, plan: String,
+      findings: Seq[PlanChecks.Finding])
+
+  /** Every gate query outside [[eagerExempt]], built once and shared by
+    * the three all-query rules, or the exception its build threw.
+    * Failures are named per query rather than aborting the sweep (a
+    * testdata dtype drift once hid behind the first throw).
+    */
+  private lazy val sweep: Map[String, Either[Throwable, Built]] =
+    SparkEntry.queries.keys.filterNot(eagerExempt.contains).map { name =>
+      name -> (try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        Right(Built(name,
+          df.queryExecution.explainString(ExplainMode.fromString("formatted")),
+          if (eager.contains(name)) Nil
+          else PlanChecks.audit(df, bnljAllowed = true)))
+      } catch { case e: Throwable => Left(e) })
+    }.toMap
+
+  /** The offenders among `names`: each query whose build failed, and
+    * each that `rule` flags.
+    */
+  private def offendersOf(names: Iterable[String])(
+      rule: Built => Option[String]): Iterable[String] =
+    names.flatMap(name => sweep(name) match {
+      case Left(e) =>
+        Some(s"$name: BUILD FAILED (${s"$e".take(160)})")
+      case Right(built) => rule(built).map(m => s"$name: $m")
+    })
+
   test("q01/q04: filters reach the parquet scan; q01 prunes columns") {
     val p1 = planOf("q01_groupby_agg")
     assert(p1.contains("PushedFilters: [IsNotNull(l_shipdate)"),
@@ -201,32 +273,11 @@ class PlanGateSpec extends SparkSpec {
       "q302_hazard_ratio", // q278's bounded distinct-lifetime windows
       "q313_ks", // distinct-cent cumulative CDF window (q36)
       "q314_msprt") // bounded distinct-day cumulative/min windows
-    val eager = Set("q26_ingest_roundtrip", "q105_bpe_learn",
-      "q125_streaming_funnel_replay", "q129_streaming_retention_replay",
-      "q244_streaming_agg_replay", "q248_preflight_artifact",
-      "q249_streaming_latency_replay", "q265_pq_index_delete",
-      "q272_streaming_sessions_replay", "q290_bm25_index",
-      "q291_bm25_index_delete", "q293_signed_index_lifecycle",
-      "q296_logistic_fit", "q297_logistic_filter",
-      "q300_persisted_hybrid", "q307_ann_index_lifecycle",
-      "q309_mondrian", "q318_ipw", "q321_bm25_time_travel",
-      "q323_layout_skipping", "q324_bloom_skipping",
-      "q325_unigram_learn", "q327_aipw", "q328_takedown",
-      "q329_index_drift", "q330_unigram_em2",
-      "q331_corpus_takedown", "q332_drift_repair",
-      "q333_docpool_upsert")
-    val offenders = SparkEntry.queries.keys
+    val offenders = offendersOf(SparkEntry.queries.keys
       .filterNot(eager.contains)
-      .filterNot(globalWindowWhitelist.contains)
-      .flatMap { name =>
-        // dogfood the public lint (PlanChecks) — the same audit users
-        // wire into their own pipelines
-        val bad = PlanChecks
-          .audit(SparkEntry.queries(name)(spark, sfDir),
-            bnljAllowed = true)
-          .filter(_.rule == "global-window")
-        if (bad.nonEmpty) Some(s"$name: ${bad.size} global window(s)")
-        else None
+      .filterNot(globalWindowWhitelist.contains)) { built =>
+        val bad = built.findings.filter(_.rule == "global-window")
+        if (bad.nonEmpty) Some(s"${bad.size} global window(s)") else None
       }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
@@ -242,30 +293,11 @@ class PlanGateSpec extends SparkSpec {
     // (currently empty — any future entry needs a bounded-input
     // justification like the global-window list above)
     val globalSortWhitelist = Set.empty[String]
-    val eager = Set("q26_ingest_roundtrip", "q105_bpe_learn",
-      "q125_streaming_funnel_replay", "q129_streaming_retention_replay",
-      "q244_streaming_agg_replay", "q248_preflight_artifact",
-      "q249_streaming_latency_replay", "q265_pq_index_delete",
-      "q272_streaming_sessions_replay", "q290_bm25_index",
-      "q291_bm25_index_delete", "q293_signed_index_lifecycle",
-      "q296_logistic_fit", "q297_logistic_filter",
-      "q300_persisted_hybrid", "q307_ann_index_lifecycle",
-      "q309_mondrian", "q318_ipw", "q321_bm25_time_travel",
-      "q323_layout_skipping", "q324_bloom_skipping",
-      "q325_unigram_learn", "q327_aipw", "q328_takedown",
-      "q329_index_drift", "q330_unigram_em2",
-      "q331_corpus_takedown", "q332_drift_repair",
-      "q333_docpool_upsert")
-    val offenders = SparkEntry.queries.keys
+    val offenders = offendersOf(SparkEntry.queries.keys
       .filterNot(eager.contains)
-      .filterNot(globalSortWhitelist.contains)
-      .flatMap { name =>
-        val bad = PlanChecks
-          .audit(SparkEntry.queries(name)(spark, sfDir),
-            bnljAllowed = true)
-          .filter(_.rule == "global-sort")
-        if (bad.nonEmpty) Some(s"$name: ${bad.size} global sort(s)")
-        else None
+      .filterNot(globalSortWhitelist.contains)) { built =>
+        val bad = built.findings.filter(_.rule == "global-sort")
+        if (bad.nonEmpty) Some(s"${bad.size} global sort(s)") else None
       }
     assert(offenders.isEmpty, offenders.mkString("; "))
   }
@@ -429,36 +461,13 @@ class PlanGateSpec extends SparkSpec {
                                // broadcast 1-row intercept)
       "q319_holm")             // hypothesis table × broadcast 1-row
                                // m / k-fail scalars (q301's shape)
-    // q26 performs its ingest roundtrip at DataFrame-construction time —
-    // a real write job, not a plan build — and q105's BPE trainer runs
-    // its per-round argmax collect()s eagerly while the DataFrame is
-    // BUILT (the returned frame is driver-local metadata), so for both
-    // the final plan is just a LocalRelation and auditing it would
-    // execute the whole query while gating nothing; their distributed
-    // stages are pinned by their oracle rows + their own specs instead
-    // q125 joins the eager set: its state-machine replay writes real
-    // parquet state per micro-batch at construction time and returns a
-    // localCheckpoint'ed report — the distributed stages are pinned by
-    // the streaming twins' own specs + its oracle row
-    // q248/q249 join it for the same reason: artifact/state writes at
-    // construction time, localCheckpoint'ed reports
-    val eagerExempt = Set("q26_ingest_roundtrip", "q105_bpe_learn",
-      "q125_streaming_funnel_replay", "q129_streaming_retention_replay",
-      "q244_streaming_agg_replay", "q248_preflight_artifact",
-      "q249_streaming_latency_replay")
     val names = SparkEntry.queries.keys.filterNot(eagerExempt.contains)
-    val offenders = names.flatMap { name =>
-      // analysis failures are named per query rather than aborting the
-      // loop (a testdata dtype drift once hid behind the first throw)
-      val plan =
-        try planOf(name)
-        catch { case e: Throwable =>
-          s"CartesianProduct (ANALYSIS FAILED: ${e.getMessage.take(160)})" }
-      val cart = plan.contains("CartesianProduct")
-      val bnlj = plan.contains("BroadcastNestedLoopJoin") &&
-        !bnljWhitelist.contains(name)
-      if (cart) Some(s"$name: CartesianProduct")
-      else if (bnlj) Some(s"$name: non-whitelisted BroadcastNestedLoopJoin")
+    val offenders = offendersOf(names) { built =>
+      val cart = built.plan.contains("CartesianProduct")
+      val bnlj = built.plan.contains("BroadcastNestedLoopJoin") &&
+        !bnljWhitelist.contains(built.name)
+      if (cart) Some("CartesianProduct")
+      else if (bnlj) Some("non-whitelisted BroadcastNestedLoopJoin")
       else None
     }
     assert(offenders.isEmpty, offenders.mkString("; "))

@@ -21,38 +21,11 @@ trait SparkSpec extends AnyFunSuite {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Runs `body` under a fresh job group; returns its value and the
-    * stage names of each job it started. A sentinel job flushes the
-    * listener bus, which delivers job starts in order.
+  /** Runs `body` and returns its value and the stage names of each job
+    * it started, in start order (see [[JobCapture]]).
     */
   def jobsOf[T](body: => T): (T, Seq[Seq[String]]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[
-      SparkListenerJobStart]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.add(e)
-    }
-    def group(e: SparkListenerJobStart): String =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
-        .orNull
-    val g = s"jobs-${System.nanoTime}"
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(g, "under test")
-      val out = body
-      sc.setJobGroup(s"$g-end", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime + 30000000000L
-      while (!starts.asScala.exists(e => group(e) == s"$g-end") &&
-          System.nanoTime < deadline) Thread.sleep(20)
-      (out, starts.asScala.filter(e => group(e) == g)
-        .map(_.stageInfos.map(_.name)).toSeq)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (out, jobs) = JobCapture(spark.sparkContext)(body)
+    (out, jobs.map(_.stages))
   }
 }
