@@ -1,12 +1,16 @@
-#!/usr/bin/env python3
 """Local stand-in for the driver's t2 gate: run graft.Verify output against
 DuckDB oracles and compare (sort columns by name, sort rows, compare values).
 
 Usage: python3 scripts/check_correctness.py <sfDir> <verifyOutDir>
-"""
-import sys, json, glob, math
-import duckdb
+       python3 scripts/check_correctness.py <verifyOutDir> --against <otherVerifyOutDir>
 
+The --against mode compares each query's output with the same query in a
+second graft.Verify dump (e.g. one taken at a parent commit) with the same
+canonical sort, dtype check and cell comparison; a query present in only one
+dump fails.
+"""
+import os, sys, json, glob, math
+import duckdb
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -32,60 +36,79 @@ def cmp_cell(a, b):
     return str(a) == str(b)
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
+def compare(name, g, e, other="oracle"):
+    """One verdict line for Spark output `g` against expected `e`."""
+    g, e = canon(g), canon(e)
+    if list(g.columns) != list(e.columns):
+        return False, f"FAIL {name}: columns {list(g.columns)} != {list(e.columns)}"
+    dt_bad = [(c, str(g[c].dtype), str(e[c].dtype))
+              for c in g.columns if str(g[c].dtype) != str(e[c].dtype)]
+    if dt_bad:
+        return False, f"FAIL {name}: dtypes differ {dt_bad}"
+    if len(g) != len(e):
+        return False, f"FAIL {name}: rows {len(g)} != {len(e)}"
+    for c in g.columns:
+        for i, (a, b) in enumerate(zip(g[c].tolist(), e[c].tolist())):
+            if not cmp_cell(a, b):
+                return False, f"FAIL {name}: col {c} row {i}: spark={a!r} {other}={b!r}"
+    return True, f"PASS {name} ({len(g)} rows, {len(g.columns)} cols)"
+
+
+def read_out(con, out_dir, name):
+    """A query's Verify output as a DataFrame, or None when it wrote none."""
+    if not glob.glob(f"{out_dir}/{name}/*.parquet"):
+        return None
+    return con.sql(
+        f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
+
+
+def queries_in(out_dir):
+    return {d for d in os.listdir(out_dir)
+            if os.path.isdir(os.path.join(out_dir, d))}
+
+
+def verdicts_against(con, out_dir, other_dir):
+    for name in sorted(queries_in(out_dir) | queries_in(other_dir)):
+        got, exp = read_out(con, out_dir, name), read_out(con, other_dir, name)
+        if got is None or exp is None:
+            side = out_dir if got is None else other_dir
+            yield False, f"FAIL {name}: no output in {side}"
+        else:
+            yield compare(name, got, exp, other="other")
+
+
+def verdicts_oracle(con, sf_dir, out_dir):
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
     for name, sql in sorted(oracles.items()):
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            print(f"FAIL {name}: no spark output")
-            n_fail += 1
+        got = read_out(con, out_dir, name)
+        if got is None:
+            yield False, f"FAIL {name}: no spark output"
             continue
-        got = con.sql(
-            f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')").df()
         try:
             exp = con.sql(sql).df()
         except Exception as e:
-            print(f"FAIL {name}: oracle error {e}")
-            n_fail += 1
+            yield False, f"FAIL {name}: oracle error {e}"
             continue
-        g, e = canon(got), canon(exp)
-        if list(g.columns) != list(e.columns):
-            print(f"FAIL {name}: columns {list(g.columns)} != {list(e.columns)}")
-            n_fail += 1
-            continue
-        dt_bad = [(c, str(g[c].dtype), str(e[c].dtype))
-                  for c in g.columns if str(g[c].dtype) != str(e[c].dtype)]
-        if dt_bad:
-            print(f"FAIL {name}: dtypes differ {dt_bad}")
-            n_fail += 1
-            continue
-        if len(g) != len(e):
-            print(f"FAIL {name}: rows {len(g)} != {len(e)}")
-            n_fail += 1
-            continue
-        bad = None
-        for c in g.columns:
-            gv, ev = g[c].tolist(), e[c].tolist()
-            for i, (a, b) in enumerate(zip(gv, ev)):
-                ok = cmp_cell(a, b)
-                if not ok:
-                    bad = (c, i, a, b)
-                    break
-            if bad:
-                break
-        if bad:
-            c, i, a, b = bad
-            print(f"FAIL {name}: col {c} row {i}: spark={a!r} oracle={b!r}")
-            n_fail += 1
-        else:
-            print(f"PASS {name} ({len(g)} rows, {len(g.columns)} cols)")
-            n_pass += 1
+        yield compare(name, got, exp)
+
+
+def main():
+    args = sys.argv[1:]
+    con = duckdb.connect()
+    if len(args) == 3 and args[1] == "--against":
+        verdicts = verdicts_against(con, args[0], args[2])
+    elif len(args) == 2:
+        verdicts = verdicts_oracle(con, args[0], args[1])
+    else:
+        sys.exit(__doc__)
+    n_pass = n_fail = 0
+    for ok, line in verdicts:
+        print(line)
+        n_pass += ok
+        n_fail += not ok
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 

@@ -1690,7 +1690,7 @@ object SparkEntry {
     */
   def q121_ivfpq_refined(s: SparkSession, dir: String): DataFrame = {
     // in-query index build (the gate artifact; production persists via
-    // pqFitSave) — every model stage feeds 2+ downstream consumers, so
+    // writePqIndex) — every model stage feeds 2+ downstream consumers, so
     // each caches lazily: emb would otherwise re-scan per stage and the
     // Lloyd-derived codebooks/centroids would re-run their whole
     // iteration chain per consumer
@@ -1704,9 +1704,11 @@ object SparkEntry {
       .persist()
     val centroids = SimSearch.ivfCentroids(emb, "vec_id", "embedding",
       "cell", dim = 64, bucketWidth = 128L).persist()
-    SimSearch.ivfPqTopKRefined(codes, cb, centroids,
-      emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
-      "vec_id", m = 2, k = 5, candidates = 40, nprobe = 2, dim = 64)
+    val queries = emb.filter(col("vec_id") < 20)
+    SimSearch.rerankExact(SimSearch.ivfPqTopK(codes, cb, centroids,
+      queries, "vec_id", "embedding", "vec_id", m = 2, k = 40,
+      nprobe = 2, dim = 64), queries, emb, "vec_id", "embedding",
+      "vec_id", k = 5)
   }
 
   /** Embedding-space drift monitor between crawl snapshots: the
@@ -1746,16 +1748,18 @@ object SparkEntry {
       .persist()
     val cen = SimSearch.ivfCentroids(emb, "vec_id", "embedding", "cell",
       dim = 64, bucketWidth = 128L).persist()
-    val cb = SimSearch.pqFitResidual(emb, cen, "vec_id", "embedding",
-      "cell", m = 2, k = 4, iters = 2, dim = 64, bucketWidth = 128L)
-      .persist()
-    val codes = SimSearch.pqEncodeResidual(emb, cen, cb, "vec_id",
-      "embedding", "cell", m = 2, dim = 64)
+    val frame = SimSearch.PqFrame.Residual(cen)
+    val cb = SimSearch.pqFit(emb, "vec_id", "embedding", m = 2, k = 4,
+      iters = 2, dim = 64, bucketWidth = 128L, frame = frame).persist()
+    val codes = SimSearch.pqEncode(emb, cb, "vec_id", "embedding",
+      m = 2, dim = 64, frame = frame)
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
       .persist()
-    SimSearch.ivfPqTopKRefinedResidual(codes, cb, cen,
-      emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
-      "vec_id", m = 2, k = 5, candidates = 40, nprobe = 2, dim = 64)
+    val queries = emb.filter(col("vec_id") < 20)
+    SimSearch.rerankExact(SimSearch.ivfPqTopK(codes, cb, cen, queries,
+      "vec_id", "embedding", "vec_id", m = 2, k = 40, nprobe = 2,
+      dim = 64, frame = frame), queries, emb, "vec_id", "embedding",
+      "vec_id", k = 5)
   }
 
   /** Funnel time-to-convert percentiles: p50/p90 of the
@@ -4229,16 +4233,18 @@ object SparkEntry {
       dim = 64, bucketWidth = 128L).persist()
     val perm = SimSearch.opqPermutation(emb, cen, "vec_id", "embedding",
       "cell", m = 2, dim = 64).persist()
-    val cb = SimSearch.pqFitResidualRotated(emb, cen, perm, "vec_id",
-      "embedding", "cell", m = 2, k = 4, iters = 2, dim = 64,
-      bucketWidth = 128L).persist()
-    val codes = SimSearch.pqEncodeResidualRotated(emb, cen, perm, cb,
-      "vec_id", "embedding", "cell", m = 2, dim = 64)
+    val frame = SimSearch.PqFrame.Permuted(cen, perm)
+    val cb = SimSearch.pqFit(emb, "vec_id", "embedding", m = 2, k = 4,
+      iters = 2, dim = 64, bucketWidth = 128L, frame = frame).persist()
+    val codes = SimSearch.pqEncode(emb, cb, "vec_id", "embedding",
+      m = 2, dim = 64, frame = frame)
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
       .persist()
-    SimSearch.ivfPqTopKRefinedResidualRotated(codes, cb, cen, perm,
-      emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
-      "vec_id", m = 2, k = 5, candidates = 40, nprobe = 2, dim = 64)
+    val queries = emb.filter(col("vec_id") < 20)
+    SimSearch.rerankExact(SimSearch.ivfPqTopK(codes, cb, cen, queries,
+      "vec_id", "embedding", "vec_id", m = 2, k = 40, nprobe = 2,
+      dim = 64, frame = frame), queries, emb, "vec_id", "embedding",
+      "vec_id", k = 5)
   }
 
   /** Asymmetric shingle containment over the LSH candidate pairs
@@ -4548,11 +4554,14 @@ object SparkEntry {
         m = 2, k = 4, iters = 2, dim = 64, bucketWidth = 128L)
       SimSearch.deleteFromPqIndex(
         emb.filter(col("vec_id") % 9 === 0).select(col("vec_id")), p)
+      val queries = emb.filter(col("vec_id") < 20)
       def serve(): DataFrame = {
-        val (cb, codes, cen) = SimSearch.readPqIndex(s, p)
-        SimSearch.ivfPqTopKRefined(codes, cb, cen,
-          emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
-          "vec_id", m = 2, k = 5, candidates = 40, nprobe = 2, dim = 64)
+        val idx = SimSearch.readPqIndex(s, p)
+        SimSearch.rerankExact(SimSearch.ivfPqTopK(idx.codes,
+          idx.codebooks, idx.centroids, queries, "vec_id", "embedding",
+          "vec_id", m = 2, k = 40, nprobe = 2, dim = 64,
+          frame = idx.frame), queries, emb, "vec_id", "embedding",
+          "vec_id", k = 5)
       }
       val tombstoned = serve().localCheckpoint()
       SimSearch.compactPqIndex(s, p)

@@ -141,7 +141,7 @@ object Main {
         val docs = loadCorpus(spark, corpus, rest)
         // --index <path>: near-dedup joins a persisted signature index
         // (sign-index command) instead of re-signing the corpus per run
-        val idxPath = rest.dropWhile(_ != "--index").drop(1).headOption
+        val idxPath = flag(rest, "--index")
         val kept =
           if (idxPath.isDefined)
             graft.text.Dedup.dedupNearFromIndex(docs,
@@ -293,7 +293,8 @@ object Main {
     },
 
     cmd("freq", "<corpus> <term> [term...] [--jsonl]") {
-      case corpus :: rest => spark =>
+      case corpus :: term :: more => spark =>
+        val rest = term :: more
         val terms = rest.filter(!_.startsWith("--"))
         require(terms.nonEmpty, "usage: freq <corpus> <term> [term...]")
         val docs = loadCorpus(spark, corpus, rest)
@@ -405,25 +406,17 @@ object Main {
         val iters = nums.drop(2).headOption.map(_.toInt).getOrElse(2)
         val dim = nums.drop(3).headOption.map(_.toInt).getOrElse(64)
         val cellCol = nums.drop(4).headOption.getOrElse("label")
-        val residual = rest.contains("--residual")
-        val opq = rest.contains("--opq") // implies residual encoding
-        val opqDense = rest.contains("--opq-dense") // dense rotation tier
+        // the flag names the flavor; --opq-dense wins over --opq over
+        // --residual (both OPQ tiers encode residuals)
+        val flavor = Seq("--opq-dense", "--opq", "--residual")
+          .find(rest.contains).fold("plain")(_.stripPrefix("--"))
         val emb = spark.read.parquet(corpus)
-        if (opqDense)
-          graft.sim.SimSearch.writePqIndexResidualRotatedDense(emb,
-            outDir, "vec_id", "embedding", cellCol, m, k, iters, dim)
-        else if (opq)
-          graft.sim.SimSearch.writePqIndexResidualRotated(emb, outDir,
-            "vec_id", "embedding", cellCol, m, k, iters, dim)
-        else if (residual)
-          graft.sim.SimSearch.writePqIndexResidual(emb, outDir, "vec_id",
-            "embedding", cellCol, m, k, iters, dim)
-        else
-          graft.sim.SimSearch.writePqIndex(emb, outDir, "vec_id",
-            "embedding", cellCol, m, k, iters, dim)
+        graft.sim.SimSearch.writePqIndex(emb, outDir, "vec_id",
+          "embedding", cellCol, m, k, iters, dim, flavor = flavor)
         println(s"[pq-index] ${emb.count()} vectors -> m=$m k=$k " +
-          s"residual=${residual || opq || opqDense} opq=$opq " +
-          s"opqDense=$opqDense codes + codebooks + centroids -> $outDir")
+          s"residual=${flavor != "plain"} opq=${flavor == "opq"} " +
+          s"opqDense=${flavor == "opq-dense"} codes + codebooks + " +
+          s"centroids -> $outDir")
     },
 
     // incrementally append new vectors to a persisted PQ index: frozen
@@ -436,7 +429,7 @@ object Main {
         val emb = spark.read.parquet(corpus)
         graft.sim.SimSearch.appendToPqIndex(emb, idxPath, "vec_id",
           "embedding", m, dim)
-        val n = graft.sim.SimSearch.readPqIndex(spark, idxPath)._2
+        val n = graft.sim.SimSearch.readPqIndex(spark, idxPath).codes
           .select("vec_id").distinct().count()
         println(s"[pq-append] index now holds $n vectors -> $idxPath")
     },
@@ -448,7 +441,7 @@ object Main {
         val retain = rest.headOption.map(_.toInt).getOrElse(1)
         val ids = spark.read.parquet(idsPath).select("vec_id")
         graft.sim.SimSearch.deleteFromPqIndex(ids, idxPath, retain)
-        val n = graft.sim.SimSearch.readPqIndex(spark, idxPath)._2
+        val n = graft.sim.SimSearch.readPqIndex(spark, idxPath).codes
           .select("vec_id").distinct().count()
         println(s"[pq-delete] tombstoned ${ids.distinct().count()} ids; " +
           s"index now serves $n vectors -> $idxPath")
@@ -460,7 +453,7 @@ object Main {
       case idxPath :: rest => spark =>
         val retain = rest.headOption.map(_.toInt).getOrElse(1)
         graft.sim.SimSearch.compactPqIndex(spark, idxPath, retain)
-        val n = graft.sim.SimSearch.readPqIndex(spark, idxPath)._2
+        val n = graft.sim.SimSearch.readPqIndex(spark, idxPath).codes
           .select("vec_id").distinct().count()
         println(s"[pq-compact] compacted codes generation holds $n " +
           s"vectors -> $idxPath")
@@ -599,71 +592,32 @@ object Main {
         val m = nums.drop(1).headOption.map(_.toInt).getOrElse(4)
         val nprobe = nums.drop(2).headOption.map(_.toInt).getOrElse(2)
         val dim = nums.drop(3).headOption.map(_.toInt).getOrElse(64)
-        val (cb, codes, centroids) =
-          graft.sim.SimSearch.readPqIndex(spark, idxPath)
+        // serving must run in the frame the codes were written in
+        val idx = graft.sim.SimSearch.readPqIndex(spark, idxPath)
         val q = spark.read.parquet(queries)
-        // a residual-encoded index carries a marker directory; serving
-        // MUST use the residual ADC or every distance is computed in the
-        // wrong frame — and an OPQ-rotated index (perm dir present) must
-        // re-frame queries through the same permutation
-        val residual = new java.io.File(s"$idxPath/residual").exists()
-        val permOpt = graft.sim.SimSearch.readPqIndexPerm(spark, idxPath)
-        val rotOpt = graft.sim.SimSearch.readPqIndexRot(spark, idxPath)
         // --refine <rawEmbeddings> [candidates]: exact re-rank of the
         // ADC top-candidates against the raw vectors (IVFADC-R)
-        val refineArgs = rest.dropWhile(_ != "--refine").drop(1)
+        val refine = flag(rest, "--refine")
         // a bare --refine must not silently degrade to unrefined ADC —
         // the user asked for exact re-rank and would get lossy neighbors
-        require(!rest.contains("--refine") || refineArgs.nonEmpty,
+        require(!rest.contains("--refine") || refine.nonEmpty,
           "--refine requires the raw embeddings path: " +
             "--refine <rawEmb> [candidates]")
-        val hits = refineArgs.headOption match {
-          case Some(rawPath) =>
-            val c = refineArgs.drop(1).headOption.map(_.toInt)
-              .getOrElse(4 * k)
-            (rotOpt, permOpt) match {
-              case (Some(rot), _) =>
-                graft.sim.SimSearch.ivfPqTopKRefinedResidualRotatedDense(
-                  codes, cb, centroids, rot, q,
-                  spark.read.parquet(rawPath), "vec_id", "embedding",
-                  "vec_id", m, k, c, nprobe, dim)
-              case (None, Some(perm)) =>
-                graft.sim.SimSearch.ivfPqTopKRefinedResidualRotated(codes,
-                  cb, centroids, perm, q, spark.read.parquet(rawPath),
-                  "vec_id", "embedding", "vec_id", m, k, c, nprobe, dim)
-              case (None, None) if residual =>
-                graft.sim.SimSearch.ivfPqTopKRefinedResidual(codes, cb,
-                  centroids, q, spark.read.parquet(rawPath), "vec_id",
-                  "embedding", "vec_id", m, k, c, nprobe, dim)
-              case _ =>
-                graft.sim.SimSearch.ivfPqTopKRefined(codes, cb, centroids,
-                  q, spark.read.parquet(rawPath), "vec_id", "embedding",
-                  "vec_id", m, k, c, nprobe, dim)
-            }
-          case None =>
-            (rotOpt, permOpt) match {
-              case (Some(rot), _) =>
-                graft.sim.SimSearch.ivfPqTopKResidualRotatedDense(codes,
-                  cb, centroids, rot, q, "vec_id", "embedding", "vec_id",
-                  m, k, nprobe, dim)
-              case (None, Some(perm)) =>
-                graft.sim.SimSearch.ivfPqTopKResidualRotated(codes, cb,
-                  centroids, perm, q, "vec_id", "embedding", "vec_id",
-                  m, k, nprobe, dim)
-              case (None, None) if residual =>
-                graft.sim.SimSearch.ivfPqTopKResidual(codes, cb,
-                  centroids, q, "vec_id", "embedding", "vec_id", m, k,
-                  nprobe, dim)
-              case _ =>
-                graft.sim.SimSearch.ivfPqTopK(codes, cb, centroids,
-                  q, "vec_id", "embedding", "vec_id", m, k, nprobe, dim)
-            }
-        }
+        // the candidate count, when given, follows the raw path
+        val c = refine.flatMap(flag(rest, _)).map(_.toInt).getOrElse(4 * k)
+        require(refine.isEmpty || c >= k, s"candidates=$c must be >= k=$k")
+        val adc = graft.sim.SimSearch.ivfPqTopK(idx.codes, idx.codebooks,
+          idx.centroids, q, "vec_id", "embedding", "vec_id", m,
+          if (refine.isEmpty) k else c, nprobe, dim, idx.frame)
+        val hits = refine.fold(adc)(rawPath =>
+          graft.sim.SimSearch.rerankExact(adc, q,
+            spark.read.parquet(rawPath), "vec_id", "embedding", "vec_id", k))
         hits.write.mode("overwrite").parquet(outDir)
         val n = spark.read.parquet(outDir).count()
         println(s"[pq-query] ${q.count()} queries x top-$k " +
-          s"(nprobe=$nprobe, refine=${refineArgs.nonEmpty}, " +
-          s"residual=$residual, opq=${permOpt.nonEmpty}) -> $n hits " +
+          s"(nprobe=$nprobe, refine=${refine.nonEmpty}, " +
+          s"residual=${idx.frame.dir.nonEmpty}, " +
+          s"opq=${idx.frame.dir.contains("perm")}) -> $n hits " +
           s"-> $outDir")
     },
 
@@ -731,17 +685,18 @@ object Main {
         println(s"[pq-eval] raw-code ADC      recall@$k: " + summary(
           S.ivfPqTopK(codesRaw, cbRaw, cen, queries, "vec_id",
             "embedding", "vec_id", m, k + 1, nprobe, dim)))
-        val cbRes = S.pqFitResidual(emb, cen, "vec_id", "embedding",
-          "cell", m, kcb, 2, dim).localCheckpoint()
-        val codesRes = S.pqEncodeResidual(emb, cen, cbRes, "vec_id",
-          "embedding", "cell", m, dim).join(cells, Seq("vec_id"))
-        println(s"[pq-eval] residual ADC      recall@$k: " + summary(
-          S.ivfPqTopKResidual(codesRes, cbRes, cen, queries, "vec_id",
-            "embedding", "vec_id", m, k + 1, nprobe, dim)))
+        val res = S.PqFrame.Residual(cen)
+        val cbRes = S.pqFit(emb, "vec_id", "embedding", m, kcb, 2, dim,
+          frame = res).localCheckpoint()
+        val codesRes = S.pqEncode(emb, cbRes, "vec_id", "embedding", m,
+          dim, res).join(cells, Seq("vec_id"))
+        def residualAdc(n: Int) = S.ivfPqTopK(codesRes, cbRes, cen,
+          queries, "vec_id", "embedding", "vec_id", m, n, nprobe, dim, res)
+        println(s"[pq-eval] residual ADC      recall@$k: " +
+          summary(residualAdc(k + 1)))
         println(s"[pq-eval] residual+re-rank  recall@$k: " + summary(
-          S.ivfPqTopKRefinedResidual(codesRes, cbRes, cen, queries, emb,
-            "vec_id", "embedding", "vec_id", m, k + 1, 4 * k, nprobe,
-            dim)))
+          S.rerankExact(residualAdc(4 * k), queries, emb, "vec_id",
+            "embedding", "vec_id", k + 1)))
     },
 
     cmd("semdedup", "<embeddings> <outDir> [k] [threshold] [dim] [cellCap]") {
@@ -873,11 +828,9 @@ object Main {
         // --alpha A: temperature mixing — budget is the TOTAL token
         // budget split across classes ∝ T_c^alpha; without it, budget is
         // a flat per-class token quota
-        val alphaOpt = rest.dropWhile(_ != "--alpha").drop(1).headOption
-          .map(_.toDouble)
+        val alphaOpt = flag(rest, "--alpha").map(_.toDouble)
         // --unimax E: epoch-capped waterfill of the TOTAL budget
-        val unimaxOpt = rest.dropWhile(_ != "--unimax").drop(1).headOption
-          .map(_.toInt)
+        val unimaxOpt = flag(rest, "--unimax").map(_.toInt)
         val quota = (alphaOpt, unimaxOpt) match {
           case (_, Some(e)) => graft.operators.Relational.unimaxTokenSample(
             base, "lang", "doc_id", "n_tokens", budget, e, seed)
@@ -1615,7 +1568,7 @@ object Main {
         statuses.groupBy(col("status")).agg(count(lit(1)).as("n"))
           .orderBy(col("status")).collect()
           .foreach(r => println(s"[diff] ${r.getString(0)}: ${r.getLong(1)}"))
-        rest.dropWhile(_ != "--out").drop(1).headOption.foreach { out =>
+        flag(rest, "--out").foreach { out =>
           Export.jsonl(statuses.filter(col("status") =!= "unchanged"), out)
           println(s"[diff] non-unchanged rows -> $out")
         }

@@ -415,7 +415,7 @@ object Diagnose {
   /** Index-freshness drift audit: how far has a persisted index
     * drifted from the corpus it serves? Feed the corpus's id column
     * and the index's LIVE id read ([[graft.text.Bm25.bm25IndexIds]],
-    * `readAnnIndex(...).select(id)`, `readPqIndex(...)._2`,
+    * `readAnnIndex(...).select(id)`, `readPqIndex(...).codes`,
     * `readSignedIndex`) — one row:
     * `(n_corpus, n_index, n_missing, n_extra)` with `n_missing` =
     * corpus ids the index does not serve (an append fell behind) and

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   * The audit is what makes the pipeline defensible: "deleted" is a
   * claim about every serving path, so the after-membership is read
   * back through the SAME resolved reads serving uses
-  * ([[graft.text.Bm25.bm25IndexIds]], `readAnnIndex`, `readPqIndex`,
-  * `readSignedIndex`) — if a tombstone failed to commit anywhere,
-  * `gone_*` reads false and the workflow fails loudly instead of
-  * filing a false certificate.
+  * ([[graft.text.Bm25.bm25IndexIds]], `readAnnIndex`,
+  * [[graft.sim.SimSearch.readPqIndex]]`(...).codes`, `readSignedIndex`)
+  * — if a tombstone failed to commit anywhere, `gone_*` reads false
+  * and the workflow fails loudly instead of filing a false
+  * certificate.
   *
   * Scale shape: per family, membership is ONE index scan semi-joined
   * against the BROADCAST id batch (takedown batches are query-sized
@@ -88,7 +89,7 @@ object Takedown {
         graft.sim.SimSearch.readAnnIndex(spark, p), metaId, "in_ann")
     }
     pqPath.foreach { p =>
-      pre = flagged(pre, graft.sim.SimSearch.readPqIndex(spark, p)._2,
+      pre = flagged(pre, graft.sim.SimSearch.readPqIndex(spark, p).codes,
         pqIdCol.getOrElse(idCol), "in_pq")
     }
     signedPath.foreach { p =>
@@ -138,7 +139,7 @@ object Takedown {
       certify(graft.sim.SimSearch.readAnnIndex(spark, p), metaId, "ann")
     }
     pqPath.foreach(p => certify(
-      graft.sim.SimSearch.readPqIndex(spark, p)._2,
+      graft.sim.SimSearch.readPqIndex(spark, p).codes,
       pqIdCol.getOrElse(idCol), "pq"))
     signedPath.foreach(p => certify(
       graft.text.Dedup.readSignedIndex(spark, p), idCol, "signed"))
@@ -227,7 +228,7 @@ object DriftRepair {
               .select(col(metaId).as(vecIdCol)))
         }.toSeq ++
         pqPath.map(p => ("pq", c, vecIdCol,
-          graft.sim.SimSearch.readPqIndex(spark, p)._2
+          graft.sim.SimSearch.readPqIndex(spark, p).codes
             .select(col(vecIdCol)).distinct())).toSeq
       }
       doc ++ vec

@@ -903,7 +903,9 @@ object SimSearch {
     * id-seeded init, same bounded id-ordered folds, so the training
     * replays in an external engine). Returns `(sub, cid, cv)` —
     * `m · k` rows of MODEL METADATA to persist beside the IVF
-    * centroids ([[writeIvfCentroids]]).
+    * centroids ([[writeIvfCentroids]]). `frame` decides what is split
+    * ([[PqFrame]]: the raw vectors by default, else their `cellCol`
+    * residuals, optionally through a learned orthogonal transform).
     *
     * Scale shape: fitting is `m` independent vocab-of-k jobs over
     * sliced copies of the corpus scan; encoding ([[pqEncode]]) replaces
@@ -916,32 +918,37 @@ object SimSearch {
   def pqFit(
       emb: DataFrame, idCol: String, vecCol: String,
       m: Int, k: Int, iters: Int, dim: Int = 64,
-      bucketWidth: Long = 4096L): DataFrame = {
+      bucketWidth: Long = 4096L, frame: PqFrame = PqFrame.Raw,
+      cellCol: String = "cell"): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m")
     val sw = dim / m
+    val (framed, v) = frame.corpus(emb, idCol, vecCol, cellCol, dim)
     (0 until m).map { s =>
-      val sliced = emb.select(col(idCol),
-        slice(col(vecCol), s * sw + 1, sw).as("_sv"))
+      val sliced = framed.select(col(idCol),
+        slice(col(v), s * sw + 1, sw).as("_sv"))
       kmeansFit(sliced, idCol, "_sv", k, iters, sw, bucketWidth)
         .select(lit(s).as("sub"), col("cid"), col("cv"))
     }.reduce(_.unionByName(_))
   }
 
-  /** PQ encoding: each vector's nearest codebook centroid per subspace.
-    * Returns `(idCol, sub, code, d2)` — `code` is the winning
-    * codebook id, `d2` the subspace reconstruction error (rounded,
-    * replayable). The corpus never shuffles: `m·k` codebook rows
-    * broadcast and each subspace argmin is the windowless two-phase
-    * top-1.
+  /** PQ encoding: each vector's nearest codebook centroid per subspace,
+    * in the same `frame` the codebooks were fit in. Returns
+    * `(idCol, sub, code, d2)` — `code` is the winning codebook id,
+    * `d2` the subspace reconstruction error (rounded, replayable).
+    * The corpus never shuffles: `m·k` codebook rows broadcast and each
+    * subspace argmin is the windowless two-phase top-1. Attach the
+    * cell column at index-build time ([[writePqIndex]]).
     */
   def pqEncode(
       emb: DataFrame, codebooks: DataFrame, idCol: String,
-      vecCol: String, m: Int, dim: Int = 64): DataFrame = {
+      vecCol: String, m: Int, dim: Int = 64,
+      frame: PqFrame = PqFrame.Raw, cellCol: String = "cell"): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m")
     val sw = dim / m
+    val (framed, v) = frame.corpus(emb, idCol, vecCol, cellCol, dim)
     (0 until m).map { s =>
-      val sliced = emb.select(col(idCol).as("vid"),
-        slice(col(vecCol), s * sw + 1, sw).as("_sv"))
+      val sliced = framed.select(col(idCol).as("vid"),
+        slice(col(v), s * sw + 1, sw).as("_sv"))
       val cb = codebooks.filter(col("sub") === s)
         .select(col("cid"), col("cv"))
       topKPerKey(
@@ -969,7 +976,8 @@ object SimSearch {
       queryIdCol: String, vecCol: String, idCol: String,
       m: Int, k: Int, dim: Int = 64): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m")
-    val lut = adcLut(queries, codebooks, queryIdCol, vecCol, m, dim)
+    val lut = adcLut(queries.select(col(queryIdCol).as("qid"),
+      col(vecCol).as("_qr")), Seq("qid"), codebooks, m, dim)
     val scored = codes.join(broadcast(lut), Seq("sub", "code"))
       .groupBy(col("qid"), col(idCol).as("_vid"))
       .agg(sum(col("_d2")).as("adc_d2"))
@@ -980,34 +988,181 @@ object SimSearch {
         round(col("rankval"), 6).as("adc_d2"))
   }
 
-  /** Persist PQ codebooks (model metadata: `m·k` rows) and the coded
-    * corpus (`(id, cell, sub, code)` — partitioned by cell so
-    * [[ivfPqTopK]]'s probe prunes files). The write-once-query-many
-    * treatment the signed text index and IVF centroids get: fitting
-    * and encoding scan the corpus; serving reads codes and metadata
-    * only.
+  /** How a PQ index frames a vector before the sub-vector split — the
+    * one decision its four flavors differ in. Fit, encode, the ADC
+    * lookup table, serving, re-rank and the index files are shared;
+    * the frame alone knows
+    *  - how corpus vectors are framed for [[pqFit]] / [[pqEncode]]:
+    *    `x` ([[PqFrame.Raw]]), the cell residual `x − c(cell)`
+    *    ([[PqFrame.Residual]], [[ivfResiduals]]), or that residual
+    *    through a learned orthogonal transform ([[PqFrame.Permuted]],
+    *    [[PqFrame.Rotated]]);
+    *  - how a query is framed for the ADC table ([[ivfPqTopK]]): once
+    *    per query for `Raw`, once per (query, probed cell) otherwise,
+    *    because each probed cell re-frames the query into its own
+    *    residual space;
+    *  - which directory marks the flavor in a persisted index.
+    * The transforms are orthogonal, so distances are unchanged; only
+    * the split the codebooks see changes.
+    */
+  sealed trait PqFrame {
+    /** The directory that marks this flavor in a persisted index
+      * (`residual`, `perm`, `rot`); `None` for raw codes.
+      */
+    def dir: Option[String]
+
+    /** The IVF centroids the residuals are taken against. */
+    private[sim] def cells: Option[DataFrame] = None
+
+    /** The 1-row transform model (persisted at [[dir]]) and how it
+      * applies to a residual vector column.
+      */
+    private[sim] def transform(dim: Int)
+        : Option[(DataFrame, Column => Column)] = None
+
+    /** Corpus vectors in this frame: (frame, its vector column). The
+      * residual is one broadcast cell join ([[ivfResiduals]]); a
+      * transform adds one broadcast of its 1-row model. The corpus
+      * never shuffles.
+      */
+    private[sim] def corpus(emb: DataFrame, idCol: String,
+        vecCol: String, cellCol: String, dim: Int): (DataFrame, String) =
+      cells.fold((emb, vecCol)) { cen =>
+        val res = ivfResiduals(emb, cen, idCol, vecCol, cellCol)
+        (transform(dim).fold(res) { case (model, f) =>
+          res.crossJoin(broadcast(model))
+            .select(col(idCol), col("cell"), f(col("_rv")).as("_rv"))
+        }, "_rv")
+      }
+
+    /** Queries `(qid, qv)` in this frame as `_qr`, with the ADC table's
+      * key columns: `qid` for raw codes, `(qid, cell)` over the
+      * `probed` `(qid, cell)` pairs otherwise — `|queries| · nprobe`
+      * rows, still broadcast metadata.
+      */
+    private[sim] def queries(q: DataFrame, probed: DataFrame,
+        dim: Int): (DataFrame, Seq[String]) =
+      cells.fold((q.select(col("qid"), col("qv").as("_qr")), Seq("qid"))) {
+        cen =>
+          val at = probed.join(q, Seq("qid"))
+            .join(broadcast(cen.select(col("cell"), col("centroid"))),
+              Seq("cell"))
+          val r = zip_with(col("qv"), col("centroid"),
+            (x, c) => x.cast("double") - c)
+          (transform(dim).fold(
+            at.select(col("qid"), col("cell"), r.as("_qr"))) {
+            case (model, f) => at.crossJoin(broadcast(model))
+              .select(col("qid"), col("cell"), f(r).as("_qr"))
+          }, Seq("qid", "cell"))
+      }
+  }
+
+  object PqFrame {
+    /** Codes quantize the vector itself. */
+    case object Raw extends PqFrame {
+      val dir: Option[String] = None
+    }
+
+    /** True IVFADC (Jégou, Douze & Schmid 2011 §IV): codes quantize
+      * `x − centroid(cell(x))`, so the code budget goes to within-cell
+      * variance the cell id does not already carry.
+      */
+    final case class Residual(centroids: DataFrame) extends PqFrame {
+      val dir: Option[String] = Some("residual")
+      override private[sim] def cells = Some(centroids)
+    }
+
+    /** Residuals through the 1-row OPQ permutation `_perm`
+      * ([[opqPermutation]] — exact-integer, so the chain hash-gates).
+      */
+    final case class Permuted(centroids: DataFrame, perm: DataFrame)
+        extends PqFrame {
+      val dir: Option[String] = Some("perm")
+      override private[sim] def cells = Some(centroids)
+      override private[sim] def transform(dim: Int) =
+        Some((perm, permuteVec(_: Column, col("_perm"), dim)))
+    }
+
+    /** Residuals through the 1-row dense d×d rotation `_rot`
+      * ([[opqDenseFit]] — serve it with its MATCHED codebooks).
+      */
+    final case class Rotated(centroids: DataFrame, rot: DataFrame)
+        extends PqFrame {
+      val dir: Option[String] = Some("rot")
+      override private[sim] def cells = Some(centroids)
+      override private[sim] def transform(dim: Int) =
+        Some((rot, rotateVec(_: Column, col("_rot"), dim)))
+    }
+  }
+
+  /** A loaded PQ index ([[readPqIndex]]): codebooks, LIVE codes,
+    * `(cell, centroid)` table and the frame its codes live in.
+    */
+  final case class PqIndex(codebooks: DataFrame, codes: DataFrame,
+      centroids: DataFrame, frame: PqFrame)
+
+  /** Persist a PQ index: codebooks (model metadata: `m·k` rows), the
+    * coded corpus (`(id, cell, sub, code)` — partitioned by cell so
+    * [[ivfPqTopK]]'s probe prunes files) and the IVF centroids. The
+    * write-once-query-many treatment the signed text index and IVF
+    * centroids get: fitting and encoding scan the corpus; serving
+    * reads codes and metadata only.
+    *
+    * `flavor` picks the [[PqFrame]]: `plain` codes the raw vectors;
+    * `residual`, `opq` and `opq-dense` fit the centroids first (they
+    * define the residual frame) and write a 1-row `residual` flag;
+    * `opq` adds the learned permutation under `perm`, `opq-dense` the
+    * learned rotation under `rot` together with the codebooks
+    * [[opqDenseFit]]'s `alternations` trained jointly with it
+    * (re-fitting from scratch would discard the descent).
+    * [[readPqIndex]] detects the flavor from these directories.
     */
   def writePqIndex(
       emb: DataFrame, path: String, idCol: String, vecCol: String,
       cellCol: String, m: Int, k: Int, iters: Int, dim: Int = 64,
-      bucketWidth: Long = 4096L): Unit = {
+      bucketWidth: Long = 4096L, flavor: String = "plain",
+      alternations: Int = 2): Unit = {
     resetPqIndexLifecycle(new org.apache.hadoop.fs.Path(path)
       .getFileSystem(emb.sparkSession.sessionState.newHadoopConf()), path)
-    val cb = pqFit(emb, idCol, vecCol, m, k, iters, dim, bucketWidth)
-      .localCheckpoint() // codebooks reused by the encode pass
+    val cells = ivfCentroids(emb, idCol, vecCol, cellCol, dim, bucketWidth)
+    // a residual frame's centroids feed fit, encode and the transform
+    lazy val cen = cells.localCheckpoint()
+    val (frame, jointCb) = flavor match {
+      case "plain" => (PqFrame.Raw, None)
+      case "residual" => (PqFrame.Residual(cen), None)
+      case "opq" => (PqFrame.Permuted(cen, opqPermutation(emb, cen, idCol,
+        vecCol, cellCol, m, dim).localCheckpoint()), None)
+      case "opq-dense" =>
+        val (rot, cb) = opqDenseFit(emb, cen, idCol, vecCol, cellCol, m,
+          dim, alternations, k, iters, bucketWidth)
+        (PqFrame.Rotated(cen, rot.localCheckpoint()), Some(cb))
+      case other => throw new IllegalArgumentException(
+        s"unknown PQ flavor '$other': plain, residual, opq or opq-dense")
+    }
+    for (d <- frame.dir; (model, _) <- frame.transform(dim))
+      model.write.mode("overwrite").parquet(s"$path/$d")
+    val cb = jointCb.getOrElse(pqFit(emb, idCol, vecCol, m, k, iters, dim,
+      bucketWidth, frame, cellCol)).localCheckpoint() // reused by encode
     cb.write.mode("overwrite").parquet(s"$path/codebooks")
     graft.operators.WriteLayout.clusterBy(
-      pqEncode(emb, cb, idCol, vecCol, m, dim)
+      pqEncode(emb, cb, idCol, vecCol, m, dim, frame, cellCol)
         .join(emb.select(col(idCol), col(cellCol).as("cell")),
           Seq(idCol)),
       "cell")
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/codes")
-    writeIvfCentroids(emb, s"$path/centroids", idCol, vecCol, cellCol,
-      dim, bucketWidth)
+    frame.cells.getOrElse(cells)
+      .write.mode("overwrite").parquet(s"$path/centroids")
+    if (frame.dir.nonEmpty)
+      emb.sparkSession.range(1).select(lit(true).as("residual"))
+        .write.mode("overwrite").parquet(s"$path/residual")
   }
 
-  /** Load a persisted PQ index: (codebooks, LIVE codes, centroids).
+  /** Load a persisted PQ index: codebooks, LIVE codes, centroids and
+    * the [[PqFrame]] its codes were written in — detected through the
+    * index path's Hadoop `FileSystem` (so any URI scheme works), `rot`
+    * before `perm` before `residual` before plain. Serving in any
+    * other frame computes every distance in the wrong space.
     *
     * "Live" resolves the index's deletion lifecycle: codes come from
     * the generation directory the newest complete `_live` marker
@@ -1015,17 +1170,17 @@ object SimSearch {
     * [[compactPqIndex]]), and ids tombstoned by [[deleteFromPqIndex]]
     * but not yet compacted away are anti-joined out against the
     * BROADCAST tombstone set — tombstoned ids can never surface from
-    * any `ivfPqTopK*` / [[pqAdcTopK]] serving path fed from here.
+    * [[ivfPqTopK]] / [[pqAdcTopK]] fed from here.
     * Readers never GC (the [[graft.streaming.MarkerStateStore]]
     * reader discipline): a torn marker is skipped, an unreferenced
     * generation is invisible, and an in-flight writer's directories
     * are left alone.
     */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, DataFrame) = {
+      path: String): PqIndex = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    readPqMeta(spark, path, readPqLiveMeta(fs, path))
+    readPqMeta(spark, fs, path, readPqLiveMeta(fs, path))
   }
 
   /** SNAPSHOT read: the index exactly as committed by marker `gen` —
@@ -1034,42 +1189,49 @@ object SimSearch {
     * inside the retention window; lifecycle ops take `retain`).
     */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, gen: Long): (DataFrame, DataFrame, DataFrame) = {
+      path: String, gen: Long): PqIndex = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
     val s = pqMarker.readAt(fs, path, gen)
-    readPqMeta(spark, path,
+    readPqMeta(spark, fs, path,
       PqLiveMeta(s.gen, s.dir("codes"), s.batches))
   }
 
   private def readPqMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, meta: PqLiveMeta)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val codes = spark.read.parquet(s"$path/${meta.codesDir}")
-    val live = pqTombstones(spark, path, meta) match {
-      case Some(tomb) =>
-        codes.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
-      case None => codes
-    }
-    (spark.read.parquet(s"$path/codebooks"), live,
-      spark.read.parquet(s"$path/centroids"))
+      fs: org.apache.hadoop.fs.FileSystem, path: String,
+      meta: PqLiveMeta): PqIndex = {
+    val cen = spark.read.parquet(s"$path/centroids")
+    PqIndex(spark.read.parquet(s"$path/codebooks"),
+      pqLiveCodes(spark, path, meta), cen,
+      pqFrameAt(fs, path, cen, d => spark.read.parquet(s"$path/$d")))
   }
 
-  /** Per-query ADC lookup table: `(qid, sub, code, _d2)` — squared
-    * distance from each query subvector to every codebook centroid.
-    * `m·k` rows per query.
+  /** The frame a persisted index's codes live in, from its marker
+    * directories; `load` reads a transform model directory.
     */
-  private def adcLut(
-      queries: DataFrame, codebooks: DataFrame, queryIdCol: String,
-      vecCol: String, m: Int, dim: Int): DataFrame = {
+  private def pqFrameAt(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, cen: DataFrame, load: String => DataFrame): PqFrame = {
+    def has(d: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d"))
+    if (has("rot")) PqFrame.Rotated(cen, load("rot"))
+    else if (has("perm")) PqFrame.Permuted(cen, load("perm"))
+    else if (has("residual")) PqFrame.Residual(cen)
+    else PqFrame.Raw
+  }
+
+  /** ADC lookup table: `(keys…, sub, code, _d2)` — squared distance
+    * from each framed query subvector (`_qr`, [[PqFrame]]) to every
+    * codebook centroid, `m·k` rows per key.
+    */
+  private def adcLut(framed: DataFrame, keys: Seq[String],
+      codebooks: DataFrame, m: Int, dim: Int): DataFrame = {
     val sw = dim / m
+    val kc = keys.map(col)
     (0 until m).map { s =>
-      queries.select(col(queryIdCol).as("qid"),
-          slice(col(vecCol), s * sw + 1, sw).as("_qs"))
+      framed.select(kc :+ slice(col("_qr"), s * sw + 1, sw).as("_qs"): _*)
         .crossJoin(broadcast(
           codebooks.filter(col("sub") === s).select(col("cid"), col("cv"))))
-        .select(col("qid"), lit(s).as("sub"), col("cid").as("code"),
-          dist2Fast(col("_qs"), col("cv")).as("_d2"))
+        .select(kc ++ Seq(lit(s).as("sub"), col("cid").as("code"),
+          dist2Fast(col("_qs"), col("cv")).as("_d2")): _*)
     }.reduce(_.unionByName(_))
   }
 
@@ -1079,24 +1241,27 @@ object SimSearch {
     * against the PQ code index (`codesWithCell`: the [[pqEncode]]
     * output carrying its IVF `cell` column, the layout written at
     * index-build time — on a cell-partitioned lake the probe prunes
-    * files), and candidates are scored by ADC from codes alone. Raw
-    * vectors appear nowhere at serve time: cost per query is
-    * `corpus/cells × nprobe` CODE rows, each scored by `m` lookups.
+    * files), and candidates are scored by ADC from codes alone, with
+    * the lookup table in the codes' `frame` (keyed per query, or per
+    * (query, probed cell) for residual codes). Raw vectors appear
+    * nowhere at serve time: cost per query is `corpus/cells × nprobe`
+    * CODE rows, each scored by `m` lookups.
     */
   def ivfPqTopK(
       codesWithCell: DataFrame, codebooks: DataFrame,
       centroids: DataFrame, queries: DataFrame, queryIdCol: String,
       vecCol: String, idCol: String, m: Int, k: Int, nprobe: Int = 2,
-      dim: Int = 64): DataFrame = {
+      dim: Int = 64, frame: PqFrame = PqFrame.Raw): DataFrame = {
     require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m")
     val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
     val probed = topKPerKey(
       q.crossJoin(broadcast(centroids)),
       "qid", -cosine(col("qv"), col("centroid")), col("cell"), nprobe)
       .select(col("qid"), col("neighbor").as("cell"))
-    val lut = adcLut(queries, codebooks, queryIdCol, vecCol, m, dim)
+    val (framed, keys) = frame.queries(q, probed, dim)
+    val lut = adcLut(framed, keys, codebooks, m, dim)
     val scored = codesWithCell.join(probed, Seq("cell"))
-      .join(broadcast(lut), Seq("qid", "sub", "code"))
+      .join(broadcast(lut), keys ++ Seq("sub", "code"))
       .groupBy(col("qid"), col(idCol).as("_vid"))
       .agg(sum(col("_d2")).as("adc_d2"))
     topKPerKey(scored, "qid", col("adc_d2"), col("_vid"), k)
@@ -1104,31 +1269,26 @@ object SimSearch {
         round(col("rankval"), 6).as("adc_d2"))
   }
 
-  /** [[ivfPqTopK]] with exact re-rank refinement — the production PQ
-    * serving recipe (the "R" stage of IVFADC-R, Jégou et al. 2011):
-    * ADC picks `candidates` (c ≫ k) provisional neighbors per query
-    * from codes alone, then ONLY those c ids join back to the raw
-    * vectors (`emb` — on a cell-partitioned lake the candidates' cells
-    * prune files) for exact cosine final ranking. Approximate
-    * distances decide which c survive; EXACT distances decide the
-    * final k — recovering most of the recall quantization loses
-    * (typically +10-20 points at c ≈ 4k; measure with [[recallAtK]],
-    * the q65 harness). Serving cost grows by c raw-vector reads + c
-    * exact dot products per query — still never a corpus scan.
+  /** Exact re-rank of an ADC candidate list — the "R" stage of
+    * IVFADC-R (Jégou et al. 2011), after any [[PqFrame]]: `adc`
+    * ([[ivfPqTopK]] run with k = c ≫ k candidates per query) picks the
+    * provisional neighbors from codes alone, then ONLY those c ids
+    * join back to the raw vectors (`emb` — on a cell-partitioned lake
+    * the candidates' cells prune files) for exact cosine final
+    * ranking. Approximate distances decide which c survive; EXACT
+    * distances decide the final k — recovering most of the recall
+    * quantization loses (measure with [[recallAtK]], the q65
+    * harness). Serving cost grows by c raw-vector reads + c exact dot
+    * products per query — still never a corpus scan.
     *
     * Output mirrors [[bruteForceTopK]]:
     * `(qid, rank, neighbor, cos_sim)`, rank 0-based by
     * (cos desc, neighbor asc), cosine rounded to 6 decimals.
     */
-  def ivfPqTopKRefined(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, queries: DataFrame, emb: DataFrame,
-      queryIdCol: String, vecCol: String, idCol: String, m: Int, k: Int,
-      candidates: Int, nprobe: Int = 2, dim: Int = 64): DataFrame = {
-    require(candidates >= k,
-      s"candidates=$candidates must be >= k=$k")
-    val adc = ivfPqTopK(codesWithCell, codebooks, centroids, queries,
-      queryIdCol, vecCol, idCol, m, candidates, nprobe, dim)
+  def rerankExact(
+      adc: DataFrame, queries: DataFrame, emb: DataFrame,
+      queryIdCol: String, vecCol: String, idCol: String,
+      k: Int): DataFrame = {
     val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
     val cand = adc.select(col("qid"), col("neighbor").as("cid"))
       .join(emb.select(col(idCol).as("cid"), col(vecCol).as("cv")),
@@ -1161,141 +1321,6 @@ object SimSearch {
       .select(col(idCol), col("cell"),
         zip_with(col("_v"), col("centroid"),
           (x, c) => x.cast("double") - c).as("_rv"))
-
-  /** [[pqFit]] on residuals — the codebooks of a true IVFADC index.
-    * Same deterministic per-subspace Lloyd; the input vectors are the
-    * `x − centroid(cell)` residuals, so codewords tile the within-cell
-    * error ball instead of the whole embedding space.
-    */
-  def pqFitResidual(
-      emb: DataFrame, centroids: DataFrame, idCol: String,
-      vecCol: String, cellCol: String, m: Int, k: Int, iters: Int,
-      dim: Int = 64, bucketWidth: Long = 4096L): DataFrame =
-    pqFit(ivfResiduals(emb, centroids, idCol, vecCol, cellCol),
-      idCol, "_rv", m, k, iters, dim, bucketWidth)
-
-  /** [[pqEncode]] against residual codebooks: each vector's residual is
-    * coded per subspace. Output mirrors [[pqEncode]] —
-    * `(idCol, sub, code, d2)`; attach the cell column at index-build
-    * time exactly as the raw flavor does ([[writePqIndex]]).
-    */
-  def pqEncodeResidual(
-      emb: DataFrame, centroids: DataFrame, codebooks: DataFrame,
-      idCol: String, vecCol: String, cellCol: String, m: Int,
-      dim: Int = 64): DataFrame =
-    pqEncode(ivfResiduals(emb, centroids, idCol, vecCol, cellCol),
-      codebooks, idCol, "_rv", m, dim)
-
-  /** Per-(query, probed cell) residual ADC lookup table:
-    * `(qid, cell, sub, code, _d2)` — the residual QUERY
-    * `q − centroid(cell)` sliced per subspace against every codebook
-    * centroid. `|queries| · nprobe · m · k` rows — still broadcast
-    * metadata. This is the one structural difference from the raw
-    * flavor: the LUT depends on WHICH cell is probed, because the
-    * query must be expressed in that cell's residual frame.
-    */
-  private def adcLutResidual(
-      probed: DataFrame, q: DataFrame, centroids: DataFrame,
-      codebooks: DataFrame, m: Int, dim: Int): DataFrame = {
-    val sw = dim / m
-    val qr = probed
-      .join(q, Seq("qid"))
-      .join(broadcast(centroids.select(col("cell"), col("centroid"))),
-        Seq("cell"))
-      .select(col("qid"), col("cell"),
-        zip_with(col("qv"), col("centroid"),
-          (x, c) => x.cast("double") - c).as("_qr"))
-    (0 until m).map { s =>
-      qr.select(col("qid"), col("cell"),
-          slice(col("_qr"), s * sw + 1, sw).as("_qs"))
-        .crossJoin(broadcast(
-          codebooks.filter(col("sub") === s).select(col("cid"), col("cv"))))
-        .select(col("qid"), col("cell"), lit(s).as("sub"),
-          col("cid").as("code"), dist2Fast(col("_qs"), col("cv")).as("_d2"))
-    }.reduce(_.unionByName(_))
-  }
-
-  /** IVFADC serving over RESIDUAL codes — [[ivfPqTopK]] with the
-    * per-(query, cell) residual LUT: probe `nprobe` cells, equi-join
-    * candidates on the cell, score by ADC from codes alone, where the
-    * lookup now keys on `(qid, cell, sub, code)` because each probed
-    * cell re-frames the query into its residual space. Raw vectors
-    * appear nowhere at serve time.
-    */
-  def ivfPqTopKResidual(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, queries: DataFrame, queryIdCol: String,
-      vecCol: String, idCol: String, m: Int, k: Int, nprobe: Int = 2,
-      dim: Int = 64): DataFrame = {
-    require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m")
-    val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
-    val probed = topKPerKey(
-      q.crossJoin(broadcast(centroids)),
-      "qid", -cosine(col("qv"), col("centroid")), col("cell"), nprobe)
-      .select(col("qid"), col("neighbor").as("cell"))
-    val lut = adcLutResidual(probed, q, centroids, codebooks, m, dim)
-    val scored = codesWithCell.join(probed, Seq("cell"))
-      .join(broadcast(lut), Seq("qid", "cell", "sub", "code"))
-      .groupBy(col("qid"), col(idCol).as("_vid"))
-      .agg(sum(col("_d2")).as("adc_d2"))
-    topKPerKey(scored, "qid", col("adc_d2"), col("_vid"), k)
-      .select(col("qid"), col("rank"), col("neighbor"),
-        round(col("rankval"), 6).as("adc_d2"))
-  }
-
-  /** The full residual IVFADC-R serving chain: residual ADC picks
-    * `candidates` provisional neighbors per query, then only those ids
-    * join back to raw vectors for exact cosine final top-k — the
-    * production recipe with BOTH recall levers in place (residual
-    * codes sharpen the candidate pool; exact re-rank fixes the final
-    * order). Output mirrors [[bruteForceTopK]].
-    */
-  def ivfPqTopKRefinedResidual(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, queries: DataFrame, emb: DataFrame,
-      queryIdCol: String, vecCol: String, idCol: String, m: Int, k: Int,
-      candidates: Int, nprobe: Int = 2, dim: Int = 64): DataFrame = {
-    require(candidates >= k,
-      s"candidates=$candidates must be >= k=$k")
-    val adc = ivfPqTopKResidual(codesWithCell, codebooks, centroids,
-      queries, queryIdCol, vecCol, idCol, m, candidates, nprobe, dim)
-    val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
-    val cand = adc.select(col("qid"), col("neighbor").as("cid"))
-      .join(emb.select(col(idCol).as("cid"), col(vecCol).as("cv")),
-        Seq("cid"))
-      .join(broadcast(q), Seq("qid"))
-    rankScored(scorePairs(cand), k)
-  }
-
-  /** Persist a RESIDUAL PQ index — layout-compatible with
-    * [[writePqIndex]] (`codebooks`/`codes`/`centroids` subdirs, codes
-    * partitioned by cell) plus a `residual` marker so a reader knows
-    * which ADC flavor to serve with. The centroids are fit first
-    * (they define the residual frame), then codebooks and codes are
-    * derived from the residualized corpus.
-    */
-  def writePqIndexResidual(
-      emb: DataFrame, path: String, idCol: String, vecCol: String,
-      cellCol: String, m: Int, k: Int, iters: Int, dim: Int = 64,
-      bucketWidth: Long = 4096L): Unit = {
-    resetPqIndexLifecycle(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(emb.sparkSession.sessionState.newHadoopConf()), path)
-    val cen = ivfCentroids(emb, idCol, vecCol, cellCol, dim, bucketWidth)
-      .localCheckpoint()
-    cen.write.mode("overwrite").parquet(s"$path/centroids")
-    val cb = pqFitResidual(emb, cen, idCol, vecCol, cellCol, m, k,
-      iters, dim, bucketWidth).localCheckpoint()
-    cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    graft.operators.WriteLayout.clusterBy(
-      pqEncodeResidual(emb, cen, cb, idCol, vecCol, cellCol, m, dim)
-        .join(emb.select(col(idCol), col(cellCol).as("cell")),
-          Seq(idCol)),
-      "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes")
-    emb.sparkSession.range(1).select(lit(true).as("residual"))
-      .write.mode("overwrite").parquet(s"$path/residual")
-  }
 
   /** OPQ rotation, parametric-lite flavor (Ge, He, Ke & Sun,
     * "Optimized Product Quantization", CVPR 2013 §4): learn an
@@ -1363,213 +1388,6 @@ object SimSearch {
         (acc, j) => acc + element_at(rot, i * dim + j + 1) *
           element_at(v, j + 1).cast("double")))
 
-  /** [[ivfResiduals]] with an orthogonal transform applied — the input
-    * to the rotated fit/encode. One extra broadcast of the 1-row
-    * transform metadata; the corpus still never shuffles. `apply`
-    * closes over the metadata column ([[permuteVec]] for the
-    * permutation tier, [[rotateVec]] for the dense tier).
-    */
-  private def ivfResidualsXf(
-      emb: DataFrame, centroids: DataFrame, meta: DataFrame,
-      apply: Column => Column, idCol: String, vecCol: String,
-      cellCol: String): DataFrame =
-    ivfResiduals(emb, centroids, idCol, vecCol, cellCol)
-      .crossJoin(broadcast(meta))
-      .select(col(idCol), col("cell"), apply(col("_rv")).as("_rv"))
-
-  private def ivfResidualsRotated(
-      emb: DataFrame, centroids: DataFrame, perm: DataFrame,
-      idCol: String, vecCol: String, cellCol: String,
-      dim: Int): DataFrame =
-    ivfResidualsXf(emb, centroids, perm,
-      permuteVec(_, col("_perm"), dim), idCol, vecCol, cellCol)
-
-  /** [[pqFitResidual]] on OPQ-permuted residuals. */
-  def pqFitResidualRotated(
-      emb: DataFrame, centroids: DataFrame, perm: DataFrame,
-      idCol: String, vecCol: String, cellCol: String, m: Int, k: Int,
-      iters: Int, dim: Int = 64, bucketWidth: Long = 4096L): DataFrame =
-    pqFit(ivfResidualsRotated(emb, centroids, perm, idCol, vecCol,
-      cellCol, dim), idCol, "_rv", m, k, iters, dim, bucketWidth)
-
-  /** [[pqEncodeResidual]] against rotated codebooks. */
-  def pqEncodeResidualRotated(
-      emb: DataFrame, centroids: DataFrame, perm: DataFrame,
-      codebooks: DataFrame, idCol: String, vecCol: String,
-      cellCol: String, m: Int, dim: Int = 64): DataFrame =
-    pqEncode(ivfResidualsRotated(emb, centroids, perm, idCol, vecCol,
-      cellCol, dim), codebooks, idCol, "_rv", m, dim)
-
-  /** [[adcLutResidual]] in the rotated frame: the query residual
-    * permutes through the SAME 1-row metadata before slicing, so codes
-    * and lookup tables live in one space.
-    */
-  private def adcLutResidualXf(
-      probed: DataFrame, q: DataFrame, centroids: DataFrame,
-      codebooks: DataFrame, meta: DataFrame, apply: Column => Column,
-      m: Int, dim: Int): DataFrame = {
-    val sw = dim / m
-    val qr = probed
-      .join(q, Seq("qid"))
-      .join(broadcast(centroids.select(col("cell"), col("centroid"))),
-        Seq("cell"))
-      .crossJoin(broadcast(meta))
-      .select(col("qid"), col("cell"),
-        apply(zip_with(col("qv"), col("centroid"),
-          (x, c) => x.cast("double") - c)).as("_qr"))
-    (0 until m).map { s =>
-      qr.select(col("qid"), col("cell"),
-          slice(col("_qr"), s * sw + 1, sw).as("_qs"))
-        .crossJoin(broadcast(
-          codebooks.filter(col("sub") === s).select(col("cid"), col("cv"))))
-        .select(col("qid"), col("cell"), lit(s).as("sub"),
-          col("cid").as("code"), dist2Fast(col("_qs"), col("cv")).as("_d2"))
-    }.reduce(_.unionByName(_))
-  }
-
-  private def ivfPqTopKResidualXf(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, meta: DataFrame, apply: Column => Column,
-      queries: DataFrame, queryIdCol: String, vecCol: String,
-      idCol: String, m: Int, k: Int, nprobe: Int,
-      dim: Int): DataFrame = {
-    require(m > 0 && dim % m == 0, s"dim=$dim must divide into m=$m")
-    val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
-    val probed = topKPerKey(
-      q.crossJoin(broadcast(centroids)),
-      "qid", -cosine(col("qv"), col("centroid")), col("cell"), nprobe)
-      .select(col("qid"), col("neighbor").as("cell"))
-    val lut = adcLutResidualXf(probed, q, centroids, codebooks,
-      meta, apply, m, dim)
-    val scored = codesWithCell.join(probed, Seq("cell"))
-      .join(broadcast(lut), Seq("qid", "cell", "sub", "code"))
-      .groupBy(col("qid"), col(idCol).as("_vid"))
-      .agg(sum(col("_d2")).as("adc_d2"))
-    topKPerKey(scored, "qid", col("adc_d2"), col("_vid"), k)
-      .select(col("qid"), col("rank"), col("neighbor"),
-        round(col("rankval"), 6).as("adc_d2"))
-  }
-
-  /** [[ivfPqTopKResidual]] over OPQ-permuted residual codes. */
-  def ivfPqTopKResidualRotated(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, perm: DataFrame, queries: DataFrame,
-      queryIdCol: String, vecCol: String, idCol: String, m: Int, k: Int,
-      nprobe: Int = 2, dim: Int = 64): DataFrame =
-    ivfPqTopKResidualXf(codesWithCell, codebooks, centroids, perm,
-      permuteVec(_, col("_perm"), dim), queries, queryIdCol, vecCol,
-      idCol, m, k, nprobe, dim)
-
-  /** [[ivfPqTopKRefinedResidual]] over OPQ-permuted residual codes:
-    * rotated ADC picks the candidates, exact cosine on the RAW
-    * embeddings decides the final k. Output mirrors
-    * [[bruteForceTopK]].
-    */
-  def ivfPqTopKRefinedResidualRotated(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, perm: DataFrame, queries: DataFrame,
-      emb: DataFrame, queryIdCol: String, vecCol: String, idCol: String,
-      m: Int, k: Int, candidates: Int, nprobe: Int = 2,
-      dim: Int = 64): DataFrame = {
-    require(candidates >= k,
-      s"candidates=$candidates must be >= k=$k")
-    val adc = ivfPqTopKResidualRotated(codesWithCell, codebooks,
-      centroids, perm, queries, queryIdCol, vecCol, idCol, m,
-      candidates, nprobe, dim)
-    val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
-    val cand = adc.select(col("qid"), col("neighbor").as("cid"))
-      .join(emb.select(col(idCol).as("cid"), col(vecCol).as("cv")),
-        Seq("cid"))
-      .join(broadcast(q), Seq("qid"))
-    rankScored(scorePairs(cand), k)
-  }
-
-  /** Persist an OPQ-ROTATED residual PQ index —
-    * [[writePqIndexResidual]]'s layout plus a `perm` subdir holding
-    * the 1-row learned permutation. A reader detects the rotation by
-    * the `perm` directory's presence and MUST serve with the rotated
-    * ADC ([[ivfPqTopKResidualRotated]]) — codes live in the permuted
-    * residual frame.
-    */
-  def writePqIndexResidualRotated(
-      emb: DataFrame, path: String, idCol: String, vecCol: String,
-      cellCol: String, m: Int, k: Int, iters: Int, dim: Int = 64,
-      bucketWidth: Long = 4096L): Unit = {
-    resetPqIndexLifecycle(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(emb.sparkSession.sessionState.newHadoopConf()), path)
-    val cen = ivfCentroids(emb, idCol, vecCol, cellCol, dim, bucketWidth)
-      .localCheckpoint()
-    cen.write.mode("overwrite").parquet(s"$path/centroids")
-    val perm = opqPermutation(emb, cen, idCol, vecCol, cellCol, m, dim)
-      .localCheckpoint()
-    perm.write.mode("overwrite").parquet(s"$path/perm")
-    val cb = pqFitResidualRotated(emb, cen, perm, idCol, vecCol,
-      cellCol, m, k, iters, dim, bucketWidth).localCheckpoint()
-    cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    graft.operators.WriteLayout.clusterBy(
-      pqEncodeResidualRotated(emb, cen, perm, cb, idCol, vecCol,
-        cellCol, m, dim)
-        .join(emb.select(col(idCol), col(cellCol).as("cell")),
-          Seq(idCol)),
-      "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes")
-    emb.sparkSession.range(1).select(lit(true).as("residual"))
-      .write.mode("overwrite").parquet(s"$path/residual")
-  }
-
-  /** Load a persisted index's OPQ permutation, when present. */
-  def readPqIndexPerm(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/perm")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(s"$path/perm")) else None
-  }
-
-  /** Persist a DENSE-OPQ residual PQ index —
-    * [[writePqIndexResidualRotated]]'s layout with a `rot` subdir
-    * holding the 1-row learned d×d rotation instead of `perm`; the
-    * MATCHED codebooks from [[opqDenseFit]]'s joint alternations are
-    * what lands on disk (re-fitting from scratch would discard the
-    * descent). A reader detects the dense tier by the `rot`
-    * directory's presence and MUST serve with
-    * [[ivfPqTopKResidualRotatedDense]] — codes live in the rotated
-    * residual frame.
-    */
-  def writePqIndexResidualRotatedDense(
-      emb: DataFrame, path: String, idCol: String, vecCol: String,
-      cellCol: String, m: Int, k: Int, iters: Int, dim: Int = 64,
-      bucketWidth: Long = 4096L, alternations: Int = 2): Unit = {
-    resetPqIndexLifecycle(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(emb.sparkSession.sessionState.newHadoopConf()), path)
-    val cen = ivfCentroids(emb, idCol, vecCol, cellCol, dim, bucketWidth)
-      .localCheckpoint()
-    cen.write.mode("overwrite").parquet(s"$path/centroids")
-    val (rot0, cb0) = opqDenseFit(emb, cen, idCol, vecCol, cellCol,
-      m, dim, alternations, k, iters, bucketWidth)
-    val rot = rot0.localCheckpoint()
-    val cb = cb0.localCheckpoint()
-    rot.write.mode("overwrite").parquet(s"$path/rot")
-    cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    graft.operators.WriteLayout.clusterBy(
-      pqEncodeResidualRotatedDense(emb, cen, rot, cb, idCol, vecCol,
-        cellCol, m, dim)
-        .join(emb.select(col(idCol), col(cellCol).as("cell")),
-          Seq(idCol)),
-      "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/codes")
-    emb.sparkSession.range(1).select(lit(true).as("residual"))
-      .write.mode("overwrite").parquet(s"$path/residual")
-  }
-
-  /** Load a persisted index's dense OPQ rotation, when present. */
-  def readPqIndexRot(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/rot")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) Some(spark.read.parquet(s"$path/rot")) else None
-  }
 
   /** Cyclic Jacobi eigendecomposition of a symmetric d×d matrix —
     * driver-side, O(sweeps·d³) on ≤ 64×64 model metadata. Returns
@@ -1866,47 +1684,6 @@ object SimSearch {
     (rotDf(rot), cb)
   }
 
-  /** [[pqEncodeResidual]] against dense-rotated codebooks. */
-  def pqEncodeResidualRotatedDense(
-      emb: DataFrame, centroids: DataFrame, rot: DataFrame,
-      codebooks: DataFrame, idCol: String, vecCol: String,
-      cellCol: String, m: Int, dim: Int = 64): DataFrame =
-    pqEncode(ivfResidualsXf(emb, centroids, rot,
-      rotateVec(_, col("_rot"), dim), idCol, vecCol, cellCol),
-      codebooks, idCol, "_rv", m, dim)
-
-  /** [[ivfPqTopKResidual]] over dense-rotated residual codes. */
-  def ivfPqTopKResidualRotatedDense(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, rot: DataFrame, queries: DataFrame,
-      queryIdCol: String, vecCol: String, idCol: String, m: Int, k: Int,
-      nprobe: Int = 2, dim: Int = 64): DataFrame =
-    ivfPqTopKResidualXf(codesWithCell, codebooks, centroids, rot,
-      rotateVec(_, col("_rot"), dim), queries, queryIdCol, vecCol,
-      idCol, m, k, nprobe, dim)
-
-  /** [[ivfPqTopKRefinedResidual]] over dense-rotated codes: rotated
-    * ADC picks candidates, exact cosine on raw embeddings decides.
-    */
-  def ivfPqTopKRefinedResidualRotatedDense(
-      codesWithCell: DataFrame, codebooks: DataFrame,
-      centroids: DataFrame, rot: DataFrame, queries: DataFrame,
-      emb: DataFrame, queryIdCol: String, vecCol: String, idCol: String,
-      m: Int, k: Int, candidates: Int, nprobe: Int = 2,
-      dim: Int = 64): DataFrame = {
-    require(candidates >= k,
-      s"candidates=$candidates must be >= k=$k")
-    val adc = ivfPqTopKResidualRotatedDense(codesWithCell, codebooks,
-      centroids, rot, queries, queryIdCol, vecCol, idCol, m,
-      candidates, nprobe, dim)
-    val q = queries.select(col(queryIdCol).as("qid"), col(vecCol).as("qv"))
-    val cand = adc.select(col("qid"), col("neighbor").as("cid"))
-      .join(emb.select(col(idCol).as("cid"), col(vecCol).as("cv")),
-        Seq("cid"))
-      .join(broadcast(q), Seq("qid"))
-    rankScored(scorePairs(cand), k)
-  }
-
   /** Margin-based bitext mining (Artetxe & Schwenk 2019, the
     * CCMatrix/LASER recipe): align a SOURCE embedding set to a TARGET
     * set by scoring each forward-kNN candidate pair with the MARGIN
@@ -2002,10 +1779,12 @@ object SimSearch {
 
   /** INCREMENTAL index maintenance — the write path a 100 TB lake
     * actually runs: new vectors append to a persisted PQ index
-    * ([[writePqIndex]] / [[writePqIndexResidual]] layout) WITHOUT
-    * refitting — codebooks and cell centroids load as-is (model
-    * metadata), the batch encodes against them (residual-aware via the
-    * index's marker), and the coded rows append under their cell
+    * ([[writePqIndex]] layout, any flavor) WITHOUT refitting —
+    * codebooks, cell centroids and the index's [[PqFrame]] load as-is
+    * (model metadata), the batch encodes against them (a rotated
+    * index's appends go through the SAME frozen transform: raw-residual
+    * codes against rotated codebooks would be silently wrong in every
+    * distance), and the coded rows append under their cell
     * partitions. A full refit is a scheduled rebalance, not a
     * per-batch cost; quantization error for the appended rows is
     * whatever the frozen codebooks give (measure with [[recallAtK]]
@@ -2028,7 +1807,6 @@ object SimSearch {
     val spark = emb.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val residual = fs.exists(new org.apache.hadoop.fs.Path(s"$path/residual"))
     // appends land in the LIVE generation directory (post-compaction
     // that is `codes_gen=N`, not the original `codes`); the dedupe
     // anti-join runs against the PHYSICAL live codes — tombstoned ids
@@ -2039,6 +1817,8 @@ object SimSearch {
     val liveCodesDir = s"$path/${meta.codesDir}"
     val cb = spark.read.parquet(s"$path/codebooks").localCheckpoint()
     val cen = spark.read.parquet(s"$path/centroids").localCheckpoint()
+    val frame = pqFrameAt(fs, path, cen,
+      d => spark.read.parquet(s"$path/$d").localCheckpoint())
     val fresh =
       if (dedupeIds)
         emb.join(spark.read.parquet(liveCodesDir)
@@ -2050,26 +1830,8 @@ object SimSearch {
       case None => fresh.join(
         assignIvfCells(fresh, cen, idCol, vecCol), Seq(idCol))
     }
-    // an OPQ-rotated index (perm or rot marker present) must encode
-    // appends through the SAME frozen transform — raw-residual codes
-    // against rotated codebooks would be silently wrong in every
-    // distance
-    val perm = readPqIndexPerm(spark, path).map(_.localCheckpoint())
-    val rot = readPqIndexRot(spark, path).map(_.localCheckpoint())
-    val codes = (rot, perm, residual) match {
-      case (Some(rt), _, _) =>
-        pqEncodeResidualRotatedDense(withCell, cen, rt, cb, idCol,
-          vecCol, "cell", m, dim)
-      case (None, Some(pm), _) =>
-        pqEncodeResidualRotated(withCell, cen, pm, cb, idCol, vecCol,
-          "cell", m, dim)
-      case (None, None, true) =>
-        pqEncodeResidual(withCell, cen, cb, idCol, vecCol, "cell", m, dim)
-      case (None, None, false) =>
-        pqEncode(withCell, cb, idCol, vecCol, m, dim)
-    }
     graft.operators.WriteLayout.clusterBy(
-      codes
+      pqEncode(withCell, cb, idCol, vecCol, m, dim, frame)
         .join(withCell.select(col(idCol), col("cell")), Seq(idCol)),
       "cell")
       .write.mode("append").partitionBy("cell").parquet(liveCodesDir)
@@ -2140,16 +1902,23 @@ object SimSearch {
     PqLiveMeta(s.gen, s.dir("codes"), s.batches)
   }
 
-  /** The un-compacted tombstone ids as one ids-only frame (column name
-    * = the index's id column, as written by [[deleteFromPqIndex]]);
-    * None when the live state has no tombstones.
+  /** The live code rows: the generation `meta` names minus its
+    * un-compacted tombstone ids (column = the index's id column, as
+    * written by [[deleteFromPqIndex]]), anti-joined against the
+    * BROADCAST tombstone set. The ids are not deduplicated: an
+    * anti-join only asks whether a match exists (the
+    * [[graft.operators.LiveRead.rows]] reasoning).
     */
-  private def pqTombstones(spark: org.apache.spark.sql.SparkSession,
-      path: String, meta: PqLiveMeta): Option[DataFrame] =
-    if (meta.tombBatches.isEmpty) None
-    else Some(spark.read.parquet(
-      meta.tombBatches.map(b => s"$path/tombstones/batch=$b"): _*)
-      .distinct())
+  private def pqLiveCodes(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: PqLiveMeta): DataFrame = {
+    val codes = spark.read.parquet(s"$path/${meta.codesDir}")
+    if (meta.tombBatches.isEmpty) codes
+    else {
+      val tomb = spark.read.parquet(
+        meta.tombBatches.map(b => s"$path/tombstones/batch=$b"): _*)
+      codes.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
+    }
+  }
 
   /** The committed PQ snapshot generations still readable (oldest
     * first) — each addressable via the snapshot overload of
@@ -2163,7 +1932,7 @@ object SimSearch {
       .getFileSystem(spark.sessionState.newHadoopConf()), path)
 
   /** Reset the deletion lifecycle — called by every full
-    * [[writePqIndex]]-family rebuild so a stale marker from a previous
+    * [[writePqIndex]] rebuild (any flavor) so a stale marker from a previous
     * life of the path cannot point the fresh `codes` directory at a
     * dead generation.
     */
@@ -2174,9 +1943,10 @@ object SimSearch {
     fs.listStatus(root).map(_.getPath)
       .filter(p => p.getName.startsWith(LiveMarkerPrefix) ||
         p.getName == "tombstones" || p.getName.startsWith("codes_gen=") ||
-        // rotation-flavor markers: a rebuild as a DIFFERENT flavor must
-        // not leave a stale perm/rot dir misdirecting the auto-detect
-        p.getName == "perm" || p.getName == "rot")
+        // flavor markers: a rebuild as a DIFFERENT flavor must not
+        // leave a stale residual/perm/rot dir misdirecting the detection
+        p.getName == "residual" || p.getName == "perm" ||
+        p.getName == "rot")
       .foreach { p =>
         if (!fs.delete(p, true)) throw new java.io.IOException(
           s"pq index rebuild failed to clear lifecycle state at $p")
@@ -2244,15 +2014,9 @@ object SimSearch {
       .getFileSystem(spark.sessionState.newHadoopConf())
     pqMarker.heal(fs, path, retain)
     val state = pqMarker.read(fs, path)
-    val meta = PqLiveMeta(state.gen, state.dir("codes"), state.batches)
-    val codes = spark.read.parquet(s"$path/${meta.codesDir}")
-    val live = pqTombstones(spark, path, meta) match {
-      case Some(tomb) =>
-        codes.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
-      case None => codes
-    }
-    val gen = meta.gen + 1L
-    graft.operators.WriteLayout.clusterBy(live, "cell")
+    val gen = state.gen + 1L
+    graft.operators.WriteLayout.clusterBy(pqLiveCodes(spark, path,
+      PqLiveMeta(state.gen, state.dir("codes"), state.batches)), "cell")
       .write.mode("errorifexists").partitionBy("cell")
       .parquet(s"$path/codes_gen=$gen")
     pqMarker.put(fs, path, graft.operators.LiveState(gen,

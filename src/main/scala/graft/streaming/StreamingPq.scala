@@ -12,8 +12,9 @@ import graft.sim.SimSearch
   * centroids and PQ codebooks freeze there, the standard
   * train-on-first-drop deployment), every later batch encodes under
   * the frozen model and appends into the live codes generation
-  * ([[SimSearch.appendToPqIndex]]), and `ivfPqTopK*` serves
-  * partition-pruned ADC probes between batches.
+  * ([[SimSearch.appendToPqIndex]]), and [[SimSearch.ivfPqTopK]]
+  * over [[SimSearch.readPqIndex]] serves partition-pruned ADC probes
+  * between batches.
   *
   * Replay safety WITHOUT an applied-batch marker: `appendToPqIndex`
   * anti-joins the batch's ids against the physical live codes before

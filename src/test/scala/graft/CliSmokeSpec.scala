@@ -407,7 +407,8 @@ class CliSmokeSpec extends SparkSpec {
     val idxOpq = s"$base/idx-opq"
     graft.cli.Main.main(Array("pq-index", embPath, idxOpq, "2", "2",
       "2", "--opq"))
-    assert(graft.sim.SimSearch.readPqIndexPerm(spark, idxOpq).nonEmpty)
+    assert(graft.sim.SimSearch.readPqIndex(spark, idxOpq).frame
+      .isInstanceOf[graft.sim.SimSearch.PqFrame.Permuted])
     val outOpq = s"$base/opq"
     graft.cli.Main.main(Array("pq-query", idxOpq, embPath, outOpq,
       "3", "2", "1"))
@@ -421,7 +422,8 @@ class CliSmokeSpec extends SparkSpec {
     val idxDense = s"$base/idx-dense"
     graft.cli.Main.main(Array("pq-index", embPath, idxDense, "2", "2",
       "2", "--opq-dense"))
-    assert(graft.sim.SimSearch.readPqIndexRot(spark, idxDense).nonEmpty)
+    assert(graft.sim.SimSearch.readPqIndex(spark, idxDense).frame
+      .isInstanceOf[graft.sim.SimSearch.PqFrame.Rotated])
     val outDense = s"$base/dense"
     graft.cli.Main.main(Array("pq-query", idxDense, embPath, outDense,
       "3", "2", "1"))
@@ -449,6 +451,34 @@ class CliSmokeSpec extends SparkSpec {
       "3", "2", "1"))
     assert(spark.read.parquet(outCmp)
       .filter(col("neighbor").isin(3L, 7L)).count() == 0L)
+  }
+
+  test("pq-query detects a residual index given by file:// URI and " +
+    "serves the same rows as through the plain path") {
+    def vec(i: Long): Array[Float] = {
+      val a = Array.fill(64)(0.01f)
+      a((i % 4).toInt) = 1.0f + (i % 5) * 0.1f
+      a
+    }
+    val base = tmpDir("cli-pq-uri")
+    val embPath = s"$base/emb"
+    (0L until 16L).map(i => (i, i % 2, vec(i)))
+      .toDF("vec_id", "label", "embedding")
+      .write.mode("overwrite").parquet(embPath)
+    val idx = s"$base/idx"
+    graft.cli.Main.main(Array("pq-index", embPath, idx, "2", "2", "2",
+      "--residual"))
+    val outPlain = s"$base/plain"
+    graft.cli.Main.main(Array("pq-query", idx, embPath, outPlain,
+      "3", "2", "1"))
+    val outUri = s"$base/uri"
+    graft.cli.Main.main(Array("pq-query", s"file://$idx", embPath,
+      outUri, "3", "2", "1"))
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq)
+      .toSet
+    assert(rows(outPlain).size == 16 * 3)
+    assert(rows(outUri) == rows(outPlain),
+      "a residual index given by URI was served in the raw frame")
   }
 
   test("fk-audit / scd2 / snapshot-diff / roc-auc / kappa / ohlc " +

@@ -19,7 +19,7 @@ class CliTableSpec extends SparkSpec {
     "ingest 2+", "dump 2+", "diagnose 1", "stats 1", "compact 1+",
     "dedup 2+", "sign-index 2+", "sign-append 2+", "sign-delete 2+",
     "sign-generations 1", "sign-compact 1+", "decontaminate 3+", "clean 3+",
-    "audit 3+", "audit-store 3+", "preflight 1", "distinct 1+", "freq 1+",
+    "audit 3+", "audit-store 3+", "preflight 1", "distinct 1+", "freq 2+",
     "ann-index 2+", "ann-append 2", "ann-delete 2+", "ann-compact 1+",
     "ann-generations 1", "ann-query 3+", "pq-index 2+", "pq-append 2+",
     "pq-delete 2+", "pq-compact 1+", "takedown 1+", "index-drift 2+",
@@ -104,8 +104,8 @@ class CliTableSpec extends SparkSpec {
   test("each verb's usage line names its required arguments") {
     Main.commands.foreach { c =>
       val (n, atLeast) = arities(c.verb)
-      if (atLeast) assert(required(c.args) >= n, c.args)
-      else assert(required(c.args) == n && !c.args.contains("["), c.args)
+      assert(required(c.args) == n, c.args)
+      if (!atLeast) assert(!c.args.contains("["), c.args)
     }
   }
 

@@ -290,7 +290,7 @@ class IvfSpec extends SparkSpec {
     }
   }
 
-  test("ivfPqTopKRefined: exact re-rank recovers the recall pure ADC " +
+  test("rerankExact: exact re-rank recovers the recall pure ADC " +
     "loses to quantization") {
     // 24 vectors fanning across the first-subspace unit circle: a
     // 2-centroid codebook collapses each arc to ONE code, so every
@@ -323,9 +323,10 @@ class IvfSpec extends SparkSpec {
     val adc = SimSearch.ivfPqTopK(codes, cb, centroids, queries,
       "vec_id", "embedding", "vec_id", m = 2, k = 6, nprobe = 1,
       dim = 64).filter(col("qid") =!= col("neighbor"))
-    val refined = SimSearch.ivfPqTopKRefined(codes, cb, centroids,
-      queries, emb, "vec_id", "embedding", "vec_id", m = 2, k = 6,
-      candidates = 24, nprobe = 1, dim = 64)
+    val refined = SimSearch.rerankExact(SimSearch.ivfPqTopK(codes, cb,
+      centroids, queries, "vec_id", "embedding", "vec_id", m = 2,
+      k = 24, nprobe = 1, dim = 64), queries, emb, "vec_id",
+      "embedding", "vec_id", k = 6)
       .filter(col("qid") =!= col("neighbor"))
     def mean(df: org.apache.spark.sql.DataFrame): Double =
       SimSearch.recallSummary(df, exact, 6).head()
@@ -351,10 +352,11 @@ class IvfSpec extends SparkSpec {
     val codesRaw = SimSearch.pqEncode(emb, cbRaw, "vec_id", "embedding",
       m, dim = 64)
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val cbRes = SimSearch.pqFitResidual(emb, cen, "vec_id", "embedding",
-      "cell", m, k, iters, dim = 64, bucketWidth = 128L)
-    val codesRes = SimSearch.pqEncodeResidual(emb, cen, cbRes, "vec_id",
-      "embedding", "cell", m, dim = 64)
+    val res = SimSearch.PqFrame.Residual(cen)
+    val cbRes = SimSearch.pqFit(emb, "vec_id", "embedding", m, k, iters,
+      dim = 64, bucketWidth = 128L, frame = res)
+    val codesRes = SimSearch.pqEncode(emb, cbRes, "vec_id", "embedding",
+      m, dim = 64, frame = res)
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
     val pred = col("vec_id") < 30
     val queries = emb.filter(pred)
@@ -369,9 +371,9 @@ class IvfSpec extends SparkSpec {
     val rRaw = recall(SimSearch.ivfPqTopK(codesRaw, cbRaw, cen,
       queries, "vec_id", "embedding", "vec_id", m, k = 11, nprobe = 2,
       dim = 64))
-    val rRes = recall(SimSearch.ivfPqTopKResidual(codesRes, cbRes, cen,
+    val rRes = recall(SimSearch.ivfPqTopK(codesRes, cbRes, cen,
       queries, "vec_id", "embedding", "vec_id", m, k = 11, nprobe = 2,
-      dim = 64))
+      dim = 64, frame = res))
     assert(rRes > rRaw,
       s"residual codes did not lift recall: raw=$rRaw residual=$rRes")
   }
@@ -393,27 +395,29 @@ class IvfSpec extends SparkSpec {
       SimSearch.recallSummary(
         adc.filter(col("qid") =!= col("neighbor")), exact, 10)
         .head().getAs[Double]("mean_recall")
-    val cbRes = SimSearch.pqFitResidual(emb, cen, "vec_id", "embedding",
-      "cell", m, k, iters, dim = 64, bucketWidth = 128L)
-    val codesRes = SimSearch.pqEncodeResidual(emb, cen, cbRes, "vec_id",
-      "embedding", "cell", m, dim = 64)
+    val res = SimSearch.PqFrame.Residual(cen)
+    val cbRes = SimSearch.pqFit(emb, "vec_id", "embedding", m, k, iters,
+      dim = 64, bucketWidth = 128L, frame = res)
+    val codesRes = SimSearch.pqEncode(emb, cbRes, "vec_id", "embedding",
+      m, dim = 64, frame = res)
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val rRes = recall(SimSearch.ivfPqTopKResidual(codesRes, cbRes, cen,
+    val rRes = recall(SimSearch.ivfPqTopK(codesRes, cbRes, cen,
       queries, "vec_id", "embedding", "vec_id", m, k = 11, nprobe = 2,
-      dim = 64))
+      dim = 64, frame = res))
     val perm = SimSearch.opqPermutation(emb, cen, "vec_id", "embedding",
       "cell", m, dim = 64).localCheckpoint()
     // orthogonality: the learned transform is a permutation of 1..64
     val pvec = perm.head().getSeq[Int](0)
     assert(pvec.sorted == (1 to 64).toSeq, pvec)
-    val cbRot = SimSearch.pqFitResidualRotated(emb, cen, perm, "vec_id",
-      "embedding", "cell", m, k, iters, dim = 64, bucketWidth = 128L)
-    val codesRot = SimSearch.pqEncodeResidualRotated(emb, cen, perm,
-      cbRot, "vec_id", "embedding", "cell", m, dim = 64)
+    val opq = SimSearch.PqFrame.Permuted(cen, perm)
+    val cbRot = SimSearch.pqFit(emb, "vec_id", "embedding", m, k, iters,
+      dim = 64, bucketWidth = 128L, frame = opq)
+    val codesRot = SimSearch.pqEncode(emb, cbRot, "vec_id", "embedding",
+      m, dim = 64, frame = opq)
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val rRot = recall(SimSearch.ivfPqTopKResidualRotated(codesRot,
-      cbRot, cen, perm, queries, "vec_id", "embedding", "vec_id", m,
-      k = 11, nprobe = 2, dim = 64))
+    val rRot = recall(SimSearch.ivfPqTopK(codesRot, cbRot, cen,
+      queries, "vec_id", "embedding", "vec_id", m, k = 11, nprobe = 2,
+      dim = 64, frame = opq))
     // measured on this data: 0.05 -> 0.12 at m=4/k=4 (and >= at m=2)
     assert(rRot > rRes,
       s"OPQ rotation did not lift recall: residual=$rRes rotated=$rRot")
@@ -460,17 +464,17 @@ class IvfSpec extends SparkSpec {
     // permutation tier at the same m/k (the hash-gated flavor)
     val perm = SimSearch.opqPermutation(emb, cen, "vec_id", "embedding",
       "cell", m, dim = 64).localCheckpoint()
-    val cbP = SimSearch.pqFitResidualRotated(emb, cen, perm, "vec_id",
-      "embedding", "cell", m, k, iters, dim = 64, bucketWidth = 128L)
-      .localCheckpoint()
-    val encP = SimSearch.pqEncodeResidualRotated(emb, cen, perm,
-      cbP, "vec_id", "embedding", "cell", m, dim = 64)
+    val permuted = SimSearch.PqFrame.Permuted(cen, perm)
+    val cbP = SimSearch.pqFit(emb, "vec_id", "embedding", m, k, iters,
+      dim = 64, bucketWidth = 128L, frame = permuted).localCheckpoint()
+    val encP = SimSearch.pqEncode(emb, cbP, "vec_id", "embedding", m,
+      dim = 64, frame = permuted)
     val dPerm = encP.agg(sum(col("d2"))).head().getDouble(0)
     val codesP = encP
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val rPerm = recall(SimSearch.ivfPqTopKResidualRotated(codesP,
-      cbP, cen, perm, queries, "vec_id", "embedding", "vec_id", m,
-      k = 11, nprobe = 2, dim = 64))
+    val rPerm = recall(SimSearch.ivfPqTopK(codesP, cbP, cen, queries,
+      "vec_id", "embedding", "vec_id", m, k = 11, nprobe = 2, dim = 64,
+      frame = permuted))
     // dense tier: the MATCHED (rotation, codebooks) pair the
     // alternations trained jointly
     val (rot0, cbD0) = SimSearch.opqDenseFit(emb, cen, "vec_id",
@@ -486,23 +490,26 @@ class IvfSpec extends SparkSpec {
       val want = if (i == j) 1.0 else 0.0
       assert(math.abs(dotv - want) < 1e-6, s"RRt[$i][$j]=$dotv")
     }
-    val encD = SimSearch.pqEncodeResidualRotatedDense(emb, cen, rot,
-      cbD, "vec_id", "embedding", "cell", m, dim = 64)
+    val dense = SimSearch.PqFrame.Rotated(cen, rot)
+    val encD = SimSearch.pqEncode(emb, cbD, "vec_id", "embedding", m,
+      dim = 64, frame = dense)
     val dDense = encD.agg(sum(col("d2"))).head().getDouble(0)
     val codesD = encD
       .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
-    val rDense = recall(SimSearch.ivfPqTopKResidualRotatedDense(codesD,
-      cbD, cen, rot, queries, "vec_id", "embedding", "vec_id", m,
-      k = 11, nprobe = 2, dim = 64))
+    val rDense = recall(SimSearch.ivfPqTopK(codesD, cbD, cen, queries,
+      "vec_id", "embedding", "vec_id", m, k = 11, nprobe = 2, dim = 64,
+      frame = dense))
     // the direct OPQ objective: quantization distortion strictly lower
     assert(dDense < dPerm,
       s"dense rotation did not lower distortion: $dDense >= $dPerm")
     assert(rDense >= rPerm,
       s"dense rotation lost to the permutation: dense=$rDense perm=$rPerm")
     // and the refined serve path returns k rows per query
-    val refined = SimSearch.ivfPqTopKRefinedResidualRotatedDense(codesD,
-      cbD, cen, rot, queries.limit(5), emb, "vec_id", "embedding",
-      "vec_id", m, k = 5, candidates = 20, nprobe = 2, dim = 64)
+    val five = queries.limit(5)
+    val refined = SimSearch.rerankExact(SimSearch.ivfPqTopK(codesD, cbD,
+      cen, five, "vec_id", "embedding", "vec_id", m, k = 20, nprobe = 2,
+      dim = 64, frame = dense), five, emb, "vec_id", "embedding",
+      "vec_id", k = 5)
     assert(refined.groupBy("qid").count().collect()
       .forall(_.getLong(1) == 5L))
     emb.unpersist()
@@ -539,29 +546,31 @@ class IvfSpec extends SparkSpec {
     }.toDF("vec_id", "cell", "embedding")
     val dir = java.nio.file.Files
       .createTempDirectory("pqidxres").toString
-    SimSearch.writePqIndexResidual(emb, dir, "vec_id", "embedding",
-      "cell", m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
-    val (cb, codes, centroids) = SimSearch.readPqIndex(spark, dir)
+    SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
+      m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L,
+      flavor = "residual")
+    val SimSearch.PqIndex(cb, codes, centroids, frame) =
+      SimSearch.readPqIndex(spark, dir)
     assert(spark.read.parquet(s"$dir/residual")
       .head().getBoolean(0), "residual marker missing")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     val queries = emb.filter(col("vec_id") < 4)
-    val fromIndex = canon(SimSearch.ivfPqTopKResidual(codes, cb,
-      centroids, queries, "vec_id", "embedding", "vec_id", m = 2,
-      k = 4, nprobe = 1, dim = 64))
+    val fromIndex = canon(SimSearch.ivfPqTopK(codes, cb, centroids,
+      queries, "vec_id", "embedding", "vec_id", m = 2, k = 4,
+      nprobe = 1, dim = 64, frame = frame))
     val cen = SimSearch.ivfCentroids(emb, "vec_id", "embedding", "cell",
       dim = 64, bucketWidth = 4L)
-    val inlineCb = SimSearch.pqFitResidual(emb, cen, "vec_id",
-      "embedding", "cell", m = 2, k = 2, iters = 2, dim = 64,
-      bucketWidth = 4L)
-    val inline = canon(SimSearch.ivfPqTopKResidual(
-      SimSearch.pqEncodeResidual(emb, cen, inlineCb, "vec_id",
-        "embedding", "cell", m = 2, dim = 64)
+    val res = SimSearch.PqFrame.Residual(cen)
+    val inlineCb = SimSearch.pqFit(emb, "vec_id", "embedding", m = 2,
+      k = 2, iters = 2, dim = 64, bucketWidth = 4L, frame = res)
+    val inline = canon(SimSearch.ivfPqTopK(
+      SimSearch.pqEncode(emb, inlineCb, "vec_id", "embedding", m = 2,
+        dim = 64, frame = res)
         .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id")),
       inlineCb, cen, queries, "vec_id", "embedding", "vec_id", m = 2,
-      k = 4, nprobe = 1, dim = 64))
+      k = 4, nprobe = 1, dim = 64, frame = res))
     assert(fromIndex == inline)
   }
 
@@ -579,51 +588,56 @@ class IvfSpec extends SparkSpec {
     }.toDF("vec_id", "cell", "embedding")
     val dir = java.nio.file.Files
       .createTempDirectory("pqidxopq").toString
-    SimSearch.writePqIndexResidualRotated(emb, dir, "vec_id",
-      "embedding", "cell", m = 2, k = 2, iters = 2, dim = 64,
-      bucketWidth = 4L)
-    val (cb, codes, centroids) = SimSearch.readPqIndex(spark, dir)
-    val perm = SimSearch.readPqIndexPerm(spark, dir)
+    SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
+      m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L,
+      flavor = "opq")
+    val SimSearch.PqIndex(cb, codes, centroids, frame) =
+      SimSearch.readPqIndex(spark, dir)
+    val perm = permOf(frame)
     assert(perm.nonEmpty, "perm marker directory missing")
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     val queries = emb.filter(col("vec_id") < 4)
-    val fromIndex = canon(SimSearch.ivfPqTopKResidualRotated(codes, cb,
-      centroids, perm.get, queries, "vec_id", "embedding", "vec_id",
-      m = 2, k = 4, nprobe = 1, dim = 64))
+    val fromIndex = canon(SimSearch.ivfPqTopK(codes, cb, centroids,
+      queries, "vec_id", "embedding", "vec_id", m = 2, k = 4,
+      nprobe = 1, dim = 64, frame = SimSearch.PqFrame.Permuted(centroids,
+        perm.get)))
     val cen = SimSearch.ivfCentroids(emb, "vec_id", "embedding", "cell",
       dim = 64, bucketWidth = 4L)
     val inlinePerm = SimSearch.opqPermutation(emb, cen, "vec_id",
       "embedding", "cell", m = 2, dim = 64).localCheckpoint()
-    val inlineCb = SimSearch.pqFitResidualRotated(emb, cen, inlinePerm,
-      "vec_id", "embedding", "cell", m = 2, k = 2, iters = 2, dim = 64,
-      bucketWidth = 4L)
-    val inline = canon(SimSearch.ivfPqTopKResidualRotated(
-      SimSearch.pqEncodeResidualRotated(emb, cen, inlinePerm, inlineCb,
-        "vec_id", "embedding", "cell", m = 2, dim = 64)
+    val inlineFrame = SimSearch.PqFrame.Permuted(cen, inlinePerm)
+    val inlineCb = SimSearch.pqFit(emb, "vec_id", "embedding", m = 2,
+      k = 2, iters = 2, dim = 64, bucketWidth = 4L, frame = inlineFrame)
+    val inline = canon(SimSearch.ivfPqTopK(
+      SimSearch.pqEncode(emb, inlineCb, "vec_id", "embedding", m = 2,
+        dim = 64, frame = inlineFrame)
         .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id")),
-      inlineCb, cen, inlinePerm, queries, "vec_id", "embedding",
-      "vec_id", m = 2, k = 4, nprobe = 1, dim = 64))
+      inlineCb, cen, queries, "vec_id", "embedding", "vec_id", m = 2,
+      k = 4, nprobe = 1, dim = 64, frame = inlineFrame))
     assert(fromIndex == inline)
     // an unrotated index has no perm marker
     val dir2 = java.nio.file.Files
       .createTempDirectory("pqidxnoperm").toString
-    SimSearch.writePqIndexResidual(emb, dir2, "vec_id", "embedding",
-      "cell", m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
-    assert(SimSearch.readPqIndexPerm(spark, dir2).isEmpty)
+    SimSearch.writePqIndex(emb, dir2, "vec_id", "embedding", "cell",
+      m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L,
+      flavor = "residual")
+    assert(permOf(SimSearch.readPqIndex(spark, dir2).frame).isEmpty)
     // appends to a rotated index encode through the frozen
     // permutation: appended vectors must score identically to the
     // same vectors encoded at build time
     val dir3 = java.nio.file.Files
       .createTempDirectory("pqidxopqapp").toString
-    SimSearch.writePqIndexResidualRotated(
+    SimSearch.writePqIndex(
       emb.filter(col("vec_id") < 12), dir3, "vec_id", "embedding",
-      "cell", m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
+      "cell", m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L,
+      flavor = "opq")
     SimSearch.appendToPqIndex(emb.filter(col("vec_id") >= 12)
       .drop("cell"), dir3, "vec_id", "embedding", m = 2, dim = 64)
-    val (cb3, codes3, cen3) = SimSearch.readPqIndex(spark, dir3)
-    val perm3 = SimSearch.readPqIndexPerm(spark, dir3).get
+    val SimSearch.PqIndex(cb3, codes3, cen3, frame3) =
+      SimSearch.readPqIndex(spark, dir3)
+    val perm3 = permOf(frame3).get
     val appended = codes3.filter(col("vec_id") >= 12)
       .select("vec_id", "sub", "code")
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
@@ -634,8 +648,9 @@ class IvfSpec extends SparkSpec {
       .join(SimSearch.assignIvfCells(
         emb.filter(col("vec_id") >= 12), cen3, "vec_id", "embedding"),
         Seq("vec_id"))
-    val inline3 = SimSearch.pqEncodeResidualRotated(reassigned, cen3,
-      perm3, cb3, "vec_id", "embedding", "cell", m = 2, dim = 64)
+    val inline3 = SimSearch.pqEncode(reassigned, cb3, "vec_id",
+      "embedding", m = 2, dim = 64,
+      frame = SimSearch.PqFrame.Permuted(cen3, perm3))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
       .toMap
     assert(appended == inline3,
@@ -657,20 +672,22 @@ class IvfSpec extends SparkSpec {
     }.toDF("vec_id", "cell", "embedding")
     val dir = java.nio.file.Files
       .createTempDirectory("pqidxdense").toString
-    SimSearch.writePqIndexResidualRotatedDense(emb, dir, "vec_id",
-      "embedding", "cell", m = 2, k = 2, iters = 2, dim = 64,
-      bucketWidth = 4L, alternations = 1)
-    val (cb, codes, centroids) = SimSearch.readPqIndex(spark, dir)
-    val rot = SimSearch.readPqIndexRot(spark, dir)
+    SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
+      m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L,
+      flavor = "opq-dense", alternations = 1)
+    val SimSearch.PqIndex(cb, codes, centroids, frame) =
+      SimSearch.readPqIndex(spark, dir)
+    val rot = rotOf(frame)
     assert(rot.nonEmpty, "rot marker directory missing")
-    assert(SimSearch.readPqIndexPerm(spark, dir).isEmpty)
+    assert(!new java.io.File(s"$dir/perm").exists())
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     val queries = emb.filter(col("vec_id") < 4)
-    val fromIndex = canon(SimSearch.ivfPqTopKResidualRotatedDense(
-      codes, cb, centroids, rot.get, queries, "vec_id", "embedding",
-      "vec_id", m = 2, k = 4, nprobe = 1, dim = 64))
+    val fromIndex = canon(SimSearch.ivfPqTopK(codes, cb, centroids,
+      queries, "vec_id", "embedding", "vec_id", m = 2, k = 4,
+      nprobe = 1, dim = 64, frame = SimSearch.PqFrame.Rotated(centroids,
+        rot.get)))
     // inline: the same matched (rot, cb) pair — opqDenseFit is
     // deterministic, so re-fitting reproduces the persisted model
     val cen = SimSearch.ivfCentroids(emb, "vec_id", "embedding",
@@ -680,24 +697,26 @@ class IvfSpec extends SparkSpec {
       iters = 2, bucketWidth = 4L)
     val rotI = rotI0.localCheckpoint()
     val cbI = cbI0.localCheckpoint()
-    val inline = canon(SimSearch.ivfPqTopKResidualRotatedDense(
-      SimSearch.pqEncodeResidualRotatedDense(emb, cen, rotI, cbI,
-        "vec_id", "embedding", "cell", m = 2, dim = 64)
+    val inlineFrame = SimSearch.PqFrame.Rotated(cen, rotI)
+    val inline = canon(SimSearch.ivfPqTopK(
+      SimSearch.pqEncode(emb, cbI, "vec_id", "embedding", m = 2,
+        dim = 64, frame = inlineFrame)
         .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id")),
-      cbI, cen, rotI, queries, "vec_id", "embedding", "vec_id",
-      m = 2, k = 4, nprobe = 1, dim = 64))
+      cbI, cen, queries, "vec_id", "embedding", "vec_id", m = 2, k = 4,
+      nprobe = 1, dim = 64, frame = inlineFrame))
     assert(fromIndex == inline)
     // appends on a dense index encode through the frozen rotation
     val dir2 = java.nio.file.Files
       .createTempDirectory("pqidxdenseapp").toString
-    SimSearch.writePqIndexResidualRotatedDense(
+    SimSearch.writePqIndex(
       emb.filter(col("vec_id") < 12), dir2, "vec_id", "embedding",
       "cell", m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L,
-      alternations = 1)
+      flavor = "opq-dense", alternations = 1)
     SimSearch.appendToPqIndex(emb.filter(col("vec_id") >= 12)
       .drop("cell"), dir2, "vec_id", "embedding", m = 2, dim = 64)
-    val (cb2, codes2, cen2) = SimSearch.readPqIndex(spark, dir2)
-    val rot2 = SimSearch.readPqIndexRot(spark, dir2).get
+    val SimSearch.PqIndex(cb2, codes2, cen2, frame2) =
+      SimSearch.readPqIndex(spark, dir2)
+    val rot2 = rotOf(frame2).get
     val appended = codes2.filter(col("vec_id") >= 12)
       .select("vec_id", "sub", "code")
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
@@ -706,8 +725,9 @@ class IvfSpec extends SparkSpec {
       .join(SimSearch.assignIvfCells(
         emb.filter(col("vec_id") >= 12), cen2, "vec_id", "embedding"),
         Seq("vec_id"))
-    val inline2 = SimSearch.pqEncodeResidualRotatedDense(reassigned,
-      cen2, rot2, cb2, "vec_id", "embedding", "cell", m = 2, dim = 64)
+    val inline2 = SimSearch.pqEncode(reassigned, cb2, "vec_id",
+      "embedding", m = 2, dim = 64,
+      frame = SimSearch.PqFrame.Rotated(cen2, rot2))
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2))
       .toMap
     assert(appended == inline2,
@@ -715,8 +735,10 @@ class IvfSpec extends SparkSpec {
     // a rebuild as a PLAIN index clears the stale rot marker
     SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
       m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
-    assert(SimSearch.readPqIndexRot(spark, dir).isEmpty,
+    assert(rotOf(SimSearch.readPqIndex(spark, dir).frame).isEmpty,
       "stale rot marker survived a plain rebuild")
+    assert(SimSearch.readPqIndex(spark, dir).frame == SimSearch.PqFrame.Raw,
+      "stale residual marker survived a plain rebuild")
   }
 
   test("appendToPqIndex: new vectors encode against the FROZEN " +
@@ -743,7 +765,8 @@ class IvfSpec extends SparkSpec {
     // at-least-once replay: already-indexed ids anti-join away
     SimSearch.appendToPqIndex(extra, dir, "vec_id", "embedding",
       m = 2, dim = 64)
-    val (cb, codes, cen) = SimSearch.readPqIndex(spark, dir)
+    val SimSearch.PqIndex(cb, codes, cen, _) =
+      SimSearch.readPqIndex(spark, dir)
     assert(codes.count() == 32, "16 vectors x m=2 codes expected")
     assert(codes.select("vec_id").distinct().count() == 16)
     // appended rows live in the cell the serving probe would search
@@ -789,7 +812,8 @@ class IvfSpec extends SparkSpec {
       .createTempDirectory("pqidx").toString
     SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
       m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
-    val (cb, codes, centroids) = SimSearch.readPqIndex(spark, dir)
+    val SimSearch.PqIndex(cb, codes, centroids, _) =
+      SimSearch.readPqIndex(spark, dir)
     assert(cb.count() == 4 && codes.count() == 32 &&
       centroids.count() == 4)
     // the cell partition column survives the parquet round-trip and
@@ -816,6 +840,17 @@ class IvfSpec extends SparkSpec {
     assert(fromIndex == inline)
   }
 
+  /** The learned transform a loaded index's frame carries, if any. */
+  private def permOf(f: SimSearch.PqFrame) = f match {
+    case SimSearch.PqFrame.Permuted(_, perm) => Some(perm)
+    case _ => None
+  }
+
+  private def rotOf(f: SimSearch.PqFrame) = f match {
+    case SimSearch.PqFrame.Rotated(_, rot) => Some(rot)
+    case _ => None
+  }
+
   private def lifecycleFixture() = {
     def vec(d0: Float, d32: Float): Array[Float] = {
       val a = Array.fill(64)(0.0f)
@@ -831,10 +866,12 @@ class IvfSpec extends SparkSpec {
 
   private def serveRefined(dir: String,
       emb: org.apache.spark.sql.DataFrame) = {
-    val (cb, codes, cen) = SimSearch.readPqIndex(spark, dir)
-    SimSearch.ivfPqTopKRefined(codes, cb, cen,
-      emb.filter(col("vec_id") < 4), emb, "vec_id", "embedding",
-      "vec_id", m = 2, k = 4, candidates = 8, nprobe = 2, dim = 64)
+    val idx = SimSearch.readPqIndex(spark, dir)
+    val queries = emb.filter(col("vec_id") < 4)
+    SimSearch.rerankExact(SimSearch.ivfPqTopK(idx.codes, idx.codebooks,
+      idx.centroids, queries, "vec_id", "embedding", "vec_id", m = 2,
+      k = 8, nprobe = 2, dim = 64, frame = idx.frame), queries, emb,
+      "vec_id", "embedding", "vec_id", k = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
   }
@@ -860,7 +897,8 @@ class IvfSpec extends SparkSpec {
     // never refit models)
     val inlineCb = SimSearch.pqFit(emb, "vec_id", "embedding",
       m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
-    val inline = SimSearch.ivfPqTopKRefined(
+    val queries = emb.filter(col("vec_id") < 4)
+    val inline = SimSearch.rerankExact(SimSearch.ivfPqTopK(
       SimSearch.pqEncode(emb, inlineCb, "vec_id", "embedding",
         m = 2, dim = 64)
         .join(emb.select(col("vec_id"), col("cell")), Seq("vec_id"))
@@ -868,8 +906,9 @@ class IvfSpec extends SparkSpec {
       inlineCb,
       SimSearch.ivfCentroids(emb, "vec_id", "embedding", "cell",
         dim = 64, bucketWidth = 4L),
-      emb.filter(col("vec_id") < 4), emb, "vec_id", "embedding",
-      "vec_id", m = 2, k = 4, candidates = 8, nprobe = 2, dim = 64)
+      queries, "vec_id", "embedding", "vec_id", m = 2, k = 8,
+      nprobe = 2, dim = 64), queries, emb, "vec_id", "embedding",
+      "vec_id", k = 4)
       .collect().map(r => (r.getLong(0), r.getInt(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     assert(tombstoned == inline)
@@ -907,13 +946,13 @@ class IvfSpec extends SparkSpec {
     // snapshot gen 1 still resolves: the pristine codes dir AND its
     // tombstone batch are inside the window; both reads agree on the
     // survivors (the snapshot anti-joins its own tombstones)
-    val (_, snap1, _) = SimSearch.readPqIndex(spark, dir, 1L)
+    val snap1 = SimSearch.readPqIndex(spark, dir, 1L).codes
     assert(snap1.count() == (16L - 2L) * 2L)
     assert(new java.io.File(s"$dir/codes").isDirectory,
       "retained snapshot's codes generation must survive GC")
     // THE LIVENESS CASE: a frame resolved on the current snapshot
     // survives a retain=2 compaction mid-scan
-    val (_, midScan, _) = SimSearch.readPqIndex(spark, dir)
+    val midScan = SimSearch.readPqIndex(spark, dir).codes
     SimSearch.compactPqIndex(spark, dir, retain = 2) // gen 3
     assert(midScan.count() == (16L - 2L) * 2L)
     assert(SimSearch.pqGenerations(spark, dir) == Seq(2L, 3L))

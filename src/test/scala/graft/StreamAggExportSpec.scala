@@ -680,10 +680,11 @@ class StreamAggExportSpec extends SparkSpec {
       cellCol = Some("cell"))
     val queries = all.filter(col("vec_id") < 3)
     def serve(path: String): Set[(Long, Long)] = {
-      val (cb, codes, cen) = SimSearch.readPqIndex(spark, path)
-      SimSearch.ivfPqTopKRefined(codes, cb, cen, queries, all,
-        "vec_id", "embedding", "vec_id", m = 2, k = 5,
-        candidates = 20, nprobe = 2, dim = 8)
+      val idx = SimSearch.readPqIndex(spark, path)
+      SimSearch.rerankExact(SimSearch.ivfPqTopK(idx.codes, idx.codebooks,
+        idx.centroids, queries, "vec_id", "embedding", "vec_id", m = 2,
+        k = 20, nprobe = 2, dim = 8, frame = idx.frame), queries, all,
+        "vec_id", "embedding", "vec_id", k = 5)
         .select("qid", "neighbor").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     }
