@@ -5268,7 +5268,8 @@ object SparkEntry {
       graft.text.Bm25.deleteFromBm25Index(
         d.filter(col("doc_id") % 5 === 0).select(col("doc_id")), p,
         "doc_id", retain = 2)
-      require(graft.text.Bm25.bm25Generations(s, p) == Seq(1L, 2L),
+      require(
+        graft.text.Bm25.bm25Marker.listGenerations(s, p) == Seq(1L, 2L),
         "retain=2 must keep the pre-delete snapshot readable")
       val queries = Seq(
         (1L, "spark"), (1L, "join"), (1L, "window"),

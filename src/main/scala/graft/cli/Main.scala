@@ -185,7 +185,8 @@ object Main {
     // the committed signed-index snapshots still inside the window
     cmd("sign-generations", "<indexDir>") {
       case indexDir :: Nil => spark =>
-        val gens = graft.text.Dedup.signedGenerations(spark, indexDir)
+        val gens = graft.text.Dedup.signedMarker
+          .listGenerations(spark, indexDir)
         println(s"[sign-generations] ${gens.mkString(",")}")
     },
 
@@ -369,7 +370,8 @@ object Main {
     // list the ANN index snapshots still inside the retention window
     cmd("ann-generations", "<indexDir>") {
       case indexDir :: Nil => spark =>
-        val gens = graft.sim.SimSearch.annGenerations(spark, indexDir)
+        val gens = graft.sim.SimSearch.annMarker
+          .listGenerations(spark, indexDir)
         println(s"[ann-generations] ${gens.mkString(",")}")
     },
 
@@ -574,7 +576,8 @@ object Main {
     // the committed PQ snapshots still inside the retention window
     cmd("pq-generations", "<idx>") {
       case idxPath :: Nil => spark =>
-        val gens = graft.sim.SimSearch.pqGenerations(spark, idxPath)
+        val gens = graft.sim.SimSearch.pqMarker
+          .listGenerations(spark, idxPath)
         println(s"[pq-generations] ${gens.mkString(",")}")
     },
 
@@ -1155,8 +1158,7 @@ object Main {
       case corpus :: indexDir :: rest => spark =>
         val df = loadCorpus(spark, corpus, rest)
         graft.text.Bm25.appendToBm25Index(df, "text", "doc_id", indexDir)
-        val n = spark.read.parquet(s"$indexDir/stats")
-          .agg(org.apache.spark.sql.functions.sum("n_docs")).head().get(0)
+        val n = graft.text.Bm25.indexStats(spark, indexDir).head().get(0)
         println(s"[bm25-append] index now covers $n docs")
     },
 
@@ -1183,7 +1185,8 @@ object Main {
     // list the BM25 index snapshots still inside the retention window
     cmd("bm25-generations", "<indexDir>") {
       case indexDir :: Nil => spark =>
-        val gens = graft.text.Bm25.bm25Generations(spark, indexDir)
+        val gens = graft.text.Bm25.bm25Marker
+          .listGenerations(spark, indexDir)
         println(s"[bm25-generations] ${gens.mkString(",")}")
     },
 

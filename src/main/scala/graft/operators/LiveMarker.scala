@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** Resolved lifecycle state of a marker-committed index: the ruling
   * generation, the live data directory per family (relative to the
@@ -20,12 +21,16 @@ private[graft] final case class LiveState(
   def dir(family: String): String = dirs(family)
 }
 
-/** The `_live` marker-generation commit protocol shared by the
-  * persisted index families (PQ codes pioneered it —
-  * `sim/SimSearch.scala` — BM25 postings and ANN vectors reuse it
-  * through this class): every mutation lands as WRITE-ONCE
+/** The `_live` marker-generation commit protocol of the persisted
+  * index families — BM25 postings (`text/Bm25.scala`), ANN vectors and
+  * PQ codes (`sim/SimSearch.scala`), signed MinHash rows
+  * (`text/Dedup.scala`). Every mutation lands as WRITE-ONCE
   * directories plus ONE marker PUT, so it is atomic on any
-  * PUT-consistent store (object stores included, no renames).
+  * PUT-consistent store (object stores included, no renames). This
+  * class owns the commit order; a family supplies only its data
+  * writes, its reads and its input validation. (PQ commits its
+  * deletes and compactions here; its creation stays marker-less and
+  * its appends land in the live codes directory.)
   *
   *   - the marker file `_live.<gen %019d>` names the live directory
   *     of each data family (`<field>:<dir>`), the outstanding
@@ -36,10 +41,16 @@ private[graft] final case class LiveState(
   *   - READERS resolve through the newest complete marker (absent =
   *     the pristine layout: each family at its plain directory, no
   *     batches) and never delete anything;
-  *   - WRITERS call [[heal]] before (clear a crashed predecessor's
-  *     orphans, which would collide with `errorifexists` writes) and
-  *     after (GC superseded state outside the retention window)
-  *     their marker PUT;
+  *   - WRITERS run one commit order. [[create]]: clear the tree,
+  *     write the `_bootstrap` intent, run the family's writes, PUT
+  *     gen 1, clear the intent. [[append]], [[delete]] and
+  *     [[compact]]: heal (clear a crashed predecessor's orphans,
+  *     which would collide with `errorifexists` writes), read the
+  *     ruling state, number the batch or generation `gen + 1`, run
+  *     the family's write-once writes, PUT the marker, heal again
+  *     (GC superseded state outside the retention window). A crash
+  *     before the PUT leaves unreferenced directories: the mutation
+  *     did not happen, and the next writer's heal clears them;
   *   - RETENTION ([[PoolCommit.heal]]'s contract, ported): `retain`
   *     = how many committed snapshots stay readable (1 = only the
   *     ruling one — the minimum). Retained superseded markers keep
@@ -50,13 +61,17 @@ private[graft] final case class LiveState(
   *     [[readAt]] give the index the same audit/rollback snapshot
   *     reads the pool has. The retention window is PERSISTED in the
   *     marker (`ret:`) and monotone: every commit records
-  *     `max(persisted, passed)` and every [[heal]] honors
+  *     `max(persisted, passed)` and every heal honors
   *     `max(persisted, passed)`, so the window is a property of the
   *     INDEX set at create time — a lifecycle call that defaults
   *     `retain` to 1 keeps the persisted window, and passing a
   *     larger value raises it for every later call. (Shrinking the
   *     window means rebuilding the index — deliberately not a
   *     drive-by option.);
+  *   - EXACTLY-ONCE streams: a create or append records the stream
+  *     batch id (`appliedId`, -1 = not a stream batch) in the same
+  *     PUT as its data, and [[streamStep]] skips a batch the marker
+  *     already records;
   *   - single-writer discipline per index: concurrent writers trip
   *     the `errorifexists` batch/generation writes loudly; readers
   *     that resolve inside the retention window are safe, including
@@ -71,10 +86,11 @@ private[graft] final case class LiveState(
   *                   and append batches (e.g. `postings_batches`)
   *                   alike; batch numbers are globally unique (the
   *                   gen counter), so one keep-set serves all roots
+  * @param name the index kind named in error messages (`bm25`, ...)
   */
 private[graft] final class LiveMarker(
     families: Seq[(String, String, String)],
-    batchRoots: Seq[String]) {
+    batchRoots: Seq[String], name: String = "index") {
 
   private val Prefix = "_live."
   private val Intent = "_bootstrap"
@@ -117,65 +133,160 @@ private[graft] final class LiveMarker(
   def read(fs: FileSystem, path: String): LiveState =
     complete(fs, path).headOption.map(_._2).getOrElse(pristine)
 
+  /** [[read]] on the file system that owns `path`. */
+  def read(spark: SparkSession, path: String): LiveState =
+    read(LiveRead.fs(spark, path), path)
+
   /** The committed snapshot generations still on disk, oldest first —
     * every entry is readable via [[readAt]] until a writer's GC ages
     * it out of the retention window.
     */
-  def listGenerations(fs: FileSystem, path: String): Seq[Long] =
-    complete(fs, path).map(_._2.gen).sorted
+  def listGenerations(spark: SparkSession, path: String): Seq[Long] =
+    complete(LiveRead.fs(spark, path), path).map(_._2.gen).sorted
 
   /** TIME-TRAVEL resolve: the state exactly as committed by marker
     * `gen` — audit/rollback ("what did the index serve before this
     * takedown batch?"). The snapshot must still be inside the
     * retention window; reads never extend or shrink that window.
     */
-  def readAt(fs: FileSystem, path: String, gen: Long): LiveState =
-    complete(fs, path).find(_._2.gen == gen).map(_._2)
-      .getOrElse(throw new IllegalArgumentException(
+  def readAt(spark: SparkSession, path: String, gen: Long): LiveState =
+    complete(LiveRead.fs(spark, path), path).find(_._2.gen == gen)
+      .map(_._2).getOrElse(throw new IllegalArgumentException(
         s"no snapshot gen=$gen under $path; on disk: " +
-          s"${listGenerations(fs, path).mkString(",")} " +
+          s"${listGenerations(spark, path).mkString(",")} " +
           "(aged out? raise the lifecycle calls' retain)"))
 
-  /** Record an in-progress CREATE (write AFTER clearing the tree,
-    * BEFORE the first data write): distinguishes "crashed bootstrap,
-    * safe to re-run idempotently" from "index tree with no marker =
-    * legacy or foreign layout, do NOT clobber". The creator removes
-    * it right after its commit PUT; [[heal]] also clears it once a
-    * complete marker exists.
+  /** CREATE: clear the whole tree (a rebuild never inherits stale
+    * lifecycle state — a surviving tombstone set would silently
+    * anti-join fresh ids out of the new index), record the
+    * `_bootstrap` intent, run `write` (the family's plain
+    * directories), then commit the pristine layout as snapshot gen 1
+    * with `appliedId` and clear the intent. The intent tells a
+    * crashed bootstrap (safe to re-run) apart from a marker-less
+    * legacy or foreign tree (see [[streamStep]]).
     */
-  def markBootstrap(fs: FileSystem, path: String): Unit = {
-    fs.mkdirs(new Path(path))
-    fs.create(new Path(path, Intent), true).close()
+  def create(spark: SparkSession, path: String, appliedId: Long,
+      retain: Int)(write: => Unit): Unit = {
+    val fs = LiveRead.fs(spark, path)
+    val root = new Path(path)
+    if (fs.exists(root) && !fs.delete(root, true))
+      throw new java.io.IOException(
+        s"$name index rebuild failed to clear $path")
+    fs.mkdirs(root)
+    fs.create(new Path(root, Intent), true).close()
+    write
+    put(fs, path, pristine.copy(gen = 1L, applied = appliedId), retain)
+    clearBootstrap(fs, path)
+  }
+
+  /** APPEND batch `b = gen + 1`: `write(b)` lands the family's
+    * write-once `batch=<b>` segment dirs and reports whether it wrote
+    * one. A batch with no rows writes nothing (a zero-row partitioned
+    * write leaves a part-less directory that bricks every later read)
+    * and commits only `appliedId`, when newer, so exactly-once still
+    * holds.
+    */
+  def append(spark: SparkSession, path: String, retain: Int,
+      appliedId: Long)(write: Long => Boolean): Unit =
+    commit(spark, path, retain) { (live, b) =>
+      if (write(b)) Some(live.copy(gen = b, appends = live.appends :+ b,
+        applied = math.max(live.applied, appliedId)))
+      else if (appliedId > live.applied)
+        Some(live.copy(gen = b, applied = appliedId))
+      else None
+    }
+
+  /** DELETE batch `b = gen + 1`: `write(live, b)` lands the family's
+    * write-once `tombstones/batch=<b>` (and any companion) dirs.
+    */
+  def delete(spark: SparkSession, path: String, retain: Int)(
+      write: (LiveState, Long) => Unit): Unit =
+    commit(spark, path, retain) { (live, b) =>
+      write(live, b)
+      Some(live.copy(gen = b, batches = live.batches :+ b))
+    }
+
+  /** COMPACT into generation `gen + 1`: `write(live, next)` rewrites
+    * `live`'s rows minus its tombstones into each family's
+    * `next.dir(field)` (`<genPrefix><gen>`); `next` commits with empty
+    * batch lists, carrying the applied id and the retention window.
+    */
+  def compact(spark: SparkSession, path: String, retain: Int)(
+      write: (LiveState, LiveState) => Unit): Unit =
+    commit(spark, path, retain) { (live, gen) =>
+      val next = LiveState(gen,
+        families.map(f => f._1 -> s"${f._3}$gen").toMap,
+        Seq.empty, Seq.empty, live.applied, live.retain)
+      write(live, next)
+      Some(next)
+    }
+
+  /** Compaction POLICY: run `compact` when the outstanding append +
+    * tombstone batch count exceeds `maxSegments` — serving unions
+    * every outstanding segment per read, so an unbounded stream
+    * lifetime means unbounded per-read union width unless something
+    * schedules the compaction. Returns true when one ran. Safe
+    * mid-stream: the compacted marker carries the applied id forward.
+    */
+  def compactIfNeeded(spark: SparkSession, path: String,
+      maxSegments: Int)(compact: => Unit): Boolean = {
+    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
+    val live = read(spark, path)
+    if (live.batches.size + live.appends.size > maxSegments) {
+      compact; true
+    } else false
+  }
+
+  /** One stream micro-batch `batchId`. No committed marker means
+    * nothing ever landed (a crashed bootstrap left no commit), so
+    * `bootstrap` (the family's create, which clears the tree) runs —
+    * unless the tree has content but neither a marker nor a
+    * `_bootstrap` intent: that is a legacy (pre-marker) or foreign
+    * layout, and this throws instead of silently deleting it. A
+    * marker that already records `applied >= batchId` makes the batch
+    * a replay, which is skipped; otherwise `append` runs.
+    * `maxSegments > 0` then runs [[compactIfNeeded]] with `compact`.
+    */
+  def streamStep(spark: SparkSession, path: String, batchId: Long,
+      maxSegments: Int)(bootstrap: => Unit, append: => Unit,
+      compact: => Unit): Unit = {
+    val fs = LiveRead.fs(spark, path)
+    complete(fs, path).headOption match {
+      case None =>
+        val root = new Path(path)
+        if (fs.exists(root) && !fs.exists(new Path(root, Intent)) &&
+            fs.listStatus(root).nonEmpty)
+          throw new IllegalStateException(
+            s"$name index tree at $path has content but no _live " +
+              "marker and no _bootstrap intent: this is a legacy or " +
+              "foreign index layout the stream refuses to clobber — " +
+              "rebuild it explicitly with the family's create call " +
+              "(which overwrites by contract) or point the stream at " +
+              "a fresh path")
+        bootstrap
+      case Some((_, live)) if live.applied >= batchId => ()
+      case _ => append
+    }
+    if (maxSegments > 0) compactIfNeeded(spark, path, maxSegments)(compact)
+  }
+
+  /** The writer order [[append]], [[delete]] and [[compact]] share:
+    * heal, read, let `step` write batch/generation `gen + 1` and name
+    * the state to commit (None = nothing to commit), PUT it, heal.
+    */
+  private def commit(spark: SparkSession, path: String, retain: Int)(
+      step: (LiveState, Long) => Option[LiveState]): Unit = {
+    val fs = LiveRead.fs(spark, path)
+    heal(fs, path, retain)
+    val live = read(fs, path)
+    step(live, live.gen + 1L).foreach(put(fs, path, _, retain))
+    heal(fs, path, retain)
   }
 
   /** Remove the bootstrap-intent file (creator, after its PUT). */
-  def clearBootstrap(fs: FileSystem, path: String): Unit = {
+  private def clearBootstrap(fs: FileSystem, path: String): Unit = {
     val p = new Path(path, Intent)
     if (fs.exists(p)) fs.delete(p, false)
-  }
-
-  /** Loud guard for a STREAM bootstrap decision: throws when
-    * re-running the family's create would silently delete an index
-    * this protocol never committed — a tree with content but neither
-    * a complete `_live` marker nor a `_bootstrap` intent file is a
-    * legacy (pre-marker) or foreign layout, and "no marker = nothing
-    * ever landed" does not hold for it. A missing/empty tree and a
-    * crashed bootstrap (intent present) are safe to (re-)create.
-    */
-  def assertBootstrapSafe(fs: FileSystem, path: String,
-      family: String): Unit = {
-    val root = new Path(path)
-    if (!fs.exists(root)) return
-    if (complete(fs, path).nonEmpty) return
-    if (fs.exists(new Path(root, Intent))) return
-    if (fs.listStatus(root).nonEmpty)
-      throw new IllegalStateException(
-        s"$family index tree at $path has content but no _live " +
-          "marker and no _bootstrap intent: this is a legacy or " +
-          "foreign index layout the stream refuses to clobber — " +
-          "rebuild it explicitly with the family's create call " +
-          "(which overwrites by contract) or point the stream at a " +
-          "fresh path")
   }
 
   /** Commit `state` with one marker PUT (create-exclusive: a gen
@@ -183,9 +294,11 @@ private[graft] final class LiveMarker(
     * retention is monotone: the marker records
     * `max(state.retain, retain)`, so a lifecycle call can RAISE the
     * index's window (pass a bigger value) but never silently collapse
-    * one a previous writer persisted.
+    * one a previous writer persisted. Families commit only through
+    * the lifecycle methods above; the package sees it so a spec can
+    * pin the marker bytes.
     */
-  def put(fs: FileSystem, path: String, state: LiveState,
+  private[graft] def put(fs: FileSystem, path: String, state: LiveState,
       retain: Int = 1): Unit = {
     val eff = state.copy(retain = math.max(state.retain, retain))
     MarkerFile.put(fs, path, Prefix, eff.gen,
@@ -201,11 +314,11 @@ private[graft] final class LiveMarker(
     * generations and delete/append batches referenced by none of the
     * newest-`retain` complete markers — including the orphans of a
     * crash before a marker PUT (which would collide with the next
-    * `errorifexists` write). Called from the lifecycle writers only;
-    * readers resolve through a marker and never GC. Idempotent; must
-    * never run beside an in-flight commit (single-writer protocol).
+    * `errorifexists` write). Readers resolve through a marker and
+    * never GC. Idempotent; must never run beside an in-flight commit
+    * (single-writer protocol).
     */
-  def heal(fs: FileSystem, path: String, retain: Int = 1): Unit = {
+  private def heal(fs: FileSystem, path: String, retain: Int): Unit = {
     require(retain >= 1, s"retain must be >= 1, got $retain")
     val root = new Path(path)
     if (!fs.exists(root)) return

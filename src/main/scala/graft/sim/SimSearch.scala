@@ -200,9 +200,9 @@ object SimSearch {
   //                  through [[readAnnIndex]]
   //   _live.<gen>    the ruling-state marker (see [[LiveMarker]])
 
-  private val annMarker = new graft.operators.LiveMarker(
+  private[graft] val annMarker = new graft.operators.LiveMarker(
     Seq(("vectors", "vectors", "vectors_gen=")),
-    Seq("tombstones", "vectors_batches"))
+    Seq("tombstones", "vectors_batches"), "ann")
 
   private[graft] def annMeta(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int, String, String) = {
@@ -223,75 +223,56 @@ object SimSearch {
     if (df.rdd.getNumPartitions < width) df.repartition(width) else df
   }
 
+  /** The bucket-keyed `(id, vec, bucket)` rows of `emb`. The per-row
+    * plane dot products are the expensive pass: run them post-spread,
+    * not glued to the input split layout.
+    */
+  private def annBucketed(emb: DataFrame, idCol: String, vecCol: String,
+      planes: Int, dim: Int): DataFrame =
+    spreadIfNarrow(emb.select(col(idCol), col(vecCol)))
+      .select(col(idCol), col(vecCol),
+        simhashBucket(col(vecCol), planes, dim).as("bucket"))
+
+  /** Write bucket-partitioned vectors, clustered by bucket first. */
+  private def writeVectors(vectors: DataFrame, dir: String,
+      mode: String): Unit =
+    graft.operators.WriteLayout.clusterBy(vectors, "bucket")
+      .write.mode(mode).partitionBy("bucket").parquet(dir)
+
   /** Persist the ANN corpus as a bucket-partitioned parquet index
-    * (see the layout block above). Overwrites the ENTIRE `path` tree
-    * — including tombstones, gen directories, and `_live` markers
-    * from a previous index at the same path — so a rebuild can never
-    * inherit stale lifecycle state. The write-once artifact that
-    * turns ANN serving into a partition-pruned scan; LSH parameters
-    * are persisted in `meta` and validated on append.
+    * (see the layout block above), committed by
+    * [[graft.operators.LiveMarker.create]] (clears the whole tree
+    * first; `appliedId` records a stream bootstrap's batch id). The
+    * write-once artifact that turns ANN serving into a
+    * partition-pruned scan; LSH parameters are persisted in `meta`
+    * and validated on append.
     */
   def writeAnnIndex(
       emb: DataFrame, path: String, idCol: String, vecCol: String,
       planes: Int = 12, dim: Int = 64, appliedId: Long = -1L,
       retain: Int = 1): Unit = {
     val spark = emb.sparkSession
-    val fs = LiveRead.fs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(
-        s"ann index rebuild failed to clear $path")
-    // intent file: a crash mid-create reads as "bootstrap in
-    // progress" to assertAnnStreamBootstrapSafe, not a legacy layout
-    annMarker.markBootstrap(fs, path)
-    // the per-row plane dot products are the expensive pass: run them
-    // post-spread, not glued to the input split layout
-    val vectors = spreadIfNarrow(emb.select(col(idCol), col(vecCol)))
-      .select(col(idCol), col(vecCol),
-        simhashBucket(col(vecCol), planes, dim).as("bucket"))
-    // frozen creation parameters as a driver-written file — a 1-row
-    // parquet meta dir costs a Spark job per write and per read
-    MetaFile.write(fs, s"$path/meta", Seq(
-      "planes" -> planes.toString, "dim" -> dim.toString,
-      "id_col" -> idCol, "vec_col" -> vecCol,
-      "schema" -> LiveRead.schemaDdl(vectors.schema)))
-    graft.operators.WriteLayout.clusterBy(vectors, "bucket")
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/vectors")
-    // commit creation as snapshot gen 1: keeps the pristine state
-    // readAt-addressable and lets a stream bootstrap record its
-    // applied batch id atomically with the data
-    annMarker.put(fs, path, graft.operators.LiveState(1L,
-      Map("vectors" -> "vectors"), Seq.empty, Seq.empty, appliedId),
-      retain)
-    annMarker.clearBootstrap(fs, path)
+    annMarker.create(spark, path, appliedId, retain) {
+      val vectors = annBucketed(emb, idCol, vecCol, planes, dim)
+      // frozen creation parameters as a driver-written file — a 1-row
+      // parquet meta dir costs a Spark job per write and per read
+      MetaFile.write(LiveRead.fs(spark, path), s"$path/meta", Seq(
+        "planes" -> planes.toString, "dim" -> dim.toString,
+        "id_col" -> idCol, "vec_col" -> vecCol,
+        "schema" -> LiveRead.schemaDdl(vectors.schema)))
+      writeVectors(vectors, s"$path/vectors", "overwrite")
+    }
   }
-
-  /** Guard a STREAM's bootstrap decision ([[graft.streaming
-    * .StreamingAnn]]): throws instead of letting the stream
-    * re-bootstrap over an index tree this protocol never committed —
-    * see [[graft.operators.LiveMarker.assertBootstrapSafe]].
-    */
-  def assertAnnStreamBootstrapSafe(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    annMarker.assertBootstrapSafe(LiveRead.fs(spark, path), path, "ann")
 
   /** Append NEW vectors to a persisted ANN index (caller contract:
     * ids must not already be live in the index — dedupe upstream).
     * The batch buckets under the index's PERSISTED LSH parameters
     * (validated against the caller's column names — a silently
     * different fan-out would strand the new vectors where probes
-    * never look). MARKER-COMMITTED (the delete-batch discipline
-    * applied to appends): the batch lands as a write-once
-    * `vectors_batches/batch=<B>` segment and the commit is ONE
-    * `_live` marker PUT — a crash before the PUT leaves the segment
-    * unreferenced (the next writer's heal clears it; a retry or
-    * streaming replay lands once), so a replayed batch can never
-    * double-insert vectors. Nothing existing is rewritten.
-    *
-    * `retain` = committed snapshots kept readable; `appliedId` =
-    * stream batch id recorded atomically with the commit (-1 = not
-    * a stream batch).
+    * never look) and lands as a write-once
+    * `vectors_batches/batch=<B>` segment
+    * ([[graft.operators.LiveMarker.append]]), so a replayed batch can
+    * never double-insert vectors. Nothing existing is rewritten.
     */
   def appendToAnnIndex(
       emb: DataFrame, path: String, idCol: String, vecCol: String,
@@ -301,109 +282,56 @@ object SimSearch {
     require(idCol == metaId && vecCol == metaVec,
       s"ann index at $path stores ($metaId, $metaVec); " +
         s"append offered ($idCol, $vecCol)")
-    val fs = LiveRead.fs(spark, path)
-    annMarker.heal(fs, path, retain) // clear crashed-writer orphans
-    val live = annMarker.read(fs, path)
-    val b = live.gen + 1L
-    val seg = spreadIfNarrow(emb.select(col(idCol), col(vecCol)))
-      .select(col(idCol), col(vecCol),
-        simhashBucket(col(vecCol), planes, dim).as("bucket"))
-      .persist()
-    if (seg.isEmpty) {
-      // the Bm25 empty-batch guard (same hazard: a zero-row
-      // partitionBy write leaves a part-less batch dir the marker
-      // would reference) — commit only the applied fact
+    annMarker.append(spark, path, retain, appliedId) { b =>
+      val seg = annBucketed(emb, idCol, vecCol, planes, dim).persist()
+      val wrote = !seg.isEmpty
+      if (wrote)
+        writeVectors(seg, s"$path/vectors_batches/batch=$b",
+          "errorifexists")
       seg.unpersist()
-      if (appliedId > live.applied)
-        annMarker.put(fs, path, live.copy(gen = b,
-          applied = appliedId), retain)
-    } else {
-      graft.operators.WriteLayout.clusterBy(seg, "bucket")
-        .write.mode("errorifexists").partitionBy("bucket")
-        .parquet(s"$path/vectors_batches/batch=$b")
-      seg.unpersist()
-      annMarker.put(fs, path, live.copy(gen = b,
-        appends = live.appends :+ b,
-        applied = math.max(live.applied, appliedId)), retain)
+      wrote
     }
-    annMarker.heal(fs, path, retain)
   }
 
   /** Tombstone-delete ids from a persisted ANN index — the
     * dense-retrieval absorber of the removal-audit pipeline's
     * verdicts WITHOUT a rebuild (the q265 PQ discipline): `ids` (ONE
     * column, named exactly as the index's id column) land as a
-    * write-once `tombstones/batch=<B>` dir and the commit is the
-    * next `_live` marker PUT. Every read through [[readAnnIndex]]
-    * anti-joins the batches, so a deleted id can never surface from
-    * any probe. Ids absent from the index are harmless no-ops; a
-    * crash before the PUT leaves the batch unreferenced (the delete
-    * did not happen — retry).
+    * write-once `tombstones/batch=<B>` dir
+    * ([[graft.operators.LiveMarker.delete]]). Every read through
+    * [[readAnnIndex]] anti-joins the batches, so a deleted id can
+    * never surface from any probe. Ids absent from the index are
+    * harmless no-ops.
     */
   def deleteFromAnnIndex(ids: DataFrame, path: String,
       retain: Int = 1): Unit = {
     val spark = ids.sparkSession
-    val fs = LiveRead.fs(spark, path)
-    val meta = MetaFile.read(fs, s"$path/meta")
+    val meta = LiveRead.meta(spark, path)
     val metaId = meta("id_col")
     require(ids.columns.toSeq == Seq(metaId),
       s"ids must be a single '$metaId' column frame, " +
         s"got ${ids.columns.mkString(",")}")
-    // clear any orphan of a crashed writer
-    annMarker.heal(fs, path, retain)
-    val live = annMarker.read(fs, path)
-    val b = live.gen + 1L
-    val idType = LiveRead.schema(spark, path, live,
-      "vectors", meta)(metaId).dataType
-    ids.select(col(metaId).try_cast(idType).as(metaId)).distinct()
-      .write.mode("errorifexists")
-      .parquet(s"$path/tombstones/batch=$b")
-    annMarker.put(fs, path,
-      live.copy(gen = b, batches = live.batches :+ b), retain)
-    annMarker.heal(fs, path, retain) // GC outside the window
+    annMarker.delete(spark, path, retain) { (live, b) =>
+      val idType = LiveRead.schema(spark, path, live,
+        "vectors", meta)(metaId).dataType
+      ids.select(col(metaId).try_cast(idType).as(metaId)).distinct()
+        .write.mode("errorifexists")
+        .parquet(s"$path/tombstones/batch=$b")
+    }
   }
 
-  /** [[graft.text.Bm25.compactBm25IndexIfNeeded]]'s policy for the
-    * ANN index: compact when outstanding append + tombstone batches
-    * exceed `maxSegments`. Returns true when one ran.
-    */
-  def compactAnnIndexIfNeeded(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      maxSegments: Int, retain: Int = 1): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val live = annMarker.read(LiveRead.fs(spark, path), path)
-    if (live.batches.size + live.appends.size > maxSegments) {
-      compactAnnIndex(spark, path, retain); true
-    } else false
-  }
-
-  /** Generation compaction: rewrite the live vectors (generation plus
-    * append segments) MINUS the accumulated tombstones into a fresh
-    * write-once `vectors_gen=<G>` dir and commit it (with empty batch
-    * lists) via one marker PUT; state outside the retention window
-    * GCs afterwards. Readers see the old generation + batch overlay
-    * or the new compacted one, never a mix, and a reader STILL
-    * MID-SCAN on a superseded snapshot survives as long as `retain`
-    * covers the longest expected scan (the
-    * [[graft.operators.PoolCommit]] retention contract — with the
-    * default `retain = 1` only the ruling snapshot's files stay on
-    * disk). Also collapses accumulated append small files.
+  /** Generation compaction ([[graft.operators.LiveMarker.compact]]):
+    * rewrite the live vectors (generation plus append segments) MINUS
+    * the accumulated tombstones into a fresh write-once
+    * `vectors_gen=<G>` dir. Also collapses accumulated append small
+    * files.
     */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, retain: Int = 1): Unit = {
-    val fs = LiveRead.fs(spark, path)
-    annMarker.heal(fs, path, retain)
-    val live = annMarker.read(fs, path)
-    val gen = live.gen + 1L
-    graft.operators.WriteLayout.clusterBy(
-      readAnnIndex(spark, path), "bucket")
-      .write.mode("errorifexists").partitionBy("bucket")
-      .parquet(s"$path/vectors_gen=$gen")
-    annMarker.put(fs, path, graft.operators.LiveState(gen,
-      Map("vectors" -> s"vectors_gen=$gen"),
-      Seq.empty, Seq.empty, live.applied, live.retain), retain)
-    annMarker.heal(fs, path, retain) // GC outside the window
-  }
+      path: String, retain: Int = 1): Unit =
+    annMarker.compact(spark, path, retain) { (live, next) =>
+      writeVectors(readAnnState(spark, path, live),
+        s"$path/${next.dir("vectors")}", "errorifexists")
+    }
 
   /** The LIVE rows of a persisted ANN index: the marker-resolved
     * vector generation plus its append segments, minus the tombstone
@@ -411,33 +339,17 @@ object SimSearch {
     */
   def readAnnIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    readAnnState(spark, path,
-      annMarker.read(LiveRead.fs(spark, path), path))
+    readAnnState(spark, path, annMarker.read(spark, path))
 
   /** SNAPSHOT read: the index exactly as committed by marker `gen` —
     * audit/rollback for the removal pipeline ("what did this probe
     * serve before the takedown batch?"). The snapshot must still be
-    * inside the retention window ([[annGenerations]] lists what is).
+    * inside the retention window (`annMarker.listGenerations` lists
+    * what is).
     */
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, gen: Long): DataFrame =
-    readAnnState(spark, path,
-      annMarker.readAt(LiveRead.fs(spark, path), path, gen))
-
-  /** The committed snapshot generations still readable, oldest
-    * first.
-    */
-  def annGenerations(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Long] =
-    annMarker.listGenerations(LiveRead.fs(spark, path), path)
-
-  /** The highest stream batch id committed into this index's marker
-    * chain (-1 = none) — [[graft.streaming.StreamingAnn]]'s
-    * exactly-once replay guard.
-    */
-  def lastAppliedStreamBatch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long =
-    annMarker.read(LiveRead.fs(spark, path), path).applied
+    readAnnState(spark, path, annMarker.readAt(spark, path, gen))
 
   /** `live`'s rows ([[LiveRead.rows]]). */
   private def readAnnState(spark: org.apache.spark.sql.SparkSession,
@@ -1122,8 +1034,7 @@ object SimSearch {
       cellCol: String, m: Int, k: Int, iters: Int, dim: Int = 64,
       bucketWidth: Long = 4096L, flavor: String = "plain",
       alternations: Int = 2): Unit = {
-    resetPqIndexLifecycle(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(emb.sparkSession.sessionState.newHadoopConf()), path)
+    resetPqIndexLifecycle(LiveRead.fs(emb.sparkSession, path), path)
     val cells = ivfCentroids(emb, idCol, vecCol, cellCol, dim, bucketWidth)
     // a residual frame's centroids feed fit, encode and the transform
     lazy val cen = cells.localCheckpoint()
@@ -1177,33 +1088,26 @@ object SimSearch {
     * are left alone.
     */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): PqIndex = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    readPqMeta(spark, fs, path, readPqLiveMeta(fs, path))
-  }
+      path: String): PqIndex =
+    readPqMeta(spark, path, pqMarker.read(spark, path))
 
   /** SNAPSHOT read: the index exactly as committed by marker `gen` —
     * audit/rollback for the removal pipeline, same contract as the
-    * BM25/ANN snapshot reads ([[pqGenerations]] lists what is still
-    * inside the retention window; lifecycle ops take `retain`).
+    * BM25/ANN snapshot reads (`pqMarker.listGenerations` lists what
+    * is still inside the retention window; lifecycle ops take
+    * `retain`).
     */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, gen: Long): PqIndex = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val s = pqMarker.readAt(fs, path, gen)
-    readPqMeta(spark, fs, path,
-      PqLiveMeta(s.gen, s.dir("codes"), s.batches))
-  }
+      path: String, gen: Long): PqIndex =
+    readPqMeta(spark, path, pqMarker.readAt(spark, path, gen))
 
   private def readPqMeta(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      meta: PqLiveMeta): PqIndex = {
+      path: String, live: graft.operators.LiveState): PqIndex = {
     val cen = spark.read.parquet(s"$path/centroids")
     PqIndex(spark.read.parquet(s"$path/codebooks"),
-      pqLiveCodes(spark, path, meta), cen,
-      pqFrameAt(fs, path, cen, d => spark.read.parquet(s"$path/$d")))
+      pqLiveCodes(spark, path, live), cen,
+      pqFrameAt(LiveRead.fs(spark, path), path, cen,
+        d => spark.read.parquet(s"$path/$d")))
   }
 
   /** The frame a persisted index's codes live in, from its marker
@@ -1798,31 +1702,29 @@ object SimSearch {
     * (`dedupeIds`): a duplicate (id, sub) row would make ADC's
     * per-(query, id) SUM count a subspace twice and corrupt the
     * distance — append must be idempotent for at-least-once writers.
-    * The anti-join reads an ids-only projection of the code table.
+    * The anti-join reads an ids-only projection of the code table,
+    * not deduplicated: an anti-join only asks whether a match exists.
     */
   def appendToPqIndex(emb: DataFrame, path: String, idCol: String,
       vecCol: String, m: Int, dim: Int = 64,
       cellCol: Option[String] = None,
       dedupeIds: Boolean = true): Unit = {
     val spark = emb.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = LiveRead.fs(spark, path)
     // appends land in the LIVE generation directory (post-compaction
     // that is `codes_gen=N`, not the original `codes`); the dedupe
     // anti-join runs against the PHYSICAL live codes — tombstoned ids
     // still hold rows there, so re-appending a deleted id is a no-op
     // until a [[compactPqIndex]] physically drops it (otherwise the
     // duplicate (id, sub) rows would double-count subspaces in ADC)
-    val meta = readPqLiveMeta(fs, path)
-    val liveCodesDir = s"$path/${meta.codesDir}"
+    val liveCodesDir = s"$path/${pqMarker.read(fs, path).dir("codes")}"
     val cb = spark.read.parquet(s"$path/codebooks").localCheckpoint()
     val cen = spark.read.parquet(s"$path/centroids").localCheckpoint()
     val frame = pqFrameAt(fs, path, cen,
       d => spark.read.parquet(s"$path/$d").localCheckpoint())
     val fresh =
       if (dedupeIds)
-        emb.join(spark.read.parquet(liveCodesDir)
-            .select(col(idCol)).distinct(),
+        emb.join(spark.read.parquet(liveCodesDir).select(col(idCol)),
           Seq(idCol), "left_anti")
       else emb
     val withCell = cellCol match {
@@ -1844,65 +1746,30 @@ object SimSearch {
   // The append-only index family above absorbs corpus GROWTH; a corpus
   // refresh that REMOVES documents (a dedup pass, a takedown, the
   // removal-audit pipeline's verdicts) needs the other half of the
-  // lifecycle. The protocol is the [[graft.streaming.MarkerStateStore]]
-  // commit discipline lifted to the index directory — object-store
-  // safe, nothing renamed or rewritten, commit is ONE write-once
-  // marker PUT:
+  // lifecycle, committed by the shared `_live` protocol
+  // ([[graft.operators.LiveMarker]] owns the commit order):
   //
-  //   <path>/_live.<gen, zero-padded>   write-once commit markers:
-  //       codes:<dir>                   the live codes directory
-  //       tomb:<b1,b2,…>                unfolded tombstone batch dirs
-  //       end                           footer (absent = torn = ignored)
+  //   <path>/_live.<gen, zero-padded>   write-once commit markers
   //   <path>/tombstones/batch=<B>/      write-once ids-only parquet
   //   <path>/codes_gen=<G>/             write-once compacted codes
   //
   // No marker = the pristine [[writePqIndex]] layout (codes at
-  // `codes`, no tombstones). [[deleteFromPqIndex]] writes a tombstone
-  // batch then PUTs the next marker; readers ([[readPqIndex]])
-  // anti-join the broadcast tombstone set so deleted ids never
-  // surface; [[compactPqIndex]] rewrites the live codes minus
-  // tombstones into a fresh generation and PUTs a marker with an
-  // empty tombstone list. A crash before any marker PUT leaves the
-  // new batch/generation unreferenced and invisible; writer-side heal
-  // GCs it on the next lifecycle operation. Readers NEVER GC (the
-  // reader/writer race the streaming store documents).
-  //
-  // Single-writer discipline: delete/compact/append must not run
-  // concurrently with each other on one index (the `errorifexists`
-  // writes fail loudly if they do); readers are always safe.
+  // `codes`, no tombstones). Readers ([[readPqIndex]]) anti-join the
+  // broadcast tombstone set so deleted ids never surface.
   // --------------------------------------------------------------------
 
   private val LiveMarkerPrefix = "_live."
 
-  /** The shared `_live` commit protocol instance for the PQ family —
-    * the discipline PQ pioneered, now the one
-    * [[graft.operators.LiveMarker]] implementation all three
-    * marker-committed index families (PQ, BM25, ANN) run on: same
-    * retention window, same snapshot reads, same torn-marker and
-    * orphan-GC semantics.
+  /** The PQ family's `_live` marker (the discipline PQ pioneered,
+    * shared by every marker-committed index family through
+    * [[graft.operators.LiveMarker]]). Its generations list is empty
+    * until the first delete/compact commit: creation is the pristine
+    * marker-less layout.
     */
-  private val pqMarker = new graft.operators.LiveMarker(
-    Seq(("codes", "codes", "codes_gen=")), Seq("tombstones"))
+  private[graft] val pqMarker = new graft.operators.LiveMarker(
+    Seq(("codes", "codes", "codes_gen=")), Seq("tombstones"), "pq")
 
-  /** Resolved lifecycle state: the ruling generation, the live codes
-    * directory (relative to the index root), and the not-yet-compacted
-    * tombstone batch numbers. (Adapter view over the shared
-    * [[graft.operators.LiveMarker]] state.)
-    */
-  private[graft] final case class PqLiveMeta(
-      gen: Long, codesDir: String, tombBatches: Seq[Long])
-
-  /** The ruling lifecycle state: newest complete `_live` marker, or
-    * the pristine layout (gen 0, codes at `codes`, no tombstones).
-    * Reader-safe — parses only, never deletes.
-    */
-  private[graft] def readPqLiveMeta(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): PqLiveMeta = {
-    val s = pqMarker.read(fs, path)
-    PqLiveMeta(s.gen, s.dir("codes"), s.batches)
-  }
-
-  /** The live code rows: the generation `meta` names minus its
+  /** The live code rows: the generation `live` names minus its
     * un-compacted tombstone ids (column = the index's id column, as
     * written by [[deleteFromPqIndex]]), anti-joined against the
     * BROADCAST tombstone set. The ids are not deduplicated: an
@@ -1910,26 +1777,15 @@ object SimSearch {
     * [[graft.operators.LiveRead.rows]] reasoning).
     */
   private def pqLiveCodes(spark: org.apache.spark.sql.SparkSession,
-      path: String, meta: PqLiveMeta): DataFrame = {
-    val codes = spark.read.parquet(s"$path/${meta.codesDir}")
-    if (meta.tombBatches.isEmpty) codes
+      path: String, live: graft.operators.LiveState): DataFrame = {
+    val codes = spark.read.parquet(s"$path/${live.dir("codes")}")
+    if (live.batches.isEmpty) codes
     else {
       val tomb = spark.read.parquet(
-        meta.tombBatches.map(b => s"$path/tombstones/batch=$b"): _*)
+        live.batches.map(b => s"$path/tombstones/batch=$b"): _*)
       codes.join(broadcast(tomb), tomb.columns.toSeq, "left_anti")
     }
   }
-
-  /** The committed PQ snapshot generations still readable (oldest
-    * first) — each addressable via the snapshot overload of
-    * [[readPqIndex]] until a lifecycle writer's GC ages it out of its
-    * `retain` window. Empty until the first delete/compact commit
-    * (creation is the pristine marker-less layout).
-    */
-  def pqGenerations(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Long] =
-    pqMarker.listGenerations(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf()), path)
 
   /** Reset the deletion lifecycle — called by every full
     * [[writePqIndex]] rebuild (any flavor) so a stale marker from a previous
@@ -1957,73 +1813,44 @@ object SimSearch {
     * absorber of the removal-audit pipeline's verdicts (takedowns,
     * dedup losers, redactions) WITHOUT a full rebuild: `ids` (ONE
     * column, named exactly as the index's id column) land as a
-    * write-once ids-only parquet batch under `tombstones/`, and the
-    * commit is the next `_live` marker PUT. Every reader resolves
+    * write-once ids-only parquet batch under `tombstones/`
+    * ([[graft.operators.LiveMarker.delete]]). Every reader resolves
     * through [[readPqIndex]], which anti-joins the broadcast tombstone
     * set — a deleted id can never surface again, from the ADC path or
-    * the refined path, at O(batch) write cost.
-    *
-    * Deletes accumulate as bounded model-side state until a
-    * [[compactPqIndex]] folds them into a fresh codes generation; a
-    * crash before the marker PUT leaves the batch unreferenced (the
-    * delete simply did not happen — retry), never a half-applied
-    * delete. Ids absent from the index are harmless no-ops in the
-    * anti-join.
+    * the refined path, at O(batch) write cost. Deletes accumulate
+    * until a [[compactPqIndex]] folds them into a fresh codes
+    * generation. Ids absent from the index are harmless no-ops.
     */
   def deleteFromPqIndex(ids: DataFrame, path: String,
       retain: Int = 1): Unit = {
     require(ids.columns.length == 1,
       s"ids must be a single-column (index id) frame, " +
         s"got ${ids.columns.mkString(",")}")
-    val spark = ids.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // clear any orphan of a crashed writer
-    pqMarker.heal(fs, path, retain)
-    val live = pqMarker.read(fs, path)
-    val b = live.gen + 1L
-    ids.distinct().write.mode("errorifexists")
-      .parquet(s"$path/tombstones/batch=$b")
-    pqMarker.put(fs, path,
-      live.copy(gen = b, batches = live.batches :+ b), retain)
-    pqMarker.heal(fs, path, retain) // GC outside the window
+    pqMarker.delete(ids.sparkSession, path, retain) { (_, b) =>
+      ids.distinct().write.mode("errorifexists")
+        .parquet(s"$path/tombstones/batch=$b")
+    }
   }
 
-  /** Generation compaction: rewrite the live codes MINUS the
-    * accumulated tombstones into a fresh write-once `codes_gen=<G>`
-    * directory and commit it (with an empty tombstone list) via one
-    * marker PUT; state outside the `retain` window GCs afterwards
-    * (the shared [[graft.operators.LiveMarker]] retention contract:
-    * readers mid-scan on a superseded snapshot survive whenever
-    * `retain` covers the longest expected scan — with the default
-    * `retain = 1` only the ruling snapshot's files stay on disk).
-    * Readers see either the old generation + tombstone anti-join or
-    * the new compacted generation — never an intermediate. Also
-    * collapses the small files of accumulated [[appendToPqIndex]]
-    * batches (one output file per cell partition per shuffle
-    * partition), so it doubles as the index's periodic
-    * file-compaction pass.
+  /** Generation compaction ([[graft.operators.LiveMarker.compact]]):
+    * rewrite the live codes MINUS the accumulated tombstones into a
+    * fresh write-once `codes_gen=<G>` directory. Also collapses the
+    * small files of accumulated [[appendToPqIndex]] batches (one
+    * output file per cell partition per shuffle partition), so it
+    * doubles as the index's periodic file-compaction pass.
     *
     * Cost: one scan + partitioned write of the code table (codes only
     * — raw vectors, codebooks and centroids are untouched). Run it on
     * the removal pipeline's cadence, not per delete.
     */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, retain: Int = 1): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    pqMarker.heal(fs, path, retain)
-    val state = pqMarker.read(fs, path)
-    val gen = state.gen + 1L
-    graft.operators.WriteLayout.clusterBy(pqLiveCodes(spark, path,
-      PqLiveMeta(state.gen, state.dir("codes"), state.batches)), "cell")
-      .write.mode("errorifexists").partitionBy("cell")
-      .parquet(s"$path/codes_gen=$gen")
-    pqMarker.put(fs, path, graft.operators.LiveState(gen,
-      Map("codes" -> s"codes_gen=$gen"),
-      Seq.empty, Seq.empty, state.applied, state.retain), retain)
-    pqMarker.heal(fs, path, retain) // GC outside the window
-  }
+      path: String, retain: Int = 1): Unit =
+    pqMarker.compact(spark, path, retain) { (live, next) =>
+      graft.operators.WriteLayout.clusterBy(
+        pqLiveCodes(spark, path, live), "cell")
+        .write.mode("errorifexists").partitionBy("cell")
+        .parquet(s"$path/${next.dir("codes")}")
+    }
 
   /** Random-projection dimensionality reduction: `outDim` fixed
     * md5-derived hyperplanes ([[planeWeight]] — no RNG state), each

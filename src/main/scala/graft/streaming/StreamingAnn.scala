@@ -45,7 +45,7 @@ object StreamingAnn {
   /** Ingest an embedding stream into the index at `indexPath`.
     * `maxSegments > 0` auto-compacts whenever the outstanding
     * append/tombstone segment count exceeds it
-    * ([[SimSearch.compactAnnIndexIfNeeded]]).
+    * ([[graft.operators.LiveMarker.compactIfNeeded]]).
     */
   def start(
       stream: DataFrame, indexPath: String, checkpoint: String,
@@ -77,28 +77,21 @@ object StreamingAnn {
       .start()
 
   /** One micro-batch of [[start]] — public so batch jobs (and tests)
-    * can drive the same incremental pipeline without a stream.
+    * can drive the same incremental pipeline without a stream. The
+    * bootstrap/replay/append decision is
+    * [[graft.operators.LiveMarker.streamStep]].
     */
   def processBatch(
       batch: DataFrame, batchId: Long, indexPath: String,
       idCol: String, vecCol: String, planes: Int = 12,
       dim: Int = 64, maxSegments: Int = 0): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return
-    // no committed marker = nothing ever landed (a crashed bootstrap
-    // left no commit) → (re-)bootstrap, which clears the tree. The
-    // guard throws on a marker-less tree WITHOUT a bootstrap intent
-    // (legacy/foreign layout) instead of silently deleting it.
-    if (SimSearch.annGenerations(spark, indexPath).isEmpty) {
-      SimSearch.assertAnnStreamBootstrapSafe(spark, indexPath)
-      SimSearch.writeAnnIndex(batch, indexPath, idCol, vecCol, planes,
-        dim, appliedId = batchId)
-    }
-    else if (SimSearch.lastAppliedStreamBatch(spark, indexPath) < batchId)
-      SimSearch.appendToAnnIndex(batch, indexPath, idCol, vecCol,
-        appliedId = batchId)
-    // else: replay of a committed batch — exactly-once skip
-    if (maxSegments > 0)
-      SimSearch.compactAnnIndexIfNeeded(spark, indexPath, maxSegments)
+    SimSearch.annMarker.streamStep(batch.sparkSession, indexPath,
+      batchId, maxSegments)(
+      bootstrap = SimSearch.writeAnnIndex(batch, indexPath, idCol,
+        vecCol, planes, dim, appliedId = batchId),
+      append = SimSearch.appendToAnnIndex(batch, indexPath, idCol,
+        vecCol, appliedId = batchId),
+      compact = SimSearch.compactAnnIndex(batch.sparkSession, indexPath))
   }
 }

@@ -54,8 +54,8 @@ object StreamingBm25 {
   /** Ingest a document stream into the index at `indexPath`.
     * `maxSegments > 0` auto-compacts whenever the outstanding
     * append/tombstone segment count exceeds it
-    * ([[Bm25.compactBm25IndexIfNeeded]]) — bounded per-read union
-    * width over an unbounded stream lifetime.
+    * ([[graft.operators.LiveMarker.compactIfNeeded]]) — bounded
+    * per-read union width over an unbounded stream lifetime.
     */
   def start(
       stream: DataFrame, indexPath: String, checkpoint: String,
@@ -90,31 +90,23 @@ object StreamingBm25 {
       .start()
 
   /** One micro-batch of [[start]] — public so batch jobs (and tests)
-    * can drive the same incremental pipeline without a stream.
+    * can drive the same incremental pipeline without a stream. The
+    * bootstrap/replay/append decision is
+    * [[graft.operators.LiveMarker.streamStep]].
     */
   def processBatch(
       batch: DataFrame, batchId: Long, indexPath: String,
       textCol: String, idCol: String, buckets: Int = 64,
       tokenizer: Column => Column = TextOps.tokensSimple,
       maxSegments: Int = 0): Unit = {
-    val spark = batch.sparkSession
     if (batch.isEmpty) return
-    // no committed marker = nothing ever landed (a crashed bootstrap
-    // left no commit) → (re-)bootstrap, which clears the tree. The
-    // guard throws on a marker-less tree WITHOUT a bootstrap intent
-    // (legacy/foreign layout): re-bootstrapping would silently delete
-    // an index this protocol never committed.
-    if (Bm25.bm25Generations(spark, indexPath).isEmpty) {
-      Bm25.assertStreamBootstrapSafe(spark, indexPath)
-      Bm25.writeBm25Index(batch, textCol, idCol, indexPath, buckets,
-        tokenizer, appliedId = batchId)
-    }
-    else if (Bm25.lastAppliedStreamBatch(spark, indexPath) < batchId)
-      Bm25.appendToBm25Index(batch, textCol, idCol, indexPath,
-        tokenizer, appliedId = batchId)
-    // else: replay of a committed batch — exactly-once skip
-    if (maxSegments > 0)
-      Bm25.compactBm25IndexIfNeeded(spark, indexPath, idCol,
-        maxSegments)
+    Bm25.bm25Marker.streamStep(batch.sparkSession, indexPath, batchId,
+      maxSegments)(
+      bootstrap = Bm25.writeBm25Index(batch, textCol, idCol, indexPath,
+        buckets, tokenizer, appliedId = batchId),
+      append = Bm25.appendToBm25Index(batch, textCol, idCol, indexPath,
+        tokenizer, appliedId = batchId),
+      compact = Bm25.compactBm25Index(batch.sparkSession, indexPath,
+        idCol))
   }
 }

@@ -85,7 +85,9 @@ object StreamingDedup {
       .start()
 
   /** One micro-batch of [[start]] — public so batch jobs (and tests)
-    * can drive the same incremental pipeline without a stream.
+    * can drive the same incremental pipeline without a stream. The
+    * bootstrap/replay/append decision is
+    * [[graft.operators.LiveMarker.streamStep]].
     */
   def processBatch(
       batch: DataFrame, batchId: Long, indexPath: String,
@@ -97,40 +99,34 @@ object StreamingDedup {
       maxIter: Int = 20, maxSegments: Int = 0): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return
-    // no committed marker = nothing ever landed (a crashed bootstrap
-    // left no commit) -> (re-)bootstrap, which clears the tree. The
-    // guard throws on a marker-less tree WITHOUT a bootstrap intent
-    // (legacy/foreign layout) instead of silently deleting it.
-    val bootstrap = Dedup.signedGenerations(spark, indexPath).isEmpty
-    if (bootstrap)
-      Dedup.assertSignedStreamBootstrapSafe(spark, indexPath)
-    if (!bootstrap &&
-        Dedup.lastAppliedStreamBatch(spark, indexPath) >= batchId)
-      return // replay of a committed batch - exactly-once skip
-    val withinDeduped =
-      if (dedupWithinBatch)
-        Dedup.dedupNear(batch, textCol, idCol, shingleK, bands,
-          rowsPerBand, threshold, tokenizer, maxIter)
-      else batch
-    val kept =
-      if (!bootstrap)
-        Dedup.dedupNearAgainstIndexBatch(withinDeduped,
-          Dedup.readSignedIndex(spark, indexPath),
-          textCol, idCol, shingleK, bands, rowsPerBand, threshold,
-          tokenizer)
-      else withinDeduped
-    // materialize once: the survivor set feeds BOTH writes, and without
-    // the cut the index append would replay the whole anti-join
-    val keptC = kept.localCheckpoint()
-    // idempotent per-batch sink: a replay overwrites ITS OWN dir
-    keptC.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-    if (bootstrap)
-      Dedup.writeSignedIndex(keptC, indexPath, textCol, idCol,
-        shingleK, bands, rowsPerBand, tokenizer, appliedId = batchId)
-    else
-      Dedup.appendToSignedIndex(keptC, indexPath, textCol, idCol,
-        shingleK, bands, rowsPerBand, tokenizer, appliedId = batchId)
-    if (maxSegments > 0)
-      Dedup.compactSignedIndexIfNeeded(spark, indexPath, maxSegments)
+    // the batch's survivors against `index` (none at bootstrap),
+    // written to the corpus side first
+    def survivors(index: Option[DataFrame]): DataFrame = {
+      val withinDeduped =
+        if (dedupWithinBatch)
+          Dedup.dedupNear(batch, textCol, idCol, shingleK, bands,
+            rowsPerBand, threshold, tokenizer, maxIter)
+        else batch
+      val kept = index.fold(withinDeduped)(
+        Dedup.dedupNearAgainstIndexBatch(withinDeduped, _, textCol,
+          idCol, shingleK, bands, rowsPerBand, threshold, tokenizer))
+      // materialize once: the survivor set feeds BOTH writes, and
+      // without the cut the index append would replay the whole
+      // anti-join
+      val keptC = kept.localCheckpoint()
+      // idempotent per-batch sink: a replay overwrites ITS OWN dir
+      keptC.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+      keptC
+    }
+    Dedup.signedMarker.streamStep(spark, indexPath, batchId,
+      maxSegments)(
+      bootstrap = Dedup.writeSignedIndex(survivors(None), indexPath,
+        textCol, idCol, shingleK, bands, rowsPerBand, tokenizer,
+        appliedId = batchId),
+      append = Dedup.appendToSignedIndex(
+        survivors(Some(Dedup.readSignedIndex(spark, indexPath))),
+        indexPath, textCol, idCol, shingleK, bands, rowsPerBand,
+        tokenizer, appliedId = batchId),
+      compact = Dedup.compactSignedIndex(spark, indexPath))
   }
 }

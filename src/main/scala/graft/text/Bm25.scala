@@ -260,124 +260,85 @@ object Bm25 {
   // read — which keeps appends cheap AND keeps idf automatically
   // current as N grows (a frozen idf table would go stale per append).
 
-  private val bm25Marker = new graft.operators.LiveMarker(
+  private[graft] val bm25Marker = new graft.operators.LiveMarker(
     Seq(("postings", "postings", "postings_gen="),
       ("stats", "stats", "stats_gen=")),
-    Seq("tombstones", "stats_deltas", "postings_batches"))
+    Seq("tombstones", "stats_deltas", "postings_batches"), "bm25")
 
-  /** Create the persisted index. Overwrites the ENTIRE `path` tree
-    * first — including any tombstones, stats-delta batches, append
-    * segments, gen directories, and `_live` markers from a previous
-    * index at the same path — so a rebuild can never inherit a stale
-    * lifecycle state (a surviving tombstone set would silently
-    * anti-join fresh ids out of the new index). Commits the pristine
-    * layout as snapshot gen 1 (one marker PUT), so the creation
-    * state stays [[readAtGen]]-addressable and a stream bootstrap can
-    * record its applied batch id atomically with the data
-    * (`appliedId`; -1 = not a stream batch).
+  /** Create the persisted index ([[graft.operators.LiveMarker.create]]:
+    * clears the ENTIRE `path` tree first and commits the pristine
+    * layout as snapshot gen 1, so the creation state stays
+    * addressable by [[topKFromIndex]]'s `atGen` and a stream
+    * bootstrap records its batch id `appliedId` atomically with the
+    * data). `buckets` is frozen in `meta`.
     */
   def writeBm25Index(docs: DataFrame, textCol: String, idCol: String,
       path: String, buckets: Int = 64,
       tokenizer: Column => Column = TextOps.tokensSimple,
       appliedId: Long = -1L, retain: Int = 1): Unit = {
     require(buckets > 0, s"buckets must be positive, got $buckets")
-    val spark = docs.sparkSession
-    val fs = LiveRead.fs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(
-        s"bm25 index rebuild failed to clear $path")
-    // intent file: a crash mid-create reads as "bootstrap in
-    // progress" to assertStreamBootstrapSafe, not as a legacy layout
-    bm25Marker.markBootstrap(fs, path)
-    val idx = buildIndex(docs, textCol, idCol, tokenizer)
-      .withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .persist() // postings write + the stats delta
-    // frozen creation parameters as a driver-written file — a 1-row
-    // parquet meta dir costs a Spark job per write and per read
-    MetaFile.write(fs, s"$path/meta", Seq(
-      "buckets" -> buckets.toString,
-      "schema" -> LiveRead.schemaDdl(idx.schema)))
-    // cluster by bucket before the write: one size-bounded file set
-    // per bucket instead of tasks×buckets small files (WriteLayout)
-    graft.operators.WriteLayout.clusterBy(idx, "bucket")
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$path/postings")
-    statsDelta(idx, idCol).write.mode("overwrite")
-      .parquet(s"$path/stats")
-    idx.unpersist()
-    bm25Marker.put(fs, path, graft.operators.LiveState(1L,
-      Map("postings" -> "postings", "stats" -> "stats"),
-      Seq.empty, Seq.empty, appliedId), retain)
-    bm25Marker.clearBootstrap(fs, path)
+    bm25Marker.create(docs.sparkSession, path, appliedId, retain) {
+      val idx = bucketed(buildIndex(docs, textCol, idCol, tokenizer),
+        buckets).persist() // postings write + the stats delta
+      // frozen creation parameters as a driver-written file — a 1-row
+      // parquet meta dir costs a Spark job per write and per read
+      MetaFile.write(LiveRead.fs(docs.sparkSession, path), s"$path/meta",
+        Seq("buckets" -> buckets.toString,
+          "schema" -> LiveRead.schemaDdl(idx.schema)))
+      writePostings(idx, s"$path/postings", "overwrite")
+      statsDelta(idx, idCol).write.mode("overwrite")
+        .parquet(s"$path/stats")
+      idx.unpersist()
+    }
   }
 
-  /** Guard a STREAM's bootstrap decision ([[graft.streaming
-    * .StreamingBm25]]): throws instead of letting the stream
-    * re-bootstrap over an index tree this protocol never committed
-    * (legacy pre-marker layout, foreign directory) — see
-    * [[graft.operators.LiveMarker.assertBootstrapSafe]].
+  /** Postings keyed to their term's bucket, `pmod(xxhash64(term),
+    * buckets)` — the layout every probe and segment shares.
     */
-  def assertStreamBootstrapSafe(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    bm25Marker.assertBootstrapSafe(LiveRead.fs(spark, path), path, "bm25")
+  private def bucketed(idx: DataFrame, buckets: Int): DataFrame =
+    idx.withColumn("bucket",
+      pmod(xxhash64(col("term")), lit(buckets.toLong)))
+
+  /** Write bucket-partitioned postings, clustered by bucket first: one
+    * size-bounded file set per bucket instead of tasks×buckets small
+    * files ([[graft.operators.WriteLayout]]).
+    */
+  private def writePostings(idx: DataFrame, dir: String,
+      mode: String): Unit =
+    graft.operators.WriteLayout.clusterBy(idx, "bucket")
+      .write.partitionBy("bucket").mode(mode).parquet(dir)
 
   /** Append NEW documents (caller contract: ids must not already be
     * in the index — a re-ingested id would double its postings and
-    * overcount df; dedupe upstream, the q13 family). MARKER-COMMITTED
-    * (the delete-batch discipline applied to appends): the batch's
+    * overcount df; dedupe upstream, the q13 family). The batch's
     * postings land as a write-once `postings_batches/batch=<B>`
-    * segment in the frozen bucket layout, its stats delta as
-    * `stats_deltas/batch=<B>`, and the commit is ONE `_live` marker
-    * PUT referencing both — a crash before the PUT leaves both
-    * halves unreferenced (the append did not happen; the next
-    * writer's heal clears the orphans and a retry lands once), so
-    * postings and stats can never disagree and a replayed streaming
-    * batch can never double-append. Nothing existing is rewritten;
+    * segment in the frozen bucket layout and its stats delta as
+    * `stats_deltas/batch=<B>`, committed together by one marker PUT
+    * ([[graft.operators.LiveMarker.append]]), so postings and stats
+    * can never disagree. Nothing existing is rewritten;
     * [[compactBm25Index]] folds accumulated segments later.
-    *
-    * `retain` = committed snapshots kept readable (see
-    * [[compactBm25Index]]); `appliedId` = stream batch id recorded
-    * atomically with the commit (-1 = not a stream batch).
     */
   def appendToBm25Index(docs: DataFrame, textCol: String, idCol: String,
       path: String,
       tokenizer: Column => Column = TextOps.tokensSimple,
       retain: Int = 1, appliedId: Long = -1L): Unit = {
     val spark = docs.sparkSession
-    val fs = LiveRead.fs(spark, path)
-    val buckets = MetaFile.read(fs, s"$path/meta")("buckets").toInt
-    bm25Marker.heal(fs, path, retain) // clear crashed-writer orphans
-    val live = bm25Marker.read(fs, path)
-    val b = live.gen + 1L
-    val idx = buildIndex(docs, textCol, idCol, tokenizer)
-      .withColumn("bucket",
-        pmod(xxhash64(col("term")), lit(buckets.toLong)))
-      .persist()
-    if (idx.isEmpty) {
-      // token-empty batch (non-empty docs whose texts tokenize to
-      // zero terms): a zero-row partitionBy write creates a part-less
-      // batch directory, and a marker referencing it bricks every
-      // later read ("unable to infer schema"). Write nothing; commit
-      // ONLY the applied stream batch id so exactly-once still holds
-      // (a replay sees sid >= batchId and skips).
+    val buckets = LiveRead.meta(spark, path)("buckets").toInt
+    bm25Marker.append(spark, path, retain, appliedId) { b =>
+      val idx = bucketed(buildIndex(docs, textCol, idCol, tokenizer),
+        buckets).persist()
+      // a token-empty batch (texts that tokenize to zero terms) has
+      // no segment to write
+      val wrote = !idx.isEmpty
+      if (wrote) {
+        writePostings(idx, s"$path/postings_batches/batch=$b",
+          "errorifexists")
+        statsDelta(idx, idCol).write.mode("errorifexists")
+          .parquet(s"$path/stats_deltas/batch=$b")
+      }
       idx.unpersist()
-      if (appliedId > live.applied)
-        bm25Marker.put(fs, path,
-          live.copy(gen = b, applied = appliedId), retain)
-    } else {
-      graft.operators.WriteLayout.clusterBy(idx, "bucket")
-        .write.partitionBy("bucket").mode("errorifexists")
-        .parquet(s"$path/postings_batches/batch=$b")
-      statsDelta(idx, idCol).write.mode("errorifexists")
-        .parquet(s"$path/stats_deltas/batch=$b")
-      idx.unpersist()
-      bm25Marker.put(fs, path, live.copy(gen = b,
-        appends = live.appends :+ b,
-        applied = math.max(live.applied, appliedId)), retain)
+      wrote
     }
-    bm25Marker.heal(fs, path, retain)
   }
 
   /** One (n_docs, sum_dl) delta row off the index's per-doc lengths —
@@ -404,8 +365,7 @@ object Bm25 {
     */
   def indexStats(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    statsRows(spark, path,
-      bm25Marker.read(LiveRead.fs(spark, path), path))
+    statsRows(spark, path, bm25Marker.read(spark, path))
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("sum_dl")).as("sum_dl"))
 
@@ -435,11 +395,10 @@ object Bm25 {
       b: Double = 0.75, atGen: Option[Long] = None): DataFrame = {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.StructType
-    val fs = LiveRead.fs(spark, path)
     val meta = LiveRead.meta(spark, path)
     val buckets = meta("buckets").toLong
-    val live = atGen.map(bm25Marker.readAt(fs, path, _))
-      .getOrElse(bm25Marker.read(fs, path))
+    val live = atGen.map(bm25Marker.readAt(spark, path, _))
+      .getOrElse(bm25Marker.read(spark, path))
     val pairFrame = queries.select(col(queryIdCol), col("term"))
     val pairs = pairFrame.collect().distinct.toSeq
     val terms = pairs.map(_.get(1)).filter(_ != null).distinct
@@ -461,107 +420,60 @@ object Bm25 {
   }
 
   /** Delete documents from the persisted index: the batch's ids land
-    * as a write-once `tombstones/batch=<B>` dir, the matching
+    * as a write-once `tombstones/batch=<B>` dir and the matching
     * NEGATIVE stats delta (computed from ONE postings scan over the
     * deleted ids — per delete batch, not per query) as
-    * `stats_deltas/batch=<B>`, and the commit is the next `_live`
-    * marker PUT referencing both — so `(_n, _avgdl)` and serve-time
-    * idf reflect the removal exactly when the tombstones do, and a
-    * crash before the PUT leaves both halves unreferenced (the
-    * delete simply did not happen — retry). Nothing is rewritten;
-    * [[compactBm25Index]] reclaims the space later. Ids deleted
-    * twice or never present contribute nothing.
+    * `stats_deltas/batch=<B>`, committed together by one marker PUT
+    * ([[graft.operators.LiveMarker.delete]]) — so `(_n, _avgdl)` and
+    * serve-time idf reflect the removal exactly when the tombstones
+    * do. Nothing is rewritten; [[compactBm25Index]] reclaims the space
+    * later. Ids deleted twice or never present contribute nothing.
     */
   def deleteFromBm25Index(ids: DataFrame, path: String,
       idCol: String, retain: Int = 1): Unit = {
     val spark = ids.sparkSession
-    val fs = LiveRead.fs(spark, path)
-    // clear any orphan of a crashed writer
-    bm25Marker.heal(fs, path, retain)
-    val live = bm25Marker.read(fs, path)
-    val b = live.gen + 1L
-    val postings = LiveRead.rows(spark, path, live, "postings",
-      "postings_batches", LiveRead.meta(spark, path), idCol)
-    // ids in the index's id type, so the declared tombstone read
-    // matches the file (an id the type cannot hold becomes null)
-    val idSet = ids.select(col(idCol)
-      .try_cast(postings.schema(idCol).dataType).as(idCol))
-      .distinct().persist()
-    // negative delta off the CURRENT live postings
-    val gone = postings.join(broadcast(idSet), Seq(idCol), "left_semi")
-    statsDelta(gone, idCol)
-      .select((-col("n_docs")).as("n_docs"),
-        (-col("sum_dl")).as("sum_dl"))
-      .write.mode("errorifexists")
-      .parquet(s"$path/stats_deltas/batch=$b")
-    idSet.write.mode("errorifexists")
-      .parquet(s"$path/tombstones/batch=$b")
-    idSet.unpersist()
-    bm25Marker.put(fs, path,
-      live.copy(gen = b, batches = live.batches :+ b), retain)
-    bm25Marker.heal(fs, path, retain) // GC outside the window
+    bm25Marker.delete(spark, path, retain) { (live, b) =>
+      val postings = LiveRead.rows(spark, path, live, "postings",
+        "postings_batches", LiveRead.meta(spark, path), idCol)
+      // ids in the index's id type, so the declared tombstone read
+      // matches the file (an id the type cannot hold becomes null)
+      val idSet = ids.select(col(idCol)
+        .try_cast(postings.schema(idCol).dataType).as(idCol))
+        .distinct().persist()
+      // negative delta off the CURRENT live postings
+      val gone = postings.join(broadcast(idSet), Seq(idCol), "left_semi")
+      statsDelta(gone, idCol)
+        .select((-col("n_docs")).as("n_docs"),
+          (-col("sum_dl")).as("sum_dl"))
+        .write.mode("errorifexists")
+        .parquet(s"$path/stats_deltas/batch=$b")
+      idSet.write.mode("errorifexists")
+        .parquet(s"$path/tombstones/batch=$b")
+      idSet.unpersist()
+    }
   }
 
-  /** Generation compaction: rewrite the live postings (generation
-    * plus append segments) MINUS the accumulated tombstones into a
-    * fresh write-once `postings_gen=<G>` dir, re-base the summed
-    * stats deltas to ONE row in `stats_gen=<G>`, and commit both
-    * (with empty batch lists) via one marker PUT; state outside the
-    * retention window GCs afterwards. Readers see either the old
-    * generation + batch overlay or the new compacted generation —
-    * never an intermediate — so compaction is atomic under
-    * concurrent readers on any PUT-consistent store, and a reader
-    * STILL MID-SCAN on a superseded snapshot survives as long as
-    * `retain` covers the longest expected scan (the
-    * [[graft.operators.PoolCommit]] retention contract — with the
-    * default `retain = 1` only the ruling snapshot's files stay on
-    * disk). Serving before and after is row-identical (the lifecycle
-    * gate q291 `require`s it). Also collapses the small files of
+  /** Generation compaction ([[graft.operators.LiveMarker.compact]]):
+    * rewrite the live postings (generation plus append segments)
+    * MINUS the accumulated tombstones into `postings_gen=<G>` and
+    * re-base the summed stats deltas to ONE row in `stats_gen=<G>`.
+    * Serving before and after is row-identical (the lifecycle gate
+    * q291 `require`s it). Also collapses the small files of
     * accumulated appends, so it doubles as the index's periodic
     * file-compaction pass.
     */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, retain: Int = 1): Unit = {
-    val fs = LiveRead.fs(spark, path)
-    bm25Marker.heal(fs, path, retain)
-    val live = bm25Marker.read(fs, path)
-    val gen = live.gen + 1L
-    val kept = LiveRead.rows(spark, path, live, "postings",
-      "postings_batches", LiveRead.meta(spark, path), idCol)
-      .persist() // rewrite + re-based stats
-    graft.operators.WriteLayout.clusterBy(kept, "bucket")
-      .write.partitionBy("bucket").mode("errorifexists")
-      .parquet(s"$path/postings_gen=$gen")
-    statsDelta(kept, idCol).coalesce(1).write.mode("errorifexists")
-      .parquet(s"$path/stats_gen=$gen")
-    kept.unpersist()
-    bm25Marker.put(fs, path, graft.operators.LiveState(gen,
-      Map("postings" -> s"postings_gen=$gen",
-        "stats" -> s"stats_gen=$gen"),
-      Seq.empty, Seq.empty, live.applied, live.retain), retain)
-    bm25Marker.heal(fs, path, retain) // GC outside the window
-  }
-
-  /** Compaction POLICY: compact when the marker's outstanding
-    * append + tombstone batch count exceeds `maxSegments` — serving
-    * unions every outstanding segment per read, so an unbounded
-    * stream lifetime means unbounded per-read union width unless
-    * something schedules the compaction that already exists. The
-    * streaming twins call this per batch (their `maxSegments` knob);
-    * batch deployments can call it on the removal pipeline's cadence.
-    * Returns true when a compaction ran. Safe mid-stream: the
-    * compacted marker carries the applied batch id forward.
-    */
-  def compactBm25IndexIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, maxSegments: Int,
-      retain: Int = 1): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val live = bm25Marker.read(LiveRead.fs(spark, path), path)
-    val n = live.batches.size + live.appends.size
-    if (n > maxSegments) {
-      compactBm25Index(spark, path, idCol, retain); true
-    } else false
-  }
+      path: String, idCol: String, retain: Int = 1): Unit =
+    bm25Marker.compact(spark, path, retain) { (live, next) =>
+      val kept = LiveRead.rows(spark, path, live, "postings",
+        "postings_batches", LiveRead.meta(spark, path), idCol)
+        .persist() // rewrite + re-based stats
+      writePostings(kept, s"$path/${next.dir("postings")}",
+        "errorifexists")
+      statsDelta(kept, idCol).coalesce(1).write.mode("errorifexists")
+        .parquet(s"$path/${next.dir("stats")}")
+      kept.unpersist()
+    }
 
   /** The distinct LIVE document ids of a persisted index — the
     * membership probe the takedown/audit pipeline reads before and
@@ -571,24 +483,8 @@ object Bm25 {
     */
   def bm25IndexIds(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String): DataFrame = {
-    val live = bm25Marker.read(LiveRead.fs(spark, path), path)
+    val live = bm25Marker.read(spark, path)
     LiveRead.rows(spark, path, live, "postings", "postings_batches",
       LiveRead.meta(spark, path), idCol).select(col(idCol)).distinct()
   }
-
-  /** The committed snapshot generations still readable (oldest
-    * first) — [[topKFromIndex]]'s `atGen` accepts any of them until
-    * a lifecycle writer's GC ages it out of its `retain` window.
-    */
-  def bm25Generations(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Long] =
-    bm25Marker.listGenerations(LiveRead.fs(spark, path), path)
-
-  /** The highest stream batch id committed into this index's marker
-    * chain (-1 = none) — [[graft.streaming.StreamingBm25]]'s
-    * exactly-once replay guard.
-    */
-  def lastAppliedStreamBatch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long =
-    bm25Marker.read(LiveRead.fs(spark, path), path).applied
 }

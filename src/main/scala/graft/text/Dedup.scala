@@ -180,24 +180,17 @@ object Dedup {
   //   rows_batches/batch=<B>/ write-once APPEND segments
   //   tombstones/batch=<B>/   write-once deleted-id batches
   //   _live.<gen>             the ruling-state marker
-  private val signedMarker = new graft.operators.LiveMarker(
+  private[graft] val signedMarker = new graft.operators.LiveMarker(
     Seq(("rows", "rows", "rows_gen=")),
-    Seq("tombstones", "rows_batches"))
-
-  private def signedFs(spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    Seq("tombstones", "rows_batches"), "signed")
 
   /** Persist the signed index (the write-once step): the signed rows
     * under `rows/`, the LSH parameters under `_graft_meta/` (so
     * [[appendToSignedIndex]] VALIDATES parameter agreement instead of
     * trusting the "must match" doc contract — a silent (k, b, r)
-    * mismatch poisons every band bucket it touches). Clears the
-    * ENTIRE `path` tree first, so a rebuild can never inherit stale
-    * lifecycle state, and commits creation as snapshot gen 1 (one
-    * marker PUT; `appliedId` records a stream bootstrap's batch id
-    * atomically with the data).
+    * mismatch poisons every band bucket it touches). Committed by
+    * [[graft.operators.LiveMarker.create]] (clears the whole tree
+    * first; `appliedId` records a stream bootstrap's batch id).
     */
   def writeSignedIndex(
       df: DataFrame, path: String, textCol: String, idCol: String,
@@ -206,48 +199,26 @@ object Dedup {
       appliedId: Long = -1L, retain: Int = 1): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    val fs = signedFs(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    if (fs.exists(root) && !fs.delete(root, true))
-      throw new java.io.IOException(
-        s"signed index rebuild failed to clear $path")
-    // intent file: a crash mid-create reads as "bootstrap in
-    // progress" to assertSignedStreamBootstrapSafe, not legacy
-    signedMarker.markBootstrap(fs, path)
-    graft.operators.WriteLayout.sized(
-      signIndex(df, textCol, idCol, shingleK, bands, rowsPerBand,
-        tokenizer))
-      .write.parquet(s"$path/rows")
-    Seq((shingleK, bands, rowsPerBand, idCol))
-      .toDF("shingle_k", "bands", "rows_per_band", "id_col")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$path/_graft_meta")
-    signedMarker.put(fs, path, graft.operators.LiveState(1L,
-      Map("rows" -> "rows"), Seq.empty, Seq.empty, appliedId), retain)
-    signedMarker.clearBootstrap(fs, path)
+    signedMarker.create(spark, path, appliedId, retain) {
+      graft.operators.WriteLayout.sized(
+        signIndex(df, textCol, idCol, shingleK, bands, rowsPerBand,
+          tokenizer))
+        .write.parquet(s"$path/rows")
+      Seq((shingleK, bands, rowsPerBand, idCol))
+        .toDF("shingle_k", "bands", "rows_per_band", "id_col")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/_graft_meta")
+    }
   }
-
-  /** Guard a STREAM's bootstrap decision ([[graft.streaming
-    * .StreamingDedup]]): throws instead of letting the stream
-    * re-bootstrap over an index tree this protocol never committed
-    * (e.g. the pre-marker layout with rows at the path root) — see
-    * [[graft.operators.LiveMarker.assertBootstrapSafe]].
-    */
-  def assertSignedStreamBootstrapSafe(
-      spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    signedMarker.assertBootstrapSafe(signedFs(spark, path), path,
-      "signed")
 
   /** Append NEWLY-SIGNED documents to a persisted index (the
     * incremental-crawl step: sign the new batch only, never re-sign
     * the corpus). Parameters are validated against the persisted
-    * meta — a mismatch throws before any write. MARKER-COMMITTED:
-    * the batch lands as a write-once `rows_batches/batch=<B>` segment
-    * referenced by ONE `_live` marker PUT (which also records
-    * `appliedId` for exactly-once streaming replay) — a crash before
-    * the PUT leaves the segment unreferenced and a retry lands once.
-    * Caller contract: ids must be new (dedupe the batch against the
-    * index FIRST — [[dedupNearAgainstIndexBatch]] is that step).
+    * meta — a mismatch throws before any write. The batch lands as a
+    * write-once `rows_batches/batch=<B>` segment
+    * ([[graft.operators.LiveMarker.append]]). Caller contract: ids
+    * must be new (dedupe the batch against the index FIRST —
+    * [[dedupNearAgainstIndexBatch]] is that step).
     */
   def appendToSignedIndex(
       df: DataFrame, path: String, textCol: String, idCol: String,
@@ -263,67 +234,34 @@ object Dedup {
       s"signed-index parameter mismatch: index has (k=${m.get(0)}, " +
         s"b=${m.get(1)}, r=${m.get(2)}, id=${m.get(3)}), append got " +
         s"(k=$shingleK, b=$bands, r=$rowsPerBand, id=$idCol)")
-    val fs = signedFs(spark, path)
-    signedMarker.heal(fs, path, retain) // clear crashed-writer orphans
-    val live = signedMarker.read(fs, path)
-    val b = live.gen + 1L
-    val seg = signIndex(df, textCol, idCol, shingleK, bands,
-      rowsPerBand, tokenizer).persist()
-    if (seg.isEmpty) {
-      // the Bm25 empty-batch guard: a batch whose docs all dropped
-      // upstream (dedupe, null text) signs to zero rows — a zero-row
-      // batch dir would brick later reads. Commit only the applied
-      // fact so exactly-once still holds.
+    signedMarker.append(spark, path, retain, appliedId) { b =>
+      val seg = signIndex(df, textCol, idCol, shingleK, bands,
+        rowsPerBand, tokenizer).persist()
+      // a batch whose docs all dropped upstream (dedupe, null text)
+      // signs to zero rows and has no segment to write
+      val wrote = !seg.isEmpty
+      if (wrote)
+        graft.operators.WriteLayout.sized(seg)
+          .write.mode("errorifexists")
+          .parquet(s"$path/rows_batches/batch=$b")
       seg.unpersist()
-      if (appliedId > live.applied)
-        signedMarker.put(fs, path,
-          live.copy(gen = b, applied = appliedId), retain)
-    } else {
-      graft.operators.WriteLayout.sized(seg)
-        .write.mode("errorifexists")
-        .parquet(s"$path/rows_batches/batch=$b")
-      seg.unpersist()
-      signedMarker.put(fs, path, live.copy(gen = b,
-        appends = live.appends :+ b,
-        applied = math.max(live.applied, appliedId)), retain)
+      wrote
     }
-    signedMarker.heal(fs, path, retain)
   }
 
   /** Delete documents from a persisted signed index: the ids land as
-    * a write-once `tombstones/batch=<B>` dir committed by the next
-    * `_live` marker PUT and honored by [[readSignedIndex]], so every
-    * index consumer stops pairing against the removed docs — the
-    * takedown path. Nothing is rewritten; [[compactSignedIndex]]
-    * reclaims space.
+    * a write-once `tombstones/batch=<B>` dir
+    * ([[graft.operators.LiveMarker.delete]]) honored by
+    * [[readSignedIndex]], so every index consumer stops pairing
+    * against the removed docs — the takedown path. Nothing is
+    * rewritten; [[compactSignedIndex]] reclaims space.
     */
   def deleteFromSignedIndex(ids: DataFrame, path: String,
-      idCol: String, retain: Int = 1): Unit = {
-    val spark = ids.sparkSession
-    val fs = signedFs(spark, path)
-    signedMarker.heal(fs, path, retain)
-    val live = signedMarker.read(fs, path)
-    val b = live.gen + 1L
-    ids.select(col(idCol)).distinct().write.mode("errorifexists")
-      .parquet(s"$path/tombstones/batch=$b")
-    signedMarker.put(fs, path,
-      live.copy(gen = b, batches = live.batches :+ b), retain)
-    signedMarker.heal(fs, path, retain) // GC outside the window
-  }
-
-  /** [[graft.text.Bm25.compactBm25IndexIfNeeded]]'s policy for the
-    * signed index: compact when outstanding append + tombstone
-    * batches exceed `maxSegments`. Returns true when one ran.
-    */
-  def compactSignedIndexIfNeeded(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      maxSegments: Int, retain: Int = 1): Boolean = {
-    require(maxSegments >= 1, s"maxSegments must be >= 1: $maxSegments")
-    val live = signedMarker.read(signedFs(spark, path), path)
-    if (live.batches.size + live.appends.size > maxSegments) {
-      compactSignedIndex(spark, path, retain); true
-    } else false
-  }
+      idCol: String, retain: Int = 1): Unit =
+    signedMarker.delete(ids.sparkSession, path, retain) { (_, b) =>
+      ids.select(col(idCol)).distinct().write.mode("errorifexists")
+        .parquet(s"$path/tombstones/batch=$b")
+    }
 
   /** Read a persisted signed index — (id, sig, buckets) rows ready for
     * [[nearDupPairsFromIndex]], [[dedupNearFromIndex]],
@@ -334,33 +272,21 @@ object Dedup {
     */
   def readSignedIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    readSignedState(spark, path,
-      signedMarker.read(signedFs(spark, path), path))
+    readSignedState(spark, path, signedMarker.read(spark, path))
 
   /** SNAPSHOT read: the index exactly as committed by marker `gen`
-    * ([[signedGenerations]] lists what is still inside the retention
-    * window; lifecycle ops take `retain`).
+    * (`signedMarker.listGenerations` lists what is still inside the
+    * retention window; lifecycle ops take `retain`).
     */
   def readSignedIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, gen: Long): DataFrame =
-    readSignedState(spark, path,
-      signedMarker.readAt(signedFs(spark, path), path, gen))
+    readSignedState(spark, path, signedMarker.readAt(spark, path, gen))
 
-  /** The committed snapshot generations still readable, oldest
-    * first.
+  /** `live`'s rows minus its tombstone ids, anti-joined against the
+    * broadcast tombstone set. The ids are not deduplicated: an
+    * anti-join only asks whether a match exists (the
+    * [[graft.operators.LiveRead.rows]] reasoning).
     */
-  def signedGenerations(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[Long] =
-    signedMarker.listGenerations(signedFs(spark, path), path)
-
-  /** The highest stream batch id committed into this index's marker
-    * chain (-1 = none) — [[graft.streaming.StreamingDedup]]'s
-    * exactly-once replay guard for the index side.
-    */
-  def lastAppliedStreamBatch(spark: org.apache.spark.sql.SparkSession,
-      path: String): Long =
-    signedMarker.read(signedFs(spark, path), path).applied
-
   private def readSignedState(spark: org.apache.spark.sql.SparkSession,
       path: String, live: graft.operators.LiveState): DataFrame = {
     val rows = live.appends
@@ -376,37 +302,25 @@ object Dedup {
       rows.join(
         broadcast(spark.read.parquet(
           live.batches.map(b => s"$path/tombstones/batch=$b"): _*)
-          .select(col(idCol)).distinct()),
+          .select(col(idCol))),
         Seq(idCol), "left_anti")
     }
   }
 
-  /** Generation compaction: rewrite the live rows (generation plus
-    * append segments) MINUS the accumulated tombstones into a fresh
-    * write-once `rows_gen=<G>` dir and commit it (with empty batch
-    * lists) via one marker PUT — NO renames, so it is safe on any
-    * PUT-consistent object store, and readers inside the retention
-    * window survive concurrent compaction (the shared
-    * [[graft.operators.LiveMarker]] contract the PQ/BM25/ANN
-    * families run on; this replaced the original rename-swap flavor,
-    * closing its rename-atomic store requirement). Also collapses
-    * accumulated append small files.
+  /** Generation compaction ([[graft.operators.LiveMarker.compact]]):
+    * rewrite the live rows (generation plus append segments) MINUS
+    * the accumulated tombstones into a fresh write-once `rows_gen=<G>`
+    * dir. Also collapses accumulated append small files.
     */
   def compactSignedIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      retain: Int = 1): Unit = {
-    val fs = signedFs(spark, path)
-    signedMarker.heal(fs, path, retain)
-    val live = signedMarker.read(fs, path)
-    val gen = live.gen + 1L
-    graft.operators.WriteLayout.sized(readSignedState(spark, path,
-      live))
-      .write.mode("errorifexists").parquet(s"$path/rows_gen=$gen")
-    signedMarker.put(fs, path, graft.operators.LiveState(gen,
-      Map("rows" -> s"rows_gen=$gen"),
-      Seq.empty, Seq.empty, live.applied, live.retain), retain)
-    signedMarker.heal(fs, path, retain) // GC outside the window
-  }
+      retain: Int = 1): Unit =
+    signedMarker.compact(spark, path, retain) { (live, next) =>
+      graft.operators.WriteLayout.sized(readSignedState(spark, path,
+        live))
+        .write.mode("errorifexists")
+        .parquet(s"$path/${next.dir("rows")}")
+    }
 
   /** Exact Jaccard over two token/shingle arrays (for verifying LSH
     * candidates — run only on the candidate pairs, never all-pairs).

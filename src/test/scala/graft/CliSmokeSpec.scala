@@ -675,12 +675,27 @@ class CliSmokeSpec extends SparkSpec {
     graft.cli.Main.main(Array("bm25-delete", delIds, bmDir, "doc_id",
       "2")) // retain=2: pre-delete snapshot stays readable
     graft.cli.Main.main(Array("bm25-generations", bmDir))
-    val bmGens = graft.text.Bm25.bm25Generations(spark, bmDir)
+    val bmGens = graft.text.Bm25.bm25Marker.listGenerations(spark, bmDir)
     assert(bmGens.length == 2)
     graft.cli.Main.main(Array("bm25-query", bmDir, "shared", "3",
       s"--gen=${bmGens.head}")) // time-travel serve
     graft.cli.Main.main(Array("bm25-compact", bmDir))
     graft.cli.Main.main(Array("bm25-query", bmDir, "shared", "3"))
+    // bm25-append reports the live count: every append and delete
+    // delta, not only the create's stats
+    val freshPath = s"${tmpDir("cli-r11bmfresh")}/docs"
+    (101L to 105L).map(i => (i, s"fresh document $i with shared words"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(freshPath)
+    val appendOut = new java.io.ByteArrayOutputStream()
+    Console.withOut(appendOut) {
+      graft.cli.Main.main(Array("bm25-append", freshPath, bmDir))
+    }
+    val liveDocs = graft.text.Bm25.indexStats(spark, bmDir).head()
+      .getLong(0)
+    assert(liveDocs == 20L - 2L + 5L)
+    assert(appendOut.toString.contains(
+      s"[bm25-append] index now covers $liveDocs docs"),
+      appendOut.toString)
     val signDir = s"${tmpDir("cli-r11sign")}/idx"
     graft.cli.Main.main(Array("sign-index", corpusPath, signDir))
     graft.cli.Main.main(Array("sign-delete", delIds, signDir))
@@ -713,7 +728,7 @@ class CliSmokeSpec extends SparkSpec {
     // retain=2 keeps the pre-delete snapshot readable for --gen reads
     graft.cli.Main.main(Array("ann-delete", delIds, idxDir, "2"))
     graft.cli.Main.main(Array("ann-generations", idxDir))
-    assert(graft.sim.SimSearch.annGenerations(spark, idxDir)
+    assert(graft.sim.SimSearch.annMarker.listGenerations(spark, idxDir)
       == Seq(2L, 3L)) // create=1 aged out by the append; del=3
     val qOld = tmpDir("cli-r13annq-old")
     graft.cli.Main.main(Array("ann-query", idxDir, basePath, qOld,

@@ -917,10 +917,10 @@ class IvfSpec extends SparkSpec {
     assert(serveRefined(dir, emb) == tombstoned)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val meta = SimSearch.readPqLiveMeta(fs, dir)
-    assert(meta.codesDir.startsWith("codes_gen=") &&
-      meta.tombBatches.isEmpty, meta.toString)
-    val physical = spark.read.parquet(s"$dir/${meta.codesDir}")
+    val meta = SimSearch.pqMarker.read(fs, dir)
+    assert(meta.dir("codes").startsWith("codes_gen=") &&
+      meta.batches.isEmpty, meta.toString)
+    val physical = spark.read.parquet(s"$dir/${meta.dir("codes")}")
     assert(physical.count() == (16 - deleted.size) * 2L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes")),
       "old generation not GC'd")
@@ -938,11 +938,11 @@ class IvfSpec extends SparkSpec {
     SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
       m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
     // creation is the pristine marker-less layout: no snapshots yet
-    assert(SimSearch.pqGenerations(spark, dir).isEmpty)
+    assert(SimSearch.pqMarker.listGenerations(spark, dir).isEmpty)
     SimSearch.deleteFromPqIndex(Seq(1L, 5L).toDF("vec_id"), dir,
       retain = 2) // snapshot gen 1: codes + tombstone batch 1
     SimSearch.compactPqIndex(spark, dir, retain = 2) // snapshot gen 2
-    assert(SimSearch.pqGenerations(spark, dir) == Seq(1L, 2L))
+    assert(SimSearch.pqMarker.listGenerations(spark, dir) == Seq(1L, 2L))
     // snapshot gen 1 still resolves: the pristine codes dir AND its
     // tombstone batch are inside the window; both reads agree on the
     // survivors (the snapshot anti-joins its own tombstones)
@@ -955,7 +955,7 @@ class IvfSpec extends SparkSpec {
     val midScan = SimSearch.readPqIndex(spark, dir).codes
     SimSearch.compactPqIndex(spark, dir, retain = 2) // gen 3
     assert(midScan.count() == (16L - 2L) * 2L)
-    assert(SimSearch.pqGenerations(spark, dir) == Seq(2L, 3L))
+    assert(SimSearch.pqMarker.listGenerations(spark, dir) == Seq(2L, 3L))
     // aged out: gen 1 gone, fail-loud with the retain hint
     val err = intercept[IllegalArgumentException] {
       SimSearch.readPqIndex(spark, dir, 1L)
@@ -965,7 +965,7 @@ class IvfSpec extends SparkSpec {
     // op keeps the 2-snapshot window previous callers established
     // (the old per-call minimum would have collapsed it)
     SimSearch.deleteFromPqIndex(Seq(2L).toDF("vec_id"), dir)
-    assert(SimSearch.pqGenerations(spark, dir) == Seq(3L, 4L))
+    assert(SimSearch.pqMarker.listGenerations(spark, dir) == Seq(3L, 4L))
     assert(!new java.io.File(s"$dir/codes").exists())
   }
 
@@ -998,9 +998,9 @@ class IvfSpec extends SparkSpec {
     // a rebuild resets the lifecycle: pristine meta, everything serves
     SimSearch.writePqIndex(emb, dir, "vec_id", "embedding", "cell",
       m = 2, k = 2, iters = 2, dim = 64, bucketWidth = 4L)
-    val meta = SimSearch.readPqLiveMeta(fs, dir)
-    assert(meta.gen == 0L && meta.codesDir == "codes" &&
-      meta.tombBatches.isEmpty, meta.toString)
+    val meta = SimSearch.pqMarker.read(fs, dir)
+    assert(meta.gen == 0L && meta.dir("codes") == "codes" &&
+      meta.batches.isEmpty, meta.toString)
     assert(serveRefined(dir, emb) == before)
   }
 
@@ -1031,8 +1031,8 @@ class IvfSpec extends SparkSpec {
     SimSearch.appendToPqIndex(
       emb.filter(col("vec_id") === 11L), dir, "vec_id", "embedding",
       m = 2, dim = 64, cellCol = Some("cell"))
-    val meta = SimSearch.readPqLiveMeta(fs, dir)
-    val ids = spark.read.parquet(s"$dir/${meta.codesDir}")
+    val meta = SimSearch.pqMarker.read(fs, dir)
+    val ids = spark.read.parquet(s"$dir/${meta.dir("codes")}")
       .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
     assert(ids == (0L until 16L).toSet, ids.toString)
   }

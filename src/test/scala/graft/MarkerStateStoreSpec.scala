@@ -321,6 +321,84 @@ class MarkerStateStoreSpec extends SparkSpec {
     refused(swapOnly)
   }
 
+  test("index lifecycle crash windows, per LiveMarker family (BM25, " +
+    "ANN, signed): an orphan tombstone batch and a torn marker are " +
+    "invisible and healed by the next delete; an append with no rows " +
+    "commits only the applied id") {
+    import graft.operators.LiveMarker
+    import graft.sim.SimSearch
+    import graft.text.{Bm25, Dedup}
+    val docs = (1L to 6L).map(i => (i, s"lifecycle document $i words"))
+      .toDF("doc_id", "text")
+    val emb = (1L to 6L).map(i => (i, Seq(i.toFloat, -i.toFloat / 2)))
+      .toDF("vec_id", "embedding")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).toSet
+    // (name, marker, id column, append-segment root, create, live ids,
+    //  delete one id, append an empty batch with an applied id)
+    case class Family(name: String, marker: LiveMarker, idCol: String,
+        segRoot: String, create: String => Unit, live: String => Set[Long],
+        delete: (String, Long) => Unit, appendEmpty: (String, Long) => Unit)
+    val families = Seq(
+      Family("bm25", Bm25.bm25Marker, "doc_id", "postings_batches",
+        Bm25.writeBm25Index(docs, "text", "doc_id", _, buckets = 4),
+        p => ids(Bm25.bm25IndexIds(spark, p, "doc_id")),
+        (p, id) => Bm25.deleteFromBm25Index(Seq(id).toDF("doc_id"), p,
+          "doc_id"),
+        (p, sid) => Bm25.appendToBm25Index(docs.filter(lit(false)),
+          "text", "doc_id", p, appliedId = sid)),
+      Family("ann", SimSearch.annMarker, "vec_id", "vectors_batches",
+        SimSearch.writeAnnIndex(emb, _, "vec_id", "embedding",
+          planes = 2, dim = 2),
+        p => ids(SimSearch.readAnnIndex(spark, p).select("vec_id")),
+        (p, id) => SimSearch.deleteFromAnnIndex(Seq(id).toDF("vec_id"), p),
+        (p, sid) => SimSearch.appendToAnnIndex(emb.filter(lit(false)), p,
+          "vec_id", "embedding", appliedId = sid)),
+      Family("signed", Dedup.signedMarker, "doc_id", "rows_batches",
+        Dedup.writeSignedIndex(docs, _, "text", "doc_id"),
+        p => ids(Dedup.readSignedIndex(spark, p).select("doc_id")),
+        (p, id) => Dedup.deleteFromSignedIndex(Seq(id).toDF("doc_id"), p,
+          "doc_id"),
+        (p, sid) => Dedup.appendToSignedIndex(docs.filter(lit(false)), p,
+          "text", "doc_id", appliedId = sid)))
+    families.foreach { f =>
+      val dir = s"${tmpDir(s"mlife-${f.name}")}/idx"
+      val fs = fsOf(dir)
+      f.create(dir)
+      assert(f.live(dir) == (1L to 6L).toSet, f.name)
+      // crash between the tombstone batch write and the marker PUT:
+      // the batch is unreferenced — the delete did not happen
+      Seq(1L).toDF(f.idCol).write.parquet(s"$dir/tombstones/batch=2")
+      assert(f.live(dir) == (1L to 6L).toSet,
+        s"${f.name}: orphan tombstone batch leaked into reads")
+      // a torn marker (no footer) is skipped by readers
+      val tornPath = new Path(dir, f"_live.${9L}%019d")
+      val torn = fs.create(tornPath, false)
+      torn.write("tomb:1\n".getBytes("UTF-8"))
+      torn.close()
+      assert(f.marker.read(spark, dir).gen == 1L, f.name)
+      assert(f.live(dir) == (1L to 6L).toSet, s"${f.name}: torn ruled")
+      // the next delete heals both artifacts and commits batch 2
+      f.delete(dir, 5L)
+      assert(f.live(dir) == Set(1L, 2L, 3L, 4L, 6L), f.name)
+      assert(!fs.exists(tornPath), s"${f.name}: torn marker not healed")
+      assert(f.marker.listGenerations(spark, dir) == Seq(2L), f.name)
+      // an append with no rows writes no segment and commits only the
+      // applied stream batch id
+      f.appendEmpty(dir, 7L)
+      val after = f.marker.read(spark, dir)
+      assert(after.gen == 3L && after.applied == 7L &&
+        after.appends.isEmpty && after.batches == Seq(2L),
+        s"${f.name}: $after")
+      assert(!fs.exists(new Path(s"$dir/${f.segRoot}")),
+        s"${f.name}: empty append wrote a segment")
+      assert(f.live(dir) == Set(1L, 2L, 3L, 4L, 6L), f.name)
+      // an older applied id commits nothing
+      f.appendEmpty(dir, 3L)
+      assert(f.marker.read(spark, dir) == after, f.name)
+    }
+  }
+
   test("marker bytes: LiveMarker, MarkerPool and MarkerStateStore " +
     "write the exact text their readers parse") {
     import graft.operators.{LiveMarker, LiveState, PoolCommit}

@@ -94,7 +94,7 @@ class RetrievalSpec extends SparkSpec {
     assert(Bm25.indexStats(spark, dir).head().getLong(0) == 5L)
     // creation committed snapshot gen 1, the append gen 2; with the
     // default retain=1 only the ruling snapshot stays readable
-    assert(Bm25.bm25Generations(spark, dir) == Seq(2L))
+    assert(Bm25.bm25Marker.listGenerations(spark, dir) == Seq(2L))
     // time travel: append with retain=2 keeps the pre-append snapshot
     // addressable — serving atGen replays the OLD corpus exactly
     val dir2 = s"${tmpDir("bm25-tt")}/idx"
@@ -102,7 +102,7 @@ class RetrievalSpec extends SparkSpec {
       "doc_id", dir2, buckets = 8)
     Bm25.appendToBm25Index(corpus.filter(col("doc_id") > 2), "text",
       "doc_id", dir2, retain = 2)
-    assert(Bm25.bm25Generations(spark, dir2) == Seq(1L, 2L))
+    assert(Bm25.bm25Marker.listGenerations(spark, dir2) == Seq(1L, 2L))
     val atOld = Bm25.topKFromIndex(spark, dir2, queries, "query_id",
       "doc_id", atGen = Some(1L)).collect().toSet
     val overOld = Bm25.search(corpus.filter(col("doc_id") <= 2),
@@ -122,7 +122,7 @@ class RetrievalSpec extends SparkSpec {
       "doc_id", dir)
     Bm25.appendToBm25Index(corpus.filter(col("doc_id") > 3), "text",
       "doc_id", dir)
-    assert(Bm25.bm25Generations(spark, dir) == Seq(1L, 2L, 3L))
+    assert(Bm25.bm25Marker.listGenerations(spark, dir) == Seq(1L, 2L, 3L))
     // the create-time snapshot still serves
     val queries = Seq((1L, "spark"), (2L, "the"))
       .toDF("query_id", "term")
@@ -133,16 +133,16 @@ class RetrievalSpec extends SparkSpec {
       "query_id").collect().toSet
     assert(atCreate == overFirstTwo && atCreate.nonEmpty)
     Bm25.deleteFromBm25Index(Seq(3L).toDF("doc_id"), dir, "doc_id")
-    assert(Bm25.bm25Generations(spark, dir) == Seq(2L, 3L, 4L))
+    assert(Bm25.bm25Marker.listGenerations(spark, dir) == Seq(2L, 3L, 4L))
     // compaction carries the persisted window forward too
     Bm25.compactBm25Index(spark, dir, "doc_id")
-    assert(Bm25.bm25Generations(spark, dir).size == 3)
+    assert(Bm25.bm25Marker.listGenerations(spark, dir).size == 3)
     // and a lifecycle call may RAISE the window for later callers
     Bm25.deleteFromBm25Index(Seq(4L).toDF("doc_id"), dir, "doc_id",
       retain = 4)
     Bm25.appendToBm25Index(corpus.filter(col("doc_id") === 3), "text",
       "doc_id", dir)
-    assert(Bm25.bm25Generations(spark, dir).size == 4)
+    assert(Bm25.bm25Marker.listGenerations(spark, dir).size == 4)
   }
 
   test("bm25 append of a token-empty batch writes NO segment, still " +
@@ -160,7 +160,7 @@ class RetrievalSpec extends SparkSpec {
     val bdir = new java.io.File(s"$dir/postings_batches")
     assert(!bdir.exists || bdir.listFiles().isEmpty)
     // the applied fact committed atomically (exactly-once holds)
-    assert(Bm25.lastAppliedStreamBatch(spark, dir) == 7L)
+    assert(Bm25.bm25Marker.read(spark, dir).applied == 7L)
     // every read path still works — the old zero-row segment write
     // made all of these throw "unable to infer schema"
     assert(Bm25.bm25IndexIds(spark, dir, "doc_id").count() == 5L)
@@ -170,9 +170,9 @@ class RetrievalSpec extends SparkSpec {
     assert(Bm25.indexStats(spark, dir).head().getLong(0) == 5L)
     // a NON-stream empty append (appliedId = -1) is a pure no-op:
     // no new marker generation at all
-    val gensBefore = Bm25.bm25Generations(spark, dir)
+    val gensBefore = Bm25.bm25Marker.listGenerations(spark, dir)
     Bm25.appendToBm25Index(blank, "text", "doc_id", dir)
-    assert(Bm25.bm25Generations(spark, dir) == gensBefore)
+    assert(Bm25.bm25Marker.listGenerations(spark, dir) == gensBefore)
   }
 
   test("bm25 index deletes: tombstoned docs never surface, idf/avgdl " +

@@ -373,7 +373,7 @@ class SimSearchSpec extends SparkSpec {
     SimSearch.deleteFromAnnIndex(
       (0L until 100L).filter(_ % 4 == 0).toDF("vec_id"), path,
       retain = 2) // snapshot gen 2
-    assert(SimSearch.annGenerations(spark, path) == Seq(1L, 2L))
+    assert(SimSearch.annMarker.listGenerations(spark, path) == Seq(1L, 2L))
     assert(SimSearch.readAnnIndex(spark, path, 1L).count() == 100L,
       "time-travel read of the pre-delete snapshot")
     assert(SimSearch.readAnnIndex(spark, path).count() == 75L)
@@ -385,7 +385,7 @@ class SimSearchSpec extends SparkSpec {
     assert(midScan.count() == 75L,
       "reader mid-scan on the superseded snapshot must survive " +
         "a retain=2 compaction")
-    assert(SimSearch.annGenerations(spark, path) == Seq(2L, 3L))
+    assert(SimSearch.annMarker.listGenerations(spark, path) == Seq(2L, 3L))
     assert(SimSearch.readAnnIndex(spark, path, 2L).count() == 75L)
     // aged out of the window: gen 1 is gone, fail-loud with the hint
     val err = intercept[IllegalArgumentException] {
@@ -396,7 +396,7 @@ class SimSearchSpec extends SparkSpec {
     // DEFAULT retain keeps the 2-snapshot window previous callers
     // established (the old per-call minimum would have collapsed it)
     SimSearch.deleteFromAnnIndex(Seq(1L).toDF("vec_id"), path) // gen 4
-    assert(SimSearch.annGenerations(spark, path) == Seq(3L, 4L))
+    assert(SimSearch.annMarker.listGenerations(spark, path) == Seq(3L, 4L))
     assert(SimSearch.readAnnIndex(spark, path).count() == 74L)
     assert(SimSearch.readAnnIndex(spark, path, 3L).count() == 75L)
   }

@@ -556,7 +556,7 @@ class StreamAggExportSpec extends SparkSpec {
     doc.write.parquet(s"$crashed/meta") // partial, no marker
     graft.streaming.StreamingBm25.processBatch(doc, 0L, crashed,
       "text", "doc_id", buckets = 8)
-    assert(graft.text.Bm25.bm25Generations(spark, crashed).nonEmpty)
+    assert(graft.text.Bm25.bm25Marker.listGenerations(spark, crashed).nonEmpty)
     assert(graft.text.Bm25.bm25IndexIds(spark, crashed, "doc_id")
       .count() == 1L)
     // a completed create clears the intent file

@@ -1452,7 +1452,7 @@ class TextDedupSpec extends SparkSpec {
     // readable; time travel sees the pre-delete rows
     Dedup.deleteFromSignedIndex(Seq(8L).toDF("doc_id"), dir,
       "doc_id", retain = 2)
-    assert(Dedup.signedGenerations(spark, dir) == Seq(4L, 5L))
+    assert(Dedup.signedMarker.listGenerations(spark, dir) == Seq(4L, 5L))
     assert(Dedup.readSignedIndex(spark, dir, 4L).count() == 18L)
     assert(Dedup.readSignedIndex(spark, dir).count() == 17L)
   }
